@@ -59,24 +59,35 @@ class Size:
     cols: int
 
 
+# medium's towns are small: the rounds of connected_components and
+# shortest_paths_weighted grow with a town's hop diameter
 SIZES = {
     "small": Size(towns=2, rows=12, cols=12),
-    "medium": Size(towns=10, rows=7, cols=7),
+    "medium": Size(towns=30, rows=4, cols=4),
 }
 
-# Grid streets are mostly car roads, so every town stays one connected
-# car network whatever the seed (steady sssp and component rounds);
-# spurs carry most of the non-car classes.
+# The shares below are chosen for coverage, not measured from real OSM:
+# each value is one that the car filter, the directed expansion or the speed
+# parse treats differently, and every extract holds each of them. Grid
+# streets are 92% car roads, so every town stays one connected car network
+# whatever the seed (steady sssp and component rounds). The rest (service,
+# footway, cycleway) exercises the filter, as do the spurs, which carry most
+# of the non-car classes. Motorways without a oneway tag exercise the
+# directed expansion's NULL quirk (see :func:`directions`).
 _STREET = (("residential", .55), ("tertiary", .12), ("secondary", .08),
            ("primary", .06), ("unclassified", .06), ("living_street", .02),
            ("motorway", .03), ("service", .03), ("footway", .03),
            ("cycleway", .02))
 _SPUR = (("residential", .3), ("service", .3), ("footway", .25),
          ("cycleway", .15))
+# every oneway form directed_network distinguishes; reversible drops out
 _ONEWAY = ((None, .68), ("yes", .12), ("no", .12), ("-1", .05),
            ("reversible", .03))
+# missing (imputed), plain, with a unit (first_int keeps the digits) and
+# digit-free (parses to NULL)
 _MAXSPEED = ((None, .4), ("50", .25), ("30", .15), ("50 mph", .1),
              ("none", .1))
+_SPUR_P, _POI_P = .08, .05           # dead-end spurs, POIs per intersection
 _POI = (("amenity", ("cafe", "school", "bank", "pharmacy")),
         ("shop", ("bakery", "supermarket", "kiosk")),
         ("leisure", ("park", "playground")), ("tourism", ("hotel", "museum")),
@@ -149,13 +160,11 @@ def _way_tags(rng, name: str, hw: str, oneway) -> dict:
 
 
 def build_world(seed: int, towns: int, rows: int, cols: int,
-                shape_nodes=(0, 3), span=(1, 4), spur_p: float = .08,
-                poi_p: float = .05, tags=None) -> dict:
+                shape_nodes=(0, 3), span=(1, 4), tags=None) -> dict:
     """Nodes and ways of ``towns`` disjoint ``rows`` × ``cols`` street grids.
 
     ``shape_nodes`` and ``span``: half-open ranges of shape nodes per block
-    and of blocks per way; ``spur_p`` and ``poi_p``: dead-end spurs and
-    POI nodes per intersection. Counts are dealt from fixed decks (see
+    and of blocks per way. Counts are dealt from fixed decks (see
     :func:`_deck`), so the entity counts depend on the size alone.
     ``tags``: one tag dict for every way, which also turns off jitter,
     spurs and POIs (a dealt mix when None). Returns ``{"nodes": [...],
@@ -216,7 +225,7 @@ def build_world(seed: int, towns: int, rows: int, cols: int,
                 i += n
         if tags is None:
             sites = rows * cols
-            n_spurs, n_pois = round(spur_p * sites), round(poi_p * sites)
+            n_spurs, n_pois = round(_SPUR_P * sites), round(_POI_P * sites)
             spur_len = _deck(rng, ((1, 1), (2, 1), (3, 1)), n_spurs)
             spur_hw = _deck(rng, _SPUR, n_spurs)
             spur_ow = _deck(rng, _ONEWAY, n_spurs)

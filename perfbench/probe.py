@@ -6,10 +6,12 @@ and the probe adds nothing. Traced (``SPARK_GRAFT_UI=true``), every call
 gets its own job group; the probe times building the DataFrame (eager
 checkpoint jobs included), building its executed plan, and forcing it
 (cache then count, or the call's sink), so each span holds only that
-layer's work. Job, stage and task counts come from ``statusTracker`` and
-shuffle bytes and GC time from the UI's ``/api/v1`` endpoint, read once
-per pass after the listener bus drains. Spans stay in memory until the
-run ends.
+layer's work. A call made while another is being built first forces its
+DataFrame inputs under the outer call's job group: what the outer call
+built lazily stays the outer call's work. Job, stage and task counts come
+from ``statusTracker`` and shuffle bytes and GC time from the UI's
+``/api/v1`` endpoint, read once per pass after the listener bus drains.
+Spans stay in memory until the run ends.
 """
 
 from __future__ import annotations
@@ -71,9 +73,19 @@ class Probe:
             if sink is not None:
                 sink(out)
             return out
+        parent = self._stack[-1] if self._stack else None
+        if parent is not None:
+            # inputs the outer call built lazily are its own work: force
+            # them under its job group, so this span starts from them
+            inputs = [df for a in (*args, *kwargs.values())
+                      for df in _frames(a)]
+            for df in inputs:
+                df.cache()
+            for df in inputs:
+                df.count()
+            self._cached += inputs
         group = f"{name}#{len(self.passes)}#{len(self._groups)}"
         self._groups[group] = name
-        parent = self._stack[-1] if self._stack else None
         frame = [group, 0.0]            # [job group, nested calls' seconds]
         self._stack.append(frame)
         self.sc.setJobGroup(group, name)

@@ -1,5 +1,6 @@
 """Self-tests of the product-path benchmark: generator determinism, ground
-truth on hand-checkable inputs, and the declared metric names.
+truth on hand-checkable inputs, span attribution of nested calls, and the
+declared metric names.
 
     python3 -m pytest perfbench/tests -q
 """
@@ -103,3 +104,46 @@ def test_metric_names_declared():
     assert len(set(e2e + layer)) == len(e2e) + len(layer)
     assert {w["name"] for w in declared["workloads"]} == set(
         __import__("workloads").WORKLOADS)
+
+
+@pytest.fixture(scope="module")
+def spark(tmp_path_factory):
+    from pyspark.sql import SparkSession
+
+    s = (SparkSession.builder.master("local[2]").appName("perfbench-tests")
+         .config("spark.ui.enabled", "true")
+         .config("spark.sql.shuffle.partitions", "2")
+         .config("spark.local.dir", str(tmp_path_factory.mktemp("spark")))
+         .getOrCreate())
+    yield s
+    s.stop()
+
+
+def test_nested_span_holds_none_of_the_parents_jobs(spark):
+    # the outer call builds an aggregation lazily and hands it to a nested
+    # call: the aggregation's jobs and shuffle belong to the outer span, and
+    # the nested span costs what it costs on an already-forced input
+    from pyspark.sql import functions as F
+
+    from probe import Probe
+
+    def agg():
+        return (spark.range(20_000).groupBy((F.col("id") % 97).alias("k"))
+                .agg(F.count("*").alias("n")))
+
+    def inner(df):
+        return df.filter(F.col("n") > 200)
+
+    p = Probe(spark, traced=True)
+    p.begin_pass()
+    p.call("outer", lambda: p.call("nested", inner, agg()))
+    p.end_pass(0.0)                     # drops every cache of the pass
+    ready = agg().cache()
+    ready.count()
+    p.begin_pass()
+    p.call("ready", inner, ready)
+    p.end_pass(0.0)
+    got, want = p.passes
+    assert got["outer.jobs"] >= 1 and got["outer.shuffle_bytes"] > 0
+    assert got["nested.jobs"] == want["ready.jobs"]
+    assert got["nested.shuffle_bytes"] == want["ready.shuffle_bytes"]
