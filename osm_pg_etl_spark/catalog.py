@@ -42,8 +42,8 @@ def register_osm_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]
                          "network_way_nodes")
     shared = shared_nodes(wn_net)
     lengths = ways_length(wn_net)
-    splits = ways_split_nodes(wn_net, shared, lengths)
-    limits = ways_merge_limits(wn_net, shared, splits, lengths)
+    splits = ways_split_nodes(wn_net)
+    limits = ways_merge_limits(wn_net)
     merged = merged_network(cn, d["way_nodes"])
 
     views: dict[str, DataFrame] = {

@@ -10,32 +10,22 @@ is the approach that scales: it is pure joins/windows/aggregations with no
 spatial machinery, unlike the O(n²) geometric split the reference itself
 flags as "Does not work with large maps" (``osm-road-graphs-fix.sql:91``).
 
-Stages (names mirror the reference's ``topology_summary.*`` IR tables):
+The split is one per-way pass (:func:`_way_limits` holds its boundary
+rules): a count window over ``node_id`` flags the shared way_nodes rows,
+one ``groupBy(way_id)`` collects each way's length and shared positions,
+and array functions turn them into [bottom, top] segment ranges (W1, J10,
+J2/J3). The segments are slices of the way's own ``nodes``/``geom`` arrays,
+joined to the network table once; unsplit ways pass through whole (A7/A8,
+J6, J4). The reference's ``topology_summary.*`` tables stay available
+under their names: ``shared_nodes`` and ``ways_length`` are plain
+aggregations, ``ways_split_nodes`` and ``ways_merge_limits`` explode the
+same per-way arrays, and ``nodes_to_merge`` is the way_nodes × limits
+range join (J7) of the general assembly path.
 
-1. ``shared_nodes``    — node ids used more than once among network ways
-                         (``osm-road-graphs.sql:66-76``, J9). Occurrence
-                         count, not distinct ways: a closed ring's repeated
-                         endpoint counts twice, exactly as in the reference.
-2. ``ways_length``     — per-way max sequence_id and its node, via
-                         ``max_by`` instead of DISTINCT ON (A10). The
-                         reference's ``sequence_id > 1`` filter is kept:
-                         2-node ways have no length row and are never split.
-3. ``ways_split_nodes``— interior shared nodes (0 < seq < length) (J2/J3).
-4. ``ways_merge_limits``— per-way segment boundaries: lag window over the
-                         shared-node positions (W1) + dead-end closing
-                         segments (J10).
-5. ``nodes_to_merge``  — way_nodes × limits range join (J7): equi on way_id
-                         with a BETWEEN residual, so Catalyst plans a normal
-                         hash/SMJ join; per-way limit lists are tiny.
-6. ``merged_network``  — segment reassembly + attribute backfill + anti-join
-                         append of untouched ways (A7/A8, J6, J4).
-
-Scale notes: every stage shuffles on ``way_id`` or ``node_id`` only; AQE
-handles the mild skew (a handful of mega-ways). The fast assembly path
-avoids the way_nodes×nodes join entirely by slicing each way's own
-``nodes``/``linestring`` arrays — segment extraction becomes a narrow
-operation co-located with the way row, which at 100 TB removes the single
-biggest shuffle of the reference pipeline.
+Scale notes: one ``node_id`` and one ``way_id`` exchange plus the joins
+with the network table, and no cache. AQE handles the mild skew (a handful
+of mega-ways). Slicing each way's own arrays avoids the way_nodes×nodes
+join, the single biggest shuffle of the reference pipeline.
 """
 
 from __future__ import annotations
@@ -50,15 +40,6 @@ from ..functions.geo import linestring_length_km
 # set, osm-road-graphs.sql:149-159); complete_network_merged passes the wider
 # mode-flag set (osm-complete-graphs-fix.sql:167-188)
 DEFAULT_MERGE_ATTRS = ("speed_limit", "highway", "oneway")
-
-MERGED_COLUMNS = ("start_node", "end_node", "edge_id", "tags", "nodes",
-                  "length", "speed_limit", "highway", "oneway", "geom")
-
-
-def _merged_columns(attrs: tuple[str, ...]) -> tuple[str, ...]:
-    return ("start_node", "end_node", "edge_id", "tags", "nodes",
-            "length", *attrs, "geom")
-
 
 def unnest_way_nodes(ways: DataFrame) -> DataFrame:
     """``unnest_bbox_way_nodes`` (U6, ``etl/pgsnapshot_schema_0.6.sql:
@@ -96,41 +77,75 @@ def ways_length(wn_net: DataFrame) -> DataFrame:
         F.max_by("node_id", "sequence_id").alias("node_id"))
 
 
-def ways_split_nodes(wn_net: DataFrame, shared: DataFrame,
-                     lengths: DataFrame) -> DataFrame:
+def _way_limits(wn_net: DataFrame,
+                shared: DataFrame | None = None) -> DataFrame:
+    """The one implementation of the split's boundary rules
+    (``osm-road-graphs.sql:66-115``): one row per way with
+
+    - ``length``: max sequence_id;
+    - ``_sh``: its shared-node positions with seq > 0, as sorted
+      (sequence_id, node_id) structs, and ``_tops`` their sequence_ids;
+    - ``_lims``: its [bottom_limit, top_limit] segment ranges, or null when
+      the way is not split.
+
+    A node is shared when it occurs more than once among the network's
+    way_nodes rows (occurrences, not distinct ways: a closed ring's repeated
+    endpoint counts twice). That is a count window over ``node_id``, the
+    plan's one node-keyed exchange; ``shared`` replaces it with a given
+    (node_id) table. A way splits only if a shared position lies strictly
+    inside (0, length), which also rules out ways of length ≤ 1 (the
+    reference's ``sequence_id > 1`` filter). Its boundaries are then *all*
+    shared positions, a shared final node included, with bottom = lag(seq,
+    1, default 0), plus a closing [last, length] range for a dead-end tail.
+    """
+    if shared is None:
+        flagged = wn_net.withColumn(
+            "_shared",
+            F.count(F.lit(1)).over(Window.partitionBy("node_id")) > 1)
+    else:
+        flags = (shared.select("node_id", F.lit(True).alias("_shared"))
+                 .dropDuplicates(["node_id"]))
+        flagged = (wn_net.join(flags, "node_id", "left")
+                   .fillna(False, subset=["_shared"]))
+    ways = flagged.groupBy("way_id").agg(
+        F.max("sequence_id").alias("length"),
+        F.sort_array(F.collect_list(F.when(
+            F.col("_shared") & (F.col("sequence_id") > 0),
+            F.struct("sequence_id", "node_id")))).alias("_sh")) \
+        .withColumn("_tops", F.transform("_sh", lambda s: s["sequence_id"]))
+
+    length, tops = F.col("length"), F.col("_tops")
+    bottoms = F.slice(F.concat(F.array(F.lit(0)), tops), 1, F.size(tops))
+    last = F.element_at(tops, -1)
+    segs = F.zip_with(bottoms, tops, lambda b, t: F.struct(
+        b.alias("bottom_limit"), t.alias("top_limit")))
+    tail = F.filter(F.array(F.struct(last.alias("bottom_limit"),
+                                     length.alias("top_limit"))),
+                    lambda r: r["bottom_limit"] < r["top_limit"])
+    splits = F.exists(tops, lambda t: t < length)
+    return ways.withColumn("_lims", F.when(splits, F.concat(segs, tail)))
+
+
+def _limit_rows(ways: DataFrame, lims="_lims") -> DataFrame:
+    """(way_id, bottom_limit, top_limit) rows of a per-way limit array."""
+    return (ways.select("way_id", F.explode(lims).alias("_l"))
+            .select("way_id", "_l.bottom_limit", "_l.top_limit"))
+
+
+def ways_split_nodes(wn_net: DataFrame) -> DataFrame:
     """``topology_summary.ways_split_nodes`` (``osm-road-graphs.sql:87-95``):
-    shared nodes strictly interior to a way. The correlated EXISTS with the
-    ``sequence_id < length`` inequality decorrelates to an equi-join on
-    way_id (unique) + filter."""
-    return (wn_net.filter(F.col("sequence_id") > 0)
-            .join(shared.select("node_id"), "node_id", "left_semi")
-            .join(lengths.select("way_id", "length"), "way_id", "inner")
-            .filter(F.col("sequence_id") < F.col("length"))
-            .select("way_id", "node_id", "sequence_id"))
+    shared nodes strictly interior to a way (0 < seq < length)."""
+    interior = F.filter("_sh", lambda s: s["sequence_id"] < F.col("length"))
+    return (_way_limits(wn_net)
+            .select("way_id", F.explode(interior).alias("_s"))
+            .select("way_id", "_s.node_id", "_s.sequence_id"))
 
 
-def ways_merge_limits(wn_net: DataFrame, shared: DataFrame,
-                      split_nodes: DataFrame, lengths: DataFrame) -> DataFrame:
+def ways_merge_limits(wn_net: DataFrame) -> DataFrame:
     """``topology_summary.ways_merge_limits`` (``osm-road-graphs.sql:97-115``):
-    for each way that has a split node, the [bottom, top] sequence ranges of
-    its segments. Boundaries are *all* shared-node positions with seq > 0
-    (including a shared final node), bottom = lag(seq, 1, default 0); then a
-    closing segment is appended for dead-end tails (top-1 boundary < way
-    length)."""
-    w = Window.partitionBy("way_id").orderBy("sequence_id")
-    base = (wn_net.filter(F.col("sequence_id") > 0)
-            .join(split_nodes.select("way_id").distinct(), "way_id", "left_semi")
-            .join(shared.select("node_id"), "node_id", "left_semi")
-            .select("way_id",
-                    F.lag("sequence_id", 1, 0).over(w).alias("bottom_limit"),
-                    F.col("sequence_id").alias("top_limit")))
-    # Dead ends (osm-road-graphs.sql:106-115): DISTINCT ON max top_limit per
-    # way, joined to way length, appended when it falls short.
-    last = base.groupBy("way_id").agg(F.max("top_limit").alias("bottom_limit"))
-    tail = (last.join(lengths.select("way_id", "length"), "way_id", "inner")
-            .filter(F.col("bottom_limit") < F.col("length"))
-            .select("way_id", "bottom_limit", F.col("length").alias("top_limit")))
-    return base.unionByName(tail)
+    the [bottom, top] sequence ranges of every split way's segments, dead-end
+    closing ranges included (see :func:`_way_limits`)."""
+    return _limit_rows(_way_limits(wn_net))
 
 
 def nodes_to_merge(wn_net: DataFrame, limits: DataFrame) -> DataFrame:
@@ -145,7 +160,7 @@ def nodes_to_merge(wn_net: DataFrame, limits: DataFrame) -> DataFrame:
                     "sequence_id", "node_id"))
 
 
-def _assemble_from_way_arrays(limits: DataFrame, network: DataFrame,
+def _assemble_from_way_arrays(ways: DataFrame, network: DataFrame,
                               attrs: tuple[str, ...] = DEFAULT_MERGE_ATTRS) -> DataFrame:
     """Fast segment assembly: because segment ranges are contiguous in
     sequence order and ``ways.nodes``/``linestring`` are already ordered by
@@ -155,25 +170,21 @@ def _assemble_from_way_arrays(limits: DataFrame, network: DataFrame,
     (``osm-road-graphs.sql:143-148``); proven against the general path in
     tests/test_topology.py.
 
-    Single pass over ``network``: the per-way limit list is aggregated small
-    (segments per way), left-joined once, and ways without limits fall back
-    to one whole-way range — this fuses the reference's INSERT + UPDATE
-    backfill + anti-join append (``osm-road-graphs.sql:143-165``) into one
-    join, so the (huge) ways table is scanned exactly once."""
-    lim_lists = limits.groupBy("way_id").agg(
-        F.collect_list(F.struct(
-            F.col("bottom_limit").cast("int").alias("bottom_limit"),
-            F.col("top_limit").cast("int").alias("top_limit"))).alias("_lims"))
+    Single pass over ``network``: the per-way limit arrays of the split ways
+    are left-joined once, and ways without limits fall back to one whole-way
+    range — this fuses the reference's INSERT + UPDATE backfill + anti-join
+    append (``osm-road-graphs.sql:143-165``) into one join, so the (huge)
+    ways table is scanned exactly once."""
+    lims = ways.filter(F.col("_lims").isNotNull()).select("way_id", "_lims")
     whole_way = F.array(F.struct(
-        F.lit(0).cast("int").alias("bottom_limit"),
-        (F.size("nodes") - 1).cast("int").alias("top_limit")))
+        F.lit(0).alias("bottom_limit"),
+        (F.size("nodes") - 1).alias("top_limit")))
     seg_len = F.col("_lim.top_limit") - F.col("_lim.bottom_limit") + 1
     return (network
-            .join(lim_lists, network["edge_id"] == lim_lists["way_id"], "left")
+            .join(lims, network["edge_id"] == lims["way_id"], "left")
             .withColumn("_lim", F.explode(F.coalesce("_lims", whole_way)))
             .select(
                 network["edge_id"],
-                F.col("_lim.top_limit").alias("group_id"),
                 F.slice(network["nodes"], F.col("_lim.bottom_limit") + 1,
                         seg_len).alias("nodes"),
                 F.slice(network["geom"], F.col("_lim.bottom_limit") + 1,
@@ -214,24 +225,39 @@ def _assemble_from_nodes(merge_rows: DataFrame, nodes: DataFrame,
         F.transform("s", lambda r: r["pt"]).alias("geom"))
 
 
+def _with_segment_columns(segs: DataFrame,
+                          attrs: tuple[str, ...]) -> DataFrame:
+    """Merged-table columns of assembled segments: endpoints promoted from
+    the segment's node array and its geodesic-km length."""
+    return segs.select(
+        array_first("nodes").alias("start_node"),
+        array_last("nodes").alias("end_node"),
+        "edge_id", "tags", "nodes",
+        linestring_length_km("geom").alias("length"),
+        *attrs, "geom")
+
+
 def merged_network(network: DataFrame, way_nodes: DataFrame,
                    nodes: DataFrame | None = None,
                    use_array_fast_path: bool = True,
                    attrs: tuple[str, ...] = DEFAULT_MERGE_ATTRS,
-                   pre_partitioned: bool = False,
                    shared_override: DataFrame | None = None) -> DataFrame:
     """``graphs.car_network_merged`` (``osm-road-graphs.sql:129-165``): the
     split-and-reassembled edge table.
 
-    - Segment rows get attributes from the parent way via an equi-join on
-      edge_id (the UPDATE…FROM backfill at ``:149-159``), with start/end
-      promoted from the new node arrays and geodesic-km length.
-    - Ways with no split pass through unchanged via an anti-join append
-      (``:161-165``).
+    - Segment rows get attributes from the parent way (the UPDATE…FROM
+      backfill at ``:149-159``), with start/end promoted from the new node
+      arrays and geodesic-km length.
+    - Ways with no split pass through unchanged (the anti-join append at
+      ``:161-165``).
     - ``attrs`` selects which parent-way columns ride through the split;
       the complete-network variant passes the mode-flag set
       (service/access/car/pedestrian/bicycle,
       ``osm-complete-graphs-fix.sql:167-188``).
+    - ``shared_override``: callers that re-split only a SUBSET of ways (the
+      incremental path) must supply the GLOBAL shared-node table — shared
+      status depends on every network way using a node, and recomputing it
+      from the subset's way_nodes would miss cross-way sharing.
 
     Contract shared by both assembly paths: the ``nodes`` table must cover
     every id in ``ways.nodes``. The fast path slices the way's own arrays
@@ -239,58 +265,24 @@ def merged_network(network: DataFrame, way_nodes: DataFrame,
     nodes table and would drop them — on truncated OSM extracts, pre-filter
     ways to those fully inside the extract before splitting.
     """
-    # hash-partition by way_id BEFORE caching: the cached partitioning is
-    # reused by every way_id-keyed stage downstream (length agg, limits
-    # window, assembly groupBy), collapsing their per-stage shuffles into
-    # this one exchange — the Spark analog of the reference clustering its
-    # IR tables (CLUSTER, pgsnapshot_schema_0.6.sql:112-116).
-    # pre_partitioned=True skips even that exchange: pass it when way_nodes
-    # comes from a table bucketed by way_id (sources.io.write_bucketed) —
-    # the bucket scan's HashPartitioning(way_id) already satisfies every
-    # way_id-keyed stage, so the pipeline runs with zero way_id shuffles.
-    # shared_override: callers that re-split only a SUBSET of ways (the
-    # incremental path) must supply the GLOBAL shared-node table — shared
-    # status depends on every network way using a node, and recomputing
-    # it from the subset's wn would miss cross-way sharing. The override
-    # flows through the same semi-joins as the locally-computed table.
     wn_net = network_way_nodes(way_nodes, network)
-    if not pre_partitioned:
-        wn_net = wn_net.repartition("way_id")
-    wn_net = wn_net.cache()
-    shared = shared_nodes(wn_net) if shared_override is None \
-        else shared_override
-    lengths = ways_length(wn_net).cache()
-    splits = ways_split_nodes(wn_net, shared, lengths)
-    limits = ways_merge_limits(wn_net, shared, splits, lengths)
-
-    out_cols = _merged_columns(attrs)
+    ways = _way_limits(wn_net, shared_override)
     if use_array_fast_path:
         # one scan of network; untouched ways fall through as a whole-way
         # slice (identical nodes/geom/length to the original row)
-        segs = _assemble_from_way_arrays(limits, network, attrs)
-        return segs.select(
-            array_first("nodes").alias("start_node"),
-            array_last("nodes").alias("end_node"),
-            "edge_id", "tags", "nodes",
-            linestring_length_km("geom").alias("length"),
-            *attrs, "geom")
+        return _with_segment_columns(
+            _assemble_from_way_arrays(ways, network, attrs), attrs)
 
     if nodes is None:
         raise ValueError("general assembly path requires the nodes table")
-    segs = _assemble_from_nodes(nodes_to_merge(wn_net, limits), nodes)
-    attr_tbl = network.select("edge_id", "tags", *attrs)
-    merged = (segs.join(attr_tbl, "edge_id", "inner")
-              .select(
-                  array_first("nodes").alias("start_node"),
-                  array_last("nodes").alias("end_node"),
-                  "edge_id", "tags", "nodes",
-                  linestring_length_km("geom").alias("length"),
-                  *attrs, "geom"))
-
-    untouched = (network
-                 .join(segs.select("edge_id").distinct(), "edge_id", "left_anti")
-                 .select(*out_cols))
-    return merged.select(*out_cols).unionByName(untouched)
+    segs = _assemble_from_nodes(nodes_to_merge(wn_net, _limit_rows(ways)),
+                                nodes)
+    merged = _with_segment_columns(
+        segs.join(network.select("edge_id", "tags", *attrs), "edge_id"),
+        attrs)
+    untouched = network.join(segs.select("edge_id").distinct(), "edge_id",
+                             "left_anti")
+    return merged.unionByName(untouched.select(*merged.columns))
 
 
 def merged_network_incremental(old_network: DataFrame,
@@ -447,32 +439,22 @@ def _assemble_affected_from_nodes(sub_net: DataFrame, sub_wn: DataFrame,
                                   shared: DataFrame, nodes: DataFrame,
                                   attrs: tuple[str, ...]) -> DataFrame:
     """Re-split the affected subset via the general assembly path, reading
-    arrays from nowhere: the split chain (shared→splits→limits) runs on
-    ``sub_wn`` exactly as :func:`merged_network` would run it on
+    arrays from nowhere: the limits come from :func:`_way_limits` on
+    ``sub_wn`` exactly as :func:`merged_network` computes them on
     ``network_way_nodes(sub_wn, sub_net)`` (identical — ``sub_wn``'s ways
     are already restricted to ``sub_net``'s, see
-    test_network_restricted_sub_wn_identical), ways without a split row
-    get an explicit whole-way [0, max seq] range (the general path's
-    anti-join passthrough, expressed without touching ``new_network``
-    arrays; max sequence_id = len(nodes)-1 because sequence ids are the
-    dense array positions), and one :func:`_assemble_from_nodes` pass
-    rebuilds every affected segment from the nodes table."""
-    wn_net = sub_wn.repartition("way_id").cache()
-    lengths = ways_length(wn_net).cache()
-    splits = ways_split_nodes(wn_net, shared, lengths)
-    limits = ways_merge_limits(wn_net, shared, splits, lengths)
-    whole = (wn_net.groupBy("way_id")
-             .agg(F.max("sequence_id").alias("top_limit"))
-             .join(limits.select("way_id").distinct(), "way_id", "left_anti")
-             .select("way_id", F.lit(0).cast("int").alias("bottom_limit"),
-                     F.col("top_limit").cast("int")))
-    segs = _assemble_from_nodes(
-        nodes_to_merge(wn_net, limits.unionByName(whole)), nodes,
-        broadcast_rows=True)
-    attr_tbl = sub_net.select("edge_id", "tags", *attrs)
-    return (segs.join(attr_tbl, "edge_id", "inner")
-            .select(array_first("nodes").alias("start_node"),
-                    array_last("nodes").alias("end_node"),
-                    "edge_id", "tags", "nodes",
-                    linestring_length_km("geom").alias("length"),
-                    *attrs, "geom"))
+    test_network_restricted_sub_wn_identical). A way without a split gets
+    the whole-way range [0, max seq] (the general path's pass-through,
+    expressed without touching ``new_network`` arrays; max sequence_id =
+    len(nodes)-1 because sequence ids are the dense array positions), and
+    one :func:`_assemble_from_nodes` pass rebuilds every affected segment
+    from the nodes table."""
+    ways = _way_limits(sub_wn, shared)
+    whole_way = F.array(F.struct(F.lit(0).alias("bottom_limit"),
+                                 F.col("length").alias("top_limit")))
+    limits = _limit_rows(ways, F.coalesce("_lims", whole_way))
+    segs = _assemble_from_nodes(nodes_to_merge(sub_wn, limits), nodes,
+                                broadcast_rows=True)
+    return _with_segment_columns(
+        segs.join(sub_net.select("edge_id", "tags", *attrs), "edge_id"),
+        attrs)

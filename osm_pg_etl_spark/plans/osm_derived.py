@@ -37,9 +37,7 @@ from ..operators.topology import (
     merged_network,
     network_way_nodes,
     shared_nodes,
-    ways_length,
     ways_merge_limits,
-    ways_split_nodes,
 )
 from .common import t
 
@@ -110,15 +108,7 @@ def derive_osm(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 def derive_osm_from(part: DataFrame, li: DataFrame) -> dict[str, DataFrame]:
     """Build the OSM-shaped world (nodes/ways/way_nodes) from arbitrary
     part/lineitem-shaped DataFrames — shared by the sf_dir-based gate
-    queries and the key-offset scale-stress harness.
-
-    The sequence_id window leaves ``way_nodes`` hash-partitioned by
-    way_id, so every plan query passes ``pre_partitioned=True`` to
-    merged_network — the explicit repartition would be a second exchange
-    on an already-satisfied distribution (measured ~10% off the merged
-    gate at sf0.1; correctness is partitioning-independent, every
-    downstream stage is a keyed agg/join that would shuffle on its own
-    if the distribution weren't met)."""
+    queries and the key-offset scale-stress harness."""
     # coords span a ~4°×2° region: keeps haversine sums O(100 km) so the
     # round(…,4) applied before hashing sits far from any float boundary
     nodes = part.select(
@@ -190,7 +180,7 @@ def _shared_network(spark: SparkSession, sf_dir: str):
     Returns ``(tables_dict, cn, merged)``."""
     d = derive_osm(spark, sf_dir)
     cn = car_network(d["ways"]).cache()
-    merged = (merged_network(cn, d["way_nodes"], pre_partitioned=True)
+    merged = (merged_network(cn, d["way_nodes"])
               .select("edge_id", "start_node", "end_node",
                       F.size("nodes").alias("n_nodes"),
                       "length", "speed_limit", "highway", "oneway")
@@ -402,19 +392,12 @@ GROUP BY node_id HAVING COUNT(*) > 1
 
 
 def q_osm_merge_limits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r15: cache wn_net and lengths exactly as merged_network does
-    # internally — this gate previously rebuilt the whole
-    # derive→semi-join→explode wn_net subplan at each of its four
-    # references (sh, ln, sp, limits): exec 4.7 s → 2.1 s at sf0.01
-    # (noop, warm reps). way_nodes comes pre-partitioned by way_id from
-    # the derive window, so no extra exchange is introduced.
+    # the reference-named table is an explode of merged_network's own
+    # per-way limit arrays: one node_id window flags shared nodes, one
+    # way_id aggregation derives every way's [bottom, top] ranges
     d = derive_osm(spark, sf_dir)
     cn = car_network(d["ways"])
-    wn_net = network_way_nodes(d["way_nodes"], cn).cache()
-    sh = shared_nodes(wn_net)
-    ln = ways_length(wn_net).cache()
-    sp = ways_split_nodes(wn_net, sh, ln)
-    return ways_merge_limits(wn_net, sh, sp, ln)
+    return ways_merge_limits(network_way_nodes(d["way_nodes"], cn))
 
 
 SQL_OSM_MERGE_LIMITS = _cte(_WTAGS_SQL, _WN_SQL, _CN_SQL, _TOPOLOGY_SQL) + """
@@ -423,19 +406,15 @@ SELECT way_id, bottom_limit, top_limit FROM lims
 
 
 def q_osm_merged_network(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Topology crown jewel. Measured floor analysis (r5, sf0.1, warm):
-    ~5.8 s vs DuckDB ~1.9 s. The stage budget: derive (parquet read +
-    sequence window + per-way array assembly) ~2.7 s, shared/limits chain
-    over the cached 173 k-row wn_net ~2.3 s, slice-assembly + geodesic
-    length ~1 s — i.e. ~8 shuffle-stage barriers at Spark's ~0.3-0.4 s
-    local job floor against DuckDB's single in-process pipeline. The
-    sf0.01→sf0.1 scaling ratio is 1.17 (BENCH_DETAIL), so the gap is
-    fixed per-stage overhead, not data work; at cluster scale the same
-    plan is the one you'd want — one way_id exchange (from the derive
-    window, reused via pre_partitioned=True) serves the length agg, the
-    limits window, and the assembly, with shared_nodes the only
-    node_id-keyed shuffle and the small dims broadcast. Same standard as
-    tfidf_top_terms' documented floor (text.py:101-115)."""
+    """Topology crown jewel: the car network split at shared nodes and
+    reassembled (``osm-road-graphs.sql:64-165``). The split is one per-way
+    pass (operators/topology.py): a count window over ``node_id`` flags the
+    shared way_nodes rows, one ``groupBy(way_id)`` derives each way's
+    segment limits with array functions, and the segments are slices of
+    the way's own node and geometry arrays. Its only shuffles are that
+    node_id exchange, that way_id exchange and the joins with the network
+    table; nothing is cached inside it. The gate reads the process-wide
+    meta projection of :func:`_shared_network`."""
     d, cn, merged = _shared_network(spark, sf_dir)
     return merged.select("edge_id", "start_node", "end_node", "n_nodes",
                          F.round("length", 4).alias("length_km"),
@@ -2506,8 +2485,7 @@ def q_osm_complete_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = derive_osm(spark, sf_dir)
     comp = with_mode_flags(impute_speed_limit(complete_network(d["ways"])),
                            tag=F.col).cache()
-    merged = merged_network(comp, d["way_nodes"], attrs=_COMPLETE_MERGE_ATTRS,
-                            pre_partitioned=True)
+    merged = merged_network(comp, d["way_nodes"], attrs=_COMPLETE_MERGE_ATTRS)
     return merged.select("edge_id", "start_node", "end_node",
                          F.size("nodes").alias("n_nodes"),
                          F.round("length", 4).alias("length_km"),

@@ -20,7 +20,7 @@ SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 spark = get_spark()
 d = derive_osm(spark, SF)
 cn = car_network(d["ways"]).cache()
-merged = merged_network(cn, d["way_nodes"], pre_partitioned=True)
+merged = merged_network(cn, d["way_nodes"])
 directed = directed_network(merged).cache()
 rels, members = derive_via_way_restriction_relations(directed)
 vw = via_way_turn_restrictions(rels, members, directed)

@@ -40,7 +40,7 @@ FALLBACK = {
     "ngram_jaccard": "word-shingle Jaccard similarity via inverted index",
     "osm_car_network": "car_network filter: highway present minus deny-list (reference parity)",
     "osm_directed_graph": "flagship: filter → split/merge → impute → directed edge list",
-    "osm_merge_limits": "ways_merge_limits window pass incl. dead-end closure (J7, J10, W1-W6)",
+    "osm_merge_limits": "ways_merge_limits: per-way limit arrays incl. dead-end closure, exploded (J7, J10, W1-W6)",
     "osm_merged_network": "crown jewel: shared-node topology split + merge + MakeLine lengths",
     "osm_network_nodes": "network node promotion with degree (pgr_createTopology input)",
     "osm_pois": "POI extraction per entity kind and key (osm-explore parity)",

@@ -472,7 +472,7 @@ def run_turns(k: int) -> None:
                    ["l_orderkey", "l_partkey"], k)
     d = derive_osm_from(part, li)
     cn = car_network(d["ways"]).cache()
-    merged = merged_network(cn, d["way_nodes"], pre_partitioned=True)
+    merged = merged_network(cn, d["way_nodes"])
     directed = directed_network(merged).localCheckpoint()
     n_edges = directed.count()
 
@@ -523,7 +523,7 @@ def run_viaway(k: int) -> None:
                    ["l_orderkey", "l_partkey"], k)
     d = derive_osm_from(part, li)
     cn = car_network(d["ways"]).cache()
-    merged = merged_network(cn, d["way_nodes"], pre_partitioned=True)
+    merged = merged_network(cn, d["way_nodes"])
     directed = directed_network(merged).localCheckpoint()
     n_edges = directed.count()
 

@@ -71,9 +71,9 @@ def test_materialize_registers_view(spark):
 
 def test_bucketed_way_nodes_feed_topology_without_exchange(spark, osm):
     """End-to-end: way_nodes materialized bucketed by way_id feed the real
-    split/merge pipeline with zero way_id shuffles — the per-stage plans up
-    to the way-keyed agg/window read the bucket layout directly, and the
-    full pipeline's output matches the unbucketed path."""
+    split/merge pipeline — a way-keyed aggregation reads the bucket layout
+    with zero way_id shuffles, and the full pipeline's output matches the
+    unbucketed path."""
     from osm_pg_etl_spark.operators.network import car_network
     from osm_pg_etl_spark.operators.topology import (
         merged_network,
@@ -103,7 +103,7 @@ def test_bucketed_way_nodes_feed_topology_without_exchange(spark, osm):
         assert "Exchange SinglePartition" not in plan, plan
 
         # the full pipeline agrees with the unbucketed path row for row
-        bucketed = merged_network(cn, wn, pre_partitioned=True)
+        bucketed = merged_network(cn, wn)
         default = merged_network(cn, osm["way_nodes"])
         key = lambda df: sorted((r["edge_id"], tuple(r["nodes"]))  # noqa: E731
                                 for r in df.collect())

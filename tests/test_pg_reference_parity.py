@@ -471,8 +471,8 @@ def test_topology_split_tables_match_reference_engine(spark, pg_reference):
     wn_hw = network_way_nodes(wn, hw_net)
     sh = shared_nodes(wn_hw)
     ln = ways_length(wn_hw)
-    sp = ways_split_nodes(wn_hw, sh, ln)
-    lim = ways_merge_limits(wn_hw, sh, sp, ln)
+    sp = ways_split_nodes(wn_hw)
+    lim = ways_merge_limits(wn_hw)
     ntm = nodes_to_merge(network_way_nodes(wn, car_network(ways)), lim)
 
     comparisons = [

@@ -317,3 +317,23 @@ def test_iterative_static_tables_join_exchange_free(spark):
         join_plan)
     assert ensures.count("a") <= 1, join_plan
     assert len(ensures) <= 2, join_plan
+
+
+def test_merged_network_one_pass_exchanges(spark, osm):
+    """The topological split is one per-way pass. Its initial plan shuffles
+    on node_id once (the shared-node count window) and on way_id for the
+    per-way aggregation and the two sides of the network semi-join; the
+    assembly join moves the network table on edge_id. It caches nothing. A
+    change that adds a stage exchange or a cache back fails here."""
+    from collections import Counter
+
+    from osm_pg_etl_spark.operators.network import car_network
+    from osm_pg_etl_spark.operators.topology import merged_network
+
+    plan = plan_of(merged_network(car_network(osm["ways"]),
+                                  osm["way_nodes"]))
+    assert "isFinalPlan=false" in plan
+    keys = Counter(re.findall(r"Exchange hashpartitioning\((\w+)#", plan))
+    assert keys == {"node_id": 1, "way_id": 3, "edge_id": 1}, plan
+    assert "InMemoryRelation" not in plan
+    assert "Exchange" not in plan.replace("Exchange hashpartitioning", "")

@@ -140,7 +140,7 @@ def test_louvain_round_argmax_agg_equals_window(spark):
 
     d = derive_osm(spark, SF)
     cn = car_network(d["ways"]).cache()
-    merged = merged_network(cn, d["way_nodes"], pre_partitioned=True)
+    merged = merged_network(cn, d["way_nodes"])
     e = symmetric_edges(merged.select(
         F.col("start_node").alias("src"),
         F.col("end_node").alias("dst"))).localCheckpoint()
@@ -280,7 +280,7 @@ def test_lpa_two_phase_argmax_equals_mode(spark):
 
     d = derive_osm(spark, SF)
     cn = car_network(d["ways"]).cache()
-    merged = merged_network(cn, d["way_nodes"], pre_partitioned=True)
+    merged = merged_network(cn, d["way_nodes"])
     e = symmetric_edges(merged.select(
         F.col("start_node").alias("src"),
         F.col("end_node").alias("dst"))).localCheckpoint()

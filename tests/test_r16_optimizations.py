@@ -29,12 +29,11 @@ def test_impute_after_merge_equals_before(spark):
     cn = car_network(d["ways"]).cache()
 
     old = directed_network(
-        merged_network(impute_speed_limit(cn), d["way_nodes"],
-                       pre_partitioned=True),
+        merged_network(impute_speed_limit(cn), d["way_nodes"]),
         minimal=True)
     new = directed_network(
         impute_speed_limit(
-            merged_network(cn, d["way_nodes"], pre_partitioned=True),
+            merged_network(cn, d["way_nodes"]),
             medians_from=cn),
         minimal=True)
 
@@ -110,8 +109,7 @@ def test_shared_network_geometry_free(spark):
                                    "highway", "oneway"}
 
     d = derive_osm(spark, SF)
-    full = merged_network(car_network(d["ways"]), d["way_nodes"],
-                          pre_partitioned=True)
+    full = merged_network(car_network(d["ways"]), d["way_nodes"])
     ref = full.select("edge_id", "start_node", "end_node",
                       F.size("nodes").alias("n_nodes"),
                       "length", "speed_limit", "highway", "oneway")
@@ -135,8 +133,7 @@ def test_directed_network_narrow_equals_full_projection(spark):
     from osm_pg_etl_spark.plans.osm_derived import derive_osm
 
     d = derive_osm(spark, SF)
-    full = merged_network(car_network(d["ways"]), d["way_nodes"],
-                          pre_partitioned=True)
+    full = merged_network(car_network(d["ways"]), d["way_nodes"])
     narrow = full.select("edge_id", "start_node", "end_node",
                          "length", "speed_limit", "highway", "oneway")
 

@@ -21,8 +21,8 @@ def stages(osm):
     wn_net = network_way_nodes(osm["way_nodes"], cn)
     sh = shared_nodes(wn_net)
     ln = ways_length(wn_net)
-    sp = ways_split_nodes(wn_net, sh, ln)
-    lim = ways_merge_limits(wn_net, sh, sp, ln)
+    sp = ways_split_nodes(wn_net)
+    lim = ways_merge_limits(wn_net)
     return {"cn": cn, "wn_net": wn_net, "shared": sh, "lengths": ln,
             "splits": sp, "limits": lim}
 
@@ -181,3 +181,28 @@ def test_merged_network_incremental_equals_full(spark, osm):
     assert i == f
     # the batch genuinely changed the output (not a vacuous equality)
     assert sorted(map(str, old_merged.collect())) != f
+
+
+def test_split_holds_no_cache(spark, osm, stages, tmp_path):
+    """The split caches nothing: the persistent-RDD count is the same
+    before and after writing each assembly path's output, and the
+    incremental path's nodes-mode re-split."""
+    from osm_pg_etl_spark.operators.topology import (
+        DEFAULT_MERGE_ATTRS, _assemble_affected_from_nodes)
+
+    def persisted():
+        return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+    cn, wn = stages["cn"], osm["way_nodes"]
+    outputs = {
+        "fast": merged_network(cn, wn),
+        "general": merged_network(cn, wn, nodes=osm["nodes"],
+                                  use_array_fast_path=False),
+        "affected": _assemble_affected_from_nodes(
+            cn, stages["wn_net"], stages["shared"], osm["nodes"],
+            DEFAULT_MERGE_ATTRS),
+    }
+    for name, df in outputs.items():
+        before = persisted()
+        df.write.parquet(str(tmp_path / name))
+        assert persisted() == before, name

@@ -139,7 +139,7 @@ def test_gate_query_runs_and_restricts(spark):
     sf = "/root/testdata/sf0.001"
     d = derive_osm(spark, sf)
     cn = car_network(d["ways"])
-    merged = merged_network(cn, d["way_nodes"], pre_partitioned=True)
+    merged = merged_network(cn, d["way_nodes"])
     directed = directed_network(merged).cache()
     rels, members = derive_restriction_relations(directed)
     n_rels = rels.count()
