@@ -17,15 +17,22 @@ Algorithm: alternating large-star/small-star contraction [Kiveris et al.,
 edges toward neighborhood minima; the edge set converges to a star forest
 whose centers are the component minima in O(log²) rounds *independent of
 graph diameter* — a continental road network (diameter in the thousands)
-converges in tens of rounds where plain hash-min label propagation (the
-round-2 implementation) needed diameter-many. Every step is a groupBy-min
+converges in tens of rounds where plain hash-min label propagation
+needs diameter-many. Every step is a groupBy-min
 + equi-join on node id (shuffle-keyed the same way), lineage truncated per
 round; convergence is a cheap (count, hash-sum) fixpoint on the edge set.
+
+The loops share two drivers: :func:`_relax_frontier` (frontier
+Bellman-Ford, for every shortest-path operator) and :func:`_until_stable`
+(run until the observed signature repeats: components, the radius
+shortcut doubling, k-core). Static per-round tables live in
+:func:`_iter_cache` scopes, which release their cache on exit.
 """
 
 from __future__ import annotations
 
 import itertools
+from contextlib import ExitStack, contextmanager
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -34,6 +41,11 @@ from pyspark.sql import functions as F
 # the name only has to be unique within a single QueryExecution, but a
 # process-wide counter keeps debugging unambiguous)
 _PROBE_SEQ = itertools.count()
+
+# cap on shortest_paths_radius's shortcut doubling (truncation is safe)
+_MAX_SHORTCUT_ROUNDS = 20
+# label_propagation checkpoints every this many rounds
+_LPA_CHECKPOINT_EVERY = 4
 
 
 def symmetric_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -46,26 +58,43 @@ def symmetric_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
             .distinct())
 
 
-def _iter_cache(df: DataFrame, *keys: str) -> DataFrame:
-    """Materialize a table that a round loop will equi-join on ``keys[0]``
-    every iteration: localCheckpoint (rounds embed a plan LEAF, so
-    per-round optimizer cost stays flat), then hash-partition on the join
-    key, sort within partitions by all join keys, and cache.
+@contextmanager
+def _cached(df: DataFrame):
+    """Cache ``df`` for the ``with`` block and unpersist it on exit, also
+    when the block raises. Whatever the operator returns must be
+    materialized (checkpointed) inside the block: a plan that still reads
+    the table after the scope closes would silently recompute it."""
+    df = df.cache()
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
+def _iter_cache(df: DataFrame, *keys: str):
+    """Scoped cache (:func:`_cached`) of a table that a round loop will
+    equi-join on ``keys[0]`` every iteration: localCheckpoint (rounds
+    embed a plan LEAF, so per-round optimizer cost stays flat), then
+    hash-partition on the join key, sort within partitions by all join
+    keys, and cache.
 
     The cache — not the checkpoint — is what makes the rounds cheap: an
     InMemoryRelation preserves outputPartitioning AND outputOrdering, so
     every round's sort-merge join reads the table with NO exchange and NO
     sort, while a bare ``localCheckpoint`` reports UnknownPartitioning
-    from its LogicalRDD (verified on 4.1.2) and every round re-shuffled
-    and re-sorted the full table. One partitioning established once,
-    reused by every keyed round — guide §2.4. The partition count follows
-    ``spark.sql.shuffle.partitions`` (scale-configured, not hard-coded);
-    a mismatch on the other (per-round, much smaller) side of the join
-    costs only that side's exchange, exactly what it cost before."""
-    return (df.localCheckpoint()
-            .repartition(keys[0])
-            .sortWithinPartitions(*keys)
-            .cache())
+    from its LogicalRDD (verified on 4.1.2), so every round would
+    re-shuffle and re-sort the full table. One partitioning established
+    once, reused by every keyed round — guide §2.4. The partition count
+    follows ``spark.sql.shuffle.partitions`` (scale-configured, not
+    hard-coded); a mismatch on the other (per-round, much smaller) side of
+    the join costs only that side's exchange.
+
+    The checkpoint runs at the call; the cache is registered only when the
+    scope is entered. So a loop can build its next tables from the current
+    ones, release the current scope, and only then enter the next."""
+    return _cached(df.localCheckpoint()
+                   .repartition(keys[0])
+                   .sortWithinPartitions(*keys))
 
 
 def _ckpt_observe(df: DataFrame, *metrics) -> tuple[DataFrame, dict]:
@@ -102,10 +131,9 @@ def _ckpt_observe(df: DataFrame, *metrics) -> tuple[DataFrame, dict]:
     The synchronous read leans on private API
     (``QueryExecution.observedMetrics`` + ``PythonSQLUtils.toPyRow``); a
     Spark minor bump that moves either falls back to one separate probe
-    job over the checkpointed rows (r16, r15-verdict task 7) — same
-    values (the checkpoint is materialized and deterministic), just the
-    pre-r15 cost, so all seven fixpoint loops degrade gracefully instead
-    of breaking at once.
+    job over the checkpointed rows — same values (the checkpoint is
+    materialized and deterministic), just one more job per round, so
+    every loop in this module degrades gracefully instead of breaking.
 
     Returns ``(checkpointed_df, metrics_dict)``.
     """
@@ -136,6 +164,58 @@ def _sig_metrics(*hash_cols: str) -> tuple:
     return (F.count(F.lit(1)).alias("c"),
             F.coalesce(F.sum(F.xxhash64(*hash_cols).cast("decimal(38,0)")),
                        F.lit(0)).alias("h"))
+
+
+def _until_stable(step, state: DataFrame, metrics: tuple,
+                  max_rounds: int, sig: dict | None = None):
+    """Signature-stability loop: ``state = step(state)``, checkpointed with
+    ``metrics`` observed in the checkpoint job (:func:`_ckpt_observe`),
+    until the observed signature repeats or ``max_rounds`` run out. ``sig``
+    is the starting state's signature when the caller already has it.
+    Returns ``(state, rounds)``; the round that finds the repeat counts."""
+    rounds = 0
+    while rounds < max_rounds:
+        state, m = _ckpt_observe(step(state), *metrics)
+        rounds += 1
+        if m == sig:
+            break
+        sig = m
+    return state, rounds
+
+
+def _relax_frontier(dist: DataFrame, relax, keys: list[str],
+                    max_rounds: int):
+    """Frontier Bellman-Ford over ``dist`` (``keys`` + ``dist``).
+    ``relax(frontier)`` returns the candidate rows (``keys`` + ``dist``)
+    reached from the frontier, the rows whose distance improved in the
+    previous round.
+
+    Relaxing only the frontier gives the same table as full relaxation,
+    round for round: a row whose distance did not change already
+    contributed its edges, with the same value, the round after it last
+    improved, and (min, +) only accumulates. Existing rows carry their
+    distance in ``prev`` and candidates carry NULL, so after the per-key
+    min the improved rows are exactly ``prev IS NULL OR dist < prev``;
+    their count rides the checkpoint job as an observed metric. Returns
+    ``(dist, rounds, changed)``, where ``changed`` is the count still
+    improving in the last round (0 at the fixpoint, -1 if no round ran).
+    """
+    improved = F.col("prev").isNull() | (F.col("dist") < F.col("prev"))
+    frontier, rounds, changed = dist, 0, -1
+    while rounds < max_rounds and changed != 0:
+        cand = relax(frontier).select(
+            *keys, "dist", F.lit(None).cast("double").alias("prev"))
+        cur = dist.select(*keys, "dist", F.col("dist").alias("prev"))
+        new, m = _ckpt_observe(
+            cur.unionByName(cand)
+            .groupBy(*keys).agg(F.min("dist").alias("dist"),
+                                F.min("prev").alias("prev")),
+            F.count(F.when(improved, 1)).alias("chg"))
+        frontier = new.filter(improved).select(*keys, "dist")
+        dist = new.select(*keys, "dist")
+        changed = m["chg"]
+        rounds += 1
+    return dist, rounds, changed
 
 
 def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -170,10 +250,7 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     nodes = und.select(F.col("a").alias("node")).distinct().localCheckpoint()
     e = und.where(F.col("a") > F.col("b")).localCheckpoint()
 
-    sig = None
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
+    def contract(e):
         # large-star over the symmetric view; output (v, m) keeps the
         # larger→smaller orientation since m <= u < v
         sym = e.unionByName(
@@ -187,18 +264,13 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
               .distinct())
         # small-star over the oriented edges: all of Γ≤(u) ∪ {u} → min
         mins2 = ls.groupBy("a").agg(F.min("b").alias("m"))
-        # fixpoint signature observed inside the checkpoint job itself —
-        # no separate per-round pass over e (_ckpt_observe)
-        e, row = _ckpt_observe(
-            ls.join(mins2, "a")
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .unionByName(mins2.select("a", F.col("m").alias("b")))
-            .where(F.col("a") != F.col("b"))
-            .distinct(),
-            *_sig_metrics("a", "b"))
-        if (row["c"], row["h"]) == sig:
-            break
-        sig = (row["c"], row["h"])
+        return (ls.join(mins2, "a")
+                .select(F.col("b").alias("a"), F.col("m").alias("b"))
+                .unionByName(mins2.select("a", F.col("m").alias("b")))
+                .where(F.col("a") != F.col("b"))
+                .distinct())
+
+    e, rounds = _until_stable(contract, e, _sig_metrics("a", "b"), max_iter)
 
     parents = e.select(F.col("a").alias("node"),
                        F.col("b").alias("component"))
@@ -221,22 +293,22 @@ def shortest_paths(edges: DataFrame, source: int, max_hops: int = 4,
     deterministic: float ``(min, +)`` is still a monotone semiring
     (x ≤ y ⇒ a+x ≤ a+y in IEEE), so the k-round result equals the exact
     minimum over all ≤k-edge path sums. Returns (node, dist); unreached
-    nodes are absent.
+    nodes are absent. The rounds relax only the frontier
+    (:func:`_relax_frontier`), which yields the full-relaxation table
+    round for round, and stop early once no distance improves.
     """
-    e = _iter_cache(edges.select(F.col(src).cast("long").alias("u"),
-                                 F.col(dst).cast("long").alias("v"),
-                                 F.col(weight).cast("double").alias("w")),
-                    "u")
-    spark = edges.sparkSession
-    dist = spark.createDataFrame([(int(source), 0.0)], "node long, dist double")
-    for _ in range(max_hops):
-        relax = (e.join(dist, e["u"] == dist["node"])
-                 .select(e["v"].alias("node"),
-                         (dist["dist"] + e["w"]).alias("dist")))
-        dist = (dist.unionByName(relax)
-                .groupBy("node").agg(F.min("dist").alias("dist"))
-                .localCheckpoint())
-    e.unpersist()
+    dist = edges.sparkSession.createDataFrame([(int(source), 0.0)],
+                                              "node long, dist double")
+    with _iter_cache(edges.select(F.col(src).cast("long").alias("u"),
+                                  F.col(dst).cast("long").alias("v"),
+                                  F.col(weight).cast("double").alias("w")),
+                     "u") as e:
+        dist, _, _ = _relax_frontier(
+            dist,
+            lambda f: (e.join(f, e["u"] == f["node"])
+                       .select(e["v"].alias("node"),
+                               (f["dist"] + e["w"]).alias("dist"))),
+            ["node"], max_hops)
     return dist
 
 
@@ -251,25 +323,16 @@ def shortest_paths_weighted(edges: DataFrame, source,
     reference's pgrouting/igraph routing step (``etl/osm-load.sh:17``
     loads pgrouting; ``osm-pg-etl.md:31-62`` routes in igraph).
 
-    Each round relaxes only from the FRONTIER — the nodes whose distance
-    improved in the previous round (a node whose distance is unchanged
-    already contributed its edges, with the same value, the round after
-    it last improved, and (min, +) only accumulates — so the per-round
-    distance tables are identical to full relaxation, round for round,
-    which keeps the unrolled full-relaxation oracle exact). Frontiers
-    shrink fast once the wave passes, so late rounds join a handful of
-    rows against the edge list instead of every settled node.
-
-    Convergence is an EXACT set test folded into the same aggregation:
-    existing rows carry their distance in a ``prev`` column (relaxation
-    candidates carry NULL), so after the per-node min the improved rows
-    are simply ``prev IS NULL OR dist < prev`` — one shuffle + one cheap
-    count on the checkpointed result per round, no separate anti-join
-    (doubles compare exactly because both engines compute the same
-    left-to-right path sums). Same localCheckpoint lineage-truncation
-    pattern as ``k_core``. Worst case rounds = longest shortest path in
-    edges (bounded by ``max_rounds``); on topology-merged road graphs the
-    measured count is tens, not hundreds.
+    Each round relaxes only from the FRONTIER (:func:`_relax_frontier`),
+    whose per-round tables equal full relaxation's, which keeps the
+    unrolled full-relaxation oracle exact. Frontiers shrink fast once the
+    wave passes, so late rounds join a handful of rows against the edge
+    list instead of every settled node. Convergence is an EXACT set test
+    folded into the same aggregation (doubles compare exactly because
+    both engines compute the same left-to-right path sums). Worst case
+    rounds = longest shortest path in edges (bounded by ``max_rounds``);
+    on topology-merged road graphs the measured count is tens, not
+    hundreds.
 
     ``source`` may be a single node id (anything ``int()`` accepts that
     is not a bool or an iterable — numpy scalars included; returns
@@ -292,45 +355,25 @@ def shortest_paths_weighted(edges: DataFrame, source,
         raise TypeError("source must be a node id or a list of node ids, "
                         "not a bool")
     single = not isinstance(source, Iterable)
-    # _iter_cache keyed on u: every relaxation round joins the static edge
-    # list on the frontier's node key — previously each of the (tens of)
-    # rounds re-shuffled and re-sorted the whole edge table
-    e = _iter_cache(edges.select(F.col(src).cast("long").alias("u"),
-                                 F.col(dst).cast("long").alias("v"),
-                                 F.col(weight).cast("double").alias("w")),
-                    "u")
-    spark = edges.sparkSession
     sources = [int(source)] if single else [int(x) for x in source]
     # multi-source: every wave advances in the SAME rounds keyed on
     # (s, node) — k sources cost the same shuffle count as one (the
     # sigma_table pattern), the many-to-many accessibility primitive
-    dist = spark.createDataFrame([(s, s, 0.0) for s in sources],
-                                 "s long, node long, dist double")
-    frontier = dist
-    rounds = 0
-    changed = -1  # -1 = loop never ran (max_rounds == 0)
-    for _ in range(max_rounds):
-        relax = (e.join(frontier, e["u"] == frontier["node"])
-                 .select(frontier["s"], e["v"].alias("node"),
-                         (frontier["dist"] + e["w"]).alias("dist"),
-                         F.lit(None).cast("double").alias("prev")))
-        cur = dist.select("s", "node", "dist",
-                          F.col("dist").alias("prev"))
-        improved = F.col("prev").isNull() | (F.col("dist") < F.col("prev"))
-        # the frontier-size probe rides the checkpoint job as an observed
-        # metric instead of a second pass over new (_ckpt_observe)
-        new, m = _ckpt_observe(
-            cur.unionByName(relax)
-            .groupBy("s", "node").agg(F.min("dist").alias("dist"),
-                                      F.min("prev").alias("prev")),
-            F.count(F.when(improved, 1)).alias("chg"))
-        frontier = new.filter(improved).select("s", "node", "dist")
-        changed = m["chg"]
-        dist = new.select("s", "node", "dist")
-        rounds += 1
-        if changed == 0:
-            break
-    else:
+    dist = edges.sparkSession.createDataFrame(
+        [(s, s, 0.0) for s in sources], "s long, node long, dist double")
+    # keyed on u: every relaxation round joins the static edge list on the
+    # frontier's node key without re-shuffling or re-sorting it
+    with _iter_cache(edges.select(F.col(src).cast("long").alias("u"),
+                                  F.col(dst).cast("long").alias("v"),
+                                  F.col(weight).cast("double").alias("w")),
+                     "u") as e:
+        dist, rounds, changed = _relax_frontier(
+            dist,
+            lambda f: (e.join(f, e["u"] == f["node"])
+                       .select(f["s"], e["v"].alias("node"),
+                               (f["dist"] + e["w"]).alias("dist"))),
+            ["s", "node"], max_rounds)
+    if changed:
         warnings.warn(
             f"shortest_paths_weighted stopped at max_rounds={max_rounds} "
             f"before the fixpoint ({changed} distances still improving); "
@@ -345,7 +388,6 @@ def shortest_paths_radius(edges: DataFrame, source,
                           delta: float,
                           src: str = "src", dst: str = "dst",
                           weight: str = "w", max_rounds: int = 200,
-                          max_shortcut_rounds: int = 20,
                           return_rounds: bool = False):
     """Exact weighted SSSP whose round count is bounded by DISTANCE
     BUCKETS, not graph hop diameter — the scale path past
@@ -372,7 +414,7 @@ def shortest_paths_radius(edges: DataFrame, source,
     Cost model for choosing Δ: shortcut storage is Σ_u |ball(u, Δ)| —
     pick Δ so the average Δ-ball holds O(k) nodes (road networks: Δ of a
     few km ⇒ tens of neighbors) and both the doubling join and the
-    per-round frontier fan-out stay k-bounded. ``max_shortcut_rounds``
+    per-round frontier fan-out stay k-bounded. ``_MAX_SHORTCUT_ROUNDS``
     caps the doubling; truncation is SAFE (fewer shortcuts only means
     more relaxation rounds, never wrong distances). Weights must be
     non-negative. Same source/dispatch/return contract as
@@ -390,23 +432,18 @@ def shortest_paths_radius(edges: DataFrame, source,
     sc = (e.filter((F.col("w") < F.lit(float(delta))) & (F.col("u") != F.col("v")))
           .groupBy("u", "v").agg(F.min("w").alias("w"))
           .localCheckpoint())
-    sig = None
-    sc_rounds = 0
-    for _ in range(max_shortcut_rounds):
-        sc_rounds += 1
+
+    def square(sc):
         hop = (sc.alias("x").join(sc.alias("y"),
                                   F.col("x.v") == F.col("y.u"))
                .select(F.col("x.u").alias("u"), F.col("y.v").alias("v"),
                        (F.col("x.w") + F.col("y.w")).alias("w"))
                .filter((F.col("w") < F.lit(float(delta)))
                        & (F.col("u") != F.col("v"))))
-        # fixpoint signature observed inside the checkpoint job
-        sc, row = _ckpt_observe(
-            sc.unionByName(hop).groupBy("u", "v").agg(F.min("w").alias("w")),
-            *_sig_metrics("u", "v"))
-        if (row["c"], row["h"]) == sig:
-            break
-        sig = (row["c"], row["h"])
+        return sc.unionByName(hop).groupBy("u", "v").agg(F.min("w").alias("w"))
+
+    sc, sc_rounds = _until_stable(square, sc, _sig_metrics("u", "v"),
+                                  _MAX_SHORTCUT_ROUNDS)
     # no checkpoint on aug: shortest_paths_weighted _iter_cache-s its own
     # projection of it, so materializing here would just double the pass
     aug = (e.unionByName(sc)
@@ -600,7 +637,7 @@ def turn_restricted_distances(directed: DataFrame, source: int,
     distances cannot represent "you may be at v, but not if you came
     from u"). The reference delegates exactly this to pgrouting.
 
-    Same frontier + prev-NULL fixpoint machinery as
+    Same frontier relaxation (:func:`_relax_frontier`) as
     :func:`shortest_paths_weighted`, keyed on the edge pair (u, v):
     initial state is every edge leaving ``source`` at its own weight;
     each round relaxes permitted transitions from the frontier. Returns
@@ -616,7 +653,7 @@ def turn_restricted_distances(directed: DataFrame, source: int,
     :func:`_via_way_stateful_transitions` and the same fixpoint runs
     over the expanded keys — via-WAY restrictions bind only to paths
     traversing their full chain, exactly pgrouting's edge-chain
-    semantics. Without it the plan is byte-identical to before.
+    semantics. Without it the state key is the plain edge pair.
     """
     import warnings
 
@@ -639,46 +676,28 @@ def turn_restricted_distances(directed: DataFrame, source: int,
                       .collect()}
         trans = _via_way_stateful_transitions(
             trans, e0, via_way_restrictions, banned, forbid_uturn)
-    # keyed on (from_u, via[, st_from]): every relaxation round joins the
-    # static transition table on exactly these frontier keys
-    trans = _iter_cache(trans, "from_u", "via",
-                        *(["st_from"] if stateful else []))
     dist = (e0.filter(F.col("u") == int(source))
             .select("u", "v", F.col("w").alias("dist"))
             .localCheckpoint())
     if stateful:
         dist = dist.withColumn("st", F.lit(0))
     keys = ["u", "v", "st"] if stateful else ["u", "v"]
-    frontier = dist
-    rounds = 0
-    changed = -1  # -1 = loop never ran (max_rounds == 0)
-    for _ in range(max_rounds):
-        cond = ((trans["from_u"] == frontier["u"])
-                & (trans["via"] == frontier["v"]))
-        if stateful:
-            cond = cond & (trans["st_from"] == frontier["st"])
-        relax_cols = [F.col("via").alias("u"),
-                      F.col("to_v").alias("v"),
-                      (F.col("dist") + F.col("w")).alias("dist"),
-                      F.lit(None).cast("double").alias("prev")]
-        if stateful:
-            relax_cols.insert(2, F.col("st_to").alias("st"))
-        relax = trans.join(frontier, cond).select(*relax_cols)
-        cur = dist.select(*keys, "dist", F.col("dist").alias("prev"))
-        improved = F.col("prev").isNull() | (F.col("dist") < F.col("prev"))
-        # frontier-size probe folded into the checkpoint job (_ckpt_observe)
-        new, m = _ckpt_observe(
-            cur.unionByName(relax)
-            .groupBy(*keys).agg(F.min("dist").alias("dist"),
-                                F.min("prev").alias("prev")),
-            F.count(F.when(improved, 1)).alias("chg"))
-        frontier = new.filter(improved).select(*keys, "dist")
-        changed = m["chg"]
-        dist = new.select(*keys, "dist")
-        rounds += 1
-        if changed == 0:
-            break
-    else:
+    # keyed on (from_u, via[, st_from]): every relaxation round joins the
+    # static transition table on exactly these frontier keys
+    with _iter_cache(trans, "from_u", "via",
+                     *(["st_from"] if stateful else [])) as trans:
+        def relax(f):
+            cond = (trans["from_u"] == f["u"]) & (trans["via"] == f["v"])
+            if stateful:
+                cond = cond & (trans["st_from"] == f["st"])
+            return trans.join(f, cond).select(
+                F.col("via").alias("u"), F.col("to_v").alias("v"),
+                *([F.col("st_to").alias("st")] if stateful else []),
+                (F.col("dist") + F.col("w")).alias("dist"))
+
+        dist, rounds, changed = _relax_frontier(dist, relax, keys,
+                                                max_rounds)
+    if changed:
         warnings.warn(
             f"turn_restricted_distances stopped at max_rounds="
             f"{max_rounds} before the fixpoint ({changed} still "
@@ -709,44 +728,37 @@ def sigma_table(edges: DataFrame, sources: list[int], max_depth: int = 6,
     if not directed:
         e = e.unionByName(e.select(F.col("v").alias("u"),
                                    F.col("u").alias("v")))
-    # keyed on u: every BFS level joins the frontier on e["u"]
-    e = _iter_cache(e.filter(F.col("u") != F.col("v")).distinct(), "u")
-
     spark = edges.sparkSession
     srcs = spark.createDataFrame([(int(s),) for s in sources], "s long")
-    # r15 note: an accumulate-frontier-parts variant (anti-join against a
-    # union of per-level checkpointed leaves, no per-level re-checkpoint
-    # of the whole visited set) was measured and REJECTED — reading k
+    # one consolidated visited table, checkpointed once per level: an
+    # accumulate-frontier-parts variant (anti-join against a union of
+    # per-level checkpointed leaves) was measured slower — reading k
     # separate materialized leaves each level costs more task/stage
-    # overhead than one consolidated RDD (osm_reachability sf0.01 build
-    # 9.4 s → 10.5 s). The per-level visited checkpoint stays.
+    # overhead than one RDD (osm_reachability sf0.01 build 9.4 s →
+    # 10.5 s). The next level's frontier is ``visited.filter(dist == d)``
+    # (a scan of the one materialized RDD), and the emptiness probe rides
+    # the same job as an observed conditional count: each level re-reads
+    # the visited leaf once more in exchange for one job barrier and one
+    # materialization per level instead of two.
     visited = srcs.select("s", F.col("s").alias("node"),
                           F.lit(0).alias("dist"),
                           F.lit(1).cast("long").alias("sigma"))
-    # r16 (r15-verdict task 6): ONE checkpoint job per level instead of
-    # two — the level's new rows are unioned into ``visited`` and the
-    # consolidated table is the only materialization; the next level's
-    # frontier is ``visited.filter(dist == d)`` (a scan of the one
-    # materialized RDD, no second checkpointed table), and the
-    # emptiness probe rides the same job as an observed conditional
-    # count. Trade recorded honestly: each level re-reads the visited
-    # leaf once more (frontier filter) in exchange for dropping a full
-    # materialization write + job barrier per level — strictly fewer
-    # passes over materialized data AND half the scheduler jobs.
-    for d in range(1, max_depth + 1):
-        frontier = visited.filter(F.col("dist") == d - 1)
-        cand = (frontier.join(e, frontier["node"] == e["u"])
-                .select("s", F.col("v").alias("node"), "sigma"))
-        nxt = (cand.join(visited.select("s", "node"), ["s", "node"],
-                         "left_anti")
-               .groupBy("s", "node").agg(F.sum("sigma").alias("sigma"))
-               .select("s", "node", F.lit(d).alias("dist"), "sigma"))
-        visited, m = _ckpt_observe(
-            visited.unionByName(nxt),
-            F.count(F.when(F.col("dist") == d, F.lit(1))).alias("c"))
-        if m["c"] == 0:
-            break
-    e.unpersist()
+    # keyed on u: every BFS level joins the frontier on e["u"]
+    with _iter_cache(e.filter(F.col("u") != F.col("v")).distinct(),
+                     "u") as e:
+        for d in range(1, max_depth + 1):
+            frontier = visited.filter(F.col("dist") == d - 1)
+            cand = (frontier.join(e, frontier["node"] == e["u"])
+                    .select("s", F.col("v").alias("node"), "sigma"))
+            nxt = (cand.join(visited.select("s", "node"), ["s", "node"],
+                             "left_anti")
+                   .groupBy("s", "node").agg(F.sum("sigma").alias("sigma"))
+                   .select("s", "node", F.lit(d).alias("dist"), "sigma"))
+            visited, m = _ckpt_observe(
+                visited.unionByName(nxt),
+                F.count(F.when(F.col("dist") == d, F.lit(1))).alias("c"))
+            if m["c"] == 0:
+                break
     return visited
 
 
@@ -790,53 +802,53 @@ def betweenness(edges: DataFrame, sources: list[int], max_depth: int = 6,
     (node, betweenness) for every node on some counted shortest path;
     isolated / never-intermediate nodes report 0 via the final left join.
     """
-    # vis keyed on node: every level joins (s, node) / node==u, both
-    # satisfied by HashPartitioning(node); e keyed on u for the same
-    # per-level predecessor join
-    vis = _iter_cache(sigma_table(edges, sources, max_depth, directed,
-                                  src, dst), "node")
     e = edges.select(F.col(src).cast("long").alias("u"),
                      F.col(dst).cast("long").alias("v"))
     if not directed:
         e = e.unionByName(e.select(F.col("v").alias("u"),
                                    F.col("u").alias("v")))
-    e = _iter_cache(e.filter(F.col("u") != F.col("v")).distinct(), "u")
-
-    lmax = vis.agg(F.max("dist")).collect()[0][0] or 0
-    # delta rows exist for every visited node at levels >= the one being
-    # processed; start with 0 at the deepest level
-    delta = (vis.filter(F.col("dist") == lmax)
-             .select("s", "node", F.lit(0.0).alias("delta")))
-    acc = delta
-    for lev in range(lmax, 0, -1):
-        succ = (vis.filter(F.col("dist") == lev)
-                .join(delta, ["s", "node"])
-                .select("s", F.col("node").alias("w"),
-                        F.col("sigma").alias("sigma_w"), "delta"))
-        pred = (vis.filter(F.col("dist") == lev - 1)
-                .select("s", "node", "sigma"))
-        contrib = (pred.join(e, pred["node"] == e["u"])
-                   .join(succ, ["s"])
-                   .where(F.col("v") == F.col("w"))
-                   .groupBy("s", "node")
-                   .agg(F.sum(F.col("sigma") / F.col("sigma_w")
-                              * (F.lit(1.0) + F.col("delta")))
-                        .alias("_c")))
-        delta = (pred.join(contrib, ["s", "node"], "left")
-                 .select("s", "node",
-                         F.coalesce("_c", F.lit(0.0)).alias("delta"))
-                 .localCheckpoint())
-        acc = acc.unionByName(delta)
-    half = 1.0 if directed else 2.0
-    bc = (acc.filter(F.col("node") != F.col("s"))
-          .groupBy("node")
-          .agg((F.sum("delta") / half).alias("betweenness")))
-    nodes = vis.select("node").distinct()
-    vis.unpersist()
-    e.unpersist()
-    return (nodes.join(bc, "node", "left")
-            .select("node", F.coalesce("betweenness", F.lit(0.0))
-                    .alias("betweenness")))
+    # vis keyed on node: every level joins (s, node) / node==u, both
+    # satisfied by HashPartitioning(node); e keyed on u for the same
+    # per-level predecessor join
+    with _iter_cache(sigma_table(edges, sources, max_depth, directed,
+                                 src, dst), "node") as vis, \
+            _iter_cache(e.filter(F.col("u") != F.col("v")).distinct(),
+                        "u") as e:
+        lmax = vis.agg(F.max("dist")).collect()[0][0] or 0
+        # delta rows exist for every visited node at levels >= the one
+        # being processed; start with 0 at the deepest level
+        delta = (vis.filter(F.col("dist") == lmax)
+                 .select("s", "node", F.lit(0.0).alias("delta")))
+        acc = delta
+        for lev in range(lmax, 0, -1):
+            succ = (vis.filter(F.col("dist") == lev)
+                    .join(delta, ["s", "node"])
+                    .select("s", F.col("node").alias("w"),
+                            F.col("sigma").alias("sigma_w"), "delta"))
+            pred = (vis.filter(F.col("dist") == lev - 1)
+                    .select("s", "node", "sigma"))
+            contrib = (pred.join(e, pred["node"] == e["u"])
+                       .join(succ, ["s"])
+                       .where(F.col("v") == F.col("w"))
+                       .groupBy("s", "node")
+                       .agg(F.sum(F.col("sigma") / F.col("sigma_w")
+                                  * (F.lit(1.0) + F.col("delta")))
+                            .alias("_c")))
+            delta = (pred.join(contrib, ["s", "node"], "left")
+                     .select("s", "node",
+                             F.coalesce("_c", F.lit(0.0)).alias("delta"))
+                     .localCheckpoint())
+            acc = acc.unionByName(delta)
+        half = 1.0 if directed else 2.0
+        bc = (acc.filter(F.col("node") != F.col("s"))
+              .groupBy("node")
+              .agg((F.sum("delta") / half).alias("betweenness")))
+        # the output reads vis (its node list, the deepest level's zero
+        # deltas), so it is materialized before the scope releases vis
+        return (vis.select("node").distinct().join(bc, "node", "left")
+                .select("node", F.coalesce("betweenness", F.lit(0.0))
+                        .alias("betweenness"))
+                .localCheckpoint())
 
 
 def betweenness_exact(edges: DataFrame, wave_size: int = 32,
@@ -914,18 +926,14 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst",
     wedge (a→b, a→c) closed by edge (b→c). Returns
     (node, degree, n_triangles, clustering) for every node with degree
     ≥ 1; clustering = 2T / (deg·(deg−1)), 0 when degree < 2."""
-    # r15: the old `und.unpersist()` before returning ran at
-    # DataFrame-BUILD time (this operator is fully lazy, nothing has
-    # executed yet), so the cache was dropped before the action ever
-    # started and the whole upstream edge pipeline (for the OSM gates:
-    # derive → car_network → merged_network) was re-inlined at every one
-    # of und's plan references — osm_triangles at sf0.01 planned 341
-    # jobs/run, 34 s Spark wall. localCheckpoint (not cache) because und
-    # is referenced ~10× across the unrolled wedge plan (e embeds it
-    # thrice, e is itself referenced thrice): a cache leaves the full
-    # logical subtree at every reference and the analyzer alone took
-    # ~7 s; the checkpoint turns them into RDD-scan leaves. e (the
-    # oriented edge list, referenced as e1/e2/closer) is cached on top.
+    # und and e are checkpointed, not cached: the operator returns a lazy
+    # plan, so a cache would have to outlive the call (or be dropped
+    # before the action starts, re-inlining the whole upstream edge
+    # pipeline at each reference — osm_triangles at sf0.01 planned 341
+    # jobs/run). und is referenced ~10× across the unrolled wedge plan,
+    # and e (the oriented edge list) thrice, as e1/e2/closer; the
+    # checkpoints turn every reference into an RDD-scan leaf instead of a
+    # full logical subtree the analyzer re-walks (~7 s with a cache).
     und = symmetric_edges(edges, src, dst).localCheckpoint()
     deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
     e = (und.join(deg.select(F.col("a").alias("a"), F.col("d").alias("da")),
@@ -934,7 +942,7 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst",
                "b")
          .filter(F.struct("da", "a") < F.struct("db", "b"))
          .select("a", "b", "da", "db")
-         .cache())
+         .localCheckpoint())
     e1 = e.select(F.col("a").alias("u"), F.col("b").alias("v"),
                   F.col("db").alias("dv"))
     e2 = e.select(F.col("a").alias("u"), F.col("b").alias("w"),
@@ -993,63 +1001,66 @@ def personalized_pagerank(edges: DataFrame, seeds: list[int],
 def _power_iteration(edges: DataFrame, seeds: list[int] | None,
                      n_iter: int, damping: float,
                      src: str, dst: str) -> DataFrame:
-    e = (edges.select(F.col(src).cast("long").alias("u"),
-                      F.col(dst).cast("long").alias("v"))
-         .distinct().cache())
-    nodes = (e.select(F.col("u").alias("node"))
-             .unionByName(e.select(F.col("v").alias("node")))
-             .distinct().cache())
-    n = nodes.count() if seeds is None else len(seeds)
-    out = e.groupBy("u").agg(F.count(F.lit(1)).alias("outdeg"))
-    # keyed on u: every power iteration joins pr on links["u"]
-    links = _iter_cache(e.join(out, "u").select("u", "v", "outdeg"), "u")
-    if seeds is None:
-        is_seed = F.lit(True)
-        pr = nodes.select("node", F.lit(1.0 / n).alias("pr"))
-    else:
-        is_seed = F.col("node").isin(seeds)
-        pr = nodes.select(
-            "node",
-            F.when(is_seed, F.lit(1.0 / n)).otherwise(F.lit(0.0))
-            .alias("pr"))
-    for i in range(n_iter):
-        contrib = (links.join(pr, links["u"] == pr["node"])
-                   .select(F.col("v").alias("node"),
-                           (F.col("pr") / F.col("outdeg")).alias("w")))
-        inflow = contrib.groupBy("node").agg(F.sum("w").alias("inflow"))
-        # dangling nodes (no out-edges) leak their mass; redistribute it.
-        # Computed as a broadcast one-row aggregate inside the plan — no
-        # driver action per iteration, the whole round stays one lazy DAG
-        dang = (pr.join(out.select(F.col("u").alias("node")),
-                        "node", "left_anti")
-                .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("_m")))
-        base = (F.lit((1.0 - damping) / n)
-                + (F.lit(damping) * F.col("_m")) / F.lit(float(n)))
-        # seeded runs teleport only to the seed set
-        base = base if seeds is None else \
-            F.when(is_seed, base).otherwise(F.lit(0.0))
-        pr = (nodes.join(inflow, "node", "left")
-              .crossJoin(F.broadcast(dang))
-              .select("node",
-                      (base
-                       + F.lit(damping) * F.coalesce("inflow", F.lit(0.0)))
-                      .alias("pr")))
-        # r16 (r15-verdict task 5): materialize every SECOND round — the
-        # iteration count is fixed (no per-round probe), so two rounds
-        # ride one checkpoint job and jobs/run halve (guide §9 pattern).
-        # In the unmaterialized round the next round's three references
-        # to ``pr`` (contrib, dang, the update) re-read the same subtree,
-        # but its inflow exchange and dangling broadcast are deduped by
-        # ReuseExchange, so the duplicated work is two node-sized
-        # post-shuffle joins — strictly less than a job barrier + full
-        # materialization locally, and one fewer full pass over the rank
-        # table per pair of rounds at scale. The LAST round is always
-        # materialized: the unpersists below run at build time, so the
-        # returned plan must not depend on the caches.
-        if i % 2 == 1 or i == n_iter - 1:
-            pr = pr.localCheckpoint()
-    e.unpersist()
-    links.unpersist()
+    with ExitStack() as scope:
+        e = scope.enter_context(_cached(
+            edges.select(F.col(src).cast("long").alias("u"),
+                         F.col(dst).cast("long").alias("v"))
+            .distinct()))
+        nodes = scope.enter_context(_cached(
+            e.select(F.col("u").alias("node"))
+            .unionByName(e.select(F.col("v").alias("node")))
+            .distinct()))
+        n = nodes.count() if seeds is None else len(seeds)
+        out = e.groupBy("u").agg(F.count(F.lit(1)).alias("outdeg"))
+        # keyed on u: every power iteration joins pr on links["u"]
+        links = scope.enter_context(
+            _iter_cache(e.join(out, "u").select("u", "v", "outdeg"), "u"))
+        if seeds is None:
+            is_seed = F.lit(True)
+            pr = nodes.select("node", F.lit(1.0 / n).alias("pr"))
+        else:
+            is_seed = F.col("node").isin(seeds)
+            pr = nodes.select(
+                "node",
+                F.when(is_seed, F.lit(1.0 / n)).otherwise(F.lit(0.0))
+                .alias("pr"))
+        for i in range(n_iter):
+            contrib = (links.join(pr, links["u"] == pr["node"])
+                       .select(F.col("v").alias("node"),
+                               (F.col("pr") / F.col("outdeg")).alias("w")))
+            inflow = contrib.groupBy("node").agg(F.sum("w").alias("inflow"))
+            # dangling nodes (no out-edges) leak their mass; redistribute
+            # it. Computed as a broadcast one-row aggregate inside the
+            # plan — no driver action per iteration, the whole round stays
+            # one lazy DAG
+            dang = (pr.join(out.select(F.col("u").alias("node")),
+                            "node", "left_anti")
+                    .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("_m")))
+            base = (F.lit((1.0 - damping) / n)
+                    + (F.lit(damping) * F.col("_m")) / F.lit(float(n)))
+            # seeded runs teleport only to the seed set
+            base = base if seeds is None else \
+                F.when(is_seed, base).otherwise(F.lit(0.0))
+            pr = (nodes.join(inflow, "node", "left")
+                  .crossJoin(F.broadcast(dang))
+                  .select("node",
+                          (base
+                           + F.lit(damping) * F.coalesce("inflow", F.lit(0.0)))
+                          .alias("pr")))
+            # materialize every SECOND round — the iteration count is fixed
+            # (no per-round probe), so two rounds ride one checkpoint job
+            # (guide §9 pattern). In the unmaterialized round the next
+            # round's three references to ``pr`` (contrib, dang, the
+            # update) re-read the same subtree, but its inflow exchange and
+            # dangling broadcast are deduped by ReuseExchange, so the
+            # duplicated work is two node-sized post-shuffle joins — less
+            # than a job barrier + full materialization locally, and one
+            # fewer full pass over the rank table per pair of rounds at
+            # scale. The LAST round is always materialized: the scope
+            # releases the caches on exit, so the returned plan must not
+            # read them.
+            if i % 2 == 1 or i == n_iter - 1:
+                pr = pr.localCheckpoint()
     return pr.select("node", F.col("pr").alias("pagerank"))
 
 
@@ -1101,8 +1112,7 @@ def dedup_canonical_by(docs: DataFrame, pairs: DataFrame, score_col: str,
 
 
 def label_propagation(edges: DataFrame, n_iter: int = 4,
-                      src: str = "src", dst: str = "dst",
-                      checkpoint_every: int = 4) -> DataFrame:
+                      src: str = "src", dst: str = "dst") -> DataFrame:
     """Community detection by synchronous label propagation, determinized
     — the native replacement for the reference workflow's igraph
     ``community_label_propagation()`` step (``osm-pg-etl.md:31-105``
@@ -1119,7 +1129,7 @@ def label_propagation(edges: DataFrame, n_iter: int = 4,
 
     Per round: one equi-join of the label table to the symmetric edge list
     on the source key + the (count DESC, label ASC) argmax per node,
-    written as one shuffle and two plain aggregates (r15 §14): the joined
+    written as one shuffle and two plain aggregates: the joined
     (b, label) rows are hash-partitioned on ``b`` once — hash(b) clusters
     (b, label), so the label-count aggregate, the argmax aggregate and
     the NEXT round's join on the renamed key all reuse that single
@@ -1132,16 +1142,15 @@ def label_propagation(edges: DataFrame, n_iter: int = 4,
     Equivalence pinned by test_lpa_two_phase_argmax_equals_mode. All
     shuffles are keyed on node id; nothing is collected to the driver.
 
-    r15: the edge table stays a plain ``localCheckpoint`` — ``_iter_cache``
-    (hash-partition on the round join key + sort + cache) was measured
-    here and LOST: with only ``n_iter`` = 4 keyed rounds the extra
-    partition+sort+cache-store pass and the pinned partition count (which
-    AQE can no longer coalesce at small scale) cost more than the four
-    saved edge-side exchanges (A/B at sf0.1, 5 interleaved reps:
-    iter_cache median 8.41 s vs checkpoint 8.26 s on osm_communities;
-    scripts/ab_lpa.py). The many-round operators (pagerank, betweenness,
-    Bellman-Ford SSSP — tens of keyed rounds over the same static table)
-    DO amortize the build and ride ``_iter_cache``.
+    The edge table is a plain ``localCheckpoint``, not ``_iter_cache``
+    (hash-partition on the round join key + sort + cache): with only
+    ``n_iter`` = 4 keyed rounds the extra partition+sort+cache-store pass
+    and the pinned partition count (which AQE can no longer coalesce at
+    small scale) cost more than the four saved edge-side exchanges (the
+    A/B is recorded in OPTIMIZATION_r15.md §1). The many-round operators
+    (pagerank, betweenness, Bellman-Ford SSSP — tens of keyed rounds over
+    the same static table) do amortize the build and ride
+    ``_iter_cache``.
     Returns (node, community).
     """
     e = symmetric_edges(edges, src, dst).localCheckpoint()
@@ -1162,8 +1171,7 @@ def label_propagation(edges: DataFrame, n_iter: int = 4,
         # is a full job barrier (~0.35 s locally), so short fixed unrolls
         # (the 4-round gate) run as one multi-stage job, while plan depth
         # stays bounded when callers iterate dozens of rounds
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 \
-                and i + 1 < n_iter:
+        if (i + 1) % _LPA_CHECKPOINT_EVERY == 0 and i + 1 < n_iter:
             labels = labels.localCheckpoint()
     return labels.select(F.col("id").alias("node"),
                          F.col("label").alias("community"))
@@ -1342,68 +1350,80 @@ def louvain(edges: DataFrame, rounds: tuple = (6, 4, 3),
     # we keyed on b: every move round's first join is wedges⋈labels on b
     # (_louvain_round); deg keyed on id: every round joins it on id / a
     if weight is None:
-        e = _iter_cache(symmetric_edges(edges, src, dst), "b")
-        we = e.select("a", "b", F.lit(1).cast("long").alias("w"))
+        first = _iter_cache(symmetric_edges(edges, src, dst), "b")
     else:
         raw = edges.select(F.col(src).cast("long").alias("a"),
                            F.col(dst).cast("long").alias("b"),
                            F.col(weight).cast("long").alias("w"))
-        we = _iter_cache(
+        first = _iter_cache(
             raw.unionByName(raw.select(F.col("b").alias("a"),
                                        F.col("a").alias("b"), "w"))
             .filter(F.col("a") != F.col("b"))
             .groupBy("a", "b").agg(F.min("w").alias("w")), "b")
-        e = we
-    deg = _iter_cache(we.groupBy(F.col("a").alias("id"))
-                      .agg(F.sum("w").alias("k")), "id")
-    m2 = float(deg.agg(F.sum("k")).collect()[0][0] or 0)
-    if m2 == 0:
-        out = e.select(F.col("a").alias("node"),
-                       F.col("a").alias("community")).distinct()
-        return (out, [0] * len(rounds)) if return_rounds else out
-    orig = None  # original node -> current-level community
-    executed: list[int] = []
-    for li, n_rounds in enumerate(rounds):
-        labels = deg.select("id", F.col("id").alias("label"))
-        sig = None
-        done = 0
-        for _ in range(n_rounds):
-            done += 1
-            if early_stop and 3 <= done < n_rounds:
-                # convergence signature observed inside the round's own
-                # checkpoint job — the check no longer costs a pass
-                labels, row = _ckpt_observe(
-                    _louvain_round(we, labels, deg, m2),
-                    *_sig_metrics("id", "label"))
-                if (row["c"], row["h"]) == sig:
-                    break
-                sig = (row["c"], row["h"])
+    # ``level`` holds the current level's cached tables; each contraction
+    # checkpoints the next level's tables, releases this level's, then
+    # caches the next
+    with ExitStack() as level:
+        e = level.enter_context(first)
+        we = e if weight is not None else e.select(
+            "a", "b", F.lit(1).cast("long").alias("w"))
+        deg = level.enter_context(
+            _iter_cache(we.groupBy(F.col("a").alias("id"))
+                        .agg(F.sum("w").alias("k")), "id"))
+        m2 = float(deg.agg(F.sum("k")).collect()[0][0] or 0)
+        if m2 == 0:
+            out = (e.select(F.col("a").alias("node"),
+                            F.col("a").alias("community")).distinct()
+                   .localCheckpoint())
+            return (out, [0] * len(rounds)) if return_rounds else out
+        orig = None  # original node -> current-level community
+        executed: list[int] = []
+        for li, n_rounds in enumerate(rounds):
+            labels = deg.select("id", F.col("id").alias("label"))
+            sig = None
+            done = 0
+            for _ in range(n_rounds):
+                done += 1
+                if early_stop and 3 <= done < n_rounds:
+                    # convergence signature observed inside the round's
+                    # own checkpoint job — the check costs no pass
+                    labels, row = _ckpt_observe(
+                        _louvain_round(we, labels, deg, m2),
+                        *_sig_metrics("id", "label"))
+                    if row == sig:
+                        break
+                    sig = row
+                else:
+                    labels = _louvain_round(we, labels, deg,
+                                            m2).localCheckpoint()
+            executed.append(done)
+            if orig is None:
+                orig = labels
             else:
-                labels = _louvain_round(we, labels, deg, m2).localCheckpoint()
-        executed.append(done)
-        if orig is None:
-            orig = labels
-        else:
-            orig = (orig.join(labels.select(F.col("id").alias("label"),
-                                            F.col("label").alias("label2")),
-                              "label")
-                    .select("id", F.col("label2").alias("label"))
-                    .localCheckpoint())
-        if li < len(rounds) - 1:
-            la = labels.select(F.col("id").alias("a"),
-                               F.col("label").alias("ca"))
-            lbj = labels.select(F.col("id").alias("b"),
-                                F.col("label").alias("cb"))
-            # b-join first: we is b-partitioned, so the heavier join of
-            # the contraction runs exchange-free on the we side
-            we = _iter_cache(
-                we.join(lbj, "b").join(la, "a")
-                .filter(F.col("ca") != F.col("cb"))
-                .groupBy(F.col("ca").alias("a"), F.col("cb").alias("b"))
-                .agg(F.sum("w").alias("w")), "b")
-            deg = _iter_cache(labels.join(deg, "id")
-                              .groupBy(F.col("label").alias("id"))
-                              .agg(F.sum("k").alias("k")), "id")
+                orig = (orig.join(labels.select(F.col("id").alias("label"),
+                                                F.col("label")
+                                                .alias("label2")),
+                                  "label")
+                        .select("id", F.col("label2").alias("label"))
+                        .localCheckpoint())
+            if li < len(rounds) - 1:
+                la = labels.select(F.col("id").alias("a"),
+                                   F.col("label").alias("ca"))
+                lbj = labels.select(F.col("id").alias("b"),
+                                    F.col("label").alias("cb"))
+                # b-join first: we is b-partitioned, so the heavier join
+                # of the contraction runs exchange-free on the we side
+                nxt_we = _iter_cache(
+                    we.join(lbj, "b").join(la, "a")
+                    .filter(F.col("ca") != F.col("cb"))
+                    .groupBy(F.col("ca").alias("a"), F.col("cb").alias("b"))
+                    .agg(F.sum("w").alias("w")), "b")
+                nxt_deg = _iter_cache(labels.join(deg, "id")
+                                      .groupBy(F.col("label").alias("id"))
+                                      .agg(F.sum("k").alias("k")), "id")
+                level.close()
+                we = level.enter_context(nxt_we)
+                deg = level.enter_context(nxt_deg)
     out = orig.select(F.col("id").alias("node"),
                       F.col("label").alias("community"))
     return (out, executed) if return_rounds else out
@@ -1518,25 +1538,17 @@ def k_core(edges: DataFrame, k: int = 2, src: str = "src", dst: str = "dst",
     fixpoint (the edge set only shrinks, so count equality IS stability —
     no hash needed).
     """
-    e, m0 = _ckpt_observe(symmetric_edges(edges, src, dst),
-                          F.count(F.lit(1)).alias("c"))
-    n_prev = m0["c"]
-    rounds = 0
-    for _ in range(max_rounds):
-        deg = e.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
-        keep = deg.filter(F.col("d") >= k).select("a")
-        # edge-count fixpoint probe folded into the checkpoint job
-        e2, m = _ckpt_observe(
-            e.join(keep, "a", "left_semi")
-            .join(keep.select(F.col("a").alias("b")), "b", "left_semi")
-            .select("a", "b"),
-            F.count(F.lit(1)).alias("c"))
-        n = m["c"]
-        e = e2
-        rounds += 1
-        if n == n_prev:
-            break
-        n_prev = n
+    count = (F.count(F.lit(1)).alias("c"),)
+    e, m0 = _ckpt_observe(symmetric_edges(edges, src, dst), *count)
+
+    def peel(e):
+        keep = (e.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
+                .filter(F.col("d") >= k).select("a"))
+        return (e.join(keep, "a", "left_semi")
+                .join(keep.select(F.col("a").alias("b")), "b", "left_semi")
+                .select("a", "b"))
+
+    e, rounds = _until_stable(peel, e, count, max_rounds, sig=m0)
     out = (e.groupBy("a").agg(F.count(F.lit(1)).alias("core_deg"))
            .filter(F.col("core_deg") >= k)
            .select(F.col("a").alias("node"), "core_deg"))

@@ -196,8 +196,23 @@ def osm(spark):
 # driver's verify window. `-m ""` runs everything. A stale entry (renamed
 # test) simply stops matching — the test safely returns to the default
 # profile. Node ids given explicitly on the command line are not marked,
-# so `pytest tests/test_x.py::test_y` always runs what you asked for.
+# so `pytest tests/test_x.py::test_y` always runs what you asked for, also
+# when it is given as an absolute path or from another directory.
 # ---------------------------------------------------------------------------
+def _explicit_node_ids(config) -> set[str]:
+    """The node ids named on the command line, with their path part made
+    relative to rootdir the way ``item.nodeid`` is."""
+    out = set()
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        if not sep:
+            continue
+        full = os.path.join(str(config.invocation_params.dir), path)
+        rel = os.path.relpath(full, str(config.rootpath))
+        out.add(rel.replace(os.sep, "/") + "::" + rest)
+    return out
+
+
 def pytest_collection_modifyitems(config, items):
     path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                         "slow_tests.txt")
@@ -206,7 +221,7 @@ def pytest_collection_modifyitems(config, items):
     with open(path) as fh:
         slow = {ln.strip() for ln in fh if ln.strip()
                 and not ln.startswith("#")}
-    explicit = {a for a in config.args if "::" in a}
+    explicit = _explicit_node_ids(config)
     for item in items:
         nodeid = item.nodeid
         base = nodeid.split("[", 1)[0]

@@ -264,48 +264,50 @@ def test_dedup_family_no_gram_keyed_windows(spark):
 
 
 def test_iterative_static_tables_join_exchange_free(spark):
-    """r15: static per-round tables in the MANY-round iterative graph
+    """Static per-round tables in the MANY-round iterative graph
     operators (Bellman-Ford SSSP, pagerank, Brandes, turn-restricted
-    routing, louvain) ride ``_iter_cache`` (checkpoint → hash-partition on
-    the round join key → sort → cache), so round joins re-shuffle only the
-    node-sized frontier, never the edge table. A regression that drops the
-    cache (or checkpoints AFTER partitioning, which erases the partitioning
-    metadata behind a LogicalRDD) re-introduces one full edge-table
-    shuffle per round and fails here. (label_propagation deliberately does
-    NOT use the helper: 4 rounds don't amortize the build — see its
-    docstring.)"""
+    routing, louvain) ride the ``_iter_cache`` scope (checkpoint →
+    hash-partition on the round join key → sort → cache), so round joins
+    re-shuffle only the node-sized frontier, never the edge table. A
+    regression that drops the cache (or checkpoints AFTER partitioning,
+    which erases the partitioning metadata behind a LogicalRDD)
+    re-introduces one full edge-table shuffle per round and fails here.
+    (label_propagation deliberately does NOT use the helper: 4 rounds
+    don't amortize the build — see its docstring.)"""
     from pyspark.sql import functions as F
     from osm_pg_etl_spark.operators.graph_algo import _iter_cache
 
     edges = (spark.range(0, 3000)
              .select((F.col("id") % 611).alias("src"),
                      (F.col("id") % 997).alias("dst")))
-    # direct probe of the helper's contract: once the cache is
-    # materialized (as it is after any round has run — AQE re-plans
-    # later stages against the materialized partitioning), a keyed
-    # aggregate over it must plan with zero ENSURE_REQUIREMENTS
-    # exchanges (partial+final fused over the preserved partitioning)
-    e = _iter_cache(edges.select(F.col("src").alias("a"),
-                                 F.col("dst").alias("b")), "a")
-    e.count()
-    agg_plan = plan_of(e.groupBy("a").count())
+    with _iter_cache(edges.select(F.col("src").alias("a"),
+                                  F.col("dst").alias("b")), "a") as e:
+        # direct probe of the helper's contract: once the cache is
+        # materialized (as it is after any round has run — AQE re-plans
+        # later stages against the materialized partitioning), a keyed
+        # aggregate over it must plan with zero ENSURE_REQUIREMENTS
+        # exchanges (partial+final fused over the preserved partitioning)
+        e.count()
+        agg_plan = plan_of(e.groupBy("a").count())
+        # join probe shaped like one relaxation round (frontier ⋈ edges on
+        # the cache key, then a dst-keyed aggregate). Auto-broadcast is
+        # disabled for the probe so the tiny test frontier takes the same
+        # keyed-join path a real node-sized frontier takes; the cached edge
+        # side must then be read IN PLACE — every exchange in the plan may
+        # only target the frontier's key or the aggregate's dst key, never
+        # re-shuffle e.
+        old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            frontier = (spark.range(0, 40)
+                        .select(F.col("id").alias("a"),
+                                F.col("id").alias("lbl")))
+            probe = e.join(frontier, "a").groupBy("b").count()
+            join_plan = plan_of(probe)
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+                           old_thresh)
     assert "ENSURE_REQUIREMENTS" not in agg_plan, agg_plan
-    # join probe shaped like one relaxation round (frontier ⋈ edges on the
-    # cache key, then a dst-keyed aggregate). Auto-broadcast is disabled
-    # for the probe so the tiny test frontier takes the same keyed-join
-    # path a real node-sized frontier takes; the cached edge side must
-    # then be read IN PLACE — every exchange in the plan may only target
-    # the frontier's key or the aggregate's dst key, never re-shuffle e.
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        frontier = (spark.range(0, 40)
-                    .select(F.col("id").alias("a"),
-                            F.col("id").alias("lbl")))
-        probe = e.join(frontier, "a").groupBy("b").count()
-        join_plan = plan_of(probe)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
     assert "InMemoryTableScan" in join_plan, join_plan
     # REPARTITION_BY_COL entries are the cache build shown inside the
     # expanded InMemoryRelation subtree (not re-executed at runtime);
