@@ -51,8 +51,10 @@ def directed_network(merged: DataFrame, minimal: bool = False) -> DataFrame:
     caches): the heavy passthrough columns (tags, nodes, geom) appear in
     the output only when present on ``merged`` — direction logic reads
     only oneway/highway, and node-list reversal only applies when there
-    is a node list. Full-width inputs produce the exact EDGE_COLUMNS
-    shape as before.
+    is a node list. ``length``, ``speed_limit``, ``highway`` and
+    ``oneway`` are required: an input without one of them raises
+    ``AnalysisException`` instead of yielding a narrower table.
+    Full-width inputs produce the exact EDGE_COLUMNS shape.
     """
     two_way = (F.col("oneway").isNull() | (F.col("oneway") == "no")) \
         & (F.col("highway") != "motorway")
@@ -87,8 +89,7 @@ def directed_network(merged: DataFrame, minimal: bool = False) -> DataFrame:
     if "nodes" in merged.columns:
         cols.append(F.when(fwd, F.col("nodes"))
                     .otherwise(array_reverse("nodes")).alias("nodes"))
-    cols += [F.col(c) for c in ("length", "speed_limit", "highway",
-                                "oneway") if c in merged.columns]
+    cols += ["length", "speed_limit", "highway", "oneway"]
     if "geom" in merged.columns:
         cols.append(F.col("geom"))
     return base.select(*cols)

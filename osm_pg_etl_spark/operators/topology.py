@@ -14,13 +14,23 @@ The split is one per-way pass (:func:`_way_limits` holds its boundary
 rules): a count window over ``node_id`` flags the shared way_nodes rows,
 one ``groupBy(way_id)`` collects each way's length and shared positions,
 and array functions turn them into [bottom, top] segment ranges (W1, J10,
-J2/J3). The segments are slices of the way's own ``nodes``/``geom`` arrays,
-joined to the network table once; unsplit ways pass through whole (A7/A8,
-J6, J4). The reference's ``topology_summary.*`` tables stay available
-under their names: ``shared_nodes`` and ``ways_length`` are plain
-aggregations, ``ways_split_nodes`` and ``ways_merge_limits`` explode the
-same per-way arrays, and ``nodes_to_merge`` is the way_nodes × limits
-range join (J7) of the general assembly path.
+J2/J3). :func:`merged_network` then assembles the segments one of two
+ways, chosen by its input alone:
+
+- without ``nodes``, a segment is a slice of its way's own
+  ``nodes``/``geom`` arrays, joined to the network table once; unsplit
+  ways pass through as one whole-way slice (A7/A8, J6, J4);
+- with ``nodes``, every way (an unsplit one as the whole-way range
+  [0, max seq]) is rebuilt from way_nodes ⋈ nodes, and only
+  (edge_id, tags, attrs) is read from the network table. A given
+  ``shared_override`` marks a subset re-split, whose merge rows are
+  broadcast into the nodes join.
+
+The reference's ``topology_summary.*`` tables stay available under their
+names: ``shared_nodes`` and ``ways_length`` are plain aggregations,
+``ways_split_nodes`` and ``ways_merge_limits`` explode the same per-way
+arrays, and ``nodes_to_merge`` is the way_nodes × limits range join (J7)
+of the nodes path.
 
 Scale notes: one ``node_id`` and one ``way_id`` exchange plus the joins
 with the network table, and no cache. AQE handles the mild skew (a handful
@@ -162,13 +172,13 @@ def nodes_to_merge(wn_net: DataFrame, limits: DataFrame) -> DataFrame:
 
 def _assemble_from_way_arrays(ways: DataFrame, network: DataFrame,
                               attrs: tuple[str, ...] = DEFAULT_MERGE_ATTRS) -> DataFrame:
-    """Fast segment assembly: because segment ranges are contiguous in
-    sequence order and ``ways.nodes``/``linestring`` are already ordered by
-    sequence_id, segment node lists and geometries are array *slices* of the
-    parent way's own columns — no way_nodes×nodes join, no collect_list.
-    Equivalent to the reference's group-by reassembly
-    (``osm-road-graphs.sql:143-148``); proven against the general path in
-    tests/test_topology.py.
+    """Segment assembly from the ways' own arrays: because segment ranges
+    are contiguous in sequence order and ``ways.nodes``/``linestring`` are
+    already ordered by sequence_id, segment node lists and geometries are
+    array *slices* of the parent way's own columns — no way_nodes×nodes
+    join, no collect_list. Equivalent to the reference's group-by
+    reassembly (``osm-road-graphs.sql:143-148``); proven against the nodes
+    path in tests/test_topology.py.
 
     Single pass over ``network``: the per-way limit arrays of the split ways
     are left-joined once, and ways without limits fall back to one whole-way
@@ -195,19 +205,19 @@ def _assemble_from_way_arrays(ways: DataFrame, network: DataFrame,
 
 def _assemble_from_nodes(merge_rows: DataFrame, nodes: DataFrame,
                          broadcast_rows: bool = False) -> DataFrame:
-    """General segment assembly (``osm-road-graphs.sql:143-148``): join the
-    per-segment node rows to the nodes table for coordinates, then rebuild
-    ordered arrays with sort_array(collect_list(struct(seq, ...))) — the
-    deterministic replacement for ``array_agg(... ORDER BY sequence_id)``
-    (SURVEY §2.4 A7/A8).
+    """Segment assembly from the nodes table (``osm-road-graphs.sql:
+    143-148``): join the per-segment node rows to the nodes table for
+    coordinates, then rebuild ordered arrays with
+    sort_array(collect_list(struct(seq, ...))) — the deterministic
+    replacement for ``array_agg(... ORDER BY sequence_id)`` (SURVEY §2.4
+    A7/A8).
 
     ``broadcast_rows=True`` hints ``merge_rows`` as the broadcast side of
-    the coordinate join: the incremental path passes blast-radius-sized
-    merge rows against a planet-sized nodes table, and the hint turns the
-    nodes side's full shuffle into a stationary scan (guide §3.1 — the
-    big side is not shuffled at all; an inner join is side-symmetric so
-    the result is unchanged). Leave it off when merge_rows is the full
-    corpus (the general full-rebuild path)."""
+    the coordinate join: a subset re-split has blast-radius-sized merge
+    rows against a planet-sized nodes table, and the hint turns the nodes
+    side's full shuffle into a stationary scan (guide §3.1 — the big side
+    is not shuffled at all; an inner join is side-symmetric so the result
+    is unchanged). Leave it off when merge_rows is the full corpus."""
     rows = F.broadcast(merge_rows) if broadcast_rows else merge_rows
     pts = rows.join(
         nodes.select(F.col("id").alias("node_id"), "lon", "lat"),
@@ -239,7 +249,6 @@ def _with_segment_columns(segs: DataFrame,
 
 def merged_network(network: DataFrame, way_nodes: DataFrame,
                    nodes: DataFrame | None = None,
-                   use_array_fast_path: bool = True,
                    attrs: tuple[str, ...] = DEFAULT_MERGE_ATTRS,
                    shared_override: DataFrame | None = None) -> DataFrame:
     """``graphs.car_network_merged`` (``osm-road-graphs.sql:129-165``): the
@@ -248,41 +257,42 @@ def merged_network(network: DataFrame, way_nodes: DataFrame,
     - Segment rows get attributes from the parent way (the UPDATE…FROM
       backfill at ``:149-159``), with start/end promoted from the new node
       arrays and geodesic-km length.
-    - Ways with no split pass through unchanged (the anti-join append at
-      ``:161-165``).
+    - Ways with no split pass through as one whole-way segment (the
+      anti-join append at ``:161-165``).
     - ``attrs`` selects which parent-way columns ride through the split;
       the complete-network variant passes the mode-flag set
       (service/access/car/pedestrian/bicycle,
       ``osm-complete-graphs-fix.sql:167-188``).
+    - ``nodes``: when given, segments are rebuilt from way_nodes ⋈ nodes
+      and ``network`` only needs (edge_id, tags, *attrs); when omitted,
+      they are slices of ``network``'s own ``nodes``/``geom`` arrays.
     - ``shared_override``: callers that re-split only a SUBSET of ways (the
       incremental path) must supply the GLOBAL shared-node table — shared
       status depends on every network way using a node, and recomputing it
-      from the subset's way_nodes would miss cross-way sharing.
+      from the subset's way_nodes would miss cross-way sharing. When it is
+      given, the merge rows are broadcast into the nodes join.
 
-    Contract shared by both assembly paths: the ``nodes`` table must cover
-    every id in ``ways.nodes``. The fast path slices the way's own arrays
-    (missing node ids are kept verbatim); the general path inner-joins the
-    nodes table and would drop them — on truncated OSM extracts, pre-filter
-    ways to those fully inside the extract before splitting.
+    Input contract: the ``nodes`` table covers every id in ``ways.nodes``,
+    and every network way has its way_nodes rows (both hold for a
+    consistent snapshot, where node ids are foreign keys). On truncated OSM
+    extracts, pre-filter ways to those fully inside the extract before
+    splitting.
     """
     wn_net = network_way_nodes(way_nodes, network)
     ways = _way_limits(wn_net, shared_override)
-    if use_array_fast_path:
-        # one scan of network; untouched ways fall through as a whole-way
-        # slice (identical nodes/geom/length to the original row)
+    if nodes is None:
         return _with_segment_columns(
             _assemble_from_way_arrays(ways, network, attrs), attrs)
-
-    if nodes is None:
-        raise ValueError("general assembly path requires the nodes table")
-    segs = _assemble_from_nodes(nodes_to_merge(wn_net, _limit_rows(ways)),
-                                nodes)
-    merged = _with_segment_columns(
+    # max sequence_id = size(nodes) - 1: sequence ids are the dense
+    # array positions
+    whole_way = F.array(F.struct(F.lit(0).alias("bottom_limit"),
+                                 F.col("length").alias("top_limit")))
+    limits = _limit_rows(ways, F.coalesce("_lims", whole_way))
+    segs = _assemble_from_nodes(nodes_to_merge(wn_net, limits), nodes,
+                                broadcast_rows=shared_override is not None)
+    return _with_segment_columns(
         segs.join(network.select("edge_id", "tags", *attrs), "edge_id"),
         attrs)
-    untouched = network.join(segs.select("edge_id").distinct(), "edge_id",
-                             "left_anti")
-    return merged.unionByName(untouched.select(*merged.columns))
 
 
 def merged_network_incremental(old_network: DataFrame,
@@ -311,7 +321,7 @@ def merged_network_incremental(old_network: DataFrame,
     maintained incrementally — delta = counts over the changed ways'
     new rows minus counts over their old rows, touching only those
     nodes; unchanged ways never rescan. The affected subset is re-split
-    by the ordinary :func:`merged_network` with the updated GLOBAL
+    by one ordinary :func:`merged_network` call with the updated GLOBAL
     shared table injected (``shared_override`` — recomputing shared
     from the subset alone would miss cross-way sharing), and the result
     is ``old_merged`` minus affected segments plus the recomputation:
@@ -335,31 +345,26 @@ def merged_network_incremental(old_network: DataFrame,
     turns even that into a lookup), and the split/merge pipeline over
     the affected subset only.
 
-    ``nodes``: pass the nodes table to assemble the affected subset's
-    segment arrays from (way_nodes ∩ affected) ⋈ nodes — the general
-    assembly path — instead of slicing ``new_network``'s own
-    nodes/geom arrays. ``new_network`` then only needs
-    (edge_id, tags, *attrs): at 100 TB this removes the LAST
-    full-corpus array assembly from the IVM path (maintaining a
-    planet-wide ways-with-arrays snapshot per batch just so ~0.01 % of
-    it can be sliced), leaving only per-table maintained state plus
-    blast-radius work. Contract inherited from the general path: the
-    nodes table must cover every node id of the affected ways, and
-    every affected network way must have way_nodes rows (both hold
-    whenever way_nodes/nodes are the consistent post-batch snapshot —
-    node ids are foreign keys); segment values are identical to the
-    fast path's because sequence_id is the dense array position and
-    the way arrays were themselves assembled from the same nodes
-    table (pinned by test_incremental_nodes_path_equals_arrays_path).
+    ``nodes`` selects the re-split's assembly exactly as in
+    :func:`merged_network`: given, the affected subset's segments are
+    rebuilt from (way_nodes ∩ affected) ⋈ nodes, with the merge rows
+    broadcast, and ``new_network`` only needs (edge_id, tags, *attrs):
+    at 100 TB this removes the LAST full-corpus array assembly from the
+    IVM path (maintaining a planet-wide ways-with-arrays snapshot per
+    batch just so ~0.01 % of it can be sliced), leaving only per-table
+    maintained state plus blast-radius work. The input contract of
+    :func:`merged_network` applies to the affected ways; segment values
+    are identical to the arrays mode's because sequence_id is the dense
+    array position and the way arrays were themselves assembled from
+    the same nodes table (pinned by
+    test_incremental_nodes_path_equals_arrays_path).
+
+    No intermediate is cached. The blast radius' way ids (``affected``)
+    are read three times (sub_net, sub_wn and the kept anti-join), so
+    they are local-checkpointed once, at blast-radius size.
     """
     ch = changed_way_ids.select("way_id").distinct()
-    # new_wn is read three times (the batch's new-row counts, the
-    # flipped-node membership scan, and the affected-subset way_nodes
-    # below); without the cache every reference re-derives
-    # new_way_nodes — from the gate that is a full way-assembly +
-    # posexplode per reference (guide §5: materialize multi-consumer
-    # intermediates once)
-    new_wn = network_way_nodes(new_way_nodes, new_network).cache()
+    new_wn = network_way_nodes(new_way_nodes, new_network)
     # restrict to the changed ways FIRST so the network semi-join and
     # count aggregation below touch only the batch's rows
     old_ch = network_way_nodes(
@@ -376,50 +381,34 @@ def merged_network_incremental(old_network: DataFrame,
              .unionByName(old_ch.groupBy("node_id")
                           .agg((-F.count(F.lit(1))).alias("_d")))
              .groupBy("node_id").agg(F.sum("_d").alias("_d")))
-    # ONE old⋈delta count merge, cached: its two readers (new_shared
-    # below, flipped) would otherwise each re-execute the old_counts
-    # aggregation — a full way_nodes pass per reader when the maintained
-    # state isn't supplied (guide §5: materialize multi-consumer
-    # intermediates once; r15 follow-up to the new_wn cache above)
     merged_counts = (old_counts.join(delta, "node_id", "full")
                      .select("node_id",
                              F.coalesce("count", F.lit(0)).alias("_oc"),
                              (F.coalesce("count", F.lit(0))
-                              + F.coalesce("_d", F.lit(0))).alias("_nc"))
-                     .cache())
+                              + F.coalesce("_d", F.lit(0))).alias("_nc")))
     new_shared = (merged_counts.filter(F.col("_nc") > 1)
                   .select("node_id", F.col("_nc").alias("count")))
     flipped = (merged_counts
                .filter((F.col("_oc") > 1) != (F.col("_nc") > 1))
                .select("node_id"))
 
-    # affected is tiny (the blast radius' way ids) but read THREE times
-    # (sub_net, sub_wn, the kept anti-join) — without the cache each
-    # reader re-runs the flipped-membership scan over new_wn
     affected = (ch.unionByName(
         new_wn.join(flipped, "node_id", "left_semi")
-        .select("way_id")).distinct().cache())
+        .select("way_id")).distinct().localCheckpoint())
+    affected_edges = affected.select(F.col("way_id").alias("edge_id"))
 
-    sub_net = new_network.join(
-        affected.select(F.col("way_id").alias("edge_id")),
-        "edge_id", "left_semi")
-    # way_nodes for the re-split subset, read from the cached network-
-    # restricted table rather than raw new_way_nodes: identical input to
+    sub_net = new_network.join(affected_edges, "edge_id", "left_semi")
+    # way_nodes for the re-split subset, read from the network-restricted
+    # new_wn rather than raw new_way_nodes: identical input to
     # merged_network because its own network_way_nodes(sub_wn, sub_net)
     # re-restricts to sub_net's ways, and sub_net ⊆ new_network — the
     # network restriction is idempotent, so pre-restricted rows are the
     # same rows (network_way_nodes is a left-semi join that keeps the
     # way_nodes schema unchanged)
     sub_wn = new_wn.join(affected, "way_id", "left_semi")
-    if nodes is None:
-        recomputed = merged_network(sub_net, sub_wn, attrs=attrs,
-                                    shared_override=new_shared)
-    else:
-        recomputed = _assemble_affected_from_nodes(sub_net, sub_wn,
-                                                   new_shared, nodes, attrs)
-    kept = old_merged.join(
-        affected.select(F.col("way_id").alias("edge_id")),
-        "edge_id", "left_anti")
+    recomputed = merged_network(sub_net, sub_wn, nodes=nodes, attrs=attrs,
+                                shared_override=new_shared)
+    kept = old_merged.join(affected_edges, "edge_id", "left_anti")
     # old_merged may be the geometry-free meta projection of the merged
     # table (n_nodes in place of the nodes/geom arrays — what
     # _shared_network caches); align the recomputed side by computing
@@ -433,28 +422,3 @@ def merged_network_incremental(old_network: DataFrame,
     # fraction of ways re-split IS the scale claim (wall clock on a
     # local job floor is barrier-bound either way)
     return (out, affected) if return_affected else out
-
-
-def _assemble_affected_from_nodes(sub_net: DataFrame, sub_wn: DataFrame,
-                                  shared: DataFrame, nodes: DataFrame,
-                                  attrs: tuple[str, ...]) -> DataFrame:
-    """Re-split the affected subset via the general assembly path, reading
-    arrays from nowhere: the limits come from :func:`_way_limits` on
-    ``sub_wn`` exactly as :func:`merged_network` computes them on
-    ``network_way_nodes(sub_wn, sub_net)`` (identical — ``sub_wn``'s ways
-    are already restricted to ``sub_net``'s, see
-    test_network_restricted_sub_wn_identical). A way without a split gets
-    the whole-way range [0, max seq] (the general path's pass-through,
-    expressed without touching ``new_network`` arrays; max sequence_id =
-    len(nodes)-1 because sequence ids are the dense array positions), and
-    one :func:`_assemble_from_nodes` pass rebuilds every affected segment
-    from the nodes table."""
-    ways = _way_limits(sub_wn, shared)
-    whole_way = F.array(F.struct(F.lit(0).alias("bottom_limit"),
-                                 F.col("length").alias("top_limit")))
-    limits = _limit_rows(ways, F.coalesce("_lims", whole_way))
-    segs = _assemble_from_nodes(nodes_to_merge(sub_wn, limits), nodes,
-                                broadcast_rows=True)
-    return _with_segment_columns(
-        segs.join(sub_net.select("edge_id", "tags", *attrs), "edge_id"),
-        attrs)

@@ -446,11 +446,11 @@ def q_osm_merged_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     over an unchanged continent to absorb a minutely diff is the
     dominant waste.
 
-    r15: the new-side network is fed META-ONLY (edge_id, tags, attrs —
-    the cached old network minus the deleted ways; the batch never
-    edits tags) and the operator reassembles the affected subset's
-    arrays from way_nodes ⋈ nodes (``nodes=``), so no planet-wide
-    ways-with-arrays snapshot is built for the new side at all."""
+    The new-side network is fed META-ONLY (edge_id, tags, attrs — the
+    cached old network minus the deleted ways; the batch never edits
+    tags) and the operator reassembles the affected subset's arrays from
+    way_nodes ⋈ nodes (``nodes=``), so no planet-wide ways-with-arrays
+    snapshot is built for the new side at all."""
     from ..operators.topology import merged_network_incremental
 
     d, old_cn, old_merged = _shared_network(spark, sf_dir)
@@ -493,8 +493,7 @@ def q_osm_merged_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is how osmosisUpdate keeps it. The affected subset's arrays are
     # assembled by the operator from way_nodes ⋈ nodes (nodes=...),
     # so NO planet-wide ways-with-arrays snapshot is built for the new
-    # side at all (pre-r15 this was a second full collect_list assembly
-    # + cache of every new way's arrays).
+    # side at all.
     new_cn = (old_cn.select("edge_id", "tags",
                             "speed_limit", "highway", "oneway")
               .filter(F.col("edge_id") % 101 != 0))

@@ -64,6 +64,17 @@ def test_directed_expansion_3vl(osm):
     assert directed.count() == 20
 
 
+def test_directed_network_requires_speed_limit(osm):
+    """length, speed_limit, highway and oneway are part of the directed
+    table's contract: a merged input without speed_limit fails at the
+    boundary instead of yielding a narrower table."""
+    from pyspark.errors import AnalysisException
+
+    merged = merged_network(car_network(osm["ways"]), osm["way_nodes"])
+    with pytest.raises(AnalysisException):
+        directed_network(merged.drop("speed_limit"))
+
+
 def test_network_nodes_endpoints_only(osm):
     merged = merged_network(car_network(osm["ways"]), osm["way_nodes"])
     nn = network_nodes(osm["nodes"], merged)

@@ -339,3 +339,26 @@ def test_merged_network_one_pass_exchanges(spark, osm):
     assert keys == {"node_id": 1, "way_id": 3, "edge_id": 1}, plan
     assert "InMemoryRelation" not in plan
     assert "Exchange" not in plan.replace("Exchange hashpartitioning", "")
+
+
+def test_merged_network_broadcasts_subset_merge_rows(spark, osm):
+    """The nodes path broadcasts its merge rows exactly when a
+    shared-node override marks a subset re-split: the analyzed plan of a
+    subset re-split carries a broadcast hint, the full nodes path none."""
+    from pyspark.sql import functions as F
+
+    from osm_pg_etl_spark.operators.network import car_network
+    from osm_pg_etl_spark.operators.topology import (
+        merged_network, network_way_nodes, shared_nodes)
+
+    def analyzed(df):
+        return df._jdf.queryExecution().analyzed().toString()
+
+    cn, wn, nodes = car_network(osm["ways"]), osm["way_nodes"], osm["nodes"]
+    shared = shared_nodes(network_way_nodes(wn, cn))
+    sub_cn = cn.filter(F.col("edge_id").isin(1, 4))
+    subset = analyzed(merged_network(sub_cn, wn, nodes=nodes,
+                                     shared_override=shared))
+    full = analyzed(merged_network(cn, wn, nodes=nodes))
+    assert "strategy=broadcast" in subset, subset
+    assert "strategy=broadcast" not in full, full

@@ -22,8 +22,6 @@ from pyspark.sql import types as T
 
 from osm_pg_etl_spark.operators.network import car_network
 from osm_pg_etl_spark.operators.topology import (
-    DEFAULT_MERGE_ATTRS,
-    _assemble_affected_from_nodes,
     merged_network,
     network_way_nodes,
     shared_nodes,
@@ -153,8 +151,7 @@ def test_split_matches_duckdb_fragments(spark, seed):
             (name, set(rows) ^ set(oracle[name]))
 
     fast = _spark_rows(merged_network(cn, wn))
-    general = _spark_rows(merged_network(cn, wn, nodes=nodes,
-                                         use_array_fast_path=False))
+    general = _spark_rows(merged_network(cn, wn, nodes=nodes))
     assert _hash(fast) == _hash(want), set(fast) ^ set(want)
     assert _hash(general) == _hash(want), set(general) ^ set(want)
 
@@ -166,8 +163,8 @@ def test_split_matches_duckdb_fragments(spark, seed):
     shared = shared_nodes(wn_net)
     want_sub = [r for r in want if r[0] in subset]
     resplit = _spark_rows(merged_network(sub_cn, wn, shared_override=shared))
-    from_nodes = _spark_rows(_assemble_affected_from_nodes(
-        sub_cn, sub_wn, shared, nodes, DEFAULT_MERGE_ATTRS))
+    from_nodes = _spark_rows(merged_network(sub_cn, sub_wn, nodes=nodes,
+                                            shared_override=shared))
     assert _hash(resplit) == _hash(want_sub), set(resplit) ^ set(want_sub)
     assert _hash(from_nodes) == _hash(want_sub), \
         set(from_nodes) ^ set(want_sub)

@@ -86,7 +86,7 @@ def test_merged_network_fast_path(osm, stages):
 def test_merged_network_general_path_equivalent(osm, stages):
     fast = merged_network(stages["cn"], osm["way_nodes"])
     general = merged_network(stages["cn"], osm["way_nodes"],
-                             nodes=osm["nodes"], use_array_fast_path=False)
+                             nodes=osm["nodes"])
     assert _edge_set(general) == _edge_set(fast)
     # geometry + length agree between the two assembly strategies
     f = {(r["edge_id"], tuple(r["nodes"])): (r["length"], r["geom"])
@@ -113,7 +113,7 @@ def test_merged_network_carries_custom_attrs(osm):
     comp = with_mode_flags(complete_network(osm["ways"]))
     fast = merged_network(comp, osm["way_nodes"], attrs=attrs)
     general = merged_network(comp, osm["way_nodes"], nodes=osm["nodes"],
-                             use_array_fast_path=False, attrs=attrs)
+                             attrs=attrs)
     assert fast.columns == list(general.columns)
     assert set(attrs) <= set(fast.columns)
 
@@ -187,22 +187,51 @@ def test_split_holds_no_cache(spark, osm, stages, tmp_path):
     """The split caches nothing: the persistent-RDD count is the same
     before and after writing each assembly path's output, and the
     incremental path's nodes-mode re-split."""
-    from osm_pg_etl_spark.operators.topology import (
-        DEFAULT_MERGE_ATTRS, _assemble_affected_from_nodes)
-
     def persisted():
         return len(spark.sparkContext._jsc.getPersistentRDDs())
 
     cn, wn = stages["cn"], osm["way_nodes"]
     outputs = {
         "fast": merged_network(cn, wn),
-        "general": merged_network(cn, wn, nodes=osm["nodes"],
-                                  use_array_fast_path=False),
-        "affected": _assemble_affected_from_nodes(
-            cn, stages["wn_net"], stages["shared"], osm["nodes"],
-            DEFAULT_MERGE_ATTRS),
+        "general": merged_network(cn, wn, nodes=osm["nodes"]),
+        "affected": merged_network(cn, stages["wn_net"], nodes=osm["nodes"],
+                                   shared_override=stages["shared"]),
     }
     for name, df in outputs.items():
         before = persisted()
         df.write.parquet(str(tmp_path / name))
         assert persisted() == before, name
+
+
+@pytest.mark.parametrize("mode", ["arrays", "nodes"])
+def test_incremental_holds_no_cache(spark, osm, tmp_path, mode):
+    """merged_network_incremental leaves no CacheManager entry behind:
+    writing its output, in either assembly mode, keeps the entry count
+    unchanged."""
+    from osm_pg_etl_spark.operators.topology import (
+        merged_network_incremental, unnest_way_nodes)
+
+    def entries():
+        return spark._jsparkSession.sharedState().cacheManager() \
+            .numCachedEntries()
+
+    def tagged(df):
+        # a plan unique to this case: the CacheManager adds no entry for a
+        # plan it already holds, which would hide a leak
+        return df.withColumn("_case", F.lit(mode))
+
+    cn_old = car_network(osm["ways"])
+    old_merged = merged_network(cn_old, osm["way_nodes"])
+    new_ways = osm["ways"].filter("id != 2")
+    cn_new = car_network(new_ways)
+    changed = spark.createDataFrame([(2,)], "way_id long")
+    if mode == "nodes":
+        cn_new = cn_new.select("edge_id", "tags",
+                               "speed_limit", "highway", "oneway")
+    before = entries()
+    inc = merged_network_incremental(
+        cn_old, tagged(osm["way_nodes"]), old_merged,
+        cn_new, tagged(unnest_way_nodes(new_ways)), changed,
+        nodes=osm["nodes"] if mode == "nodes" else None)
+    inc.write.parquet(str(tmp_path / mode))
+    assert entries() == before
