@@ -359,9 +359,15 @@ def merged_network_incremental(old_network: DataFrame,
     the same nodes table (pinned by
     test_incremental_nodes_path_equals_arrays_path).
 
-    No intermediate is cached. The blast radius' way ids (``affected``)
-    are read three times (sub_net, sub_wn and the kept anti-join), so
-    they are local-checkpointed once, at blast-radius size.
+    Nothing is cached; two tables are local-checkpointed, each once. The
+    count merge, kept to the nodes shared before or after the batch, is
+    read by the flip test and as the re-split's shared table; without the
+    checkpoint the old counts (a full-table aggregation when
+    ``old_node_counts`` is omitted) would be computed for each. The blast
+    radius' way ids (``affected``) are read three times (sub_net, sub_wn
+    and the kept anti-join). Both checkpoints are eager, and their RDDs
+    stay persisted after the call, until the returned DataFrame is
+    garbage-collected.
     """
     ch = changed_way_ids.select("way_id").distinct()
     new_wn = network_way_nodes(new_way_nodes, new_network)
@@ -381,11 +387,15 @@ def merged_network_incremental(old_network: DataFrame,
              .unionByName(old_ch.groupBy("node_id")
                           .agg((-F.count(F.lit(1))).alias("_d")))
              .groupBy("node_id").agg(F.sum("_d").alias("_d")))
+    # only nodes shared before or after the batch: new_shared and flipped
+    # both lie among them
     merged_counts = (old_counts.join(delta, "node_id", "full")
                      .select("node_id",
                              F.coalesce("count", F.lit(0)).alias("_oc"),
                              (F.coalesce("count", F.lit(0))
-                              + F.coalesce("_d", F.lit(0))).alias("_nc")))
+                              + F.coalesce("_d", F.lit(0))).alias("_nc"))
+                     .filter((F.col("_oc") > 1) | (F.col("_nc") > 1))
+                     .localCheckpoint())
     new_shared = (merged_counts.filter(F.col("_nc") > 1)
                   .select("node_id", F.col("_nc").alias("count")))
     flipped = (merged_counts

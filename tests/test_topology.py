@@ -207,13 +207,20 @@ def test_split_holds_no_cache(spark, osm, stages, tmp_path):
 def test_incremental_holds_no_cache(spark, osm, tmp_path, mode):
     """merged_network_incremental leaves no CacheManager entry behind:
     writing its output, in either assembly mode, keeps the entry count
-    unchanged."""
+    unchanged. The only RDDs it leaves persisted are its two eager local
+    checkpoints (the count merge and the blast radius), which live past
+    the call until the output DataFrame is garbage-collected."""
     from osm_pg_etl_spark.operators.topology import (
         merged_network_incremental, unnest_way_nodes)
 
     def entries():
         return spark._jsparkSession.sharedState().cacheManager() \
             .numCachedEntries()
+
+    def persisted_ids():
+        # ids, not a count: the ContextCleaner may free an earlier test's
+        # RDDs meanwhile
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
     def tagged(df):
         # a plan unique to this case: the CacheManager adds no entry for a
@@ -228,10 +235,11 @@ def test_incremental_holds_no_cache(spark, osm, tmp_path, mode):
     if mode == "nodes":
         cn_new = cn_new.select("edge_id", "tags",
                                "speed_limit", "highway", "oneway")
-    before = entries()
+    before, before_ids = entries(), persisted_ids()
     inc = merged_network_incremental(
         cn_old, tagged(osm["way_nodes"]), old_merged,
         cn_new, tagged(unnest_way_nodes(new_ways)), changed,
         nodes=osm["nodes"] if mode == "nodes" else None)
     inc.write.parquet(str(tmp_path / mode))
     assert entries() == before
+    assert len(persisted_ids() - before_ids) == 2
