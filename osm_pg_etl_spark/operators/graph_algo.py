@@ -12,28 +12,38 @@ Connected components doubles as the *dedup clustering* step of a training
 and each document keeps the minimum doc_id of its component as the
 canonical representative.
 
-Algorithm: alternating large-star/small-star contraction [Kiveris et al.,
-"Connected Components in MapReduce and Beyond", 2014]. Each round rewires
-edges toward neighborhood minima; the edge set converges to a star forest
-whose centers are the component minima in O(log²) rounds *independent of
-graph diameter* — a continental road network (diameter in the thousands)
-converges in tens of rounds where plain hash-min label propagation
-needs diameter-many. Every step is a groupBy-min
-+ equi-join on node id (shuffle-keyed the same way), lineage truncated per
-round; convergence is a cheap (count, hash-sum) fixpoint on the edge set.
+Algorithm: a min-root union-find inside each node block (:func:`_blocks`),
+then alternating large-star/small-star contraction [Kiveris et al.,
+"Connected Components in MapReduce and Beyond", 2014] on the graph of
+block representatives. Each contraction round rewires edges toward
+neighborhood minima; the edge set converges to a star forest whose centers
+are the component minima in O(log²) rounds of the representative graph,
+*independent of its diameter*, where plain hash-min label propagation
+needs diameter-many. Every step is a groupBy-min + equi-join on node id
+(shuffle-keyed the same way), lineage truncated per round; convergence is
+a cheap (count, hash-sum) fixpoint on the edge set.
 
 The loops share two drivers: :func:`_relax_frontier` (frontier
 Bellman-Ford, for every shortest-path operator) and :func:`_until_stable`
 (run until the observed signature repeats: components, the radius
-shortcut doubling, k-core). Static per-round tables live in
-:func:`_iter_cache` scopes, which release their cache on exit.
+shortcut doubling, k-core). Weighted SSSP and components first solve
+each round inside node blocks in one grouped-map pandas step (heapq
+Dijkstra, union-find) and exchange only across blocks — the
+partition-local-then-merge, graph-centric model of Tian et al., "From
+think like a vertex to think like a graph" (VLDB 2013). Static per-round
+tables live in :func:`_iter_cache` scopes, which release their cache on
+exit.
 """
 
 from __future__ import annotations
 
+import heapq
 import itertools
+import math
+import types
 from contextlib import ExitStack, contextmanager
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -46,6 +56,9 @@ _PROBE_SEQ = itertools.count()
 _MAX_SHORTCUT_ROUNDS = 20
 # label_propagation checkpoints every this many rounds
 _LPA_CHECKPOINT_EVERY = 4
+# edges per node block of the block-local fixpoints (weighted SSSP,
+# components): one block's Dijkstra or union-find runs in one Python task
+_BLOCK_EDGES = 50_000
 
 
 def symmetric_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -183,8 +196,32 @@ def _until_stable(step, state: DataFrame, metrics: tuple,
     return state, rounds
 
 
+def _block_metrics(u: str, v: str) -> tuple:
+    """Observed aggregates behind :func:`_blocks`, for an edge table with
+    endpoint columns ``u`` and ``v``: its edge count and its min and max
+    node id."""
+    return (F.count(F.lit(1)).alias("n"),
+            F.min(F.least(u, v)).alias("lo"),
+            F.max(F.greatest(u, v)).alias("hi"))
+
+
+def _blocks(m: dict):
+    """Node blocks for an edge table whose :func:`_block_metrics` are
+    ``m``: ceil(n / _BLOCK_EDGES) node-id ranges of equal width over
+    [lo, hi], so a graph of at most ``_BLOCK_EDGES`` edges is one block.
+    The rule is derived from the input alone, and ids outside [lo, hi]
+    (a source with no edge) still land in some block. Returns
+    ``block(col)``: the block-id column of the node-id column named
+    ``col``, computed in decimals because ids may span the long range."""
+    lo = m["lo"] or 0
+    count = math.ceil(m["n"] / _BLOCK_EDGES)
+    width = max(1, math.ceil((m["hi"] - lo + 1) / count)) if count else 1
+    return lambda col: F.expr(
+        f"(CAST(`{col}` AS DECIMAL(20,0)) - ({lo})) div {width}")
+
+
 def _relax_frontier(dist: DataFrame, relax, keys: list[str],
-                    max_rounds: int):
+                    max_rounds: int, local=None):
     """Frontier Bellman-Ford over ``dist`` (``keys`` + ``dist``).
     ``relax(frontier)`` returns the candidate rows (``keys`` + ``dist``)
     reached from the frontier, the rows whose distance improved in the
@@ -196,26 +233,141 @@ def _relax_frontier(dist: DataFrame, relax, keys: list[str],
     improved, and (min, +) only accumulates. Existing rows carry their
     distance in ``prev`` and candidates carry NULL, so after the per-key
     min the improved rows are exactly ``prev IS NULL OR dist < prev``;
-    their count rides the checkpoint job as an observed metric. Returns
-    ``(dist, rounds, changed)``, where ``changed`` is the count still
-    improving in the last round (0 at the fixpoint, -1 if no round ran).
+    their count rides the checkpoint job as an observed metric.
+
+    ``local(state)``, when given, is a block-local step that runs in place
+    of ``relax``. It gets every row with a ``dirty`` flag (improved in the
+    previous round), solves the fixpoint inside each node block from the
+    dirty rows, and returns the rows that fixpoint improved with ``prev``
+    set to their new distance, plus the candidates its cross-block edges
+    reach, with NULL ``prev``. The improved rows are then the ones the
+    cross-block merge improved, and a round counts a block crossing
+    instead of a hop: a graph that fits in one block solves in one round,
+    and with one node per block the local step relaxes nothing but
+    cross-block edges, which is the per-hop loop round for round.
+
+    Returns ``(dist, rounds, changed)``, where ``changed`` is the count
+    still improving in the last round (0 at the fixpoint, -1 if no round
+    ran).
     """
     improved = F.col("prev").isNull() | (F.col("dist") < F.col("prev"))
-    frontier, rounds, changed = dist, 0, -1
+    state = dist.select(*keys, "dist", F.lit(True).alias("dirty"))
+    rounds, changed = 0, -1
     while rounds < max_rounds and changed != 0:
-        cand = relax(frontier).select(
-            *keys, "dist", F.lit(None).cast("double").alias("prev"))
-        cur = dist.select(*keys, "dist", F.col("dist").alias("prev"))
+        if local is None:
+            cand = relax(state.filter("dirty").select(*keys, "dist")).select(
+                *keys, "dist", F.lit(None).cast("double").alias("prev"))
+        else:
+            cand = local(state)
+        cur = state.select(*keys, "dist", F.col("dist").alias("prev"))
         new, m = _ckpt_observe(
             cur.unionByName(cand)
             .groupBy(*keys).agg(F.min("dist").alias("dist"),
                                 F.min("prev").alias("prev")),
             F.count(F.when(improved, 1)).alias("chg"))
-        frontier = new.filter(improved).select(*keys, "dist")
-        dist = new.select(*keys, "dist")
+        state = new.select(*keys, "dist", improved.alias("dirty"))
         changed = m["chg"]
         rounds += 1
-    return dist, rounds, changed
+    return state.select(*keys, "dist"), rounds, changed
+
+
+def _by_value(fn):
+    """A copy of the module-level function ``fn`` that cloudpickle ships
+    to Python workers by value: a worker then needs no import of this
+    package, which the driver may have on its ``sys.path`` alone."""
+    return types.FunctionType(fn.__code__, fn.__globals__, fn.__name__,
+                              fn.__defaults__, fn.__closure__)
+
+
+def _block_dijkstra(state: pd.DataFrame, edges: pd.DataFrame) -> pd.DataFrame:
+    """Block-local step of weighted SSSP (the ``local`` of
+    :func:`_relax_frontier`) for one node block. ``state`` holds the
+    block's rows (``s``, ``node``, ``dist``, ``dirty``), ``edges`` the
+    edges leaving its nodes (``u``, ``v``, ``w``, ``intra``: whether ``v``
+    is in the block too).
+
+    Per source ``s``, a heapq Dijkstra over the intra-block edges, seeded
+    with the dirty rows and bounded by the clean ones: a node enters the
+    heap only when a path strictly beats its current distance. Every
+    distance is a left-fold sum along a path, and IEEE (min, +) is
+    monotone, so the block's fixpoint is the one Bellman-Ford reaches.
+    Returns (``s``, ``node``, ``dist``, ``prev``): the improved rows with
+    ``prev`` = ``dist``, and per node outside the block the best candidate
+    over the cross edges of the settled nodes, with ``prev`` NaN (NULL in
+    Spark)."""
+    adj: dict = {}
+    for u, v, w, intra in zip(edges["u"].tolist(), edges["v"].tolist(),
+                              edges["w"].tolist(), edges["intra"].tolist()):
+        adj.setdefault(u, []).append((v, w, intra))
+    best: dict = {}
+    seeds: dict = {}
+    for s, node, d, dirty in zip(state["s"].tolist(), state["node"].tolist(),
+                                 state["dist"].tolist(),
+                                 state["dirty"].tolist()):
+        best.setdefault(s, {})[node] = d
+        if dirty:
+            seeds.setdefault(s, []).append((d, node))
+    out = []
+    nan = float("nan")
+    for s, heap in seeds.items():
+        dist, cross, improved = best[s], {}, set()
+        heapq.heapify(heap)
+        while heap:
+            d, u = heapq.heappop(heap)
+            if d > dist[u]:
+                continue
+            for v, w, intra in adj.get(u, ()):
+                nd = d + w
+                if not intra:
+                    if nd < cross.get(v, math.inf):
+                        cross[v] = nd
+                elif nd < dist.get(v, math.inf):
+                    dist[v] = nd
+                    improved.add(v)
+                    heapq.heappush(heap, (nd, v))
+        out += [(s, n, dist[n], dist[n]) for n in improved]
+        out += [(s, v, d, nan) for v, d in cross.items()]
+    return pd.DataFrame(out, columns=["s", "node", "dist", "prev"]).astype(
+        {"s": "int64", "node": "int64", "dist": "float64", "prev": "float64"})
+
+
+def _block_union_find(edges: pd.DataFrame) -> pd.DataFrame:
+    """Block-local step of connected components for one node block.
+    ``edges`` holds every edge (``a``, ``b``) with an endpoint in the
+    block ``blk``, and the blocks ``ba`` and ``bb`` of its endpoints.
+
+    A union-find over the intra-block edges whose root is always the
+    smaller id, so every set's root is its minimum node. Returns
+    (``node``, ``rep``, ``xdeg``) for every node of the block: the minimum
+    of its block-local component and its count of cross-block edges."""
+    blk = edges["blk"].iat[0]
+    parent: dict = {}
+    xdeg: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b, ba, bb in zip(edges["a"].tolist(), edges["b"].tolist(),
+                            edges["ba"].tolist(), edges["bb"].tolist()):
+        for n, bn in ((a, ba), (b, bb)):
+            if bn == blk:
+                parent.setdefault(n, n)
+                xdeg.setdefault(n, 0)
+        if ba != bb:
+            xdeg[a if ba == blk else b] += 1
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    nodes = list(parent)
+    return pd.DataFrame({"node": nodes, "rep": [find(n) for n in nodes],
+                         "xdeg": [xdeg[n] for n in nodes]},
+                        columns=["node", "rep", "xdeg"]).astype("int64")
 
 
 def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -226,8 +378,14 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     regardless of partitioning or iteration order (every step is a min over
     a set).
 
-    Alternating star contraction (Kiveris et al. 2014), edges kept oriented
-    larger→smaller so each undirected edge is stored once:
+    Round 1 is block-local (:func:`_blocks`): one grouped-map pandas step
+    runs a min-root union-find per node block (:func:`_block_union_find`)
+    over the block's intra-block edges, which gives every node a
+    representative, the minimum of its block-local component. What is
+    left is the graph of representatives: the cross-block edges with
+    each endpoint mapped to its representative. It is solved by
+    alternating star contraction (Kiveris et al. 2014), edges kept
+    oriented larger→smaller so each undirected edge is stored once:
 
     - **large-star** (per node u over its full neighborhood Γ(u)): link
       every neighbor v > u to m = min(Γ(u) ∪ {u}).
@@ -239,16 +397,40 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     toward a star forest, detected by a (count, xxhash-sum) fixpoint —
     one scalar collect per round, no change-join. ``localCheckpoint``
     truncates lineage so plan size stays constant (a real cluster job
-    would use a checkpoint dir for fault tolerance instead).
+    would use a checkpoint dir for fault tolerance instead). The
+    contraction is skipped when the local step observed no cross-block
+    edge, so a graph that fits in one block solves in one round.
 
-    ``return_rounds=True`` additionally returns the number of contraction
-    rounds — the scale-stress harness asserts the O(log²) bound on
-    long-path graphs where diameter-bound propagation would need
-    thousands of rounds.
+    ``return_rounds=True`` additionally returns the round count: the
+    local round plus the contraction rounds, which ``max_iter`` caps.
+    The blocks are derived from the input (``_BLOCK_EDGES`` edges a
+    block); with one node per block the representative graph is the
+    input graph itself, and the contraction rounds are those of
+    full-graph star contraction — the O(log²) bound the tests and the
+    scale-stress harness assert on long paths, where diameter-bound
+    propagation would need thousands of rounds.
     """
-    und = symmetric_edges(edges, src, dst).localCheckpoint()
-    nodes = und.select(F.col("a").alias("node")).distinct().localCheckpoint()
-    e = und.where(F.col("a") > F.col("b")).localCheckpoint()
+    e, m = _ckpt_observe(
+        edges.select(F.col(src).cast("long").alias("s"),
+                     F.col(dst).cast("long").alias("d"))
+        .select(F.greatest("s", "d").alias("a"), F.least("s", "d").alias("b"))
+        .where(F.col("a") != F.col("b"))
+        .distinct(),
+        *_block_metrics("a", "b"))
+    block = _blocks(m)
+    # every edge goes to the blocks of both its endpoints, so each block
+    # sees all of its nodes, also those whose every edge crosses
+    reps, x = _ckpt_observe(
+        e.select("a", "b", block("a").alias("ba"), block("b").alias("bb"))
+        .withColumn("blk", F.explode(F.array_distinct(F.array("ba", "bb"))))
+        .groupBy("blk")
+        .applyInPandas(_by_value(_block_union_find),
+                       "node long, rep long, xdeg long"),
+        F.coalesce(F.sum("xdeg"), F.lit(0)).alias("x"))
+    reps = reps.select("node", "rep")
+    if not x["x"]:
+        out = reps.select("node", F.col("rep").alias("component"))
+        return (out, 1) if return_rounds else out
 
     def contract(e):
         # large-star over the symmetric view; output (v, m) keeps the
@@ -270,14 +452,26 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
                 .where(F.col("a") != F.col("b"))
                 .distinct())
 
-    e, rounds = _until_stable(contract, e, _sig_metrics("a", "b"), max_iter)
+    def rep_of(col):
+        return reps.select(F.col("node").alias(col),
+                           F.col("rep").alias(f"r{col}"))
 
-    parents = e.select(F.col("a").alias("node"),
-                       F.col("b").alias("component"))
-    out = (nodes.join(parents, "node", "left")
+    # representatives of one block's nodes are in that block, so a
+    # cross-block edge never maps to a self-loop
+    star, rounds = _until_stable(
+        contract,
+        e.where(block("a") != block("b"))
+        .join(rep_of("a"), "a").join(rep_of("b"), "b")
+        .select(F.greatest("ra", "rb").alias("a"),
+                F.least("ra", "rb").alias("b"))
+        .distinct().localCheckpoint(),
+        _sig_metrics("a", "b"), max_iter)
+    parents = star.select(F.col("a").alias("rep"),
+                          F.col("b").alias("component"))
+    out = (reps.join(parents, "rep", "left")
            .select("node",
-                   F.coalesce("component", F.col("node")).alias("component")))
-    return (out, rounds) if return_rounds else out
+                   F.coalesce("component", F.col("rep")).alias("component")))
+    return (out, 1 + rounds) if return_rounds else out
 
 
 def shortest_paths(edges: DataFrame, source: int, max_hops: int = 4,
@@ -316,23 +510,31 @@ def shortest_paths_weighted(edges: DataFrame, source,
                             src: str = "src", dst: str = "dst",
                             weight: str = "w", max_rounds: int = 200,
                             return_rounds: bool = False):
-    """Exact single-source weighted shortest distances: synchronous
-    Bellman-Ford relaxed to the FIXPOINT, not a hop bound — the missing
-    piece between :func:`shortest_paths` (exact only when ``max_hops`` ≥
-    diameter, and road networks have diameters in the hundreds) and the
-    reference's pgrouting/igraph routing step (``etl/osm-load.sh:17``
-    loads pgrouting; ``osm-pg-etl.md:31-62`` routes in igraph).
+    """Exact single-source weighted shortest distances relaxed to the
+    FIXPOINT, not a hop bound — the missing piece between
+    :func:`shortest_paths` (exact only when ``max_hops`` ≥ diameter, and
+    road networks have diameters in the hundreds) and the reference's
+    pgrouting/igraph routing step (``etl/osm-load.sh:17`` loads
+    pgrouting; ``osm-pg-etl.md:31-62`` routes in igraph).
 
-    Each round relaxes only from the FRONTIER (:func:`_relax_frontier`),
-    whose per-round tables equal full relaxation's, which keeps the
-    unrolled full-relaxation oracle exact. Frontiers shrink fast once the
-    wave passes, so late rounds join a handful of rows against the edge
-    list instead of every settled node. Convergence is an EXACT set test
-    folded into the same aggregation (doubles compare exactly because
-    both engines compute the same left-to-right path sums). Worst case
-    rounds = longest shortest path in edges (bounded by ``max_rounds``);
-    on topology-merged road graphs the measured count is tens, not
-    hundreds.
+    Block-local rounds (:func:`_relax_frontier` with a local step): the
+    nodes fall into id-range blocks derived from the input
+    (:func:`_blocks`, ``_BLOCK_EDGES`` edges a block, counted in the edge
+    table's checkpoint job). Each round cogroups the state with the edges
+    by block in one grouped-map pandas step, which runs a heapq Dijkstra
+    per block and source from the rows that improved in the previous
+    round (:func:`_block_dijkstra`) and relaxes the edges that leave the
+    block; the merge of those cross-block candidates decides the next
+    round's dirty rows, and the loop stops when it improves none.
+    ``rounds`` and ``max_rounds`` therefore count block crossings of the
+    shortest-path tree: a graph that fits in one block solves in one
+    round, and with one node per block the rounds are exactly the per-hop
+    frontier Bellman-Ford's. Distances are the minimum over left-fold
+    IEEE path sums either way ((min, +) is monotone), so they are
+    bit-identical, and the unrolled full-relaxation oracle stays exact.
+    Weights must be non-negative numbers and endpoints node ids: an edge
+    with a negative, NaN or NULL weight or a NULL endpoint raises
+    ``ValueError``.
 
     ``source`` may be a single node id (anything ``int()`` accepts that
     is not a bool or an iterable — numpy scalars included; returns
@@ -361,18 +563,32 @@ def shortest_paths_weighted(edges: DataFrame, source,
     # sigma_table pattern), the many-to-many accessibility primitive
     dist = edges.sparkSession.createDataFrame(
         [(s, s, 0.0) for s in sources], "s long, node long, dist double")
-    # keyed on u: every relaxation round joins the static edge list on the
-    # frontier's node key without re-shuffling or re-sorting it
-    with _iter_cache(edges.select(F.col(src).cast("long").alias("u"),
-                                  F.col(dst).cast("long").alias("v"),
-                                  F.col(weight).cast("double").alias("w")),
-                     "u") as e:
+    u, v, w = F.col("u"), F.col("v"), F.col("w")
+    e, m = _ckpt_observe(
+        edges.select(F.col(src).cast("long").alias("u"),
+                     F.col(dst).cast("long").alias("v"),
+                     F.col(weight).cast("double").alias("w")),
+        *_block_metrics("u", "v"),
+        F.count(F.when(u.isNull() | v.isNull() | w.isNull() | F.isnan(w)
+                       | (w < 0), 1)).alias("bad"))
+    if m["bad"]:
+        raise ValueError(
+            f"shortest_paths_weighted: {m['bad']} edges have a NULL "
+            "endpoint or a negative, NaN or NULL weight; distances need "
+            "node ids and non-negative weights")
+    block = _blocks(m)
+    # keyed on the block of u: every round cogroups the static edge list
+    # with the state by block without re-shuffling or re-sorting it
+    with _cached(e.select("u", "v", "w", block("u").alias("blk"),
+                          (block("v") == block("u")).alias("intra"))
+                 .repartition("blk").sortWithinPartitions("blk")) as e:
         dist, rounds, changed = _relax_frontier(
-            dist,
-            lambda f: (e.join(f, e["u"] == f["node"])
-                       .select(f["s"], e["v"].alias("node"),
-                               (f["dist"] + e["w"]).alias("dist"))),
-            ["s", "node"], max_rounds)
+            dist, None, ["s", "node"], max_rounds,
+            local=lambda state: (
+                state.withColumn("blk", block("node")).groupBy("blk")
+                .cogroup(e.groupBy("blk"))
+                .applyInPandas(_by_value(_block_dijkstra),
+                               "s long, node long, dist double, prev double")))
     if changed:
         warnings.warn(
             f"shortest_paths_weighted stopped at max_rounds={max_rounds} "
@@ -391,18 +607,20 @@ def shortest_paths_radius(edges: DataFrame, source,
                           return_rounds: bool = False):
     """Exact weighted SSSP whose round count is bounded by DISTANCE
     BUCKETS, not graph hop diameter — the scale path past
-    :func:`shortest_paths_weighted`, whose synchronous Bellman-Ford pays
-    one Spark job per hop of the shortest-path tree (exactly N rounds on
-    an N-node path per ``scale_stress.py sssp``; a continent road graph —
-    the reference's real routing target, ``etl/osm-load.sh:17`` loads
-    pgrouting for it — has hop diameters in the thousands).
+    :func:`shortest_paths_weighted`, whose rounds count the block
+    crossings of the shortest-path tree: one per hop when the blocks are
+    single nodes (exactly N rounds on an N-node path per
+    ``scale_stress.py sssp``), and a continent road graph — the
+    reference's real routing target, ``etl/osm-load.sh:17`` loads
+    pgrouting for it — has hop diameters in the thousands and spans many
+    blocks.
 
     Radius stepping [Blelloch, Gu, Sun & Tangwongsan, "Parallel Shortest
     Paths Using Radius Stepping", SPAA 2016]: first augment the edge list
     with SHORTCUTS — the min-plus closure of all sub-``delta`` paths,
     built by log-doubling (square the shortcut set, keep sums < Δ, stop
     at a (count, hash) fixpoint — ≤ log₂(hops-within-Δ) rounds) — then
-    run the ordinary frontier Bellman-Ford on the augmented list. Every
+    run :func:`shortest_paths_weighted` on the augmented list. Every
     shortcut carries a real path length, so augmented distances equal
     original distances EXACTLY; but with all sub-Δ hops collapsed to one
     edge, any two consecutive frontier rounds advance the wave ≥ Δ

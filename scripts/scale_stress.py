@@ -131,10 +131,12 @@ def run_path(n: int) -> None:
     """Star-contraction round-count stress on an n-node path — the
     worst-case diameter graph. Alternating large/small-star (Kiveris et
     al.) must converge in O(log² n) rounds; diameter-bound propagation
-    would need n-1. Ids are scrambled so component minima are scattered."""
+    would need n-1. Ids are scrambled so component minima are scattered.
+    One node per block, so the contraction runs on the whole path rather
+    than on a few block representatives."""
     import math
 
-    from osm_pg_etl_spark.operators.graph_algo import connected_components
+    from osm_pg_etl_spark.operators import graph_algo as ga
 
     spark = get_spark(app_name=f"path-stress-{n}")
     spark.sparkContext.setLogLevel("ERROR")
@@ -142,10 +144,14 @@ def run_path(n: int) -> None:
     ids = [(i * step) % n for i in range(n)]
     edges = spark.createDataFrame(
         [(ids[i], ids[i + 1]) for i in range(n - 1)], "src long, dst long")
-    t0 = time.perf_counter()
-    comps, rounds = connected_components(edges, return_rounds=True)
-    n_comp = comps.select("component").distinct().count()
-    dt = time.perf_counter() - t0
+    block_edges, ga._BLOCK_EDGES = ga._BLOCK_EDGES, 1e-12
+    try:
+        t0 = time.perf_counter()
+        comps, rounds = ga.connected_components(edges, return_rounds=True)
+        n_comp = comps.select("component").distinct().count()
+        dt = time.perf_counter() - t0
+    finally:
+        ga._BLOCK_EDGES = block_edges
     bound = 2 * math.log2(n) ** 2
     status = "OK" if (n_comp == 1 and rounds <= bound) else "FAIL"
     if status == "FAIL":
@@ -239,29 +245,43 @@ def run_aggs(k: int) -> None:
 def run_sssp(n: int) -> None:
     """Weighted-SSSP round-count stress on an n-node path — the worst
     case for Bellman-Ford, which is diameter-bound (unlike components'
-    star contraction): rounds must equal exactly n-1 relaxations + 1
+    star contraction). With one node per block the operator runs the
+    per-hop loop: rounds must equal exactly n-1 relaxations + 1
     fixpoint-detection round, pinning both the convergence test's
     exactness and the honest scaling story (road networks keep diameters
     moderate after topology merge; a pathological path costs its
-    diameter, and this documents that, not hides it)."""
-    from osm_pg_etl_spark.operators.graph_algo import shortest_paths_weighted
+    diameter, and this documents that, not hides it). In one block the
+    same distances take one round."""
+    from osm_pg_etl_spark.operators import graph_algo as ga
 
     spark = get_spark(app_name=f"sssp-stress-{n}")
     spark.sparkContext.setLogLevel("ERROR")
     edges = spark.createDataFrame(
         [(i, i + 1, 1.0) for i in range(n - 1)],
         "src long, dst long, w double")
-    t0 = time.perf_counter()
-    dist, rounds = shortest_paths_weighted(edges, 0, max_rounds=2 * n,
-                                           return_rounds=True)
-    reached = dist.count()
-    dt = time.perf_counter() - t0
-    status = "OK" if (reached == n and rounds == n) else "FAIL"
+    block_edges = ga._BLOCK_EDGES
+    try:
+        runs = {}
+        for name, value in (("singleton", 1e-12), ("one-block", 10**12)):
+            ga._BLOCK_EDGES = value
+            t0 = time.perf_counter()
+            dist, rounds = ga.shortest_paths_weighted(
+                edges, 0, max_rounds=2 * n, return_rounds=True)
+            rows = sorted(map(tuple, dist.collect()))
+            runs[name] = (rows, rounds, time.perf_counter() - t0)
+    finally:
+        ga._BLOCK_EDGES = block_edges
+    (rows, rounds, dt), (one, one_rounds, one_dt) = runs.values()
+    reached = len(rows)
+    status = "OK" if (reached == n and rounds == n and one == rows
+                      and one_rounds == 1) else "FAIL"
     if status == "FAIL":
         _FAILURES.append(f"sssp n={n}")
     print(f"{status}  sssp path n={n:>6}  reached={reached}  "
-          f"rounds={rounds} (expect n={n}: n-1 relax + 1 detect)  "
-          f"wall={dt:6.1f}s  per-round={dt / rounds:5.2f}s", flush=True)
+          f"rounds={rounds} (one node per block, expect n={n}: n-1 relax "
+          f"+ 1 detect)  wall={dt:6.1f}s  per-round={dt / rounds:5.2f}s  "
+          f"one-block rounds={one_rounds} (expect 1)  wall={one_dt:6.1f}s",
+          flush=True)
 
     # radius stepping on the SAME worst-case path: shortcut doubling
     # (≈log2 Δ rounds) + Δ-bucketed relaxation (≈2n/Δ rounds) must land

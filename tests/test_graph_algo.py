@@ -2,12 +2,17 @@
 
 import pytest
 
+from osm_pg_etl_spark.operators import graph_algo as ga
 from osm_pg_etl_spark.operators.graph_algo import (
     connected_components,
     dedup_clusters,
     shortest_paths,
     symmetric_edges,
 )
+
+# _BLOCK_EDGES values: the test graphs in one block / one node per block
+# (the per-hop loop and full-graph star contraction)
+ONE_BLOCK, SINGLETON_BLOCKS = 10**12, 1e-12
 
 
 def test_symmetric_edges_drops_self_loops(spark):
@@ -36,21 +41,29 @@ def test_connected_components_long_path_converges(spark):
     assert got == {i: 1 for i in range(1, 42)}
 
 
-def test_star_contraction_round_bound(spark):
+def test_star_contraction_round_bound(spark, monkeypatch):
     # 2048-node path with ids scrambled (so min ids are scattered, the
     # adversarial case for min-propagation): alternating large/small-star
     # must converge well under the ~2·log² bound — and nowhere near the
-    # diameter (2047 rounds) plain label propagation would need.
+    # diameter (2047 rounds) plain label propagation would need. One node
+    # per block makes the representative graph the whole path; in one
+    # block the union-find solves it in the local round.
     import math
 
     n = 2048
     perm = [(i * 1117) % n for i in range(n)]  # gcd(1117, 2048) = 1
     edges = spark.createDataFrame(
         [(perm[i], perm[i + 1]) for i in range(n - 1)], "src long, dst long")
+    monkeypatch.setattr(ga, "_BLOCK_EDGES", SINGLETON_BLOCKS)
     comps, rounds = connected_components(edges, return_rounds=True)
     assert comps.select("component").distinct().count() == 1
     log2n = math.log2(n)
     assert rounds <= 2 * log2n, f"{rounds} rounds for n={n} path"
+    monkeypatch.setattr(ga, "_BLOCK_EDGES", ONE_BLOCK)
+    one, rounds = connected_components(edges, return_rounds=True)
+    assert rounds == 1
+    assert sorted(map(tuple, one.collect())) \
+        == sorted(map(tuple, comps.collect()))
 
 
 def test_shortest_paths_bounded_hops(spark):
@@ -499,11 +512,12 @@ def test_louvain_modularity_beats_lpa(spark):
     assert q_of(lv) > 0.2  # real structure found vs LPA's near-zero
 
 
-def test_shortest_paths_weighted_beats_hop_bound(spark):
+def test_shortest_paths_weighted_beats_hop_bound(spark, monkeypatch):
     """Fixture where the 4-hop bound is provably wrong: a 7-edge cheap
     chain (true distance 7.0) vs a direct expensive edge (10.0). Bounded
     shortest_paths(max_hops=4) must return 10.0; the fixpoint operator
-    must return 7.0."""
+    must return 7.0. With one node per block the operator runs the
+    per-hop loop, one round per hop; in one block it solves in one."""
     from osm_pg_etl_spark.operators.graph_algo import (
         shortest_paths, shortest_paths_weighted)
 
@@ -512,6 +526,7 @@ def test_shortest_paths_weighted_beats_hop_bound(spark):
                                   "src long, dst long, w double")
     bounded = {r["node"]: r["dist"] for r in
                shortest_paths(edges, 1, max_hops=4).collect()}
+    monkeypatch.setattr(ga, "_BLOCK_EDGES", SINGLETON_BLOCKS)
     exact, rounds = shortest_paths_weighted(edges, 1, return_rounds=True)
     exact = {r["node"]: r["dist"] for r in exact.collect()}
     assert bounded[8] == 10.0
@@ -520,23 +535,40 @@ def test_shortest_paths_weighted_beats_hop_bound(spark):
                      7: 6.0, 8: 7.0}
     # path diameter 7 -> 7 improving rounds + 1 fixpoint-detection round
     assert rounds == 8
+    monkeypatch.setattr(ga, "_BLOCK_EDGES", ONE_BLOCK)
+    one, rounds = shortest_paths_weighted(edges, 1, return_rounds=True)
+    assert {r["node"]: r["dist"] for r in one.collect()} == exact
+    assert rounds == 1
 
 
-def test_shortest_paths_weighted_max_rounds_cap(spark):
+def test_shortest_paths_weighted_max_rounds_cap(spark, monkeypatch):
     """Exhausting max_rounds before the fixpoint yields truncated
     distances — which must be LOUD (RuntimeWarning), not silently
-    indistinguishable from a converged result."""
+    indistinguishable from a converged result. Rounds count block
+    crossings: one node per block caps the per-hop loop, while one block
+    converges in its first round."""
+    import warnings
+
     import pytest
 
     from osm_pg_etl_spark.operators.graph_algo import shortest_paths_weighted
 
     chain = [(i, i + 1, 1.0) for i in range(1, 8)]
     edges = spark.createDataFrame(chain, "src long, dst long, w double")
+    monkeypatch.setattr(ga, "_BLOCK_EDGES", SINGLETON_BLOCKS)
     with pytest.warns(RuntimeWarning, match="truncated"):
         got, rounds = shortest_paths_weighted(edges, 1, max_rounds=3,
                                               return_rounds=True)
     assert rounds == 3           # capped before the fixpoint
     assert got.count() == 4      # nodes within 3 hops only
+    monkeypatch.setattr(ga, "_BLOCK_EDGES", ONE_BLOCK)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        one, rounds = shortest_paths_weighted(edges, 1, max_rounds=3,
+                                              return_rounds=True)
+    assert rounds == 1
+    assert {r["node"]: r["dist"] for r in one.collect()} == {
+        i: float(i - 1) for i in range(1, 9)}
 
 
 def test_shortest_paths_weighted_source_dispatch(spark):
@@ -559,11 +591,13 @@ def test_shortest_paths_weighted_source_dispatch(spark):
     assert got == {1: 0.0, 2: 1.0}
 
 
-def test_shortest_km_oracle_round_margin(spark):
+def test_shortest_km_oracle_round_margin(spark, monkeypatch):
     """The osm_shortest_km oracle unrolls a FIXED number of relaxation
-    rounds; the gate is only honest if the operator's measured fixpoint
-    stays well inside it. Pin a >=2x margin on the sf0.001 car graph
-    (measured: 11 rounds vs the 30-round unroll)."""
+    rounds; the gate is only honest if the graph's hop depth stays well
+    inside it. With one node per block the operator's rounds are hops:
+    pin a >=2x margin on the sf0.001 car graph (measured: 11 rounds vs
+    the 30-round unroll). In one block it solves in one round, to the
+    same distances."""
     from pyspark.sql import functions as F
 
     from osm_pg_etl_spark.operators.graph_algo import shortest_paths_weighted
@@ -578,10 +612,19 @@ def test_shortest_km_oracle_round_margin(spark):
     merged = merged_network(cn, d["way_nodes"])
     directed = directed_network(merged, minimal=True).cache()
     source = directed.agg(F.min("start_node")).collect()[0][0]
-    _, rounds = shortest_paths_weighted(
-        directed, source, src="start_node", dst="end_node",
-        weight="length", return_rounds=True)
+
+    def run(block_edges):
+        monkeypatch.setattr(ga, "_BLOCK_EDGES", block_edges)
+        dist, rounds = shortest_paths_weighted(
+            directed, source, src="start_node", dst="end_node",
+            weight="length", return_rounds=True)
+        return sorted(map(tuple, dist.collect())), rounds
+
+    hops, rounds = run(SINGLETON_BLOCKS)
     assert rounds * 2 <= _SSSP_ORACLE_ROUNDS, (rounds, _SSSP_ORACLE_ROUNDS)
+    one, rounds = run(ONE_BLOCK)
+    assert rounds == 1
+    assert one == hops
 
 
 def test_refine_connected_splits_disconnected_community(spark):
@@ -723,17 +766,19 @@ def test_modularity_of_strict_coverage_and_params(spark):
     modularity_of(edges, partial, src="u", dst="v", strict=False).collect()
 
 
-def test_shortest_paths_radius_exact_and_fewer_rounds(spark):
+def test_shortest_paths_radius_exact_and_fewer_rounds(spark, monkeypatch):
     """48-node unit-weight path: radius stepping with Δ=8 must return the
     exact Bellman-Ford distances while spending FAR fewer total rounds
-    than the hop-diameter 48 the plain fixpoint operator pays (shortcut
-    doubling ~log2(8)+1 plus ~2·47/8 relaxation rounds)."""
+    than the hop-diameter 48 the per-hop loop pays (shortcut doubling
+    ~log2(8)+1 plus ~2·47/8 relaxation rounds). One node per block is the
+    per-hop loop; in one block the fixpoint takes one round."""
     from osm_pg_etl_spark.operators.graph_algo import (
         shortest_paths_radius, shortest_paths_weighted)
 
     n = 48
     edges = spark.createDataFrame(
         [(i, i + 1, 1.0) for i in range(n - 1)], "src long, dst long, w double")
+    monkeypatch.setattr(ga, "_BLOCK_EDGES", SINGLETON_BLOCKS)
     want, bf_rounds = shortest_paths_weighted(edges, 0, return_rounds=True)
     want = {r["node"]: r["dist"] for r in want.collect()}
     got, rounds = shortest_paths_radius(edges, 0, delta=8.0,
@@ -742,6 +787,10 @@ def test_shortest_paths_radius_exact_and_fewer_rounds(spark):
     assert got == want
     assert bf_rounds == n  # the baseline really is diameter-bound
     assert rounds <= n // 2, (rounds, bf_rounds)
+    monkeypatch.setattr(ga, "_BLOCK_EDGES", ONE_BLOCK)
+    one, bf_rounds = shortest_paths_weighted(edges, 0, return_rounds=True)
+    assert bf_rounds == 1
+    assert {r["node"]: r["dist"] for r in one.collect()} == want
 
 
 def test_shortest_paths_radius_heavy_edges_and_multi_source(spark):

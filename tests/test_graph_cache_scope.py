@@ -161,3 +161,22 @@ def test_betweenness_output_reads_no_released_cache(spark, edges,
             df.unpersist()
     got = {r["node"]: r["betweenness"] for r in out.collect()}
     assert got and all(v >= 0.0 for v in got.values())
+
+
+def test_fixpoint_loops_persist_a_bounded_number_of_rdds(spark, tmp_path):
+    """Every round of a fixpoint loop leaves its localCheckpoint RDD
+    persisted until the JVM collects its DataFrame. Components and
+    weighted SSSP on a 40-node path must leave a small number of them
+    that does not grow with the path: the per-hop loop left one per hop.
+    Counted by RDD id, since the ContextCleaner may free an earlier
+    test's RDDs meanwhile."""
+    def persisted_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    n = 40
+    edges = spark.createDataFrame([(i, i + 1, 1.0) for i in range(n - 1)],
+                                  "src long, dst long, w double")
+    before = persisted_ids()
+    ga.connected_components(edges).write.parquet(str(tmp_path / "cc"))
+    ga.shortest_paths_weighted(edges, 0).write.parquet(str(tmp_path / "sp"))
+    assert len(persisted_ids() - before) <= 6
