@@ -57,8 +57,18 @@ _MAX_SHORTCUT_ROUNDS = 20
 # label_propagation checkpoints every this many rounds
 _LPA_CHECKPOINT_EVERY = 4
 # edges per node block of the block-local fixpoints (weighted SSSP,
-# components): one block's Dijkstra or union-find runs in one Python task
-_BLOCK_EDGES = 50_000
+# components): one block's Dijkstra or union-find runs in one Python task.
+# A whole-block Dijkstra costs ~17 us and ~190 B of Python heap an edge
+# (scripts/block_curve.py local, linear to 400k edges), so a block of
+# this size is ~17 s and ~200 MB. Blocks are id ranges, and where ids do
+# not follow the graph's locality nearly every edge crosses blocks, so
+# more blocks bring back the per-hop rounds: on 800k edges (four
+# id-scrambled sf0.1 car graphs, 4 cores) one block ran SSSP in 6.5 s and
+# components in 5.8 s, 16 blocks in 29.3 s (15 rounds) and 13.9 s, and
+# the per-hop loop and full-graph star contraction in 19.4 s and 13.9 s.
+_BLOCK_EDGES = 1_000_000
+# node-id quantiles the block ranges are cut at (_blocks)
+_BLOCK_PROBES = 1024
 
 
 def symmetric_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -196,32 +206,56 @@ def _until_stable(step, state: DataFrame, metrics: tuple,
     return state, rounds
 
 
-def _block_metrics(u: str, v: str) -> tuple:
+def _block_metrics(u: str, v: str, *keys: str) -> tuple:
     """Observed aggregates behind :func:`_blocks`, for an edge table with
-    endpoint columns ``u`` and ``v``: its edge count and its min and max
-    node id."""
+    endpoint columns ``u`` and ``v`` whose edges a block holds by the
+    node-id columns ``keys``: its edge count, its min and max node id,
+    and the ``_BLOCK_PROBES``-quantiles of each key column."""
+    probes = [i / _BLOCK_PROBES for i in range(1, _BLOCK_PROBES)]
     return (F.count(F.lit(1)).alias("n"),
             F.min(F.least(u, v)).alias("lo"),
-            F.max(F.greatest(u, v)).alias("hi"))
+            F.max(F.greatest(u, v)).alias("hi"),
+            *(F.percentile_approx(k, probes, 10 * _BLOCK_PROBES)
+              .alias(f"q_{k}") for k in keys))
 
 
 def _blocks(m: dict):
     """Node blocks for an edge table whose :func:`_block_metrics` are
-    ``m``: ceil(n / _BLOCK_EDGES) node-id ranges of equal width over
-    [lo, hi], so a graph of at most ``_BLOCK_EDGES`` edges is one block.
-    The rule is derived from the input alone, and ids outside [lo, hi]
-    (a source with no edge) still land in some block. Returns
-    ``block(col)``: the block-id column of the node-id column named
-    ``col``, computed in decimals because ids may span the long range."""
-    lo = m["lo"] or 0
+    ``m``: ceil(n / _BLOCK_EDGES) node-id ranges cut at quantiles of the
+    key columns, so each block holds about ``_BLOCK_EDGES`` edges however
+    the ids are spread (while there are fewer blocks than quantile
+    probes; a single node's edges always share a block), and a graph of
+    at most ``_BLOCK_EDGES`` edges is one block. When there are at least
+    as many blocks as ids in [lo, hi], every id is its own block. The
+    rule is derived from the input alone, and every id, also one outside
+    [lo, hi] (a source with no edge), lands in some block. Returns ``block(col)``: the block-id
+    column of the node-id column named ``col``."""
     count = math.ceil(m["n"] / _BLOCK_EDGES)
-    width = max(1, math.ceil((m["hi"] - lo + 1) / count)) if count else 1
-    return lambda col: F.expr(
-        f"(CAST(`{col}` AS DECIMAL(20,0)) - ({lo})) div {width}")
+    if m["n"] and count >= m["hi"] - m["lo"] + 1:
+        return F.col
+    # the key columns' quantiles are equal-mass samples of their union
+    qs = sorted(x for k, q in m.items() if k.startswith("q_")
+                for x in q or ())
+    cuts = sorted({qs[len(qs) * j // count] for j in range(1, count)})
+    if not cuts:
+        # one block, as a column and not a literal: repartitioning on a
+        # constant key gives a single-partition exchange, which every
+        # round's cogroup would then shuffle again
+        return lambda col: F.col(col) * 0
+
+    def block(col, first=0, last=len(cuts)):
+        # blocks first..last, split at cuts[first:last]: binary search
+        if first == last:
+            return F.lit(first)
+        mid = (first + last + 1) // 2
+        return F.when(F.col(col) < cuts[mid - 1],
+                      block(col, first, mid - 1)).otherwise(
+                          block(col, mid, last))
+    return block
 
 
 def _relax_frontier(dist: DataFrame, relax, keys: list[str],
-                    max_rounds: int, local=None):
+                    max_rounds: int, local=None, block=None):
     """Frontier Bellman-Ford over ``dist`` (``keys`` + ``dist``).
     ``relax(frontier)`` returns the candidate rows (``keys`` + ``dist``)
     reached from the frontier, the rows whose distance improved in the
@@ -235,36 +269,43 @@ def _relax_frontier(dist: DataFrame, relax, keys: list[str],
     min the improved rows are exactly ``prev IS NULL OR dist < prev``;
     their count rides the checkpoint job as an observed metric.
 
-    ``local(state)``, when given, is a block-local step that runs in place
-    of ``relax``. It gets every row with a ``dirty`` flag (improved in the
-    previous round), solves the fixpoint inside each node block from the
-    dirty rows, and returns the rows that fixpoint improved with ``prev``
-    set to their new distance, plus the candidates its cross-block edges
-    reach, with NULL ``prev``. The improved rows are then the ones the
-    cross-block merge improved, and a round counts a block crossing
-    instead of a hop: a graph that fits in one block solves in one round,
-    and with one node per block the local step relaxes nothing but
-    cross-block edges, which is the per-hop loop round for round.
+    ``local(state, blocks)``, when given, is a block-local step that runs
+    in place of ``relax``. It gets every row with a ``dirty`` flag
+    (improved in the previous round), solves the fixpoint inside each
+    node block from the dirty rows, and returns the rows that fixpoint
+    improved with ``prev`` set to their new distance, plus the candidates
+    its cross-block edges reach, with NULL ``prev``. ``block`` is the
+    block-id column of a row; the ids of the blocks holding a dirty row
+    ride the checkpoint job too and reach the step as ``blocks`` (None in
+    the first round), so it can leave the other blocks out. The improved
+    rows are then the ones the cross-block merge improved, and a round
+    counts a block crossing instead of a hop: a graph that fits in one
+    block solves in one round, and with one node per block the local step
+    relaxes nothing but cross-block edges, which is the per-hop loop
+    round for round.
 
     Returns ``(dist, rounds, changed)``, where ``changed`` is the count
     still improving in the last round (0 at the fixpoint, -1 if no round
     ran).
     """
     improved = F.col("prev").isNull() | (F.col("dist") < F.col("prev"))
+    metrics = [F.count(F.when(improved, 1)).alias("chg")]
+    if local is not None:
+        metrics.append(F.collect_set(F.when(improved, block)).alias("blks"))
     state = dist.select(*keys, "dist", F.lit(True).alias("dirty"))
-    rounds, changed = 0, -1
+    rounds, changed, m = 0, -1, {}
     while rounds < max_rounds and changed != 0:
         if local is None:
             cand = relax(state.filter("dirty").select(*keys, "dist")).select(
                 *keys, "dist", F.lit(None).cast("double").alias("prev"))
         else:
-            cand = local(state)
+            cand = local(state, m.get("blks"))
         cur = state.select(*keys, "dist", F.col("dist").alias("prev"))
         new, m = _ckpt_observe(
             cur.unionByName(cand)
             .groupBy(*keys).agg(F.min("dist").alias("dist"),
                                 F.min("prev").alias("prev")),
-            F.count(F.when(improved, 1)).alias("chg"))
+            *metrics)
         state = new.select(*keys, "dist", improved.alias("dirty"))
         changed = m["chg"]
         rounds += 1
@@ -295,10 +336,6 @@ def _block_dijkstra(state: pd.DataFrame, edges: pd.DataFrame) -> pd.DataFrame:
     ``prev`` = ``dist``, and per node outside the block the best candidate
     over the cross edges of the settled nodes, with ``prev`` NaN (NULL in
     Spark)."""
-    adj: dict = {}
-    for u, v, w, intra in zip(edges["u"].tolist(), edges["v"].tolist(),
-                              edges["w"].tolist(), edges["intra"].tolist()):
-        adj.setdefault(u, []).append((v, w, intra))
     best: dict = {}
     seeds: dict = {}
     for s, node, d, dirty in zip(state["s"].tolist(), state["node"].tolist(),
@@ -307,6 +344,12 @@ def _block_dijkstra(state: pd.DataFrame, edges: pd.DataFrame) -> pd.DataFrame:
         best.setdefault(s, {})[node] = d
         if dirty:
             seeds.setdefault(s, []).append((d, node))
+    adj: dict = {}
+    if seeds:
+        for u, v, w, intra in zip(edges["u"].tolist(), edges["v"].tolist(),
+                                  edges["w"].tolist(),
+                                  edges["intra"].tolist()):
+            adj.setdefault(u, []).append((v, w, intra))
     out = []
     nan = float("nan")
     for s, heap in seeds.items():
@@ -403,12 +446,12 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
 
     ``return_rounds=True`` additionally returns the round count: the
     local round plus the contraction rounds, which ``max_iter`` caps.
-    The blocks are derived from the input (``_BLOCK_EDGES`` edges a
-    block); with one node per block the representative graph is the
-    input graph itself, and the contraction rounds are those of
-    full-graph star contraction — the O(log²) bound the tests and the
-    scale-stress harness assert on long paths, where diameter-bound
-    propagation would need thousands of rounds.
+    The blocks are derived from the input (about ``_BLOCK_EDGES`` edges
+    a block, :func:`_blocks`); with one node per block the
+    representative graph is the input graph itself, and the contraction
+    rounds are those of full-graph star contraction — the O(log²) bound
+    the tests and the scale-stress harness assert on long paths, where
+    diameter-bound propagation would need thousands of rounds.
     """
     e, m = _ckpt_observe(
         edges.select(F.col(src).cast("long").alias("s"),
@@ -416,7 +459,7 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         .select(F.greatest("s", "d").alias("a"), F.least("s", "d").alias("b"))
         .where(F.col("a") != F.col("b"))
         .distinct(),
-        *_block_metrics("a", "b"))
+        *_block_metrics("a", "b", "a", "b"))
     block = _blocks(m)
     # every edge goes to the blocks of both its endpoints, so each block
     # sees all of its nodes, also those whose every edge crosses
@@ -519,13 +562,15 @@ def shortest_paths_weighted(edges: DataFrame, source,
 
     Block-local rounds (:func:`_relax_frontier` with a local step): the
     nodes fall into id-range blocks derived from the input
-    (:func:`_blocks`, ``_BLOCK_EDGES`` edges a block, counted in the edge
-    table's checkpoint job). Each round cogroups the state with the edges
-    by block in one grouped-map pandas step, which runs a heapq Dijkstra
-    per block and source from the rows that improved in the previous
-    round (:func:`_block_dijkstra`) and relaxes the edges that leave the
-    block; the merge of those cross-block candidates decides the next
-    round's dirty rows, and the loop stops when it improves none.
+    (:func:`_blocks`: about ``_BLOCK_EDGES`` edges a block, cut at id
+    quantiles observed in the edge table's checkpoint job). Each round
+    cogroups the state with the edges by block in one grouped-map pandas
+    step, which runs a heapq Dijkstra per block and source from the rows
+    that improved in the previous round (:func:`_block_dijkstra`) and
+    relaxes the edges that leave the block; blocks without such a row
+    stay out of the step. The merge of the cross-block candidates
+    decides the next round's dirty rows, and the loop stops when it
+    improves none.
     ``rounds`` and ``max_rounds`` therefore count block crossings of the
     shortest-path tree: a graph that fits in one block solves in one
     round, and with one node per block the rounds are exactly the per-hop
@@ -568,7 +613,7 @@ def shortest_paths_weighted(edges: DataFrame, source,
         edges.select(F.col(src).cast("long").alias("u"),
                      F.col(dst).cast("long").alias("v"),
                      F.col(weight).cast("double").alias("w")),
-        *_block_metrics("u", "v"),
+        *_block_metrics("u", "v", "u"),
         F.count(F.when(u.isNull() | v.isNull() | w.isNull() | F.isnan(w)
                        | (w < 0), 1)).alias("bad"))
     if m["bad"]:
@@ -582,13 +627,21 @@ def shortest_paths_weighted(edges: DataFrame, source,
     with _cached(e.select("u", "v", "w", block("u").alias("blk"),
                           (block("v") == block("u")).alias("intra"))
                  .repartition("blk").sortWithinPartitions("blk")) as e:
+        def local(state, blocks):
+            state, edges = state.withColumn("blk", block("node")), e
+            if blocks is not None:
+                # a block with no dirty row relaxes nothing: neither its
+                # rows nor its edges go to Python
+                state = state.where(F.col("blk").isin(blocks))
+                edges = e.where(F.col("blk").isin(blocks))
+            return (state.groupBy("blk").cogroup(edges.groupBy("blk"))
+                    .applyInPandas(_by_value(_block_dijkstra),
+                                   "s long, node long, dist double, "
+                                   "prev double"))
+
         dist, rounds, changed = _relax_frontier(
-            dist, None, ["s", "node"], max_rounds,
-            local=lambda state: (
-                state.withColumn("blk", block("node")).groupBy("blk")
-                .cogroup(e.groupBy("blk"))
-                .applyInPandas(_by_value(_block_dijkstra),
-                               "s long, node long, dist double, prev double")))
+            dist, None, ["s", "node"], max_rounds, local=local,
+            block=block("node"))
     if changed:
         warnings.warn(
             f"shortest_paths_weighted stopped at max_rounds={max_rounds} "
@@ -662,8 +715,9 @@ def shortest_paths_radius(edges: DataFrame, source,
 
     sc, sc_rounds = _until_stable(square, sc, _sig_metrics("u", "v"),
                                   _MAX_SHORTCUT_ROUNDS)
-    # no checkpoint on aug: shortest_paths_weighted _iter_cache-s its own
-    # projection of it, so materializing here would just double the pass
+    # no checkpoint on aug: shortest_paths_weighted checkpoints its own
+    # projection of it (_ckpt_observe), so a checkpoint here would
+    # materialize the table twice
     aug = (e.unionByName(sc)
            .groupBy("u", "v").agg(F.min("w").alias("w")))
     out = shortest_paths_weighted(aug, source, src="u", dst="v",

@@ -16,6 +16,7 @@ from __future__ import annotations
 import os
 import sys
 import time
+from contextlib import contextmanager
 
 sys.path.insert(0, ".")
 
@@ -127,6 +128,21 @@ def run(k: int) -> None:
     spark.catalog.clearCache()
 
 
+@contextmanager
+def _singleton_blocks():
+    """Run the block-local graph operators with one node per block, so
+    every round crosses one hop: the round bounds below then measure the
+    algorithm (star contraction, radius stepping) and not the block
+    size, which puts any of these unit paths in one block."""
+    from osm_pg_etl_spark.operators import graph_algo as ga
+
+    block_edges, ga._BLOCK_EDGES = ga._BLOCK_EDGES, 1e-12
+    try:
+        yield
+    finally:
+        ga._BLOCK_EDGES = block_edges
+
+
 def run_path(n: int) -> None:
     """Star-contraction round-count stress on an n-node path — the
     worst-case diameter graph. Alternating large/small-star (Kiveris et
@@ -144,14 +160,11 @@ def run_path(n: int) -> None:
     ids = [(i * step) % n for i in range(n)]
     edges = spark.createDataFrame(
         [(ids[i], ids[i + 1]) for i in range(n - 1)], "src long, dst long")
-    block_edges, ga._BLOCK_EDGES = ga._BLOCK_EDGES, 1e-12
-    try:
+    with _singleton_blocks():
         t0 = time.perf_counter()
         comps, rounds = ga.connected_components(edges, return_rounds=True)
         n_comp = comps.select("component").distinct().count()
         dt = time.perf_counter() - t0
-    finally:
-        ga._BLOCK_EDGES = block_edges
     bound = 2 * math.log2(n) ** 2
     status = "OK" if (n_comp == 1 and rounds <= bound) else "FAIL"
     if status == "FAIL":
@@ -283,21 +296,20 @@ def run_sssp(n: int) -> None:
           f"one-block rounds={one_rounds} (expect 1)  wall={one_dt:6.1f}s",
           flush=True)
 
-    # radius stepping on the SAME worst-case path: shortcut doubling
-    # (≈log2 Δ rounds) + Δ-bucketed relaxation (≈2n/Δ rounds) must land
-    # FAR under the diameter-bound n — the scale story for continent
-    # road graphs whose hop diameters are in the thousands
-    from osm_pg_etl_spark.operators.graph_algo import shortest_paths_radius
-
+    # radius stepping on the SAME worst-case path, one node per block:
+    # shortcut doubling (≈log2 Δ rounds) + Δ-bucketed relaxation (≈2n/Δ
+    # rounds) must land FAR under the diameter-bound n — the scale story
+    # for continent road graphs whose hop diameters are in the thousands
     delta = 16.0
-    t0 = time.perf_counter()
-    dist_r, rounds_r = shortest_paths_radius(edges, 0, delta=delta,
-                                             max_rounds=2 * n,
-                                             return_rounds=True)
-    ok_vals = (dist_r.agg(F.sum("dist")).collect()[0][0]
-               == n * (n - 1) / 2)            # exact unit-path distances
-    reached_r = dist_r.count()
-    dt = time.perf_counter() - t0
+    with _singleton_blocks():
+        t0 = time.perf_counter()
+        dist_r, rounds_r = ga.shortest_paths_radius(edges, 0, delta=delta,
+                                                    max_rounds=2 * n,
+                                                    return_rounds=True)
+        ok_vals = (dist_r.agg(F.sum("dist")).collect()[0][0]
+                   == n * (n - 1) / 2)        # exact unit-path distances
+        reached_r = dist_r.count()
+        dt = time.perf_counter() - t0
     status = "OK" if (reached_r == n and ok_vals
                       and rounds_r <= max(n // 4, 16)) else "FAIL"
     if status == "FAIL":
@@ -310,8 +322,9 @@ def run_sssp(n: int) -> None:
 def run_sssp_radius(n: int, delta: float = 64.0) -> None:
     """Radius-stepping alone on an n-node unit path, for n where the
     diameter-bound baseline is infeasible (n=2000 would cost ~2000
-    rounds ≈ 13 min; radius stepping needs ~2n/Δ + log₂Δ). Exactness is
-    pinned by the closed-form distance sum n(n-1)/2."""
+    rounds ≈ 13 min; radius stepping needs ~2n/Δ + log₂Δ). One node per
+    block, so the rounds are radius stepping's and not one block's.
+    Exactness is pinned by the closed-form distance sum n(n-1)/2."""
     from osm_pg_etl_spark.operators.graph_algo import shortest_paths_radius
 
     spark = get_spark(app_name=f"sssp-radius-{n}")
@@ -319,13 +332,15 @@ def run_sssp_radius(n: int, delta: float = 64.0) -> None:
     edges = spark.createDataFrame(
         [(i, i + 1, 1.0) for i in range(n - 1)],
         "src long, dst long, w double")
-    t0 = time.perf_counter()
-    dist, rounds = shortest_paths_radius(edges, 0, delta=delta,
-                                         max_rounds=2 * n,
-                                         return_rounds=True)
-    ok_vals = (dist.agg(F.sum("dist")).collect()[0][0] == n * (n - 1) / 2)
-    reached = dist.count()
-    dt = time.perf_counter() - t0
+    with _singleton_blocks():
+        t0 = time.perf_counter()
+        dist, rounds = shortest_paths_radius(edges, 0, delta=delta,
+                                             max_rounds=2 * n,
+                                             return_rounds=True)
+        ok_vals = (dist.agg(F.sum("dist")).collect()[0][0]
+                   == n * (n - 1) / 2)
+        reached = dist.count()
+        dt = time.perf_counter() - t0
     bound = 2 * n / delta + 12
     status = "OK" if (reached == n and ok_vals and rounds <= bound) else "FAIL"
     if status == "FAIL":

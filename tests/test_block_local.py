@@ -168,3 +168,59 @@ def test_shortest_paths_weighted_rejects_malformed_edges(spark):
                                       "src long, dst long, w double")
         with pytest.raises(ValueError, match="non-negative"):
             ga.shortest_paths_weighted(edges, 1)
+
+
+def test_blocks_cut_skewed_ids_into_equal_edge_counts(spark, monkeypatch):
+    """Block ranges are cut at quantiles of the key ids, not at equal
+    widths: with 90% of the edges on ids 0-99 and the rest spread up to
+    10^15, each of the four blocks holds about a quarter of the edges
+    (equal widths would put 90% in one). An id outside every edge still
+    gets a block (the first or the last), and with more blocks than ids
+    every id is its own."""
+    from pyspark.sql import functions as F
+
+    rnd = random.Random(3)
+    ids = ([rnd.randrange(100) for _ in range(900)]
+           + [rnd.randrange(10**15) for _ in range(100)])
+    df = spark.createDataFrame([(u, u + 1) for u in ids], "u long, v long")
+    monkeypatch.setattr(ga, "_BLOCK_EDGES", 250)
+    _, m = ga._ckpt_observe(df, *ga._block_metrics("u", "v", "u"))
+    block = ga._blocks(m)
+    sizes = [r["n"] for r in df.groupBy(block("u").alias("b"))
+             .agg(F.count(F.lit(1)).alias("n")).collect()]
+    assert len(sizes) == 4 and max(sizes) <= 300, sizes
+    outside = spark.createDataFrame([(-5,), (10**16,)], "id long")
+    assert [r["b"] for r in outside.select(block("id").alias("b"))
+            .collect()] == [0, 3]
+    monkeypatch.setattr(ga, "_BLOCK_EDGES", SINGLETON_BLOCKS)
+    block = ga._blocks({**m, "lo": 0, "hi": 5})
+    got = spark.range(6).select(block("id").alias("b")).collect()
+    assert [r["b"] for r in got] == list(range(6))
+
+
+def test_relax_frontier_hands_the_local_step_only_dirty_blocks(spark):
+    """The ids of the blocks holding an improved row ride the merge's
+    checkpoint job and reach the next round's local step: on the path
+    0 -> 1 -> 2 -> 3 with one node per block, round k sees block k-1
+    alone (the first round sees None, every block)."""
+    from pyspark.sql import functions as F
+
+    edges = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], "u long, v long")
+    seen = []
+
+    def local(state, blocks):
+        seen.append(blocks)
+        frontier = state.filter("dirty")
+        return (edges.join(frontier, edges["u"] == frontier["node"])
+                .select(F.col("v").alias("node"),
+                        (F.col("dist") + 1.0).alias("dist"),
+                        F.lit(None).cast("double").alias("prev")))
+
+    start = spark.createDataFrame([(0, 0.0)], "node long, dist double")
+    dist, rounds, changed = ga._relax_frontier(
+        start, None, ["node"], 10, local=local, block=F.col("node"))
+    assert (rounds, changed) == (4, 0)
+    assert [sorted(b) if b is not None else b for b in seen] == [
+        None, [1], [2], [3]]
+    assert sorted(map(tuple, dist.collect())) == [
+        (0, 0.0), (1, 1.0), (2, 2.0), (3, 3.0)]
