@@ -12,7 +12,7 @@ Layout
 ------
 - ``functions/``  scalar/array/map/geo column expressions (pure Column → Column)
 - ``operators/``  table-level transformations (tags, stats, topology, graphs,
-                  pois, dedup, similarity, text, multimodal)
+                  pois, dedup, similarity, text)
 - ``sources/``    readers/writers for the OSM relational model and test data
 - ``streaming/``  incremental maintenance of derived tables (actions feed)
 - ``plans/``      the query registry consumed by ``__spark_entry__.py``

@@ -2,7 +2,6 @@ from . import (  # noqa: F401
     dedup,
     export,
     graphs,
-    multimodal,
     network,
     pois,
     similarity,

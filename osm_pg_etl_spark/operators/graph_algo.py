@@ -690,11 +690,23 @@ def shortest_paths_radius(edges: DataFrame, source,
     more relaxation rounds, never wrong distances). Weights must be
     non-negative. Same source/dispatch/return contract as
     :func:`shortest_paths_weighted`.
+
+    A graph of at most ``_BLOCK_EDGES`` edges (counted in the edge
+    table's checkpoint job) is one block, which
+    :func:`shortest_paths_weighted` solves in one round, so there the
+    shortcuts are skipped: their doubling would only add rounds. Gate-size
+    graphs are one block; the singleton-block tests and
+    ``scale_stress.py sssp`` exercise the shortcuts.
     """
-    e = (edges.select(F.col(src).cast("long").alias("u"),
-                      F.col(dst).cast("long").alias("v"),
-                      F.col(weight).cast("double").alias("w"))
-         .localCheckpoint())
+    e, m = _ckpt_observe(
+        edges.select(F.col(src).cast("long").alias("u"),
+                     F.col(dst).cast("long").alias("v"),
+                     F.col(weight).cast("double").alias("w")),
+        F.count(F.lit(1)).alias("n"))
+    if m["n"] <= _BLOCK_EDGES:
+        return shortest_paths_weighted(e, source, src="u", dst="v",
+                                       weight="w", max_rounds=max_rounds,
+                                       return_rounds=return_rounds)
     # NOTE the shortcut-doubling loop below deliberately keeps plain
     # per-round localCheckpoints: sc changes every round (the self-join
     # squares it), so there is no static table whose partitioning a

@@ -890,12 +890,15 @@ def hashed_linear_score(df: DataFrame, text_col: str = "text",
     identical).
 
     w(t) = (md5_u32(seed|t) mod 2001) − 1000  ∈ [−1000, 1000];
-    logit = Σ w(lower(t)); score = logit / (1000 · n_tokens).
+    logit = Σ w(lower(t)); score = logit / (1000 · n_tokens), rounded
+    half away from zero to 6 places.
 
-    Everything up to the final division is exact integer arithmetic, so
-    a SQL oracle computing the same expression hash-matches bit for
-    bit. Pure Column expressions: no UDF, no shuffle except the final
-    nothing — this is a map-only operator (the per-doc aggregate is
+    The rounding is integer arithmetic on the exact quotient, so a SQL
+    oracle computing the same expression hash-matches bit for bit
+    (rounding the double quotient does not: DuckDB rounds its binary
+    value, so 4156 / 64000 = 0.0649375 became 0.064937 there and
+    0.064938 in Spark). Pure Column expressions: no UDF, no shuffle —
+    this is a map-only operator (the per-doc aggregate is
     ``F.aggregate`` over the token array, inside the row).
 
     Returns (id_col, n_tokens, logit, score); empty docs score 0.0."""
@@ -906,10 +909,11 @@ def hashed_linear_score(df: DataFrame, text_col: str = "text",
     logit = F.aggregate(toks, F.lit(0).cast("long"),
                         lambda acc, t: acc + w(t))
     n = F.size(toks)
+    # round(logit * 10^6 / (1000 n)) = sign * floor((2000 |logit| + n) / 2n)
+    micros = F.signum(logit) * F.floor((F.abs(logit) * 2000 + n) / (2 * n))
     return df.select(
         F.col(id_col), n.alias("n_tokens"), logit.alias("logit"),
-        F.when(n > 0, F.round(logit.cast("double") / (1000.0 * n), 6))
-        .otherwise(F.lit(0.0)).alias("score"))
+        F.when(n > 0, micros / 1e6).otherwise(F.lit(0.0)).alias("score"))
 
 
 def bigram_pairs(text: Column | str) -> Column:

@@ -1,4 +1,4 @@
-"""Training-data-pipeline queries (dedup / similarity / text / multimodal)
+"""Training-data-pipeline queries (dedup / similarity / text / sampling)
 with DuckDB oracles where SQL-expressible.
 
 Hashing is md5-based on both sides (see functions.hashing), so even the
@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators import dedup, multimodal, sampling, similarity, text
+from ..operators import dedup, sampling, similarity, text
 from ..sources.io import spread
 from .common import t
 
@@ -2042,8 +2042,9 @@ def q_quality_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-trick linear quality scoring (operators/text.py:
     hashed_linear_score): the fastText/CCNet filter plumbing as a
     MAP-ONLY operator — per-token md5-derived weights, per-doc
-    ``F.aggregate`` inside the row, zero shuffles, no UDF. Integer
-    logit is exact, so the oracle hash-matches bit for bit."""
+    ``F.aggregate`` inside the row, zero shuffles, no UDF. The logit and
+    the rounding are integer arithmetic, so the oracle hash-matches bit
+    for bit."""
     from ..operators.text import hashed_linear_score  # noqa: PLC0415
 
     return hashed_linear_score(docs_t(spark, sf_dir))
@@ -2064,118 +2065,11 @@ s AS (
   FROM toks)
 SELECT doc_id, n_tokens, logit,
        CASE WHEN n_tokens > 0
-            THEN ROUND(CAST(logit AS DOUBLE) / (1000.0 * n_tokens), 6)
+            THEN CAST(sign(logit) * ((abs(logit) * 2000 + n_tokens)
+                                     // (2 * n_tokens)) AS DOUBLE) / 1e6
             ELSE 0.0 END AS score
 FROM s
 """
-
-
-def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE tokenizer training (operators/bpe.py): ONE
-    corpus pass builds the word-frequency table, then 6 merge rounds
-    each run a vocabulary-sized pair-count aggregate, a single-row
-    argmax collect, and a literal space-wrapped substring rewrite —
-    the Sennrich trainer's exact greedy semantics, engine-portable by
-    construction. The DuckDB oracle replays all 6 rounds unrolled with
-    the identical encoding and (count DESC, pair ASC) tie-break, so a
-    hash match pins the whole iterative algorithm, not just one
-    aggregation."""
-    from ..operators.bpe import bpe_train  # noqa: PLC0415
-
-    return bpe_train(docs_t(spark, sf_dir), n_merges=6)
-
-
-def _sql_bpe_merges(n_merges: int = 6) -> str:
-    """Unrolled DuckDB replay of bpe_train: s{k} = symbol table after k
-    merges, p{k} = overlapping pair counts, b{k} = that round's argmax."""
-    ctes = ["""words AS (
-  SELECT t AS w
-  FROM documents, UNNEST(string_split_regex(lower(text), '\\s+')) AS u(t)
-  WHERE t <> ''),
-s0 AS (
-  SELECT array_to_string(list_transform(generate_series(1, length(w)),
-                                        i -> ' ' || w[i:i] || ' '),
-                         '') AS symbols,
-         CAST(COUNT(*) AS BIGINT) AS freq
-  FROM words GROUP BY w)"""]
-    for k in range(n_merges):
-        ctes.append(f"""p{k} AS (
-  SELECT pair, CAST(SUM(freq) AS BIGINT) AS cnt FROM (
-    SELECT freq, arr[i] || ' ' || arr[i + 1] AS pair
-    FROM (SELECT freq, string_split(trim(symbols), '  ') AS arr FROM s{k}),
-         UNNEST(generate_series(1, len(arr) - 1)) AS g(i))
-  GROUP BY pair),
-b{k} AS (
-  SELECT string_split(pair, ' ')[1] AS l, string_split(pair, ' ')[2] AS r,
-         cnt
-  FROM p{k} ORDER BY cnt DESC, pair ASC LIMIT 1),
-bf{k} AS (
-  -- never-empty fallback: when the vocabulary runs out of pairs before
-  -- round {k}, a no-op merge ('', '') keeps the downstream cross joins
-  -- populated (the 4-space pattern cannot occur in the wrap encoding)
-  SELECT l, r FROM b{k}
-  UNION ALL
-  SELECT '', '' WHERE NOT EXISTS (SELECT 1 FROM b{k}))""")
-        ctes.append(f"""s{k + 1} AS (
-  SELECT replace(symbols, ' ' || b.l || '  ' || b.r || ' ',
-                 ' ' || b.l || b.r || ' ') AS symbols, freq
-  FROM s{k}, bf{k} b)""")
-    unions = "\nUNION ALL ".join(
-        f"SELECT CAST({k} AS INTEGER) AS step, l AS \"left\", "
-        f"r AS \"right\", l || r AS merged, cnt AS pair_count FROM b{k}"
-        for k in range(n_merges))
-    return "WITH " + ",\n".join(ctes) + "\n" + unions
-
-
-SQL_BPE_MERGES = _sql_bpe_merges(6)
-
-
-def q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE APPLY (operators/bpe.py:bpe_subword_counts): train 6 merges,
-    then tokenize the corpus with them — the K chained literal replaces
-    run over the DISTINCT vocabulary only (pure Column exprs, no UDF)
-    and per-word subword counts broadcast back onto the exploded words,
-    so the corpus is scanned once. Output (doc_id, n_words,
-    n_subwords); the oracle re-learns the same 6 merges and re-applies
-    them in SQL, so the hash pins train AND apply end to end."""
-    from ..operators.bpe import bpe_subword_counts, bpe_train  # noqa: PLC0415
-
-    docs = docs_t(spark, sf_dir)
-    merges = [(r["left"], r["right"])
-              for r in bpe_train(docs, n_merges=6)
-              .orderBy("step").collect()]        # bounded: 6 rows
-    return bpe_subword_counts(docs, merges)
-
-
-def _sql_bpe_tokenize(n_merges: int = 6) -> str:
-    base = _sql_bpe_merges(n_merges)
-    ctes = base[len("WITH "):base.rindex("\nSELECT CAST(0")]
-    wrap = ("array_to_string(list_transform(generate_series(1, "
-            "length(w)), i -> ' ' || w[i:i] || ' '), '')")
-    # bf{k} (the never-empty fallback), NOT b{k}: an early-stopped
-    # training run must tokenize with the merges that exist, not
-    # produce an empty cross join
-    applied = wrap
-    for k in range(n_merges):
-        applied = (f"replace({applied}, ' ' || bf{k}.l || '  ' || bf{k}.r "
-                   f"|| ' ', ' ' || bf{k}.l || bf{k}.r || ' ')")
-    bs = ", ".join(f"bf{k}" for k in range(n_merges))
-    return f"""WITH {ctes},
-docwords AS (
-  SELECT doc_id, t AS w
-  FROM documents, UNNEST(string_split_regex(lower(text), '\\s+')) AS u(t)
-  WHERE t <> ''),
-vocab AS (
-  SELECT w, len(string_split(trim({applied}), '  ')) AS n_sub
-  FROM (SELECT DISTINCT w FROM docwords), {bs})
-SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
-       CAST(SUM(n_sub) AS BIGINT) AS n_subwords
-FROM docwords JOIN vocab USING (w)
-GROUP BY doc_id
-"""
-
-
-SQL_BPE_TOKENIZE = _sql_bpe_tokenize(6)
 
 
 def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2243,593 +2137,6 @@ WITH c AS (
 SELECT c_custkey, {repl} AS clean,
        {cnts}
 FROM c
-"""
-
-
-# --- multimodal plumbing (binary payloads + Arrow-batched extraction) -------------------------
-
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = docs_t(spark, sf_dir)
-    media = multimodal.attach_fake_media(docs)
-    feats = multimodal.extract_features(media)
-    return feats.select("doc_id", "n_bytes", "content_hash",
-                        F.round("feat_mean", 6).alias("feat_mean"),
-                        F.round("feat_entropy_proxy", 6).alias("feat_entropy"))
-
-
-# documents text is ASCII, so utf-8 bytes == character codes: the decode stub's
-# byte statistics are reproducible in SQL over the characters.
-SQL_MULTIMODAL_FEATURES = """
-SELECT doc_id,
-       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-       md5(text) AS content_hash,
-       ROUND(CASE WHEN len(text) > 0
-             THEN CAST(list_sum(list_transform(range(1, len(text) + 1),
-                                i -> ascii(text[i]))) AS DOUBLE) / len(text)
-             ELSE 0.0 END, 6) AS feat_mean,
-       ROUND(CAST(len(list_distinct(list_transform(range(1, len(text) + 1),
-                  i -> ascii(text[i])))) AS DOUBLE) / 256.0, 6) AS feat_entropy
-FROM documents
-"""
-
-
-def q_media_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image decode through the Arrow-batched pipeline: every doc_id
-    becomes a genuine binary-PPM payload (constant color/dims derived
-    from the id — attach_synthetic_ppm), and extract_image_features
-    parses the netpbm header + raster with the pure-numpy codec
-    (functions/imagecodec.py) inside mapInPandas. The oracle predicts the
-    decoded features in closed form from doc_id — so a hash match proves
-    the executor-side decode produced exactly the pixels the bytes
-    encode. Compressed formats (JPEG/PNG) remain stubbed; this gate
-    covers the real-codec leg (netpbm/BMP)."""
-    docs = docs_t(spark, sf_dir)
-    media = multimodal.attach_synthetic_ppm(docs.select("doc_id"))
-    feats = multimodal.extract_image_features(media)
-    return feats.select("doc_id", "width", "height",
-                        F.round("mean_r", 6).alias("mean_r"),
-                        F.round("mean_g", 6).alias("mean_g"),
-                        F.round("mean_b", 6).alias("mean_b"),
-                        F.round("luma", 6).alias("luma"))
-
-
-# constant-color image ⇒ channel means are the exact byte values and the
-# luma is the fixed Rec.601 combination — both engines compute the same
-# double expression in the same order
-SQL_MEDIA_IMAGE_FEATURES = """
-SELECT doc_id,
-       CAST(doc_id % 16 + 1 AS INT) AS width,
-       CAST(doc_id % 12 + 1 AS INT) AS height,
-       ROUND(CAST(doc_id * 7 % 256 AS DOUBLE), 6) AS mean_r,
-       ROUND(CAST(doc_id * 13 % 256 AS DOUBLE), 6) AS mean_g,
-       ROUND(CAST(doc_id * 29 % 256 AS DOUBLE), 6) AS mean_b,
-       ROUND(0.299 * CAST(doc_id * 7 % 256 AS DOUBLE)
-             + 0.587 * CAST(doc_id * 13 % 256 AS DOUBLE)
-             + 0.114 * CAST(doc_id * 29 % 256 AS DOUBLE), 6) AS luma
-FROM documents
-"""
-
-
-def q_media_image_features_png(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL compressed-image decode (r8): every doc_id becomes a genuine
-    8-bit RGB PNG — zlib-deflated IDAT, row filters cycling through all
-    five PNG scanline filters — of a GRADIENT image, and
-    extract_image_features inflates + unfilters it with the pure-numpy
-    decoder (functions/imagecodec.py:decode_png) inside mapInPandas. The
-    payload is non-constant (pixel = base + x + y, bounded < 256), so a
-    hash match proves Sub/Up/Average/Paeth inversion reproduced every
-    pixel: the oracle predicts the means in closed form
-    (base + (w−1)/2 + (h−1)/2). JPEG remains the stub boundary."""
-    docs = docs_t(spark, sf_dir)
-    media = multimodal.attach_synthetic_png(docs.select("doc_id"))
-    feats = multimodal.extract_image_features(media)
-    return feats.select("doc_id", "width", "height",
-                        F.round("mean_r", 6).alias("mean_r"),
-                        F.round("mean_g", 6).alias("mean_g"),
-                        F.round("mean_b", 6).alias("mean_b"),
-                        F.round("luma", 6).alias("luma"))
-
-
-SQL_MEDIA_IMAGE_FEATURES_PNG = """
-SELECT doc_id,
-       CAST(doc_id % 16 + 1 AS INT) AS width,
-       CAST(doc_id % 12 + 1 AS INT) AS height,
-       ROUND(CAST(doc_id * 7 % 100 AS DOUBLE)
-             + (doc_id % 16) / 2.0 + (doc_id % 12) / 2.0, 6) AS mean_r,
-       ROUND(CAST(doc_id * 13 % 100 AS DOUBLE)
-             + (doc_id % 16) / 2.0 + (doc_id % 12) / 2.0, 6) AS mean_g,
-       ROUND(CAST(doc_id * 29 % 100 AS DOUBLE)
-             + (doc_id % 16) / 2.0 + (doc_id % 12) / 2.0, 6) AS mean_b,
-       ROUND(0.299 * (CAST(doc_id * 7 % 100 AS DOUBLE)
-                      + (doc_id % 16) / 2.0 + (doc_id % 12) / 2.0)
-             + 0.587 * (CAST(doc_id * 13 % 100 AS DOUBLE)
-                        + (doc_id % 16) / 2.0 + (doc_id % 12) / 2.0)
-             + 0.114 * (CAST(doc_id * 29 % 100 AS DOUBLE)
-                        + (doc_id % 16) / 2.0 + (doc_id % 12) / 2.0),
-             6) AS luma
-FROM documents
-"""
-
-
-def q_media_image_features_jpeg(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    """REAL JPEG decode (r10): every doc_id becomes a genuine baseline
-    JFIF bitstream — canonical Huffman entropy coding, DC prediction
-    across MCUs, zigzag, dequant, IDCT, YCbCr→RGB — decoded by the
-    pure-numpy :mod:`functions.jpegcodec` inside mapInPandas. The image
-    is 8×8-block-constant with flat quant tables, so the lossy pipeline
-    is exactly invertible here and the oracle predicts the means in
-    closed form (base + (wb−1)/2 + (hb−1)/2); textured-image fidelity is
-    SNR-bounded in tests. JPEG is no longer the stub boundary —
-    progressive/arithmetic scans are."""
-    docs = docs_t(spark, sf_dir)
-    media = multimodal.attach_synthetic_jpeg(docs.select("doc_id"))
-    feats = multimodal.extract_image_features(media)
-    return feats.select("doc_id", "width", "height",
-                        F.round("mean_r", 6).alias("mean_r"),
-                        F.round("mean_g", 6).alias("mean_g"),
-                        F.round("mean_b", 6).alias("mean_b"),
-                        F.round("luma", 6).alias("luma"))
-
-
-SQL_MEDIA_IMAGE_FEATURES_JPEG = """
-SELECT doc_id,
-       CAST((doc_id % 3 + 1) * 8 AS INT) AS width,
-       CAST((doc_id % 2 + 1) * 8 AS INT) AS height,
-       ROUND(CAST(doc_id * 7 % 100 AS DOUBLE)
-             + (doc_id % 3) / 2.0 + (doc_id % 2) / 2.0, 6) AS mean_r,
-       ROUND(CAST(doc_id * 7 % 100 AS DOUBLE)
-             + (doc_id % 3) / 2.0 + (doc_id % 2) / 2.0, 6) AS mean_g,
-       ROUND(CAST(doc_id * 7 % 100 AS DOUBLE)
-             + (doc_id % 3) / 2.0 + (doc_id % 2) / 2.0, 6) AS mean_b,
-       ROUND(CAST(doc_id * 7 % 100 AS DOUBLE)
-             + (doc_id % 3) / 2.0 + (doc_id % 2) / 2.0, 6) AS luma
-FROM documents
-"""
-
-
-def q_media_image_features_jpeg_prog(spark: SparkSession,
-                                     sf_dir: str) -> DataFrame:
-    """REAL PROGRESSIVE JPEG decode (r11, VERDICT task 7): every doc_id
-    becomes a genuine SOF2 4:2:0 JFIF shipped as EIGHT scans —
-    interleaved DC first at Al=1, per-component AC first bands with
-    multi-block EOB runs, a DC refinement bit scan, per-component AC
-    refinement — decoded by the scan-accumulation decoder in
-    :mod:`functions.jpegcodec` inside mapInPandas. Block-constant
-    content with flat quant keeps the successive-approximation pipeline
-    exactly invertible ((d>>1)<<1 | (d&1) = d per DC; AC bands are pure
-    EOB runs), so the oracle predicts the means in closed form;
-    textured-image fidelity is pinned by the progressive==baseline
-    bit-equivalence tests. The codec boundary is now arithmetic coding
-    and lossless/hierarchical frames."""
-    docs = docs_t(spark, sf_dir)
-    media = multimodal.attach_synthetic_jpeg_prog(docs.select("doc_id"))
-    feats = multimodal.extract_image_features(media)
-    return feats.select("doc_id", "width", "height",
-                        F.round("mean_r", 6).alias("mean_r"),
-                        F.round("mean_g", 6).alias("mean_g"),
-                        F.round("mean_b", 6).alias("mean_b"),
-                        F.round("luma", 6).alias("luma"))
-
-
-SQL_MEDIA_IMAGE_FEATURES_JPEG_PROG = """
-SELECT doc_id,
-       CAST((doc_id % 4 + 1) * 8 AS INT) AS width,
-       CAST((doc_id % 3 + 1) * 8 AS INT) AS height,
-       ROUND(CAST(doc_id * 11 % 97 AS DOUBLE)
-             + (doc_id % 4) / 2.0 + (doc_id % 3) / 2.0, 6) AS mean_r,
-       ROUND(CAST(doc_id * 11 % 97 AS DOUBLE)
-             + (doc_id % 4) / 2.0 + (doc_id % 3) / 2.0, 6) AS mean_g,
-       ROUND(CAST(doc_id * 11 % 97 AS DOUBLE)
-             + (doc_id % 4) / 2.0 + (doc_id % 3) / 2.0, 6) AS mean_b,
-       ROUND(CAST(doc_id * 11 % 97 AS DOUBLE)
-             + (doc_id % 4) / 2.0 + (doc_id % 3) / 2.0, 6) AS luma
-FROM documents
-"""
-
-
-def q_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL WARC ingestion (r11, :mod:`sources.warc`): every doc_id
-    becomes a genuine Common-Crawl-shaped WARC — a warcinfo record plus
-    an HTTP response record, each its own gzip member — synthesized from
-    the document text, then parsed back by ``warc_records`` inside
-    mapInPandas (member-at-a-time gunzip, CRLF header blocks,
-    Content-Length-delimited payloads, HTTP status/header/body split).
-    The oracle predicts every column in closed form from ``documents``
-    (documents text is ASCII, so utf-8 byte length == char length),
-    so a hash match proves the whole container+HTTP parse recovered the
-    exact bytes — the ingestion step ahead of the dedup/quality/PII
-    operators on real crawl data."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
-    from ..sources.warc import warc_records
-
-    @pandas_udf(BinaryType())
-    def make_warc(ids, texts):  # noqa: ANN001 — two-arg pandas_udf;
-        # postponed string annotations break PySpark's hint inference
-        import pandas as pd
-
-        from ..sources.warc import encode_warc
-
-        out = []
-        for i, t in zip(ids, texts):
-            i = int(i)
-            recs = [
-                {"type": "warcinfo",
-                 "payload": b"software: osmspark-test\r\n",
-                 "content_type": "application/warc-fields"},
-                {"type": "response",
-                 "uri": f"https://corpus.example/{i}",
-                 "date": "2026-01-01T00:00:00Z",
-                 "record_id": f"<urn:uuid:{i}>",
-                 "body": str(t).encode("utf-8"),
-                 "http_status": 200 if i % 5 else 404,
-                 "http_content_type": ("text/html" if i % 2
-                                       else "text/plain")},
-            ]
-            out.append(encode_warc(recs, gzip_members=True))
-        return pd.Series(out)
-
-    docs = docs_t(spark, sf_dir)
-    warcs = docs.select("doc_id", make_warc("doc_id", "text")
-                        .alias("content"))
-    recs = warc_records(warcs)
-    return (recs.where(F.col("rec_type") == "response")
-            .select("doc_id", "uri", "http_status",
-                    F.col("http_content_type").alias("mime"),
-                    "n_body_bytes",
-                    F.md5(F.col("body").cast("string")).alias("body_md5")))
-
-
-SQL_WARC_INGEST = """
-SELECT doc_id,
-       'https://corpus.example/' || CAST(doc_id AS VARCHAR) AS uri,
-       CAST(CASE WHEN doc_id % 5 = 0 THEN 404 ELSE 200 END AS INT)
-         AS http_status,
-       CASE WHEN doc_id % 2 = 1 THEN 'text/html' ELSE 'text/plain' END
-         AS mime,
-       CAST(octet_length(encode(text)) AS BIGINT) AS n_body_bytes,
-       md5(text) AS body_md5
-FROM documents
-"""
-
-
-def q_media_image_features_gif(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """REAL GIF decode (r11): every doc_id becomes a genuine GIF89a —
-    palette + real variable-width LZW (dictionary growth, clear codes),
-    interlaced on odd ids — decoded by :mod:`functions.gifcodec` inside
-    mapInPandas via the sniffing dispatch. GIF is LOSSLESS, so unlike
-    the JPEG gates the payload is a true GRADIENT and the closed-form
-    oracle (base + (w−1)/2 + (h−1)/2) pins every pixel of the
-    palette/LZW/interlace path, not just DC terms."""
-    docs = docs_t(spark, sf_dir)
-    media = multimodal.attach_synthetic_gif(docs.select("doc_id"))
-    feats = multimodal.extract_image_features(media)
-    return feats.select("doc_id", "width", "height",
-                        F.round("mean_r", 6).alias("mean_r"),
-                        F.round("mean_g", 6).alias("mean_g"),
-                        F.round("mean_b", 6).alias("mean_b"),
-                        F.round("luma", 6).alias("luma"))
-
-
-SQL_MEDIA_IMAGE_FEATURES_GIF = """
-WITH p AS (
-  SELECT doc_id,
-         CAST(doc_id * 17 % 101 AS DOUBLE)
-           + (doc_id % 16) / 2.0 + (doc_id % 12) / 2.0 AS m
-  FROM documents)
-SELECT doc_id,
-       CAST(doc_id % 16 + 1 AS INT) AS width,
-       CAST(doc_id % 12 + 1 AS INT) AS height,
-       ROUND(m, 6) AS mean_r,
-       ROUND(m, 6) AS mean_g,
-       ROUND(m, 6) AS mean_b,
-       ROUND(0.299 * m + 0.587 * m + 0.114 * m, 6) AS luma
-FROM p
-"""
-
-
-def q_media_image_features_tiff(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    """REAL TIFF decode (r11, widened r12 and r13): every doc_id becomes
-    a genuine TIFF — the document/scan-corpus format — cycling baseline
-    compressions (none / early-change LZW with the horizontal-
-    differencing predictor / PackBits), byte orders (MM keyed on
-    (doc_id//8) % 2 so every id-mod-10 class sees both),
-    and by id mod 10 the layout/depth/photometric classes: tiled with
-    padded edge tiles (0), 16-bit strip (1), tiled 16-bit (2), small
-    multi-strip (3-4), PALETTE with an affine ColorMap (5 — channel
-    means 255−m / m / 255−m pin the plane-major LUT), CMYK whose exact
-    integer conversion is the identity (6 — spp=4 strips and the
-    4-sample predictor), JPEG-IN-TIFF (7 — block-constant at flat
-    quantization so the real per-strip JPEG decode inverts bit-exactly,
-    with shared JPEGTables splicing keyed on (doc_id//16) % 2),
-    RAW YCbCr (8, r13 — photometric 6 macropixel data units with
-    (1,1)/(2,1)/(2,2) subsampling; the gray gradient makes chroma
-    exactly 128, so the subsampled decode is bit-exact), and 16-BIT
-    CMYK (9, r13 — the exact separation inverse at depth 16) — decoded
-    by :mod:`functions.tiffcodec` inside mapInPandas via the sniffing
-    dispatch. Every class decodes exactly, so the closed-form oracle
-    (× 257 for 16-bit classes, affine for palette, block-mean for
-    JPEG) pins IFD parsing, strip AND tile assembly, LZW's
-    one-code-early width change, the depth-correct predictor cumsum,
-    the Tech Note 2 table splice, and the §21 macropixel walk on every
-    pixel."""
-    docs = docs_t(spark, sf_dir)
-    media = multimodal.attach_synthetic_tiff(docs.select("doc_id"))
-    feats = multimodal.extract_image_features(media)
-    return feats.select("doc_id", "width", "height",
-                        F.round("mean_r", 6).alias("mean_r"),
-                        F.round("mean_g", 6).alias("mean_g"),
-                        F.round("mean_b", 6).alias("mean_b"),
-                        F.round("luma", 6).alias("luma"))
-
-
-SQL_MEDIA_IMAGE_FEATURES_TIFF = """
-WITH d AS (
-  SELECT doc_id,
-         doc_id % 10 AS cls,
-         CASE WHEN doc_id % 10 = 7 THEN (doc_id % 3 + 1) * 8
-              ELSE doc_id % 14
-                + CASE WHEN doc_id % 10 IN (0, 2) THEN 20 ELSE 1 END
-         END AS w,
-         CASE WHEN doc_id % 10 = 7 THEN 16
-              ELSE doc_id % 10
-                + CASE WHEN doc_id % 10 IN (0, 2) THEN 18 ELSE 1 END
-         END AS h,
-         CASE WHEN doc_id % 10 IN (1, 2, 9) THEN 257 ELSE 1 END AS scale
-  FROM documents),
-p AS (
-  SELECT doc_id, w, h, cls,
-         CASE WHEN cls = 7
-              -- block-constant: mean = base + (wb-1)/2 + (hb-1)/2
-              THEN CAST(doc_id * 19 % 103 AS DOUBLE)
-                   + (doc_id % 3) / 2.0 + 0.5
-              ELSE (CAST(doc_id * 19 % 103 AS DOUBLE)
-                   + (w - 1) / 2.0 + (h - 1) / 2.0) * scale
-         END AS m
-  FROM d),
-c AS (
-  SELECT doc_id, w, h,
-         CASE WHEN cls = 5 THEN 255 - m ELSE m END AS mr,
-         m AS mg,
-         CASE WHEN cls = 5 THEN 255 - m ELSE m END AS mb
-  FROM p)
-SELECT doc_id,
-       CAST(w AS INT) AS width,
-       CAST(h AS INT) AS height,
-       ROUND(mr, 6) AS mean_r,
-       ROUND(mg, 6) AS mean_g,
-       ROUND(mb, 6) AS mean_b,
-       ROUND(0.299 * mr + 0.587 * mg + 0.114 * mb, 6) AS luma
-FROM c
-"""
-
-
-def q_media_video_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL VIDEO decode (r11): every doc_id becomes a genuine
-    Motion-JPEG AVI — RIFF container (hdrl/movi lists, word-aligned
-    '00dc' chunks), each frame a real baseline JFIF — container-parsed
-    and per-frame JPEG-decoded by :mod:`functions.avicodec` inside
-    mapInPandas. Frames are block-constant with flat quant (bit-exact
-    decode) and consecutive frames differ by +1 everywhere, so every
-    feature is closed-form: n = id mod 4 + 2 frames at 10 fps, mean
-    luma = Rec.601 of (base + (wb−1)/2 + (hb−1)/2 + (n−1)/2), motion =
-    Rec.601 of (1, 1, 1). The video column is no longer a stub — the
-    boundary is now inter-frame codecs (MPEG/H.26x)."""
-    docs = docs_t(spark, sf_dir)
-    media = multimodal.attach_synthetic_mjpeg(docs.select("doc_id"))
-    feats = multimodal.extract_video_features(media)
-    return feats.select("doc_id", "n_frames", "fps",
-                        F.round("duration_ms", 6).alias("duration_ms"),
-                        "width", "height",
-                        F.round("mean_luma", 6).alias("mean_luma"),
-                        F.round("motion", 6).alias("motion"))
-
-
-SQL_MEDIA_VIDEO_FEATURES = """
-WITH p AS (
-  SELECT doc_id,
-         CAST(doc_id % 4 + 2 AS INT) AS n,
-         CAST(doc_id * 13 % 89 AS DOUBLE)
-           + (doc_id % 3) / 2.0 + (doc_id % 2) / 2.0
-           + (doc_id % 4 + 1) / 2.0 AS m
-  FROM documents)
-SELECT doc_id,
-       n AS n_frames,
-       CAST(10.0 AS DOUBLE) AS fps,
-       ROUND(n / CAST(10.0 AS DOUBLE) * 1000.0, 6) AS duration_ms,
-       CAST((doc_id % 3 + 1) * 8 AS INT) AS width,
-       CAST((doc_id % 2 + 1) * 8 AS INT) AS height,
-       ROUND(0.299 * m + 0.587 * m + 0.114 * m, 6) AS mean_luma,
-       ROUND(0.299 * CAST(1.0 AS DOUBLE) + 0.587 * CAST(1.0 AS DOUBLE)
-             + 0.114 * CAST(1.0 AS DOUBLE), 6) AS motion
-FROM p
-"""
-
-
-def q_media_video_features_msvc(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    """REAL INTER-FRAME video decode (r12, widened r13 to BOTH MS
-    Video 1 variants by id parity): every doc_id becomes a genuine MS
-    Video 1 AVI — CRAM 16-bit RGB555 for even ids, 8-bit PALETTIZED
-    (RGBQUAD table in strf) for odd ids — whose non-key frames encode
-    only the changed checkerboard cells; the unchanged half of each
-    frame is SKIP blocks, i.e. temporal references the decoder resolves
-    against its previous-frame state (:mod:`functions.msvideo1`). Both
-    legs are pixel-exact (RGB555 lattice / identity gray palette) and
-    the features are closed forms of doc_id: with k = id//2,
-    wb = k%2+2, n = k%3+2, s = k%3+1, q0 = 7·id%20 (even) or 7·id%200
-    (odd), and G(q) = 8q + q//4 (even) or q (odd), the per-channel mean
-    is (32·wb·G(q0) + 16·wb·((n-1)·G(q0) + Σ_{f=1}^{n-1} G(q0+f·s))) /
-    (32·wb·n) and motion telescopes to (G(q0+(n-1)·s) − G(q0)) /
-    (2(n-1)). A hash match proves the executor-side decoder really
-    replayed the skip-block deltas in both bit depths."""
-    docs = docs_t(spark, sf_dir)
-    media = multimodal.attach_synthetic_msvc(docs.select("doc_id"))
-    feats = multimodal.extract_video_features(media)
-    return feats.select("doc_id", "n_frames", "fps",
-                        F.round("duration_ms", 6).alias("duration_ms"),
-                        "width", "height",
-                        F.round("mean_luma", 6).alias("mean_luma"),
-                        F.round("motion", 6).alias("motion"))
-
-
-SQL_MEDIA_VIDEO_FEATURES_MSVC = """
-WITH p AS (
-  SELECT doc_id,
-         (doc_id // 2) % 2 + 2 AS wb,
-         CAST((doc_id // 2) % 3 + 2 AS INT) AS n,
-         (doc_id // 2) % 3 + 1 AS s,
-         CASE WHEN doc_id % 2 = 0 THEN 7 * doc_id % 20
-              ELSE 7 * doc_id % 200 END AS q0,
-         doc_id % 2 = 0 AS hi
-  FROM documents),
-g AS (
-  SELECT doc_id, wb, n, q0,
-         CASE WHEN hi THEN 8 * q0 + q0 // 4 ELSE q0 END AS g0,
-         CASE WHEN n >= 2 THEN
-           CASE WHEN hi THEN 8 * (q0+s) + (q0+s) // 4 ELSE q0+s END
-         ELSE 0 END
-         + CASE WHEN n >= 3 THEN
-             CASE WHEN hi THEN 8 * (q0+2*s) + (q0+2*s) // 4
-                  ELSE q0+2*s END
-           ELSE 0 END
-         + CASE WHEN n >= 4 THEN
-             CASE WHEN hi THEN 8 * (q0+3*s) + (q0+3*s) // 4
-                  ELSE q0+3*s END
-           ELSE 0 END
-           AS sg,
-         CASE WHEN hi THEN 8 * (q0 + (n-1)*s) + (q0 + (n-1)*s) // 4
-              ELSE q0 + (n-1)*s END AS glast
-  FROM p),
-m AS (
-  SELECT doc_id, wb, n,
-         CAST(32 * wb * g0 + 16 * wb * ((n - 1) * g0 + sg) AS DOUBLE)
-           / (32 * wb * n) AS mean_c,
-         CAST(16 * wb * (glast - g0) AS DOUBLE)
-           / (32 * wb * (n - 1)) AS mad_c
-  FROM g)
-SELECT doc_id,
-       n AS n_frames,
-       CAST(10.0 AS DOUBLE) AS fps,
-       ROUND(n / CAST(10.0 AS DOUBLE) * 1000.0, 6) AS duration_ms,
-       CAST(wb * 4 AS INT) AS width,
-       CAST(8 AS INT) AS height,
-       ROUND(0.299 * mean_c + 0.587 * mean_c + 0.114 * mean_c, 6)
-         AS mean_luma,
-       ROUND(0.299 * mad_c + 0.587 * mad_c + 0.114 * mad_c, 6) AS motion
-FROM m
-"""
-
-
-def q_media_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio decode through the Arrow-batched pipeline: every
-    doc_id becomes a genuine PCM WAV square wave (attach_synthetic_wav)
-    and extract_audio_features parses the RIFF chunks + samples with the
-    pure-numpy codec inside mapInPandas. The square-wave construction
-    makes every feature a closed form of doc_id: RMS = peak = the
-    quantized amplitude round(32767·A)/32768, duration = N/8 ms at
-    8 kHz, ZCR = ⌊(N−1)/H⌋/(N−1) — a hash match proves the executor-side
-    decode recovered exactly the waveform the bytes encode."""
-    docs = docs_t(spark, sf_dir)
-    media = multimodal.attach_synthetic_wav(docs.select("doc_id"))
-    feats = multimodal.extract_audio_features(media)
-    return feats.select("doc_id", "n_samples",
-                        F.round("duration_ms", 6).alias("duration_ms"),
-                        F.round("rms", 6).alias("rms"),
-                        F.round("peak", 6).alias("peak"),
-                        F.round("zcr", 6).alias("zcr"))
-
-
-SQL_MEDIA_AUDIO_FEATURES = """
-WITH p AS (
-  SELECT doc_id,
-         doc_id % 4 + 1 AS h,
-         doc_id % 50 + 2 * (doc_id % 4 + 1) AS n,
-         ROUND(32767 * (doc_id % 9 + 1) / 10.0) AS q
-  FROM documents)
-SELECT doc_id,
-       CAST(n AS BIGINT) AS n_samples,
-       ROUND(n / 8.0, 6) AS duration_ms,
-       ROUND(q / 32768.0, 6) AS rms,
-       ROUND(q / 32768.0, 6) AS peak,
-       ROUND(FLOOR((n - 1) / h) / (n - 1.0), 6) AS zcr
-FROM p
-"""
-
-
-def q_media_audio_features_ulaw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL compressed-audio decode (r8): the same square-wave corpus as
-    media_audio_features but G.711 μ-law encoded (WAV format tag 7) —
-    extract_audio_features expands the companded bytes with the exact
-    CCITT inverse (functions/audiocodec.py:ulaw_decode) inside
-    mapInPandas. The oracle embeds the 9 possible amplitude levels'
-    μ-law round-trip values as literals (the quantizer is a pure integer
-    function precomputed at SQL-generation time), so a hash match proves
-    the segment/mantissa expansion reproduced every sample. MP3/AAC stay
-    the stub boundary."""
-    docs = docs_t(spark, sf_dir)
-    media = multimodal.attach_synthetic_wav(docs.select("doc_id"),
-                                            codec="ulaw")
-    feats = multimodal.extract_audio_features(media)
-    return feats.select("doc_id", "n_samples",
-                        F.round("duration_ms", 6).alias("duration_ms"),
-                        F.round("rms", 6).alias("rms"),
-                        F.round("peak", 6).alias("peak"),
-                        F.round("zcr", 6).alias("zcr"))
-
-
-def q_media_audio_features_flac(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    """REAL FLAC decode (r11): the same square-wave corpus as
-    media_audio_features but FLAC-compressed
-    (:mod:`functions.flaccodec` — fixed predictors, partitioned Rice
-    residuals, UTF-8 frame numbers, CRC-8/CRC-16 verified), the format
-    real speech corpora (LibriSpeech) ship in. FLAC is LOSSLESS, so the
-    decoded samples are bit-identical to the PCM leg's and the SAME
-    closed-form oracle applies — a hash match proves the entire
-    predictor/Rice/CRC pipeline reproduced every sample. The lossy
-    boundary is now MP3/AAC only."""
-    docs = docs_t(spark, sf_dir)
-    media = multimodal.attach_synthetic_wav(docs.select("doc_id"),
-                                            codec="flac")
-    feats = multimodal.extract_audio_features(media)
-    return feats.select("doc_id", "n_samples",
-                        F.round("duration_ms", 6).alias("duration_ms"),
-                        F.round("rms", 6).alias("rms"),
-                        F.round("peak", 6).alias("peak"),
-                        F.round("zcr", 6).alias("zcr"))
-
-
-def _sql_media_audio_features_ulaw() -> str:
-    import numpy as np
-
-    from ..functions.audiocodec import ulaw_decode, ulaw_encode
-
-    levels = []
-    for k in range(9):
-        q = int(np.round(32767 * (k + 1) / 10.0))
-        levels.append(int(ulaw_decode(ulaw_encode(np.array([q])))[0]))
-    case = ("CASE doc_id % 9 "
-            + " ".join(f"WHEN {k} THEN {v}" for k, v in enumerate(levels))
-            + " END")
-    return f"""
-WITH p AS (
-  SELECT doc_id,
-         doc_id % 4 + 1 AS h,
-         doc_id % 50 + 2 * (doc_id % 4 + 1) AS n,
-         {case} AS q
-  FROM documents)
-SELECT doc_id,
-       CAST(n AS BIGINT) AS n_samples,
-       ROUND(n / 8.0, 6) AS duration_ms,
-       ROUND(q / 32768.0, 6) AS rms,
-       ROUND(q / 32768.0, 6) AS peak,
-       ROUND(FLOOR((n - 1) / h) / (n - 1.0), 6) AS zcr
-FROM p
 """
 
 
@@ -2924,34 +2231,6 @@ norm AS (
 SELECT canonical AS canonical_url, COUNT(*) AS n_dupes,
        MIN(doc_id) AS first_doc
 FROM norm GROUP BY canonical
-"""
-
-
-def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-sampling plumbing over fake video payloads: every document
-    becomes a video with deterministic duration; sample_frames emits one
-    row per 1000 ms offset with an md5 digest of the payload slice at that
-    offset (the stub for the real frame decode). Value-exact oracle:
-    documents text is ASCII, so the byte slices the Arrow batches hash are
-    reproducible as VARCHAR slices in SQL."""
-    docs = docs_t(spark, sf_dir)
-    media = multimodal.attach_fake_media(docs, kind="video")
-    return multimodal.sample_frames(media, every_ms=1000)
-
-
-SQL_MULTIMODAL_FRAMES = """
-WITH media AS (
-  SELECT doc_id, text,
-         CAST(len(text) % 5000 + 1500 AS INT) AS duration_ms
-  FROM documents),
-offs AS (
-  SELECT doc_id, text,
-         UNNEST(GENERATE_SERIES(0, duration_ms - 1, 1000)) AS frame_ms
-  FROM media)
-SELECT doc_id, CAST(frame_ms AS INT) AS frame_ms,
-       md5(substring(text, (frame_ms % GREATEST(len(text), 1)) + 1, 64))
-         AS frame_hash
-FROM offs
 """
 
 
@@ -3382,223 +2661,6 @@ WHERE doc_id % {_ESD_MOD} != 0
 """
 
 
-# ---------------------------------------------------------------------------
-# Unigram-LM (SentencePiece-style) tokenizer training (r15) — oracle
-# replays the full Viterbi hard-EM pipeline with the position lattice
-# UNROLLED via lateral column aliases (the same discipline as the BPE
-# oracle's unrolled merge steps). Sound because both engines truncate
-# words to _UG_WC chars before any statistics.
-
-_UG_K = 4        # max piece length
-_UG_SEED = 96    # multi-char seed pieces
-_UG_KEEP = 48    # multi-char pieces kept after pruning
-_UG_WC = 12      # word truncation bound == DP unroll depth
-_UG_EM = 2       # EM iterations
-
-# DP state per position, packed into ONE BIGINT key whose numeric order
-# IS the lexicographic (cost, n_pieces, back_pointer) tie-break:
-#   key = icost * 10^4 + np * 100 + bp
-# with icost the path cost in EXACT nano-log units (nlp * 10^9, an
-# integer since nlp is DECIMAL(12,9)), np <= _UG_WC < 100 pieces and
-# bp < _UG_WC < 100. Max key ~ 12 pieces x 3e10 nano-lns x 10^4 ~
-# 3.6e15 — comfortably inside BIGINT. The packing keeps the oracle's
-# unrolled DP to BIGINT arithmetic + least() + scalar CASE only:
-# DuckDB 1.0.0's vectorized executor returned WRONG, run-to-run
-# varying results for both map_extract over a cross-joined MAP column
-# and list_reduce/list_filter over struct lists inside these nested
-# projections (reproduced on this box; single-row probes of the same
-# expressions were correct) — joins, integer math and least() are the
-# boring code path that holds.
-
-
-def _ug_lp_select(vsrc: str) -> str:
-    """Per-word lattice-edge costs as PLAIN BIGINT COLUMNS
-    ``ilp_{jj}_{i}`` (piece starting at jj covering through i, cost in
-    nano-log units), via one piece join + conditional aggregation —
-    deliberately map-free (see packing note above)."""
-    subs, cols = [], []
-    for i in range(1, _UG_WC + 1):
-        for jj in range(max(1, i - _UG_K + 1), i + 1):
-            piece = f"substr(u.w, {jj}, {i - jj + 1})"
-            subs.append(piece)
-            # the i <= len(w) guard stops a TRUNCATED window (substr
-            # past the word end) from matching a genuine shorter piece
-            cols.append(
-                f"MAX(CASE WHEN {i} <= len(u.w) AND v.piece = {piece} "
-                f"THEN CAST(CAST(v.nlp AS DECIMAL(22,9)) * 1000000000 AS BIGINT) END) "
-                f"AS ilp_{jj}_{i}")
-    return ("SELECT u.w, u.freq,\n         " + ",\n         ".join(cols)
-            + f"\n  FROM uwords u LEFT JOIN {vsrc} v "
-            + f"ON v.piece IN ({', '.join(dict.fromkeys(subs))})\n"
-            + "  GROUP BY u.w, u.freq")
-
-
-def _ug_stat(pos_expr: str) -> str:
-    """st value at a runtime position, as a scalar CASE chain (no list
-    indexing)."""
-    whens = " ".join(f"WHEN {i} THEN st_{i}"
-                     for i in range(1, _UG_WC + 1))
-    return f"CASE {pos_expr} {whens} END"
-
-
-def _ug_dp_select(src: str, recon: bool) -> str:
-    """Unrolled Viterbi DP over the ilp-column lattice of ``src`` as
-    NESTED projection layers — one new column per layer, every
-    back-reference a plain column ref. (Lateral column aliases would
-    be substituted textually by DuckDB's binder: st_12's tetranacci
-    fan-out times the backtrack's self-references explodes to ~1e9
-    expression nodes at BIND time.)"""
-    inner = f"SELECT * FROM {src}"
-    for i in range(1, _UG_WC + 1):
-        cands = []
-        for jj in range(max(1, i - _UG_K + 1), i + 1):
-            prev = "0" if jj == 1 else f"st_{jj - 1}"
-            lp = f"ilp_{jj}_{i}"
-            cands.append(
-                f"CASE WHEN ({prev}) IS NOT NULL AND {lp} IS NOT NULL "
-                f"THEN (({prev}) // 10000 + {lp}) * 10000 "
-                f"+ (({prev}) % 10000 // 100 + 1) * 100 + {jj - 1} END")
-        st = (f"CASE WHEN len(w) >= {i} "
-              f"THEN least({', '.join(cands)}) END")
-        inner = f"SELECT *, {st} AS st_{i} FROM ({inner})"
-    np_last = f"{_ug_stat('len(w)')} % 10000 // 100"
-    inner = f"SELECT *, {np_last} AS np FROM ({inner})"
-    if not recon:
-        return f"SELECT w, freq, np FROM ({inner})"
-    inner = (f"SELECT *, CAST(len(w) AS INT) AS pos_0, '' AS pcs_0 "
-             f"FROM ({inner})")
-    for k in range(1, _UG_WC + 1):
-        p, q = f"pos_{k - 1}", f"pcs_{k - 1}"
-        bp = f"bp_{k}"
-        inner = (f"SELECT *, {_ug_stat(p)} % 100 AS {bp} "
-                 f"FROM ({inner})")
-        pos_k = (f"CASE WHEN {p} > 0 THEN CAST({bp} AS INT) "
-                 f"ELSE {p} END")
-        pcs_k = (f"CASE WHEN {p} > 0 THEN {q} || "
-                 f"(CASE WHEN {q} = '' THEN '' ELSE ' ' END) || "
-                 f"substr(w, CAST({bp} AS INT) + 1, {p} - CAST({bp} AS INT)) "
-                 f"ELSE {q} END")
-        inner = (f"SELECT *, {pos_k} AS pos_{k}, {pcs_k} AS pcs_{k} "
-                 f"FROM ({inner})")
-    return (f"SELECT w, freq, np, pcs_{_UG_WC} AS pcs FROM ({inner})")
-
-
-def _ug_nlp_sql(src: str) -> str:
-    """Add-1 smoothed piece cost: ``nlp = -round(ln((cnt+1) /
-    (total+|V|)), 9)`` — the proven transcendental discipline."""
-    return (f"SELECT piece, cnt, -CAST(ROUND(ln((cnt + 1)::DOUBLE / "
-            f"((SELECT SUM(cnt) + COUNT(*) FROM {src}))::DOUBLE), 9) "
-            f"AS DECIMAL(12,9)) AS nlp FROM {src}")
-
-
-def _sql_unigram_chain() -> str:
-    """The WITH-chain shared by both unigram gates: seed -> EM x2 ->
-    pruned final vocabulary ``fv(piece, cnt, nlp)`` plus the word table
-    ``uwords``."""
-    parts = [_TOKS_SQL.strip()]
-    parts.append(f"""
-uwords AS MATERIALIZED (
-  SELECT substr(w_, 1, {_UG_WC}) AS w, CAST(COUNT(*) AS BIGINT) AS freq
-  FROM (SELECT unnest(w) AS w_ FROM toks) GROUP BY 1),
-seed_all AS MATERIALIZED (
-  SELECT piece, CAST(SUM(freq) AS BIGINT) AS cnt FROM (
-    SELECT freq,
-           unnest(flatten(list_transform(range(1, len(w) + 1),
-             i -> list_transform(
-                    range(1, least({_UG_K}, len(w) - i + 1) + 1),
-                    l -> substr(w, i::INT, l::INT))))) AS piece
-    FROM uwords) GROUP BY piece),
-chars AS MATERIALIZED (SELECT piece, cnt FROM seed_all WHERE len(piece) = 1),
-v0c AS MATERIALIZED (
-  SELECT piece, cnt FROM chars
-  UNION ALL
-  SELECT piece, cnt FROM (
-    SELECT piece, cnt FROM seed_all WHERE len(piece) >= 2
-    ORDER BY cnt DESC, piece ASC LIMIT {_UG_SEED})),
-v0 AS MATERIALIZED ({_ug_nlp_sql('v0c')})""".strip())
-    prev = "v0"
-    for it in range(1, _UG_EM + 1):
-        parts.append(f"""
-wl{it} AS MATERIALIZED (
-  {_ug_lp_select(prev)}),
-dp{it} AS MATERIALIZED (
-  {_ug_dp_select(f'wl{it}', recon=True)}),
-counts{it} AS MATERIALIZED (
-  SELECT piece, CAST(SUM(freq) AS BIGINT) AS cnt
-  FROM (SELECT freq, unnest(string_split(pcs, ' ')) AS piece
-        FROM dp{it})
-  WHERE piece <> '' GROUP BY piece),
-keys{it} AS MATERIALIZED (SELECT piece FROM chars
-             UNION SELECT piece FROM counts{it}),
-v{it}c AS MATERIALIZED (
-  SELECT k.piece, COALESCE(c.cnt, 0) AS cnt
-  FROM keys{it} k LEFT JOIN counts{it} c USING (piece)),
-v{it} AS MATERIALIZED ({_ug_nlp_sql(f'v{it}c')})""".strip())
-        prev = f"v{it}"
-    parts.append(f"""
-fvc AS MATERIALIZED (
-  SELECT piece, cnt FROM {prev} WHERE len(piece) = 1
-  UNION ALL
-  SELECT piece, cnt FROM (
-    SELECT piece, cnt FROM {prev} WHERE len(piece) >= 2
-    ORDER BY cnt DESC, piece ASC LIMIT {_UG_KEEP})),
-fv AS MATERIALIZED ({_ug_nlp_sql('fvc')})""".strip())
-    return ",\n".join(parts)
-
-
-def q_unigram_lm_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unigram-LM vocabulary trained on the documents corpus (Kudo
-    2018 Viterbi hard-EM): seed substrings -> 2 EM rounds -> pruned
-    (piece, n_count, logp). The hash pins the seed counts and
-    ordering, every lattice argmin tie-break, both E-step counts and
-    the final re-normalization."""
-    from ..operators.unigram import unigram_train  # noqa: PLC0415
-
-    return unigram_train(docs_t(spark, sf_dir), max_piece_len=_UG_K,
-                         seed_multi=_UG_SEED, em_iters=_UG_EM,
-                         keep_multi=_UG_KEEP, max_word_chars=_UG_WC)
-
-
-def _sql_unigram_vocab() -> str:
-    return f"""
-WITH {_sql_unigram_chain()}
-SELECT piece, cnt AS n_count, CAST(-nlp AS DOUBLE) AS logp FROM fv
-"""
-
-
-def q_unigram_lm_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Viterbi tokenization of the corpus under the trained unigram
-    vocabulary: (doc_id, n_words, n_pieces) — the apply pass, run on
-    the distinct-word table and broadcast back (same shape as
-    bpe_tokenize)."""
-    from ..operators.unigram import unigram_tokenize_counts  # noqa: PLC0415
-
-    return unigram_tokenize_counts(
-        docs_t(spark, sf_dir), max_piece_len=_UG_K, seed_multi=_UG_SEED,
-        em_iters=_UG_EM, keep_multi=_UG_KEEP, max_word_chars=_UG_WC)
-
-
-def _sql_unigram_tokenize() -> str:
-    return f"""
-WITH {_sql_unigram_chain()},
-wlf AS MATERIALIZED (
-  {_ug_lp_select('fv')}),
-dpf AS MATERIALIZED (
-  {_ug_dp_select('wlf', recon=False)}),
-wn AS MATERIALIZED (SELECT w, np FROM dpf),
-docw AS MATERIALIZED (
-  SELECT doc_id, substr(w_, 1, {_UG_WC}) AS w
-  FROM (SELECT doc_id, unnest(w) AS w_ FROM toks)),
-perdoc AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
-         CAST(SUM(np) AS BIGINT) AS n_pieces
-  FROM docw JOIN wn USING (w) GROUP BY doc_id)
-SELECT d.doc_id, COALESCE(p.n_words, 0) AS n_words,
-       COALESCE(p.n_pieces, 0) AS n_pieces
-FROM documents d LEFT JOIN perdoc p USING (doc_id)
-"""
-
-
 QUERIES = {
     "dedup_exact": q_dedup_exact,
     "dup_ngram_spans": q_dup_ngram_spans,
@@ -3634,8 +2696,6 @@ QUERIES = {
     "char_entropy": q_char_entropy,
     "curation_funnel": q_curation_funnel,
     "url_quality_filter": q_url_quality_filter,
-    "unigram_lm_vocab": q_unigram_lm_vocab,
-    "unigram_lm_tokenize": q_unigram_lm_tokenize,
     "gopher_rules": q_gopher_rules,
     "quality_features": q_quality_features,
     "repetition_signals": q_repetition_signals,
@@ -3656,23 +2716,7 @@ QUERIES = {
     "datapipe_e2e": q_datapipe_e2e,
     "unigram_logprob": q_unigram_logprob,
     "quality_model_score": q_quality_model_score,
-    "bpe_merges": q_bpe_merges,
-    "bpe_tokenize": q_bpe_tokenize,
-    "multimodal_features": q_multimodal_features,
-    "media_image_features": q_media_image_features,
-    "media_image_features_png": q_media_image_features_png,
-    "media_image_features_jpeg": q_media_image_features_jpeg,
-    "media_image_features_jpeg_prog": q_media_image_features_jpeg_prog,
-    "warc_ingest": q_warc_ingest,
-    "media_image_features_gif": q_media_image_features_gif,
-    "media_image_features_tiff": q_media_image_features_tiff,
-    "media_video_features": q_media_video_features,
-    "media_video_features_msvc": q_media_video_features_msvc,
-    "media_audio_features_ulaw": q_media_audio_features_ulaw,
-    "media_audio_features_flac": q_media_audio_features_flac,
     "url_canonical_dedup": q_url_canonical_dedup,
-    "media_audio_features": q_media_audio_features,
-    "multimodal_frames": q_multimodal_frames,
     "bloom_dedup": q_bloom_dedup,
     "cms_terms": q_cms_terms,
     "similarity_quantized_topk": q_similarity_quantized_topk,
@@ -3713,8 +2757,6 @@ ORACLES = {
     "char_entropy": SQL_CHAR_ENTROPY,
     "curation_funnel": _sql_curation_funnel(),
     "url_quality_filter": _sql_url_quality(),
-    "unigram_lm_vocab": _sql_unigram_vocab(),
-    "unigram_lm_tokenize": _sql_unigram_tokenize(),
     "gopher_rules": _sql_gopher(),
     "quality_features": _sql_quality(),
     "repetition_signals": _sql_repetition(),
@@ -3735,23 +2777,7 @@ ORACLES = {
     "datapipe_e2e": SQL_DATAPIPE_E2E,
     "unigram_logprob": SQL_UNIGRAM_LOGPROB,
     "quality_model_score": SQL_QUALITY_MODEL_SCORE,
-    "bpe_merges": SQL_BPE_MERGES,
-    "bpe_tokenize": SQL_BPE_TOKENIZE,
-    "multimodal_features": SQL_MULTIMODAL_FEATURES,
-    "media_image_features": SQL_MEDIA_IMAGE_FEATURES,
-    "media_image_features_png": SQL_MEDIA_IMAGE_FEATURES_PNG,
-    "media_image_features_jpeg": SQL_MEDIA_IMAGE_FEATURES_JPEG,
-    "media_image_features_jpeg_prog": SQL_MEDIA_IMAGE_FEATURES_JPEG_PROG,
-    "warc_ingest": SQL_WARC_INGEST,
-    "media_image_features_gif": SQL_MEDIA_IMAGE_FEATURES_GIF,
-    "media_image_features_tiff": SQL_MEDIA_IMAGE_FEATURES_TIFF,
-    "media_video_features": SQL_MEDIA_VIDEO_FEATURES,
-    "media_video_features_msvc": SQL_MEDIA_VIDEO_FEATURES_MSVC,
-    "media_audio_features_ulaw": _sql_media_audio_features_ulaw(),
-    "media_audio_features_flac": SQL_MEDIA_AUDIO_FEATURES,
     "url_canonical_dedup": SQL_URL_CANONICAL_DEDUP,
-    "media_audio_features": SQL_MEDIA_AUDIO_FEATURES,
-    "multimodal_frames": SQL_MULTIMODAL_FRAMES,
     "bloom_dedup": _sql_bloom_dedup(),
     "cms_terms": _sql_cms_terms(),
     "similarity_quantized_topk": _sql_quantized_topk(),

@@ -772,9 +772,11 @@ def q_osm_shortest_km_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference loads pgrouting for exactly this, etl/osm-load.sh:17).
     Shares osm_shortest_km's exact-fixpoint oracle: shortcuts carry real
     path lengths, so augmented distances are EXACT and this gate is the
-    machine-checked proof. Round telemetry for the ≪-diameter claim lives
-    in scale_stress.py sssp (the synthetic graph here is hop-shallow;
-    the N-node path is where the bound bites)."""
+    machine-checked proof. At gate sizes the graph is one block (at most
+    _BLOCK_EDGES edges), so the operator skips the shortcuts and solves it
+    in one round; the singleton-block tests and scale_stress.py sssp
+    exercise the shortcuts and carry the round telemetry for the
+    ≪-diameter claim (the N-node path is where the bound bites)."""
     from ..operators.graph_algo import shortest_paths_radius
 
     d, cn, merged = _shared_network(spark, sf_dir)

@@ -23,7 +23,8 @@ def get_spark(
       splitting, and dynamic join-strategy demotion replace the hand-tuned
       planner statistics the reference sets in PostgreSQL
       (``etl/pgsnapshot_schema_0.6.sql:146-170``).
-    - Arrow enabled for any pandas hop (multimodal UDFs, igraph export).
+    - Arrow enabled for any pandas hop (block-local graph fixpoints, PBF
+      decode, kNN join).
     - ``spark.sql.shuffle.partitions`` defaults to the local core count for
       local mode; on a cluster leave it to AQE's coalescing by setting a
       high initial value.

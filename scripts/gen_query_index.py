@@ -36,7 +36,6 @@ FALLBACK = {
     "median_by_group": "exact percentile-0.5 per group (A3)",
     "minhash_neardup": "MinHash+LSH banded near-dup pairs with exact Jaccard verify",
     "multi_group_count": "two-key group count (A2)",
-    "multimodal_features": "binary-column multimodal plumbing via mapInPandas (decode stubbed)",
     "ngram_jaccard": "word-shingle Jaccard similarity via inverted index",
     "osm_car_network": "car_network filter: highway present minus deny-list (reference parity)",
     "osm_directed_graph": "flagship: filter → split/merge → impute → directed edge list",

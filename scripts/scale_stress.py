@@ -621,51 +621,8 @@ def run_centrality(k: int) -> None:
     spark.catalog.clearCache()
 
 
-def run_media(k: int) -> None:
-    """Codec-throughput stress (r11): decode + feature-extract the full
-    synthetic media corpus (JPEG, progressive JPEG, GIF, PNG, FLAC,
-    MJPEG-AVI) on K doc-id-offset replicas of the sf0.1 documents ids.
-    The codecs are Python but Arrow-batched and embarrassingly parallel
-    per file — near-linear wall growth here is the evidence that per-
-    file decode cost, not coordination, is the only scaling axis (at a
-    real 100 TB you add executors, never shuffles: these plans contain
-    exactly one mapInPandas and zero exchanges)."""
-    from osm_pg_etl_spark.operators import multimodal
-
-    spark = get_spark(app_name=f"media-stress-{k}x")
-    spark.sparkContext.setLogLevel("ERROR")
-    docs = read_testdata(spark, SF_DIR, "documents").select("doc_id")
-    ids = replicate(docs, ["doc_id"], k).repartition(32).localCheckpoint()
-    n = ids.count()
-    legs = {
-        "jpeg": lambda: multimodal.extract_image_features(
-            multimodal.attach_synthetic_jpeg(ids)),
-        "jpeg_prog": lambda: multimodal.extract_image_features(
-            multimodal.attach_synthetic_jpeg_prog(ids)),
-        "gif": lambda: multimodal.extract_image_features(
-            multimodal.attach_synthetic_gif(ids)),
-        "png": lambda: multimodal.extract_image_features(
-            multimodal.attach_synthetic_png(ids)),
-        "flac": lambda: multimodal.extract_audio_features(
-            multimodal.attach_synthetic_wav(ids, codec="flac")),
-        "mjpeg_avi": lambda: multimodal.extract_video_features(
-            multimodal.attach_synthetic_mjpeg(ids)),
-    }
-    print(f"media k={k}: {n} payloads per leg")
-    for name, fn in legs.items():
-        t0 = time.perf_counter()
-        fn().write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        print(f"  {name:10s} {dt:7.2f} s  "
-              f"({n / dt:8.0f} payloads/s encode+decode)")
-    spark.catalog.clearCache()
-
-
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "media":
-        for a in sys.argv[2:] or ["1", "5"]:
-            run_media(int(a))
-    elif len(sys.argv) > 1 and sys.argv[1] == "path":
+    if len(sys.argv) > 1 and sys.argv[1] == "path":
         for a in sys.argv[2:] or ["100000"]:
             run_path(int(a))
     elif len(sys.argv) > 1 and sys.argv[1] == "louvain":

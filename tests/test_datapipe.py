@@ -1,5 +1,5 @@
-"""Training-data-pipeline operators: dedup, similarity, text analysis,
-multimodal plumbing — small hand-checkable corpora."""
+"""Training-data-pipeline operators: dedup, similarity and text analysis
+over small hand-checkable corpora."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -839,69 +839,33 @@ def test_embedding_neardup_multi_table_recall(spark):
     assert len(set(keys) & set(exact)) >= len(one & set(exact))
 
 
-def test_warc_roundtrip_and_spark_parse(spark):
-    """r11: REAL WARC (Common Crawl shape) ingestion. encode/decode
-    round-trips both packagings (per-record gzip members and plain
-    concatenation), the HTTP response split recovers status/headers/
-    body exactly, malformed/truncated payloads fail loudly, and the
-    Spark-side warc_records operator explodes files into records with
-    the right types."""
-    import pytest
-    from pyspark.sql import functions as F
+def test_hashed_linear_score_exact(spark):
+    """Hash-trick scorer: logit is the exact md5-derived weight sum
+    (verified against hashlib), empty docs score 0.0, and a score on an
+    exact 6-place tie rounds half away from zero."""
+    import hashlib
 
-    from osm_pg_etl_spark.sources.warc import (
-        decode_warc, encode_warc, warc_records)
+    from osm_pg_etl_spark.operators.text import hashed_linear_score
 
-    recs = [
-        {"type": "warcinfo", "payload": b"software: t\r\n",
-         "content_type": "application/warc-fields"},
-        {"type": "response", "uri": "https://e.com/a",
-         "date": "2026-01-01T00:00:00Z", "record_id": "<urn:uuid:1>",
-         "body": "café — text".encode(),
-         "http_status": 200, "http_content_type": "text/html"},
-        {"type": "resource", "uri": "https://e.com/img",
-         "payload": b"\x89PNGfake", "content_type": "image/png"},
-    ]
-    for gz in (True, False):
-        out = decode_warc(encode_warc(recs, gzip_members=gz))
-        assert [r["type"] for r in out] == ["warcinfo", "response",
-                                            "resource"], gz
-        assert out[1]["http_status"] == 200
-        assert out[1]["body"] == "café — text".encode()
-        assert out[2]["payload"] == b"\x89PNGfake"
-    with pytest.raises(ValueError, match="WARC"):
-        decode_warc(b"NOTAWARC")
-    full = encode_warc(recs)
-    with pytest.raises(ValueError):
-        decode_warc(full[:len(full) // 2])
-    # header-injection guard: a CR/LF in any caller-supplied header value
-    # would desync the CRLF framing from Content-Length — reject loudly
-    for bad in ({"type": "response", "uri": "https://e.com/\r\nX: y",
-                 "body": b"b"},
-                {"type": "response", "date": "2026\n01", "body": b"b"},
-                {"type": "response", "record_id": "<u\rn>", "body": b"b"},
-                {"type": "resource", "payload": b"p",
-                 "content_type": "text/plain\r\nX: y"}):
-        with pytest.raises(ValueError, match="CR/LF"):
-            encode_warc([bad])
+    def w(tok):
+        return int(hashlib.md5(tok.encode()).hexdigest()[:8], 16) \
+            % 2001 - 1000
 
     df = spark.createDataFrame(
-        [(i, encode_warc([{"type": "response",
-                           "uri": f"https://e.com/{i}",
-                           "body": f"body {i}".encode(),
-                           "http_status": 200 + i,
-                           "http_content_type": "text/plain"}]))
-         for i in range(5)], "doc_id long, content binary")
-    rows = {r["doc_id"]: r for r in warc_records(df).collect()}
-    assert len(rows) == 5
-    for i in range(5):
-        assert rows[i]["uri"] == f"https://e.com/{i}"
-        assert rows[i]["http_status"] == 200 + i
-        assert bytes(rows[i]["body"]) == f"body {i}".encode()
-        assert rows[i]["n_body_bytes"] == len(f"body {i}")
-    # the parse plan is exchange-free (one mapInPandas over the scan)
-    plan = warc_records(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+        [(1, "Alpha beta GAMMA"), (2, ""), (3, "x"),
+         (4, "x " * 15 + "t6")],
+        "doc_id long, text string")
+    out = {r["doc_id"]: r for r in hashed_linear_score(df).collect()}
+    exp1 = w("alpha") + w("beta") + w("gamma")
+    assert (out[1]["n_tokens"], out[1]["logit"]) == (3, exp1)
+    assert out[1]["score"] == round(exp1 / 3000.0, 6)
+    assert (out[2]["n_tokens"], out[2]["logit"], out[2]["score"]) \
+        == (0, 0, 0.0)
+    assert out[3]["logit"] == w("x")
+    # 10379 / 16000 = 0.6486875 exactly; the nearest double lies below
+    # it, so rounding the double quotient would give 0.648687
+    assert (out[4]["n_tokens"], out[4]["logit"], out[4]["score"]) \
+        == (16, 10379, 0.648688)
 
 
 def test_dedup_paragraphs_keep_first(spark):

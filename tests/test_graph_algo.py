@@ -771,7 +771,8 @@ def test_shortest_paths_radius_exact_and_fewer_rounds(spark, monkeypatch):
     exact Bellman-Ford distances while spending FAR fewer total rounds
     than the hop-diameter 48 the per-hop loop pays (shortcut doubling
     ~log2(8)+1 plus ~2·47/8 relaxation rounds). One node per block is the
-    per-hop loop; in one block the fixpoint takes one round."""
+    per-hop loop; in one block the fixpoint takes one round, and the
+    radius operator skips the shortcuts there."""
     from osm_pg_etl_spark.operators.graph_algo import (
         shortest_paths_radius, shortest_paths_weighted)
 
@@ -791,13 +792,21 @@ def test_shortest_paths_radius_exact_and_fewer_rounds(spark, monkeypatch):
     one, bf_rounds = shortest_paths_weighted(edges, 0, return_rounds=True)
     assert bf_rounds == 1
     assert {r["node"]: r["dist"] for r in one.collect()} == want
+    one, rounds = shortest_paths_radius(edges, 0, delta=8.0,
+                                        return_rounds=True)
+    assert rounds == 1
+    assert {r["node"]: r["dist"] for r in one.collect()} == want
 
 
-def test_shortest_paths_radius_heavy_edges_and_multi_source(spark):
+def test_shortest_paths_radius_heavy_edges_and_multi_source(spark,
+                                                            monkeypatch):
     """Edges ≥ Δ never enter the shortcut closure but still relax
-    correctly; multi-source dispatch mirrors shortest_paths_weighted."""
+    correctly; multi-source dispatch mirrors shortest_paths_weighted.
+    One node per block, so the shortcut closure is built."""
     from osm_pg_etl_spark.operators.graph_algo import (
         shortest_paths_radius, shortest_paths_weighted)
+
+    monkeypatch.setattr(ga, "_BLOCK_EDGES", SINGLETON_BLOCKS)
 
     edge_list = [(1, 2, 0.5), (2, 3, 0.5), (3, 4, 10.0), (4, 5, 0.5),
                  (1, 4, 12.0), (9, 4, 0.25)]

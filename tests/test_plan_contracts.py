@@ -79,15 +79,23 @@ def test_tfidf_single_big_exchange(spark):
 def test_no_row_python_udfs_in_gated_plans(spark):
     """No gated plan may fall back to row-at-a-time Python
     (BatchEvalPython); Python is allowed only Arrow-batched
-    (ArrowEvalPython / mapInPandas). Spot-checks the Python-adjacent
-    queries — the full registry is covered by scripts/plan_lint.py."""
+    (ArrowEvalPython / the grouped and map pandas nodes). Spot-checks the
+    Python-adjacent queries — the full registry is covered by
+    scripts/plan_lint.py. The first three must plan an Arrow-batched
+    node, so the BatchEvalPython check sees a Python hop at all."""
     from osm_pg_etl_spark.plans.registry import all_queries
 
+    arrow_node = re.compile(
+        r"ArrowEvalPython|FlatMapGroupsInPandas|FlatMapCoGroupsInPandas"
+        r"|MapInPandas")
     qs = all_queries()
-    for name in ("winnow_fingerprints", "osm_spatial_pairs",
-                 "multimodal_features", "quality_features"):
-        plan = plan_of(qs[name](spark, SF))
+    plans = {name: plan_of(qs[name](spark, SF))
+             for name in ("winnow_fingerprints", "osm_spatial_pairs",
+                          "knn_join", "quality_features")}
+    for name, plan in plans.items():
         assert "BatchEvalPython" not in plan, name
+    for name in ("winnow_fingerprints", "osm_spatial_pairs", "knn_join"):
+        assert arrow_node.search(plans[name]), name
 
 
 def test_no_cartesian_products_in_flagships(spark):

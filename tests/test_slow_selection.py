@@ -2,6 +2,7 @@
 on the command line however they are spelled: rootdir-relative, absolute,
 or relative to another working directory."""
 
+import ast
 import os
 from pathlib import Path
 from types import SimpleNamespace
@@ -36,6 +37,30 @@ def _marked(args, cwd):
 def test_slow_ids_are_listed():
     listed = (ROOT / "tests" / "slow_tests.txt").read_text().split()
     assert SLOW_ID in listed and OTHER_SLOW_ID in listed
+
+
+def _test_names(path):
+    """`func` and `Class::method` names of the tests defined in a file."""
+    names = set()
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, ast.FunctionDef):
+            names.add(node.name)
+        elif isinstance(node, ast.ClassDef):
+            names.update(f"{node.name}::{m.name}" for m in node.body
+                         if isinstance(m, ast.FunctionDef))
+    return names
+
+
+def test_slow_list_names_only_existing_tests():
+    # a stale entry (its test deleted or renamed) silently marks nothing;
+    # parametrized ids are compared by base name, without the [...] part
+    stale = []
+    for nodeid in (ROOT / "tests" / "slow_tests.txt").read_text().split():
+        path, _, name = nodeid.split("[")[0].partition("::")
+        file = ROOT / path
+        if not file.is_file() or name not in _test_names(file):
+            stale.append(nodeid)
+    assert not stale, stale
 
 
 @pytest.mark.parametrize("arg,cwd", [
