@@ -1,13 +1,12 @@
-"""Pure-numpy WAV (RIFF/PCM) codec — the real AUDIO decode leg of the
-multimodal pipeline, sibling of :mod:`.imagecodec`.
+"""Pure-numpy WAV (RIFF/PCM) codec — a real audio decoder; no gate runs
+it (the reference pipeline never decodes media).
 
 Uncompressed PCM WAV is a chunked header over raw little-endian samples:
 decodable (and encodable) with numpy alone, so audio payloads flow
 through ``mapInPandas`` as genuine waveforms — header parsing, channel
 de-interleaving, sample-width scaling all real. Compressed audio
-(MP3/AAC/Opus) stays behind the documented stub boundary
-(:func:`..operators.multimodal.decode_stub`); a libav deployment
-replaces only :func:`decode_wav`'s rejection branch.
+(MP3/AAC/Opus) is rejected loudly; a libav deployment replaces only
+:func:`decode_wav`'s rejection branch.
 
 Format support: PCM (format tag 1) 8/16/32-bit int samples, any channel
 count and rate; chunk walker tolerates extra chunks (LIST, fact) and

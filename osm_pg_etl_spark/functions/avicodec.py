@@ -1,5 +1,4 @@
-"""Pure-numpy MJPEG-in-AVI video codec — closes the "video frames stay
-stubbed" boundary of :mod:`.multimodal` (the reference pipeline never
+"""Pure-numpy MJPEG-in-AVI video codec (the reference pipeline never
 decodes media at all — ``osm-pg-etl.md:31-105`` hands data to Python —
 so, like the image/audio codecs, this is part of the training-data
 extension surface). Motion-JPEG is the real format webcams, capture

@@ -1,8 +1,8 @@
-"""Pure-numpy baseline JPEG (JFIF) codec — closes the documented "JPEG is
-the stub boundary" gap of :mod:`.imagecodec` (real multimodal corpora are
-mostly JPEG; the reference pipeline itself never decodes media, so this is
-part of the training-data extension surface, cf. ``osm-pg-etl.md:31-105``
-for where the reference hands data to Python).
+"""Pure-numpy baseline JPEG (JFIF) codec, the frame codec of the
+Motion-JPEG path in :mod:`.avicodec` (the reference pipeline itself never
+decodes media, so this is part of the training-data extension surface,
+cf. ``osm-pg-etl.md:31-105`` for where the reference hands data to Python;
+no gate runs it).
 
 Scope: baseline sequential DCT (SOF0/1, interleaved or one-scan-per-
 component) AND progressive DCT (SOF2 — spectral selection, successive
@@ -18,9 +18,9 @@ Determinism: the IDCT is an orthonormal float64 matrix product and the
 final sample is ``clip(round(x), 0, 255)`` — a pure function of the
 bitstream on any IEEE-754 platform, so decoded features are
 hash-oracle-safe. The encoder (4:4:4 / 4:2:2 / 4:2:0) exists so tests
-and gates can synthesize REAL bitstreams: with flat quantization tables a
+can synthesize REAL bitstreams: with flat quantization tables a
 per-8×8-block-constant image round-trips bit-exactly (constant blocks are
-DC-only; see the gate oracle), while textured images are verified by
+DC-only), while textured images are verified by
 energy/SNR bounds like the ADPCM path.
 """
 

@@ -1,9 +1,9 @@
 """Pure-numpy Microsoft Video 1 (CRAM/MSVC) codec — the INTER-FRAME
-video leg of the multimodal pipeline, closing the avicodec boundary one
-real notch: unlike Motion-JPEG (every frame independent), MS Video 1
-frames reference the PREVIOUS frame through skip blocks, so the decoder
-is genuinely stateful across frames — temporal prediction, the defining
-property of video codecs, in its simplest published form.
+video codec behind :mod:`.avicodec`'s CRAM/MSVC streams: unlike
+Motion-JPEG (every frame independent), MS Video 1 frames reference the
+PREVIOUS frame through skip blocks, so the decoder is genuinely stateful
+across frames — temporal prediction, the defining property of video
+codecs, in its simplest published form.
 
 The format is public (MSDN "MS Video 1" / BI_CRAM documentation;
 described on the multimedia.cx wiki): the frame is tiled into 4x4 pixel

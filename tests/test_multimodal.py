@@ -1,294 +1,9 @@
-"""Multimodal plumbing: fake-media attach, resize, feature extraction,
-frame sampling (operators.multimodal) — plus the REAL pure-numpy codec
-legs (functions.imagecodec: netpbm/BMP/PNG; functions.jpegcodec:
-baseline + progressive JPEG, r10/r11; functions.gifcodec: LZW GIF, r11;
-functions.audiocodec: PCM/μ-law/IMA-ADPCM WAV; functions.flaccodec:
-FLAC, r11; functions.avicodec: Motion-JPEG AVI video, r11) exercised
-end to end through mapInPandas. Arithmetic-coded JPEG, inter-frame
-video codecs and lossy audio (MP3/AAC) remain stubbed — their tests pin
-the schema / metadata / batch contracts around the stub."""
+"""Codec tests of the video and audio legs: baseline and progressive
+JPEG (functions.jpegcodec), Motion-JPEG AVI (functions.avicodec) and
+PCM / mu-law / IMA-ADPCM WAV (functions.audiocodec). These pure-numpy
+codecs no longer back a gate; the multimodal operator and the media
+gates are retired."""
 
-from osm_pg_etl_spark.operators.multimodal import (
-    attach_fake_media,
-    extract_features,
-    resize_media,
-    sample_frames,
-)
-
-
-def _media(spark):
-    docs = spark.createDataFrame([(1, "x" * 500), (2, "short")],
-                                 "doc_id long, text string")
-    return attach_fake_media(docs)
-
-
-def test_resize_clamps_and_shrinks(spark):
-    media = _media(spark)
-    r = {row["doc_id"]: row for row in resize_media(media, max_px=256).collect()}
-    big = r[1]["media_meta"]
-    assert 1 <= big["width"] <= 256 and 1 <= big["height"] <= 256
-    assert len(r[1]["content"]) < 500          # stub re-encode shrank payload
-    small = r[2]["media_meta"]
-    assert (small["width"], small["height"]) == (6, 6)   # under max_px
-    assert bytes(r[2]["content"]) == b"short"            # untouched
-
-
-def test_extract_features_schema_and_values(spark):
-    feats = {row["doc_id"]: row for row in extract_features(_media(spark)).collect()}
-    assert feats[1]["n_bytes"] == 500
-    assert feats[1]["feat_mean"] == float(ord("x"))
-    assert feats[2]["n_bytes"] == 5
-    assert set(feats[1].asDict()) == {"doc_id", "kind", "n_bytes",
-                                      "content_hash", "feat_mean",
-                                      "feat_entropy_proxy"}
-
-
-def test_sample_frames_null_duration_yields_one_frame(spark):
-    frames = sample_frames(_media(spark)).collect()
-    assert {(f["doc_id"], f["frame_ms"]) for f in frames} == {(1, 0), (2, 0)}
-
-
-def test_attach_fake_video_duration_and_frame_schedule(spark):
-    import hashlib
-
-    docs = spark.createDataFrame([(1, "x" * 500), (2, "short")],
-                                 "doc_id long, text string")
-    media = attach_fake_media(docs, kind="video")
-    metas = {r["doc_id"]: r["media_meta"] for r in media.collect()}
-    assert metas[1]["kind"] == "video"
-    assert metas[1]["duration_ms"] == 500 % 5000 + 1500
-    assert metas[2]["duration_ms"] == 5 % 5000 + 1500
-
-    frames = sample_frames(media, every_ms=1000).collect()
-    by_doc = {}
-    for f in frames:
-        by_doc.setdefault(f["doc_id"], []).append(f)
-    # duration 2000 -> offsets 0,1000; duration 1505 -> offsets 0,1000
-    assert sorted(f["frame_ms"] for f in by_doc[1]) == [0, 1000]
-    assert sorted(f["frame_ms"] for f in by_doc[2]) == [0, 1000]
-    # digest is md5 of the payload slice at offset % len
-    payload = b"x" * 500
-    want = hashlib.md5(payload[0:64]).hexdigest()
-    got = next(f["frame_hash"] for f in by_doc[1] if f["frame_ms"] == 0)
-    assert got == want
-
-
-# --- real codec leg (pure-numpy netpbm/BMP, functions.imagecodec) ----------
-
-def _hand_bmp(pix):
-    """Build a 24-bit BI_RGB bottom-up BMP from an (H, W, 3) RGB array —
-    written by hand so the decoder is tested against the spec, not
-    against its own encoder."""
-    import numpy as np
-
-    h, w = pix.shape[0], pix.shape[1]
-    row = (w * 3 + 3) // 4 * 4
-    raster = bytearray()
-    for y in range(h - 1, -1, -1):
-        r = bytearray()
-        for x in range(w):
-            rgb = pix[y, x]
-            r += bytes([int(rgb[2]), int(rgb[1]), int(rgb[0])])  # BGR
-        r += b"\0" * (row - len(r))
-        raster += r
-    hdr = (b"BM" + (54 + len(raster)).to_bytes(4, "little") + b"\0" * 4
-           + (54).to_bytes(4, "little"))
-    dib = ((40).to_bytes(4, "little")
-           + w.to_bytes(4, "little", signed=True)
-           + h.to_bytes(4, "little", signed=True)
-           + (1).to_bytes(2, "little") + (24).to_bytes(2, "little")
-           + (0).to_bytes(4, "little") + b"\0" * 20)
-    return hdr + dib + bytes(raster)
-
-
-def test_codec_ppm_roundtrip_and_comments():
-    import numpy as np
-
-    from osm_pg_etl_spark.functions.imagecodec import (
-        decode_netpbm, encode_ppm)
-
-    rng = np.random.default_rng(7)
-    rgb = rng.integers(0, 256, (5, 9, 3), dtype=np.uint8)
-    assert (decode_netpbm(encode_ppm(rgb)) == rgb).all()
-    gray = rng.integers(0, 256, (4, 6), dtype=np.uint8)
-    assert (decode_netpbm(encode_ppm(gray)) == gray).all()
-    commented = b"P6\n# generated\n3 2\n255\n" + bytes(range(18))
-    assert decode_netpbm(commented).shape == (2, 3, 3)
-    assert decode_netpbm(commented)[0, 0, 0] == 0
-    assert decode_netpbm(commented)[1, 2, 2] == 17
-
-
-def test_codec_bmp_padding_and_channel_order():
-    import numpy as np
-
-    from osm_pg_etl_spark.functions.imagecodec import decode_image
-
-    # width 3 -> 9 pixel bytes per row, padded to 12: exercises padding
-    pix = np.arange(18, dtype=np.uint8).reshape(2, 3, 3)
-    assert (decode_image(_hand_bmp(pix)) == pix).all()
-
-
-def test_codec_rejects_unsupported_formats_loudly():
-    import pytest as _pytest
-
-    from osm_pg_etl_spark.functions.imagecodec import decode_image
-
-    # formats with no pure-numpy decoder still fail loudly (WebP);
-    # JPEG (r10), GIF and TIFF (r11) now dispatch to real decoders, so
-    # truncated payloads raise their own parse errors instead of the stub
-    with _pytest.raises(NotImplementedError, match="image library"):
-        decode_image(b"RIFF\x00\x00\x00\x00WEBP")   # WebP magic
-    with _pytest.raises((ValueError, NotImplementedError)):
-        decode_image(b"\xff\xd8\xff\xe0....JFIF")  # malformed JPEG
-    with _pytest.raises(ValueError, match="truncated GIF"):
-        decode_image(b"GIF89a....")                 # truncated GIF
-    with _pytest.raises(ValueError, match="truncated TIFF"):
-        decode_image(b"II*\x00....")                # truncated TIFF
-
-
-def test_codec_png_roundtrip_every_filter_and_colortype():
-    """encode_png's forward filters are written independently of
-    decode_png's inverses — a cycle-filtered round trip checks all five
-    (None/Sub/Up/Average/Paeth) on gray, gray+alpha, RGB and RGBA."""
-    import numpy as np
-
-    from osm_pg_etl_spark.functions.imagecodec import (
-        decode_image, decode_png, encode_png)
-
-    rng = np.random.default_rng(8)
-    for shape in [(1, 1), (6, 9), (12, 16, 3), (5, 4, 4), (3, 7, 2)]:
-        a = rng.integers(0, 256, size=shape, dtype=np.uint8)
-        for mode in ("none", "cycle"):
-            got = decode_png(encode_png(a, filters=mode))
-            assert got.shape == a.shape and (got == a).all(), (shape, mode)
-    # the sniffing entry point routes PNG magic to the real decoder
-    a = rng.integers(0, 256, size=(4, 4, 3), dtype=np.uint8)
-    assert (decode_image(encode_png(a)) == a).all()
-
-
-def test_codec_png_palette_and_crc():
-    import zlib
-
-    import numpy as np
-    import pytest as _pytest
-
-    from osm_pg_etl_spark.functions.imagecodec import (
-        _png_chunk, _PNG_SIG, decode_png)
-
-    # hand-built 2x2 palette image: indices [[0,1],[1,0]]
-    pal = bytes([255, 0, 0, 0, 0, 255])  # red, blue
-    ihdr = ((2).to_bytes(4, "big") + (2).to_bytes(4, "big")
-            + bytes([8, 3, 0, 0, 0]))
-    raster = bytes([0, 0, 1]) + bytes([0, 1, 0])  # filter-0 rows
-    png = (_PNG_SIG + _png_chunk(b"IHDR", ihdr) + _png_chunk(b"PLTE", pal)
-           + _png_chunk(b"IDAT", zlib.compress(raster))
-           + _png_chunk(b"IEND", b""))
-    got = decode_png(png)
-    assert got.shape == (2, 2, 3)
-    assert (got == np.array([[[255, 0, 0], [0, 0, 255]],
-                             [[0, 0, 255], [255, 0, 0]]])).all()
-
-    # flip one IDAT byte -> CRC check must fire
-    i = png.index(b"IDAT")
-    bad = png[:i + 5] + bytes([png[i + 5] ^ 0xFF]) + png[i + 6:]
-    with _pytest.raises(ValueError, match="CRC"):
-        decode_png(bad)
-
-
-def test_resize_nearest_pixel_center_mapping():
-    import numpy as np
-
-    from osm_pg_etl_spark.functions.imagecodec import resize_nearest
-
-    big = np.arange(16, dtype=np.uint8).reshape(4, 4)
-    # pixel-center mapping picks rows/cols 1 and 3
-    assert resize_nearest(big, 2, 2).tolist() == [[5, 7], [13, 15]]
-    up = resize_nearest(big, 8, 8)
-    assert up.shape == (8, 8) and up[0, 0] == 0 and up[7, 7] == 15
-
-
-def test_extract_image_features_real_decode_end_to_end(spark):
-    """Full Spark leg: synthesize genuine P6 payloads, decode them in
-    mapInPandas, and check the features against the closed form the
-    constant-color construction guarantees."""
-    from osm_pg_etl_spark.operators.multimodal import (
-        attach_synthetic_ppm, extract_image_features)
-
-    docs = spark.range(0, 40).withColumnRenamed("id", "doc_id")
-    media = attach_synthetic_ppm(docs)
-    rows = {r["doc_id"]: r
-            for r in extract_image_features(media).collect()}
-    assert len(rows) == 40
-    for i in (0, 1, 17, 39):
-        r = rows[i]
-        assert (r["width"], r["height"]) == (i % 16 + 1, i % 12 + 1)
-        assert r["mean_r"] == i * 7 % 256
-        assert r["mean_g"] == i * 13 % 256
-        assert r["mean_b"] == i * 29 % 256
-
-
-def test_resize_images_real_resample_and_reencode(spark):
-    """resize_images really decodes, resamples, and re-encodes: output
-    payloads are valid PPMs whose raster dims equal the clamped metadata,
-    and within-budget images pass through byte-identical."""
-    import numpy as np
-
-    from osm_pg_etl_spark.functions.imagecodec import (
-        decode_netpbm, encode_ppm)
-    from osm_pg_etl_spark.operators.multimodal import resize_images
-
-    rng = np.random.default_rng(3)
-    big = rng.integers(0, 256, (30, 50, 3), dtype=np.uint8)
-    small = rng.integers(0, 256, (4, 6, 3), dtype=np.uint8)
-    rows = [(1, bytearray(encode_ppm(big)),
-             {"kind": "image", "mime": "image/x-portable-pixmap",
-              "width": 50, "height": 30, "duration_ms": None}),
-            (2, bytearray(encode_ppm(small)),
-             {"kind": "image", "mime": "image/x-portable-pixmap",
-              "width": 6, "height": 4, "duration_ms": None})]
-    media = spark.createDataFrame(
-        rows, "doc_id long, content binary, media_meta "
-              "struct<kind:string,mime:string,width:int,height:int,"
-              "duration_ms:int>")
-    out = {r["doc_id"]: r for r in resize_images(media, max_px=16).collect()}
-    resized = decode_netpbm(bytes(out[1]["content"]))
-    meta = out[1]["media_meta"]
-    assert (meta["width"], meta["height"]) == (16, 9)
-    assert resized.shape == (9, 16, 3)
-    # nearest-neighbour: every output pixel exists somewhere in the input
-    flat = {tuple(p) for p in big.reshape(-1, 3).tolist()}
-    assert all(tuple(p) in flat for p in resized.reshape(-1, 3).tolist())
-    assert bytes(out[2]["content"]) == bytes(encode_ppm(small))  # untouched
-
-
-def test_resize_images_passthrough_keeps_original_mime(spark):
-    """A within-budget BMP keeps BOTH its bytes and its image/bmp mime;
-    only rows actually re-encoded to P6 get the PPM mime."""
-    import numpy as np
-
-    from osm_pg_etl_spark.functions.imagecodec import encode_bmp
-    from osm_pg_etl_spark.operators.multimodal import resize_images
-
-    rng = np.random.default_rng(4)
-    big = rng.integers(0, 256, (30, 50, 3), dtype=np.uint8)
-    small = rng.integers(0, 256, (4, 6, 3), dtype=np.uint8)
-    rows = [(1, bytearray(encode_bmp(big)),
-             {"kind": "image", "mime": "image/bmp",
-              "width": 50, "height": 30, "duration_ms": None}),
-            (2, bytearray(encode_bmp(small)),
-             {"kind": "image", "mime": "image/bmp",
-              "width": 6, "height": 4, "duration_ms": None})]
-    media = spark.createDataFrame(
-        rows, "doc_id long, content binary, media_meta "
-              "struct<kind:string,mime:string,width:int,height:int,"
-              "duration_ms:int>")
-    out = {r["doc_id"]: r for r in resize_images(media, max_px=16).collect()}
-    assert out[1]["media_meta"]["mime"] == "image/x-portable-pixmap"
-    assert out[2]["media_meta"]["mime"] == "image/bmp"
-    assert bytes(out[2]["content"]) == bytes(encode_bmp(small))
-
-
-# --- real audio leg (pure-numpy RIFF/PCM, functions.audiocodec) -------------
 
 def test_wav_roundtrip_stereo():
     import numpy as np
@@ -349,50 +64,14 @@ def test_wav_rejects_compressed_loudly():
         decode_wav(w)
 
 
-def test_extract_audio_features_real_decode_end_to_end(spark):
-    """Full Spark leg: synthesize genuine PCM WAV square waves, decode
-    in mapInPandas, check features against the closed forms."""
-    import math
-
-    from osm_pg_etl_spark.operators.multimodal import (
-        attach_synthetic_wav, extract_audio_features)
-
-    docs = spark.range(0, 30).withColumnRenamed("id", "doc_id")
-    rows = {r["doc_id"]: r for r in
-            extract_audio_features(attach_synthetic_wav(docs)).collect()}
-    assert len(rows) == 30
-    for i in (0, 7, 17, 29):
-        h, amp = i % 4 + 1, (i % 9 + 1) / 10.0
-        n = i % 50 + 2 * h
-        q = round(32767 * amp)
-        r = rows[i]
-        assert r["n_samples"] == n
-        assert abs(r["duration_ms"] - n / 8.0) < 1e-9
-        assert abs(r["rms"] - q / 32768) < 1e-9
-        assert abs(r["peak"] - q / 32768) < 1e-9
-        assert abs(r["zcr"] - math.floor((n - 1) / h) / (n - 1)) < 1e-9
-
-
 def test_codec_property_roundtrips():
-    """Property: encode→decode is the identity for arbitrary uint8
-    images (PPM/PGM) and within quantization error for arbitrary
-    waveforms (WAV), across arbitrary shapes."""
+    """Property: encode→decode is within quantization error for
+    arbitrary waveforms (WAV), across arbitrary shapes."""
     import numpy as np
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
     from osm_pg_etl_spark.functions.audiocodec import decode_wav, encode_wav
-    from osm_pg_etl_spark.functions.imagecodec import (
-        decode_netpbm, encode_ppm)
-
-    @settings(max_examples=60, deadline=None)
-    @given(st.integers(1, 12), st.integers(1, 12), st.integers(0, 2**32 - 1),
-           st.booleans())
-    def image_rt(h, w, seed, gray):
-        rng = np.random.default_rng(seed)
-        shape = (h, w) if gray else (h, w, 3)
-        a = rng.integers(0, 256, shape, dtype=np.uint8)
-        assert (decode_netpbm(encode_ppm(a)) == a).all()
 
     @settings(max_examples=60, deadline=None)
     @given(st.integers(1, 200), st.integers(1, 3), st.integers(0, 2**32 - 1))
@@ -403,7 +82,6 @@ def test_codec_property_roundtrips():
         assert rate == 16000 and back.shape == (n, ch)
         assert np.abs(back - s).max() < 2.0 / 32768
 
-    image_rt()
     wav_rt()
 
 
@@ -655,7 +333,6 @@ def test_jpeg_textured_default_tables_snr_and_boundaries():
     import numpy as np
     import pytest as _pytest
 
-    from osm_pg_etl_spark.functions.imagecodec import decode_image
     from osm_pg_etl_spark.functions.jpegcodec import decode_jpeg, encode_jpeg
 
     rng = np.random.default_rng(9)
@@ -663,7 +340,7 @@ def test_jpeg_textured_default_tables_snr_and_boundaries():
            + np.arange(40)[None, :] * 4).astype(np.uint8)
     rgb = np.stack([tex] * 3, 2)
     wav = encode_jpeg(rgb)
-    out = decode_image(wav)           # the sniffing dispatch path
+    out = decode_jpeg(wav)
     err = out.astype(float) - rgb.astype(float)
     snr = 10 * np.log10((rgb.astype(float) ** 2).mean()
                         / (err ** 2).mean())
@@ -684,27 +361,6 @@ def test_jpeg_textured_default_tables_snr_and_boundaries():
         decode_jpeg(bytes(arith))
     with _pytest.raises(ValueError, match="SOI"):
         decode_jpeg(b"NOTAJPEG")
-
-
-def test_jpeg_gate_matches_closed_form(spark):
-    """The media_image_features_jpeg gate: real entropy decode of the
-    synthesized block-constant JFIFs matches the closed-form means."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from osm_pg_etl_spark.operators.multimodal import (
-        attach_synthetic_jpeg, extract_image_features)
-
-    docs = spark.range(0, 25).select(F.col("id").alias("doc_id"))
-    feats = {r["doc_id"]: r for r in extract_image_features(
-        attach_synthetic_jpeg(docs)).collect()}
-    for i in range(25):
-        wb, hb = i % 3 + 1, i % 2 + 1
-        want = i * 7 % 100 + (wb - 1) / 2.0 + (hb - 1) / 2.0
-        r = feats[i]
-        assert (r["width"], r["height"]) == (wb * 8, hb * 8)
-        for c in ("mean_r", "mean_g", "mean_b", "luma"):
-            assert r[c] == pytest.approx(want, abs=1e-9), (i, c)
 
 
 def test_jpeg_progressive_decode_equals_baseline_decode():
@@ -777,556 +433,6 @@ def test_jpeg_progressive_property_hypothesis():
     check()
 
 
-def test_jpeg_prog_gate_matches_closed_form(spark):
-    """The media_image_features_jpeg_prog gate: real 8-scan progressive
-    decode of the synthesized block-constant SOF2 files matches the
-    closed-form means."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from osm_pg_etl_spark.operators.multimodal import (
-        attach_synthetic_jpeg_prog, extract_image_features)
-
-    docs = spark.range(0, 25).select(F.col("id").alias("doc_id"))
-    feats = {r["doc_id"]: r for r in extract_image_features(
-        attach_synthetic_jpeg_prog(docs)).collect()}
-    for i in range(25):
-        wb, hb = i % 4 + 1, i % 3 + 1
-        want = i * 11 % 97 + (wb - 1) / 2.0 + (hb - 1) / 2.0
-        r = feats[i]
-        assert (r["width"], r["height"]) == (wb * 8, hb * 8)
-        for c in ("mean_r", "mean_g", "mean_b", "luma"):
-            assert r[c] == pytest.approx(want, abs=1e-9), (i, c)
-
-
-def test_flac_lossless_roundtrip():
-    """r11: REAL FLAC decode. Lossless round-trips bit-exactly across
-    random int16 (multi-frame, order selection, Rice), smooth signals
-    (fixed order 2), constants (CONSTANT subframes), and all three
-    stereo decorrelation modes; float input quantizes like the WAV
-    encoder; corrupt frames fail the CRC loudly."""
-    import numpy as np
-    import pytest
-
-    from osm_pg_etl_spark.functions.flaccodec import decode_flac, encode_flac
-
-    rng = np.random.default_rng(11)
-    for trial in range(4):
-        n = int(rng.integers(1, 9000))
-        sig = rng.integers(-32768, 32768, n, dtype=np.int64) \
-            .astype(np.int16)
-        dec, rate = decode_flac(encode_flac(sig, 8000))
-        assert rate == 8000 and dec.shape == (n, 1)
-        assert np.array_equal((dec[:, 0] * 32768).astype(np.int64),
-                              sig.astype(np.int64)), trial
-    t = np.arange(5000)
-    smooth = (10000 * np.sin(t / 50.0)).astype(np.int16)
-    dec, _ = decode_flac(encode_flac(smooth, 16000))
-    assert np.array_equal((dec[:, 0] * 32768).astype(np.int64),
-                          smooth.astype(np.int64))
-    const = np.full(300, -1234, np.int16)
-    dec, _ = decode_flac(encode_flac(const, 8000))
-    assert np.array_equal((dec[:, 0] * 32768).astype(np.int64),
-                          const.astype(np.int64))
-    st = np.stack([smooth[:3000],
-                   (smooth[:3000] * 0.7).astype(np.int16)], 1)
-    for mode in ("independent", "left_side", "mid_side"):
-        dec, _ = decode_flac(encode_flac(st, 44100, stereo_mode=mode))
-        assert np.array_equal((dec * 32768).astype(np.int64),
-                              st.astype(np.int64)), mode
-    sq = 0.5 * (((np.arange(40) // 3) % 2 == 0) * 2 - 1)
-    dec, _ = decode_flac(encode_flac(sq, 8000))
-    assert np.abs(dec[:, 0]
-                  - np.round(32767 * sq) / 32768.0).max() == 0
-    # LPC subframes (review finding: the spec layout interleaves warmup
-    # BEFORE precision/shift/coefs — the residual reader must not read
-    # warmup again): real LPC bitstreams from the encoder's lpc mode
-    # round-trip exactly, mono and all stereo modes
-    dec, _ = decode_flac(encode_flac(smooth, 16000, predictor="lpc"))
-    assert np.array_equal((dec[:, 0] * 32768).astype(np.int64),
-                          smooth.astype(np.int64))
-    for mode in ("independent", "mid_side"):
-        dec, _ = decode_flac(encode_flac(st, 44100, stereo_mode=mode,
-                                         predictor="lpc"))
-        assert np.array_equal((dec * 32768).astype(np.int64),
-                              st.astype(np.int64)), mode
-
-    bad = bytearray(encode_flac(smooth, 16000))
-    bad[-1] ^= 0xFF
-    with pytest.raises(ValueError, match="CRC"):
-        decode_flac(bytes(bad))
-    with pytest.raises(ValueError, match="fLaC"):
-        decode_flac(b"NOTFLAC!")
-    # truncation surfaces as the ValueError contract, not IndexError
-    with pytest.raises(ValueError, match="truncated FLAC"):
-        decode_flac(b"fLaC")
-    with pytest.raises(ValueError, match="truncated FLAC"):
-        decode_flac(encode_flac(smooth, 16000)[:40])
-
-
-def test_flac_gate_matches_pcm_gate(spark):
-    """The media_audio_features_flac gate: losslessness means the FLAC
-    leg's features are IDENTICAL to the PCM leg's on the same corpus."""
-    from pyspark.sql import functions as F
-
-    from osm_pg_etl_spark.operators.multimodal import (
-        attach_synthetic_wav, extract_audio_features)
-
-    docs = spark.range(0, 30).select(F.col("id").alias("doc_id"))
-    pcm = {r["doc_id"]: r for r in extract_audio_features(
-        attach_synthetic_wav(docs, codec="pcm")).collect()}
-    flac = {r["doc_id"]: r for r in extract_audio_features(
-        attach_synthetic_wav(docs, codec="flac")).collect()}
-    assert pcm == flac
-
-
-def test_gif_lzw_roundtrip_exact():
-    """r11: REAL GIF decode. Lossless LZW round-trips bit-exactly:
-    gradients (sequential palette), random palette-limited color
-    (dictionary stress, width growth), big repetitive images (12-bit
-    codes + clear-code reset), interlaced variants (4-pass shuffle);
-    >256 colors and non-GIF bytes fail loudly; the sniffing dispatch
-    routes GIF magic."""
-    import numpy as np
-    import pytest
-
-    from osm_pg_etl_spark.functions.gifcodec import decode_gif, encode_gif
-    from osm_pg_etl_spark.functions.imagecodec import decode_image
-
-    rng = np.random.default_rng(3)
-    for trial in range(6):
-        h, w = int(rng.integers(1, 40)), int(rng.integers(1, 50))
-        base = int(rng.integers(0, 100))
-        gray = ((base + np.arange(w)[None, :] + np.arange(h)[:, None])
-                % 256).astype(np.uint8)
-        img = np.stack([gray] * 3, 2)
-        for il in (False, True):
-            out = decode_gif(encode_gif(img, interlace=il))
-            assert len(out) == 1 and np.array_equal(out[0], img), (trial, il)
-    pal = rng.integers(0, 256, (37, 3), dtype=np.uint8)
-    img = pal[rng.integers(0, 37, (64, 96))]
-    assert np.array_equal(decode_gif(encode_gif(img))[0], img)
-    big = np.tile(pal[rng.integers(0, 37, (8, 8))], (40, 50, 1))
-    assert np.array_equal(decode_gif(encode_gif(big))[0], big)
-    # sniffing dispatch
-    assert np.array_equal(decode_image(encode_gif(img)), img)
-    with pytest.raises(ValueError, match="256"):
-        encode_gif(rng.integers(0, 256, (40, 40, 3), dtype=np.uint8))
-    with pytest.raises(ValueError, match="GIF"):
-        decode_gif(b"NOTAGIF")
-
-
-def test_gif_lzw_deferred_clear_frozen_table():
-    """Spec 4096-entry cap (r12 advice): a conformant encoder may DEFER
-    the clear code and keep emitting 12-bit codes against a frozen
-    table; the decoder must freeze its table in lockstep (stop
-    appending at 4096) and still decode exactly — and codes beyond the
-    frozen table must keep hitting the corrupt-stream error."""
-    import numpy as np
-    import pytest
-
-    from osm_pg_etl_spark.functions.gifcodec import _lzw_decompress
-
-    min_code = 8
-    clear, end = 1 << min_code, (1 << min_code) + 1
-    rng = np.random.default_rng(7)
-    pixels = rng.integers(0, 256, 30_000).tolist()
-
-    # deferred-clear LZW: identical to the module encoder except the
-    # table FREEZES at 4096 assigned codes instead of emitting clear
-    emitted: list[tuple[int, int]] = [(clear, min_code + 1)]
-    table: dict[tuple[int, ...], int] = {}
-    next_code, width, seq = end + 1, min_code + 1, ()
-    for px in pixels:
-        cand = seq + (px,)
-        if len(cand) == 1 or cand in table:
-            seq = cand
-            continue
-        emitted.append((seq[0] if len(seq) == 1 else table[seq], width))
-        if next_code <= 4095:
-            table[cand] = next_code
-            next_code += 1
-            if next_code > (1 << width) and width < 12:
-                width += 1
-        seq = (px,)
-    emitted.append((seq[0] if len(seq) == 1 else table[seq], width))
-    emitted.append((end, width))
-    assert next_code == 4096  # the stream genuinely filled the table
-
-    def pack(codes: list[tuple[int, int]]) -> bytes:
-        buf = bitlen = 0
-        out = bytearray()
-        for code, w in codes:
-            buf |= code << bitlen
-            bitlen += w
-            while bitlen >= 8:
-                out.append(buf & 0xFF)
-                buf >>= 8
-                bitlen -= 8
-        if bitlen:
-            out.append(buf & 0xFF)
-        return bytes(out)
-
-    assert _lzw_decompress(pack(emitted), min_code, len(pixels)) == pixels
-    # with the table frozen at 4096, code == len(table) (the KwKwK
-    # branch) is exactly 4096 — unrepresentable in 12 bits, so every
-    # in-range code resolves in the frozen table; an early out-of-range
-    # code still raises
-    with pytest.raises(ValueError, match="corrupt"):
-        _lzw_decompress(pack([(clear, 9), (3, 9), (300, 9)]), 8, 100)
-
-
-def test_gif_gate_matches_closed_form(spark):
-    """The media_image_features_gif gate: real palette+LZW+interlace
-    decode of the synthesized gradient GIFs matches the closed form."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from osm_pg_etl_spark.operators.multimodal import (
-        attach_synthetic_gif, extract_image_features)
-
-    docs = spark.range(0, 25).select(F.col("id").alias("doc_id"))
-    feats = {r["doc_id"]: r for r in extract_image_features(
-        attach_synthetic_gif(docs)).collect()}
-    for i in range(25):
-        w, h = i % 16 + 1, i % 12 + 1
-        want = i * 17 % 101 + (w - 1) / 2.0 + (h - 1) / 2.0
-        r = feats[i]
-        assert (r["width"], r["height"]) == (w, h)
-        for c in ("mean_r", "mean_g", "mean_b"):
-            assert r[c] == pytest.approx(want, abs=1e-9), (i, c)
-        assert r["luma"] == pytest.approx(
-            0.299 * want + 0.587 * want + 0.114 * want, abs=1e-9), i
-
-
-def test_tiff_roundtrip_exact():
-    """r11: REAL TIFF decode. Lossless round-trips bit-exactly across
-    compressions (none / early-change LZW / PackBits), the horizontal-
-    differencing predictor, gray and RGB, multi-strip layouts, big
-    repetitive content (12-bit LZW + clear reset); non-TIFF and
-    truncated payloads fail loudly; the dispatch routes both byte-order
-    magics."""
-    import numpy as np
-    import pytest
-
-    from osm_pg_etl_spark.functions.imagecodec import decode_image
-    from osm_pg_etl_spark.functions.tiffcodec import decode_tiff, encode_tiff
-
-    rng = np.random.default_rng(9)
-    for trial in range(12):
-        h, w = int(rng.integers(1, 60)), int(rng.integers(1, 70))
-        gray = trial % 2 == 0
-        img = rng.integers(0, 256, (h, w) if gray else (h, w, 3),
-                           dtype=np.uint8)
-        comp = (1, 5, 32773)[trial % 3]
-        pred = 2 if trial % 4 == 0 else 1
-        out = decode_tiff(encode_tiff(img, compression=comp,
-                                      predictor=pred,
-                                      rows_per_strip=(3, 16, 64)[trial % 3]
-                                      ))[0]
-        want = np.stack([img] * 3, 2) if gray else img
-        assert np.array_equal(out, want), (trial, comp, pred)
-    tile = rng.integers(0, 8, (8, 8), dtype=np.uint8) * 30
-    big = np.tile(tile, (60, 80))
-    assert np.array_equal(
-        decode_tiff(encode_tiff(big, compression=5))[0][:, :, 0], big)
-    # predictor genuinely compresses smooth content (and inverts exactly)
-    grad = ((np.arange(50)[:, None] + np.arange(80)[None, :])
-            % 256).astype(np.uint8)
-    with_p = encode_tiff(grad, compression=5, predictor=2)
-    without = encode_tiff(grad, compression=5, predictor=1)
-    assert len(with_p) < len(without)
-    assert np.array_equal(decode_tiff(with_p)[0][:, :, 0], grad)
-    # sniffing dispatch (little-endian magic)
-    assert np.array_equal(decode_image(with_p)[:, :, 0], grad)
-    # multi-page (the scan-corpus shape): chained IFDs, mixed page
-    # shapes, per-page exact — in BOTH byte orders (MM exercises the
-    # left-justified inline SHORT values, review finding)
-    pages = [rng.integers(0, 256, (11, 17), dtype=np.uint8),
-             rng.integers(0, 256, (23, 9, 3), dtype=np.uint8)]
-    for bo in ("II", "MM"):
-        out = decode_tiff(encode_tiff(pages, compression=5,
-                                      byte_order=bo))
-        assert len(out) == 2, bo
-        assert np.array_equal(out[0][:, :, 0], pages[0]), bo
-        assert np.array_equal(out[1], pages[1]), bo
-    # review findings: LONG dims (no silent mod-65536 truncation above
-    # 65535 px), cyclic IFD chains and missing mandatory tags fail
-    # loudly instead of hanging/TypeError-ing an executor
-    import struct as _struct
-    tall = np.zeros((70000, 1), np.uint8)
-    assert decode_tiff(encode_tiff(tall, compression=1,
-                                   rows_per_strip=70000))[0].shape \
-        == (70000, 1, 3)
-    loop = bytearray(encode_tiff(pages[0]))
-    (ifd,) = _struct.unpack("<I", bytes(loop[4:8]))
-    (ne,) = _struct.unpack("<H", bytes(loop[ifd:ifd + 2]))
-    _struct.pack_into("<I", loop, ifd + 2 + ne * 12, ifd)  # self-loop
-    with pytest.raises(ValueError, match="cyclic"):
-        decode_tiff(bytes(loop))
-    with pytest.raises(ValueError, match="mandatory"):
-        decode_tiff(b"II*\x00" + _struct.pack("<I", 8)
-                    + _struct.pack("<H", 0) + _struct.pack("<I", 0))
-    with pytest.raises(ValueError, match="empty page"):
-        encode_tiff(np.zeros((0, 5), np.uint8))
-    with pytest.raises(ValueError, match="TIFF"):
-        decode_tiff(b"NOTATIFF")
-    with pytest.raises(NotImplementedError, match="compression"):
-        bad = bytearray(encode_tiff(grad, compression=1))
-        # compression tag value lives in the IFD; flip it to CCITT (2)
-        i = bad.find((259).to_bytes(2, "little") + (3).to_bytes(2, "little"))
-        bad[i + 8] = 2
-        decode_tiff(bytes(bad))
-    # r12 (VERDICT task 8): TILED layout — edge tiles padded, tags
-    # 322-325, predictor per tile row — bit-exact across compressions,
-    # byte orders, gray/RGB, and non-multiple image sizes
-    for trial in range(8):
-        h, w = int(rng.integers(5, 90)), int(rng.integers(5, 90))
-        gray_t = trial % 2 == 0
-        img = rng.integers(0, 256, (h, w) if gray_t else (h, w, 3),
-                           dtype=np.uint8)
-        comp = (1, 5, 32773)[trial % 3]
-        bo = ("II", "MM")[trial % 2]
-        out = decode_tiff(encode_tiff(img, compression=comp,
-                                      byte_order=bo,
-                                      tile_size=(16, 32)))[0]
-        want = np.stack([img] * 3, 2) if gray_t else img
-        assert np.array_equal(out, want), ("tiled", trial, comp, bo)
-    with pytest.raises(ValueError, match="multiples of 16"):
-        encode_tiff(grad, tile_size=(10, 16))
-    # a tiled file missing TileByteCounts fails loudly
-    miss = bytearray(encode_tiff(grad, compression=1, tile_size=(16, 16)))
-    i = miss.find((325).to_bytes(2, "little") + (4).to_bytes(2, "little"))
-    _struct.pack_into("<H", miss, i, 999)  # rename the tag away
-    with pytest.raises(ValueError, match="mandatory"):
-        decode_tiff(bytes(miss))
-
-    # r12 (VERDICT task 8): 16-BIT samples — uint16 roundtrips exactly
-    # (predictor mod 65536, byte-order-correct sample decode), strip and
-    # tiled layouts, gray and RGB, both byte orders
-    for trial in range(8):
-        h, w = int(rng.integers(3, 50)), int(rng.integers(3, 50))
-        gray_t = trial % 2 == 0
-        img16 = rng.integers(0, 65536, (h, w) if gray_t else (h, w, 3),
-                             dtype=np.uint16)
-        comp = (1, 5, 32773)[trial % 3]
-        bo = ("II", "MM")[trial % 2]
-        ts = (16, 16) if trial % 3 == 0 else None
-        out = decode_tiff(encode_tiff(img16, compression=comp,
-                                      byte_order=bo, tile_size=ts))[0]
-        assert out.dtype == np.uint16, trial
-        want = np.stack([img16] * 3, 2) if gray_t else img16
-        assert np.array_equal(out, want), ("16bit", trial, comp, bo, ts)
-    # 16-bit WhiteIsZero inverts against the 16-bit ceiling
-    g16 = rng.integers(0, 65536, (7, 9), dtype=np.uint16)
-    inv16 = bytearray(encode_tiff(g16, compression=1))
-    i = inv16.find((262).to_bytes(2, "little") + (3).to_bytes(2, "little"))
-    inv16[i + 8] = 0
-    assert np.array_equal(decode_tiff(bytes(inv16))[0][:, :, 0],
-                          65535 - g16)
-    # mixed/unsupported depths raise loudly
-    with pytest.raises(ValueError, match="uint8/uint16"):
-        encode_tiff(g16.astype(np.int32))
-    bad24 = bytearray(encode_tiff(
-        rng.integers(0, 256, (5, 5), dtype=np.uint8), compression=1))
-    i = bad24.find((258).to_bytes(2, "little") + (3).to_bytes(2, "little"))
-    bad24[i + 8] = 24
-    with pytest.raises(NotImplementedError, match="BitsPerSample"):
-        decode_tiff(bytes(bad24))
-
-    # PhotometricInterpretation (r12 advice): WhiteIsZero grayscale —
-    # the scanned-document shape — must decode INVERTED, not silently
-    # pass raw sample values through; palette (3) must raise
-    gray = rng.integers(0, 256, (13, 21), dtype=np.uint8)
-    inv = bytearray(encode_tiff(gray, compression=1))
-    i = inv.find((262).to_bytes(2, "little") + (3).to_bytes(2, "little"))
-    assert inv[i + 8] == 1  # encoder wrote BlackIsZero for gray
-    inv[i + 8] = 0          # flip to WhiteIsZero
-    assert np.array_equal(decode_tiff(bytes(inv))[0][:, :, 0], 255 - gray)
-    inv[i + 8] = 3          # palette-color WITHOUT a ColorMap: malformed
-    with pytest.raises(ValueError, match="ColorMap"):
-        decode_tiff(bytes(inv))
-    inv[i + 8] = 6          # YCbCr declared on a 1-sample gray page:
-    with pytest.raises(NotImplementedError, match="YCbCr"):
-        decode_tiff(bytes(inv))     # malformed combination, raise loudly
-
-
-def test_tiff_palette_and_cmyk():
-    """r12: photometric 3 (ColorMap lookup, the scanned-map shape) and
-    photometric 5 (CMYK) decode for real — exact LUT/integer-transform
-    round-trips through every compression, both byte orders."""
-    import numpy as np
-    import pytest
-
-    from osm_pg_etl_spark.functions.tiffcodec import decode_tiff, encode_tiff
-
-    rng = np.random.default_rng(47)
-    pal = rng.integers(0, 256, (256, 3), dtype=np.uint8)
-    idx = rng.integers(0, 256, (11, 17), dtype=np.uint8)
-    for comp in (1, 5, 32773):
-        for bo in ("II", "MM"):
-            out = decode_tiff(encode_tiff(idx, compression=comp,
-                                          byte_order=bo, palette=pal))[0]
-            assert np.array_equal(out, pal[idx])
-    # multi-page palette file: one LUT, two pages
-    idx2 = rng.integers(0, 256, (6, 9), dtype=np.uint8)
-    pages = decode_tiff(encode_tiff([idx, idx2], palette=pal))
-    assert len(pages) == 2 and np.array_equal(pages[1], pal[idx2])
-
-    cmyk = rng.integers(0, 256, (13, 7, 4), dtype=np.uint8)
-    for comp in (1, 5, 32773):
-        out = decode_tiff(encode_tiff(cmyk, compression=comp))[0]
-        c = cmyk.astype(np.uint32)
-        exp = np.stack([((255 - c[:, :, i]) * (255 - c[:, :, 3])) // 255
-                        for i in range(3)], axis=2).astype(np.uint8)
-        assert np.array_equal(out, exp)
-    # tiled CMYK exercises the spp=4 tile assembly
-    big = rng.integers(0, 256, (40, 50, 4), dtype=np.uint8)
-    out = decode_tiff(encode_tiff(big, tile_size=(16, 16)))[0]
-    b = big.astype(np.uint32)
-    exp = np.stack([((255 - b[:, :, i]) * (255 - b[:, :, 3])) // 255
-                    for i in range(3)], axis=2).astype(np.uint8)
-    assert np.array_equal(out, exp)
-
-    # 16-bit CMYK decodes since r13: exact 16-bit separation inverse
-    cmyk16 = rng.integers(0, 65536, (9, 8, 4), dtype=np.uint16)
-    out16 = decode_tiff(encode_tiff(cmyk16, compression=5,
-                                    byte_order="MM"))[0]
-    c16 = cmyk16.astype(np.uint64)
-    exp16 = np.stack(
-        [((65535 - c16[:, :, i]) * (65535 - c16[:, :, 3])) // 65535
-         for i in range(3)], axis=2).astype(np.uint16)
-    assert out16.dtype == np.uint16 and np.array_equal(out16, exp16)
-
-    # boundaries stay loud: palette/index depth mismatch both ways
-    with pytest.raises(ValueError, match="\\(65536, 3\\)"):
-        encode_tiff(idx.astype(np.uint16), palette=pal)
-    with pytest.raises(ValueError, match="\\(256, 3\\)"):
-        encode_tiff(idx, palette=pal[:128])
-
-    # r14: 16-BIT palette decodes/encodes — full 3x65536 ColorMap,
-    # uint16 index raster, both byte orders, strip and tile layouts
-    rng16 = np.random.default_rng(7)
-    pal16 = rng16.integers(0, 256, (65536, 3), dtype=np.uint8)
-    idx16 = rng16.integers(0, 65536, (9, 13), dtype=np.uint16)
-    for bo in ("II", "MM"):
-        for comp in (1, 5, 32773):
-            got = decode_tiff(encode_tiff(idx16, compression=comp,
-                                          byte_order=bo,
-                                          palette=pal16))[0]
-            assert np.array_equal(got, pal16[idx16]), (bo, comp)
-    got = decode_tiff(encode_tiff(idx16, tile_size=(16, 16),
-                                  palette=pal16))[0]
-    assert np.array_equal(got, pal16[idx16])
-
-
-def test_tiff_jpeg_compression7():
-    """r12: new-style JPEG-in-TIFF (Tech Note 2) decodes for real —
-    per-strip JFIF streams through the genuine JPEG codec, both the
-    self-contained and the shared-JPEGTables (abbreviated, spliced)
-    layouts, single- and multi-strip, both byte orders, multi-page.
-    Block-constant flat-quant content inverts bit-exactly; textured
-    default-table content matches a direct JPEG round-trip."""
-    import numpy as np
-    import pytest
-
-    from osm_pg_etl_spark.functions.jpegcodec import (decode_jpeg,
-                                                      encode_jpeg)
-    from osm_pg_etl_spark.functions.tiffcodec import (decode_tiff,
-                                                      encode_tiff_jpeg)
-
-    rng = np.random.default_rng(3)
-    blocks = rng.integers(30, 200, (4, 5)).astype(np.uint8)
-    img = np.repeat(np.repeat(blocks, 8, 0), 8, 1)
-    rgb = np.stack([img] * 3, 2)
-    flat = np.ones((8, 8))
-
-    t_single = encode_tiff_jpeg(rgb, quant=flat)
-    assert np.array_equal(decode_tiff(t_single)[0], rgb)
-    t_multi = encode_tiff_jpeg(rgb, quant=flat, rows_per_strip=8)
-    assert np.array_equal(decode_tiff(t_multi)[0], rgb)
-    t_tables = encode_tiff_jpeg(rgb, quant=flat, rows_per_strip=16,
-                                use_jpeg_tables=True)
-    assert np.array_equal(decode_tiff(t_tables)[0], rgb)
-    # the shared-tables layout is genuinely abbreviated
-    assert len(t_tables) < len(t_multi)
-    t_mm = encode_tiff_jpeg(rgb, quant=flat, byte_order="MM",
-                            use_jpeg_tables=True)
-    assert np.array_equal(decode_tiff(t_mm)[0], rgb)
-
-    tex = rng.integers(0, 256, (24, 16, 3), dtype=np.uint8)
-    assert np.array_equal(decode_tiff(encode_tiff_jpeg(tex))[0],
-                          decode_jpeg(encode_jpeg(tex)))
-
-    pages = decode_tiff(encode_tiff_jpeg([rgb, rgb[:8]], quant=flat))
-    assert len(pages) == 2 and np.array_equal(pages[1], rgb[:8])
-
-    with pytest.raises(ValueError, match="multiple of 8"):
-        encode_tiff_jpeg(rgb, rows_per_strip=12)
-    with pytest.raises(ValueError, match="multiple of 16"):
-        encode_tiff_jpeg(rgb, rows_per_strip=24, subsample="420")
-    with pytest.raises(ValueError, match="\\(h, w, 3\\) uint8"):
-        encode_tiff_jpeg(img)                 # gray page: RGB required
-
-    # r14: JPEG-compressed TILES (tags 322-325, one stream per tile).
-    # Block-constant flat-quant content inverts bit-exactly through the
-    # tile grid (16-px tiles align with 8x8 blocks; edge padding
-    # replicates constant blocks), with and without shared JPEGTables,
-    # including non-multiple dims (padded grid + crop).
-    t_tiled = encode_tiff_jpeg(rgb, quant=flat, tile_size=(32, 16))
-    assert np.array_equal(decode_tiff(t_tiled)[0], rgb)
-    crop = rgb[:37, :51]
-    t_crop = encode_tiff_jpeg(crop, quant=flat, tile_size=(16, 16),
-                              use_jpeg_tables=True, byte_order="MM")
-    assert np.array_equal(decode_tiff(t_crop)[0], crop)
-    # textured content equals the per-tile JPEG round-trip exactly
-    tex2 = rng.integers(0, 256, (16, 32, 3), dtype=np.uint8)
-    got = decode_tiff(encode_tiff_jpeg(tex2, tile_size=(16, 16)))[0]
-    exp2 = np.concatenate(
-        [decode_jpeg(encode_jpeg(tex2[:, x:x + 16]))
-         for x in (0, 16)], axis=1)
-    assert np.array_equal(got, exp2)
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        encode_tiff_jpeg(rgb, rows_per_strip=8, tile_size=(16, 16))
-    with pytest.raises(ValueError, match="multiples of 16"):
-        encode_tiff_jpeg(rgb, tile_size=(8, 16))
-
-
-def test_tiff_gate_matches_closed_form(spark):
-    """The media_image_features_tiff gate: real IFD/strip/tile/LZW/
-    predictor decode of the synthesized gradient TIFFs — including the
-    r12 tiled (padded edge tiles) and 16-bit (× 257) classes — matches
-    the closed form."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from osm_pg_etl_spark.operators.multimodal import (
-        attach_synthetic_tiff, extract_image_features)
-
-    docs = spark.range(0, 40).select(F.col("id").alias("doc_id"))
-    feats = {r["doc_id"]: r for r in extract_image_features(
-        attach_synthetic_tiff(docs)).collect()}
-    for i in range(40):
-        cls = i % 10
-        if cls == 7:               # JPEG-in-TIFF, block-constant
-            w, h = (i % 3 + 1) * 8, 16
-            m = i * 19 % 103 + (i % 3) / 2.0 + 0.5
-        else:
-            big = cls in (0, 2)
-            w = i % 14 + (20 if big else 1)
-            h = i % 10 + (18 if big else 1)
-            scale = 257 if cls in (1, 2, 9) else 1
-            m = (i * 19 % 103 + (w - 1) / 2.0 + (h - 1) / 2.0) * scale
-        # palette class (5): affine LUT R=255-i, G=i, B=255-i
-        want = {"mean_r": 255 - m if cls == 5 else m,
-                "mean_g": m,
-                "mean_b": 255 - m if cls == 5 else m}
-        r = feats[i]
-        assert (r["width"], r["height"]) == (w, h), i
-        for c in ("mean_r", "mean_g", "mean_b"):
-            assert r[c] == pytest.approx(want[c], abs=1e-9), (i, c)
-
-
 def test_mjpeg_avi_roundtrip_and_features():
     """r11: REAL video decode. MJPEG-AVI container round-trips: block-
     constant flat-quant frames decode bit-exactly; textured default-table
@@ -1395,31 +501,6 @@ def test_mjpeg_avi_roundtrip_and_features():
     assert all(np.array_equal(a, b) for a, b in zip(frames, dec3))
 
 
-def test_video_gate_matches_closed_form(spark):
-    """The media_video_features gate: real container parse + per-frame
-    JPEG decode of the synthesized MJPEG-AVIs matches the closed-form
-    features."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from osm_pg_etl_spark.operators.multimodal import (
-        attach_synthetic_mjpeg, extract_video_features)
-
-    docs = spark.range(0, 25).select(F.col("id").alias("doc_id"))
-    feats = {r["doc_id"]: r for r in extract_video_features(
-        attach_synthetic_mjpeg(docs)).collect()}
-    for i in range(25):
-        wb, hb, n = i % 3 + 1, i % 2 + 1, i % 4 + 2
-        m = (i * 13 % 89 + (wb - 1) / 2.0 + (hb - 1) / 2.0
-             + (n - 1) / 2.0)
-        r = feats[i]
-        assert (r["width"], r["height"]) == (wb * 8, hb * 8)
-        assert (r["n_frames"], r["fps"]) == (n, 10.0)
-        assert r["mean_luma"] == pytest.approx(
-            0.299 * m + 0.587 * m + 0.114 * m, abs=1e-12), i
-        assert r["motion"] == pytest.approx(1.0, abs=1e-12), i
-
-
 def test_adpcm_fact_chunk_truncates_final_block_padding():
     """r9 ADVICE: externally produced ADPCM zero-pads the final block,
     inflating n_samples/duration/RMS/ZCR. The fact chunk declares the
@@ -1482,55 +563,6 @@ def test_wav_rejects_lossy_formats_loudly():
         decode_wav(bytes(wav))
 
 
-def test_resize_images_png_stays_png_with_alpha(spark):
-    """A large RGBA PNG resizes through the real decode→resample→PNG
-    re-encode path: mime stays image/png, the payload re-decodes, and
-    the alpha channel survives (P6 could not carry it)."""
-    import numpy as np
-
-    from osm_pg_etl_spark.functions.imagecodec import decode_png, encode_png
-    from osm_pg_etl_spark.operators.multimodal import resize_images
-
-    rng = np.random.default_rng(11)
-    big = rng.integers(0, 256, (300, 200, 4), dtype=np.uint8)
-    media = spark.createDataFrame(
-        [(1, bytearray(encode_png(big)),
-          {"kind": "image", "mime": "image/png", "width": 200,
-           "height": 300, "duration_ms": None})],
-        "doc_id long, content binary, media_meta struct<kind:string,"
-        "mime:string,width:int,height:int,duration_ms:int>")
-    out = resize_images(media, max_px=64).collect()[0]
-    assert out["media_meta"]["mime"] == "image/png"
-    assert out["media_meta"]["height"] == 64
-    arr = decode_png(bytes(out["content"]))
-    assert arr.shape == (64, 42, 4)          # aspect kept, alpha kept
-
-
-def test_image_features_alpha_channels_dropped():
-    """r8 review: decode_image can now return gray+alpha (H,W,2) and
-    RGBA (H,W,4) — image_features must drop alpha, not crash or fold it
-    into the channel means."""
-    import numpy as np
-    import pytest as _pytest
-
-    from osm_pg_etl_spark.functions.imagecodec import image_features
-
-    rgba = np.zeros((2, 2, 4), dtype=np.uint8)
-    rgba[:, :, 0] = 10
-    rgba[:, :, 1] = 20
-    rgba[:, :, 2] = 30
-    rgba[:, :, 3] = 255  # alpha must not contaminate the means
-    f = image_features(rgba)
-    assert (f["mean_r"], f["mean_g"], f["mean_b"]) == (10.0, 20.0, 30.0)
-
-    ga = np.full((3, 5, 2), 7, dtype=np.uint8)
-    ga[:, :, 1] = 200
-    f2 = image_features(ga)
-    assert f2["mean_r"] == f2["mean_g"] == f2["mean_b"] == 7.0
-    with _pytest.raises(ValueError, match="channel count"):
-        image_features(np.zeros((2, 2, 5), dtype=np.uint8))
-
-
 def test_adpcm_short_final_block_and_fragment():
     """r8 review: a truncated FINAL block (real encoders cut the last
     block to the sample count) must decode its samples, not vanish; a
@@ -1566,142 +598,3 @@ def test_ulaw_wav_rejects_zero_channels():
     with _pytest.raises(ValueError, match="layout"):
         decode_wav(bytes(wav))
 
-
-def test_tiff_raw_ycbcr():
-    """r13: RAW (non-JPEG) YCbCr, photometric 6 — TIFF6 §21 macropixel
-    data units with subsampling, tags 529/530/532. Gray gradients decode
-    BIT-exactly through every subsampling (chroma is exactly 128);
-    block-constant color round-trips within rounding; colorimetry other
-    than the Rec.601/full-range defaults raises."""
-    import struct
-
-    import numpy as np
-    import pytest
-
-    from osm_pg_etl_spark.functions.tiffcodec import decode_tiff, encode_tiff
-
-    g = (np.arange(13)[None, :] + np.arange(9)[:, None] + 40) \
-        .astype(np.uint8)
-    rgb = np.stack([g, g, g], axis=2)
-    for sub in ((1, 1), (2, 1), (2, 2)):
-        for bo in ("II", "MM"):
-            for comp in (1, 5, 32773):
-                out = decode_tiff(encode_tiff(
-                    rgb, compression=comp, byte_order=bo,
-                    rows_per_strip=4, ycbcr_subsampling=sub))[0]
-                assert np.array_equal(out, rgb), (sub, bo, comp)
-
-    # block-constant color: chroma means are exact, only the final
-    # round can move a channel by <=2
-    rng = np.random.RandomState(3)
-    col = np.repeat(np.repeat(
-        rng.randint(0, 256, (4, 6, 3), dtype=np.uint8), 2, 0), 2, 1)
-    out = decode_tiff(encode_tiff(col, compression=1,
-                                  ycbcr_subsampling=(2, 2)))[0]
-    assert np.abs(out.astype(int) - col.astype(int)).max() <= 2
-
-    # odd dims exercise the padded macropixel grid + final crop
-    odd = np.stack([g[:7, :11]] * 3, axis=2)
-    out = decode_tiff(encode_tiff(odd, compression=5,
-                                  ycbcr_subsampling=(2, 2)))[0]
-    assert np.array_equal(out, odd)
-
-    # boundaries: unsupported subsampling / non-RGB input at encode
-    with pytest.raises(ValueError, match="ycbcr_subsampling"):
-        encode_tiff(rgb, ycbcr_subsampling=(3, 1))
-    with pytest.raises(ValueError, match="uint8 RGB"):
-        encode_tiff(g, ycbcr_subsampling=(2, 2))
-
-    # non-Rec.601 coefficients raise at decode: patch tag 529's first
-    # rational (299/1000 -> 2126/10000, the Rec.709 LumaRed)
-    payload = bytearray(encode_tiff(rgb, compression=1,
-                                    ycbcr_subsampling=(2, 2)))
-    # find the coefficient block (little-endian 299,1000 pair)
-    pat = struct.pack("<II", 299, 1000)
-    at = bytes(payload).find(pat)
-    assert at > 0
-    payload[at:at + 8] = struct.pack("<II", 2126, 10000)
-    with pytest.raises(NotImplementedError, match="Rec.601"):
-        decode_tiff(bytes(payload))
-
-    # review fix (r14): more strips than the padded height needs raises
-    # the codec's loud-ValueError pattern, not a numpy reshape error —
-    # shrink ImageLength (tag 257) so the encoded strips overshoot
-    mal = bytearray(encode_tiff(rgb, compression=1, rows_per_strip=4,
-                                ycbcr_subsampling=(2, 2)))
-    off = struct.unpack("<I", mal[4:8])[0]
-    n = struct.unpack("<H", mal[off:off + 2])[0]
-    for i in range(n):
-        e = off + 2 + 12 * i
-        if struct.unpack("<H", mal[e:e + 2])[0] == 257:
-            mal[e + 8:e + 12] = struct.pack("<I", 4)
-    with pytest.raises(ValueError, match="strips exceed"):
-        decode_tiff(bytes(mal))
-
-
-def test_tiff_deflate_roundtrip():
-    """r15: Deflate (compression 8, the libtiff/GDAL zip default) and
-    its old-style alias 32946 round-trip bit-exactly across depths,
-    byte orders, the predictor, tiles, palette, CMYK, raw YCbCr and
-    multi-page files; corrupt streams fail loudly."""
-    import numpy as np
-    import pytest
-
-    from osm_pg_etl_spark.functions.tiffcodec import decode_tiff, encode_tiff
-
-    rng = np.random.default_rng(15)
-    g8 = rng.integers(0, 256, (23, 17), dtype=np.uint8)
-    g16 = rng.integers(0, 65536, (23, 17)).astype(np.uint16)
-    rgb = rng.integers(0, 256, (23, 17, 3), dtype=np.uint8)
-
-    def want(a):
-        return np.stack([a] * 3, axis=2) if a.ndim == 2 else a
-
-    for comp in (8, 32946):
-        for arr in (g8, g16, rgb):
-            for bo in ("II", "MM"):
-                for pred in (1, 2):
-                    out = decode_tiff(encode_tiff(
-                        arr, compression=comp, predictor=pred,
-                        byte_order=bo, rows_per_strip=4))[0]
-                    assert np.array_equal(out, want(arr)), \
-                        (comp, arr.dtype, bo, pred)
-    # predictor genuinely helps zlib on smooth content (and inverts)
-    grad = ((np.arange(50)[:, None] + np.arange(80)[None, :])
-            % 256).astype(np.uint8)
-    with_p = encode_tiff(grad, compression=8, predictor=2)
-    without = encode_tiff(grad, compression=8, predictor=1)
-    assert len(with_p) < len(without)
-    assert np.array_equal(decode_tiff(with_p)[0][:, :, 0], grad)
-    # tiled + 16-bit composed
-    big = (rng.integers(0, 65536, (37, 41))).astype(np.uint16)
-    out = decode_tiff(encode_tiff(big, compression=8,
-                                  tile_size=(16, 16)))[0]
-    assert np.array_equal(out, np.stack([big] * 3, axis=2))
-    # palette / CMYK / raw-YCbCr ride the generic compressor table
-    lut = np.arange(256, dtype=np.uint8)
-    pal = np.stack([255 - lut, lut, 255 - lut], axis=1)
-    idx = rng.integers(0, 256, (9, 11), dtype=np.uint8)
-    assert np.array_equal(
-        decode_tiff(encode_tiff(idx, compression=32946, palette=pal))[0],
-        pal[idx])
-    v = rng.integers(0, 256, (9, 11), dtype=np.uint8)
-    cmyk = np.stack([255 - v, 255 - v, 255 - v, np.zeros_like(v)], axis=2)
-    assert np.array_equal(
-        decode_tiff(encode_tiff(cmyk, compression=8, predictor=2))[0],
-        np.stack([v, v, v], axis=2))
-    gray = rng.integers(0, 256, (12, 14), dtype=np.uint8)
-    page = np.stack([gray] * 3, axis=2)
-    assert np.array_equal(
-        decode_tiff(encode_tiff(page, compression=8,
-                                ycbcr_subsampling=(2, 2),
-                                rows_per_strip=4))[0], page)
-    # multi-page
-    mp = decode_tiff(encode_tiff([g8, g16], compression=8))
-    assert np.array_equal(mp[0], want(g8))
-    assert np.array_equal(mp[1], want(g16))
-    # corrupt stream fails loudly
-    blob = bytearray(encode_tiff(g8, compression=8))
-    blob[-10:] = b"\x00" * 10
-    with pytest.raises(ValueError, match="Deflate"):
-        decode_tiff(bytes(blob))
