@@ -26,25 +26,30 @@ a cheap (count, hash-sum) fixpoint on the edge set.
 The loops share two drivers: :func:`_relax_frontier` (frontier
 Bellman-Ford, for every shortest-path operator) and :func:`_until_stable`
 (run until the observed signature repeats: components, the radius
-shortcut doubling, k-core). Weighted SSSP and components first solve
-each round inside node blocks in one grouped-map pandas step (heapq
-Dijkstra, union-find) and exchange only across blocks — the
+shortcut doubling, k-core). Weighted SSSP, components, pagerank and
+label propagation solve inside node blocks (:func:`_blocks`) in one
+grouped-map pandas step a round (heapq Dijkstra, union-find, numpy
+power iteration, numpy argmax) and exchange only across blocks — the
 partition-local-then-merge, graph-centric model of Tian et al., "From
-think like a vertex to think like a graph" (VLDB 2013). Static per-round
-tables live in :func:`_iter_cache` scopes, which release their cache on
-exit.
+think like a vertex to think like a graph" (VLDB 2013). A graph that
+fits in one block is solved by one step. Static per-round tables live
+in :func:`_cached` / :func:`_iter_cache` scopes, which release their
+cache on exit.
 """
 
 from __future__ import annotations
 
+import functools
 import heapq
 import itertools
 import math
 import types
 from contextlib import ExitStack, contextmanager
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # unique observed-metric names for _ckpt_observe (one per materialization;
@@ -54,18 +59,19 @@ _PROBE_SEQ = itertools.count()
 
 # cap on shortest_paths_radius's shortcut doubling (truncation is safe)
 _MAX_SHORTCUT_ROUNDS = 20
-# label_propagation checkpoints every this many rounds
-_LPA_CHECKPOINT_EVERY = 4
-# edges per node block of the block-local fixpoints (weighted SSSP,
-# components): one block's Dijkstra or union-find runs in one Python task.
-# A whole-block Dijkstra costs ~17 us and ~190 B of Python heap an edge
-# (scripts/block_curve.py local, linear to 400k edges), so a block of
-# this size is ~17 s and ~200 MB. Blocks are id ranges, and where ids do
-# not follow the graph's locality nearly every edge crosses blocks, so
-# more blocks bring back the per-hop rounds: on 800k edges (four
-# id-scrambled sf0.1 car graphs, 4 cores) one block ran SSSP in 6.5 s and
-# components in 5.8 s, 16 blocks in 29.3 s (15 rounds) and 13.9 s, and
-# the per-hop loop and full-graph star contraction in 19.4 s and 13.9 s.
+# edges per node block of the block-local steps (weighted SSSP,
+# components, pagerank, label propagation): one block's step runs in one
+# Python task. A whole-block Dijkstra costs ~17 us and ~190 B of Python
+# heap an edge, so a block of this size is ~17 s and ~200 MB; pagerank's
+# ten numpy iterations cost ~0.5 us and ~36 B an edge, and label
+# propagation's four numpy rounds ~3.1 us and ~81 B a symmetric edge
+# (scripts/block_curve.py local, linear to 400k edges). Blocks are id
+# ranges, and where ids do not follow the graph's locality nearly every
+# edge crosses blocks, so more blocks bring back the per-hop rounds: on
+# 800k edges (four id-scrambled sf0.1 car graphs, 4 cores) one block ran
+# SSSP in 6.5 s and components in 5.8 s, 16 blocks in 29.3 s (15 rounds)
+# and 13.9 s, and the per-hop loop and full-graph star contraction in
+# 19.4 s and 13.9 s.
 _BLOCK_EDGES = 1_000_000
 # node-id quantiles the block ranges are cut at (_blocks)
 _BLOCK_PROBES = 1024
@@ -206,52 +212,72 @@ def _until_stable(step, state: DataFrame, metrics: tuple,
     return state, rounds
 
 
-def _block_metrics(u: str, v: str, *keys: str) -> tuple:
-    """Observed aggregates behind :func:`_blocks`, for an edge table with
-    endpoint columns ``u`` and ``v`` whose edges a block holds by the
-    node-id columns ``keys``: its edge count, its min and max node id,
-    and the ``_BLOCK_PROBES``-quantiles of each key column."""
-    probes = [i / _BLOCK_PROBES for i in range(1, _BLOCK_PROBES)]
+def _block_metrics(u: str, v: str) -> tuple:
+    """Observed aggregates behind :func:`_blocks` for an edge table with
+    endpoint columns ``u`` and ``v``: its edge count and its min and max
+    node id."""
     return (F.count(F.lit(1)).alias("n"),
             F.min(F.least(u, v)).alias("lo"),
-            F.max(F.greatest(u, v)).alias("hi"),
-            *(F.percentile_approx(k, probes, 10 * _BLOCK_PROBES)
-              .alias(f"q_{k}") for k in keys))
+            F.max(F.greatest(u, v)).alias("hi"))
 
 
-def _blocks(m: dict):
-    """Node blocks for an edge table whose :func:`_block_metrics` are
-    ``m``: ceil(n / _BLOCK_EDGES) node-id ranges cut at quantiles of the
-    key columns, so each block holds about ``_BLOCK_EDGES`` edges however
-    the ids are spread (while there are fewer blocks than quantile
-    probes; a single node's edges always share a block), and a graph of
-    at most ``_BLOCK_EDGES`` edges is one block. When there are at least
-    as many blocks as ids in [lo, hi], every id is its own block. The
-    rule is derived from the input alone, and every id, also one outside
-    [lo, hi] (a source with no edge), lands in some block. Returns ``block(col)``: the block-id
-    column of the node-id column named ``col``."""
+def _one_block(m: dict) -> bool:
+    """Whether an edge table whose :func:`_block_metrics` are ``m`` fits in
+    one node block: at most ``_BLOCK_EDGES`` edges."""
+    return m["n"] <= _BLOCK_EDGES
+
+
+def _blocks(e: DataFrame, m: dict, *keys: str):
+    """Node blocks for the edge table ``e`` whose :func:`_block_metrics`
+    are ``m`` and whose edges a block holds by the node-id columns
+    ``keys``: ceil(n / _BLOCK_EDGES) node-id ranges cut at quantiles of
+    the key columns, so each block holds about ``_BLOCK_EDGES`` edges
+    however the ids are spread (while there are fewer blocks than
+    quantile probes; a single node's edges always share a block), and a
+    graph of at most ``_BLOCK_EDGES`` edges is one block. When there are
+    at least as many blocks as ids in [lo, hi], every id is its own
+    block. Only a graph between those two cases reads its quantiles,
+    with one aggregate job over ``e``. The rule is derived from the input
+    alone, and every id, also one outside [lo, hi] (a source with no
+    edge), lands in some block. Returns ``block(col)``: the block-id
+    column (long, like the ids) of the node-id column named ``col``."""
     count = math.ceil(m["n"] / _BLOCK_EDGES)
     if m["n"] and count >= m["hi"] - m["lo"] + 1:
         return F.col
-    # the key columns' quantiles are equal-mass samples of their union
-    qs = sorted(x for k, q in m.items() if k.startswith("q_")
-                for x in q or ())
-    cuts = sorted({qs[len(qs) * j // count] for j in range(1, count)})
-    if not cuts:
+    if _one_block(m):
         # one block, as a column and not a literal: repartitioning on a
         # constant key gives a single-partition exchange, which every
         # round's cogroup would then shuffle again
         return lambda col: F.col(col) * 0
+    probes = [i / _BLOCK_PROBES for i in range(1, _BLOCK_PROBES)]
+    row = e.agg(*(F.percentile_approx(k, probes, 10 * _BLOCK_PROBES)
+                  for k in keys)).first()
+    # the key columns' quantiles are equal-mass samples of their union
+    qs = sorted(x for q in row for x in q or ())
+    cuts = sorted({qs[len(qs) * j // count] for j in range(1, count)})
 
     def block(col, first=0, last=len(cuts)):
         # blocks first..last, split at cuts[first:last]: binary search
         if first == last:
-            return F.lit(first)
+            return F.lit(first).cast("long")
         mid = (first + last + 1) // 2
         return F.when(F.col(col) < cuts[mid - 1],
                       block(col, first, mid - 1)).otherwise(
                           block(col, mid, last))
     return block
+
+
+def _release(ck: DataFrame) -> None:
+    """Unpersist the RDD behind the ``localCheckpoint`` ``ck`` once nothing
+    reads it anymore (a round loop's previous state after the next state
+    is materialized). A checkpoint's RDD otherwise stays persisted until
+    the JVM collects its DataFrame. Reaches the RDD through the
+    checkpoint's LogicalRDD leaf (private API); where a Spark version
+    moves it, the RDD is left to the JVM."""
+    try:
+        ck._jdf.logicalPlan().rdd().unpersist(False)
+    except Py4JError:
+        pass
 
 
 def _relax_frontier(dist: DataFrame, relax, keys: list[str],
@@ -318,6 +344,18 @@ def _by_value(fn):
     package, which the driver may have on its ``sys.path`` alone."""
     return types.FunctionType(fn.__code__, fn.__globals__, fn.__name__,
                               fn.__defaults__, fn.__closure__)
+
+
+def _whole(df: DataFrame, step, schema: str) -> DataFrame:
+    """The block step ``step`` applied to all of ``df`` as one block: one
+    task reads every partition and concatenates its Arrow batches, so
+    the step runs without the exchange a one-key ``groupBy`` would
+    plan."""
+    def run(batches):
+        frames = list(batches)
+        if frames:
+            yield step(pd.concat(frames, ignore_index=True))
+    return df.coalesce(1).mapInPandas(run, schema)
 
 
 def _block_dijkstra(state: pd.DataFrame, edges: pd.DataFrame) -> pd.DataFrame:
@@ -459,8 +497,8 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         .select(F.greatest("s", "d").alias("a"), F.least("s", "d").alias("b"))
         .where(F.col("a") != F.col("b"))
         .distinct(),
-        *_block_metrics("a", "b", "a", "b"))
-    block = _blocks(m)
+        *_block_metrics("a", "b"))
+    block = _blocks(e, m, "a", "b")
     # every edge goes to the blocks of both its endpoints, so each block
     # sees all of its nodes, also those whose every edge crosses
     reps, x = _ckpt_observe(
@@ -563,14 +601,13 @@ def shortest_paths_weighted(edges: DataFrame, source,
     Block-local rounds (:func:`_relax_frontier` with a local step): the
     nodes fall into id-range blocks derived from the input
     (:func:`_blocks`: about ``_BLOCK_EDGES`` edges a block, cut at id
-    quantiles observed in the edge table's checkpoint job). Each round
-    cogroups the state with the edges by block in one grouped-map pandas
-    step, which runs a heapq Dijkstra per block and source from the rows
-    that improved in the previous round (:func:`_block_dijkstra`) and
-    relaxes the edges that leave the block; blocks without such a row
-    stay out of the step. The merge of the cross-block candidates
-    decides the next round's dirty rows, and the loop stops when it
-    improves none.
+    quantiles of the edge table). Each round cogroups the state with the
+    edges by block in one grouped-map pandas step, which runs a heapq
+    Dijkstra per block and source from the rows that improved in the
+    previous round (:func:`_block_dijkstra`) and relaxes the edges that
+    leave the block; blocks without such a row stay out of the step. The
+    merge of the cross-block candidates decides the next round's dirty
+    rows, and the loop stops when it improves none.
     ``rounds`` and ``max_rounds`` therefore count block crossings of the
     shortest-path tree: a graph that fits in one block solves in one
     round, and with one node per block the rounds are exactly the per-hop
@@ -613,7 +650,7 @@ def shortest_paths_weighted(edges: DataFrame, source,
         edges.select(F.col(src).cast("long").alias("u"),
                      F.col(dst).cast("long").alias("v"),
                      F.col(weight).cast("double").alias("w")),
-        *_block_metrics("u", "v", "u"),
+        *_block_metrics("u", "v"),
         F.count(F.when(u.isNull() | v.isNull() | w.isNull() | F.isnan(w)
                        | (w < 0), 1)).alias("bad"))
     if m["bad"]:
@@ -621,7 +658,7 @@ def shortest_paths_weighted(edges: DataFrame, source,
             f"shortest_paths_weighted: {m['bad']} edges have a NULL "
             "endpoint or a negative, NaN or NULL weight; distances need "
             "node ids and non-negative weights")
-    block = _blocks(m)
+    block = _blocks(e, m, "u")
     # keyed on the block of u: every round cogroups the static edge list
     # with the state by block without re-shuffling or re-sorting it
     with _cached(e.select("u", "v", "w", block("u").alias("blk"),
@@ -1252,6 +1289,79 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst",
         .otherwise(F.lit(0.0)))
 
 
+def _block_pagerank(edges: pd.DataFrame, state: pd.DataFrame | None = None,
+                    *, iters: int, n: int | None, m: float | None,
+                    damping: float, seeds: list[int] | None,
+                    cross: bool) -> pd.DataFrame:
+    """Power-iteration step of :func:`pagerank` for one node block.
+    ``edges`` holds the edges (``u``, ``v``, ``intra``: whether ``v`` is
+    in the block too) leaving the block's nodes. ``state`` holds a row
+    (``node``, ``pr``) per node of the block, ``pr`` NaN before the first
+    iteration, and the rows (``node``, ``c``) that carry the summed
+    contributions of the other blocks' edges into a node; it is None for
+    a graph of one block, whose nodes are the endpoints of ``edges``.
+
+    Runs ``iters`` iterations of
+
+        pr(v) ← ((1-d)/n + (d·m)/n) + d · Σ_{u→v} pr(u)/outdeg(u)
+
+    in that operation order (the gate oracle's), the teleport term only
+    on the ``seeds`` when given. ``m`` is the dangling mass (rank on
+    nodes without out-edges) of the ranks the step starts from, summed
+    over all blocks; None computes it from the block, which then is the
+    whole graph. ``n`` is None for the block's node count, likewise.
+    Returns (``node``, ``pr``, ``c``, ``dang``): a row per node of the
+    block with its rank and whether it is dangling, and with ``cross``,
+    per node outside the block the summed contributions of the block's
+    cross edges, ``pr`` NaN (NULL in Spark). Duplicate edges count once:
+    a node's out-edges are all in its block."""
+    uv, first = np.unique(edges[["u", "v"]].to_numpy(np.int64), axis=0,
+                          return_index=True)
+    u, v = uv.T
+    intra = edges["intra"].to_numpy(bool)[first]
+    if state is None:
+        nodes = np.unique(np.concatenate([u, v]))
+        pr = np.full(len(nodes), np.nan)
+        xin = 0.0
+    else:
+        c = state["c"].to_numpy(np.float64)
+        msg = ~np.isnan(c)
+        own = state[~msg].sort_values("node")
+        nodes = own["node"].to_numpy(np.int64)
+        pr = own["pr"].to_numpy(np.float64)
+        xin = np.bincount(
+            np.searchsorted(nodes, state["node"].to_numpy(np.int64)[msg]),
+            weights=c[msg], minlength=len(nodes))
+    n = len(nodes) if n is None else n
+    seed = (np.ones(len(nodes), bool) if seeds is None
+            else np.isin(nodes, seeds))
+    pr = np.where(np.isnan(pr), np.where(seed, 1.0 / n, 0.0), pr)
+    ui = np.searchsorted(nodes, u)
+    vi = np.searchsorted(nodes, v[intra])
+    outdeg = np.bincount(ui, minlength=len(nodes))
+    dang = outdeg == 0
+    tele = (1.0 - damping) / n
+    for _ in range(iters):
+        if m is None:
+            m = pr[dang].sum()
+        share = pr / np.maximum(outdeg, 1)
+        inflow = np.bincount(vi, weights=share[ui[intra]],
+                             minlength=len(nodes)) + xin
+        pr = np.where(seed, tele + (damping * m) / n, 0.0) + damping * inflow
+        m, xin = None, 0.0
+    out = pd.DataFrame({"node": nodes, "pr": pr, "c": np.nan, "dang": dang})
+    if cross:
+        x = ~intra
+        targets, inv = np.unique(v[x], return_inverse=True)
+        share = pr / np.maximum(outdeg, 1)
+        out = pd.concat([out, pd.DataFrame({
+            "node": targets, "pr": np.nan,
+            "c": np.bincount(inv, weights=share[ui[x]],
+                             minlength=len(targets)),
+            "dang": False})], ignore_index=True)
+    return out
+
+
 def pagerank(edges: DataFrame, n_iter: int = 10, damping: float = 0.85,
              src: str = "src", dst: str = "dst") -> DataFrame:
     """Power-iteration PageRank over a directed edge list — the standard
@@ -1261,9 +1371,20 @@ def pagerank(edges: DataFrame, n_iter: int = 10, damping: float = 0.85,
 
         pr(v) ← (1-d)/n + d · (Σ_{u→v} pr(u)/outdeg(u) + dangling/n)
 
-    with the dangling mass redistributed uniformly, so total mass stays 1
-    and the result is partition-independent (each iteration is one
-    join + groupBy-sum keyed on node id; lineage truncated per round).
+    with the dangling mass redistributed uniformly, so total mass stays 1.
+
+    A graph of at most ``_BLOCK_EDGES`` edge rows (counted in the edge
+    table's checkpoint job) is one node block: one numpy step
+    (:func:`_block_pagerank`, run by :func:`_whole`) runs all ``n_iter``
+    iterations and its output is the result. A larger graph is cut into
+    id-range blocks (:func:`_blocks`) holding their nodes' out-edges, and
+    each round runs one iteration per block in one grouped-map step,
+    which emits the block's ranks and its cross edges' contributions
+    summed per target node; the next round's step adds those to the
+    block-local inflow. The node count and each round's global dangling
+    mass are observed in the checkpoint jobs (:func:`_ckpt_observe`), and
+    a round releases the previous round's checkpoint. Ranks differ
+    between block layouts only in the order of floating-point sums.
     Returns (node, pagerank) over all nodes appearing in ``edges``."""
     return _power_iteration(edges, None, n_iter, damping, src, dst)
 
@@ -1276,8 +1397,9 @@ def personalized_pagerank(edges: DataFrame, seeds: list[int],
     to the trusted seed set — the seed-expansion ranking a curation
     pipeline uses to grade documents by link-closeness to a known-good
     core (the CommonCrawl-style "rank from Wikipedia seeds" recipe).
-    Same fixed-iteration synchronous machinery as :func:`pagerank`;
-    total mass stays 1 over the seeded surface."""
+    Same block steps as :func:`pagerank`, with n = ``len(seeds)``
+    (duplicates and ids absent from the graph included); total mass
+    stays 1 over the seeded surface."""
     return _power_iteration(edges, [int(s) for s in seeds], n_iter,
                             damping, src, dst)
 
@@ -1285,67 +1407,50 @@ def personalized_pagerank(edges: DataFrame, seeds: list[int],
 def _power_iteration(edges: DataFrame, seeds: list[int] | None,
                      n_iter: int, damping: float,
                      src: str, dst: str) -> DataFrame:
-    with ExitStack() as scope:
-        e = scope.enter_context(_cached(
-            edges.select(F.col(src).cast("long").alias("u"),
-                         F.col(dst).cast("long").alias("v"))
-            .distinct()))
-        nodes = scope.enter_context(_cached(
+    # duplicate edges stay in: the steps drop them
+    e, m = _ckpt_observe(
+        edges.select(F.col(src).cast("long").alias("u"),
+                     F.col(dst).cast("long").alias("v")),
+        *_block_metrics("u", "v"))
+    n = None if seeds is None else len(seeds)
+    step = functools.partial(_by_value(_block_pagerank), damping=damping,
+                             seeds=seeds)
+    schema = "node long, pr double, c double, dang boolean"
+    if _one_block(m):
+        return _whole(e.select("u", "v", F.lit(True).alias("intra")),
+                      functools.partial(step, state=None, iters=n_iter,
+                                        n=n, m=None, cross=False),
+                      schema).select("node", F.col("pr").alias("pagerank"))
+    block = _blocks(e, m, "u")
+    # keyed on the block of u: every round cogroups the static edge list
+    # with the state by block without re-shuffling or re-sorting it
+    with _cached(e.select("u", "v", block("u").alias("blk"),
+                          (block("v") == block("u")).alias("intra"))
+                 .repartition("blk").sortWithinPartitions("blk")) as edges:
+        null = F.lit(None).cast("double")
+        state, k = _ckpt_observe(
             e.select(F.col("u").alias("node"))
             .unionByName(e.select(F.col("v").alias("node")))
-            .distinct()))
-        n = nodes.count() if seeds is None else len(seeds)
-        out = e.groupBy("u").agg(F.count(F.lit(1)).alias("outdeg"))
-        # keyed on u: every power iteration joins pr on links["u"]
-        links = scope.enter_context(
-            _iter_cache(e.join(out, "u").select("u", "v", "outdeg"), "u"))
-        if seeds is None:
-            is_seed = F.lit(True)
-            pr = nodes.select("node", F.lit(1.0 / n).alias("pr"))
-        else:
-            is_seed = F.col("node").isin(seeds)
-            pr = nodes.select(
-                "node",
-                F.when(is_seed, F.lit(1.0 / n)).otherwise(F.lit(0.0))
-                .alias("pr"))
-        for i in range(n_iter):
-            contrib = (links.join(pr, links["u"] == pr["node"])
-                       .select(F.col("v").alias("node"),
-                               (F.col("pr") / F.col("outdeg")).alias("w")))
-            inflow = contrib.groupBy("node").agg(F.sum("w").alias("inflow"))
-            # dangling nodes (no out-edges) leak their mass; redistribute
-            # it. Computed as a broadcast one-row aggregate inside the
-            # plan — no driver action per iteration, the whole round stays
-            # one lazy DAG
-            dang = (pr.join(out.select(F.col("u").alias("node")),
-                            "node", "left_anti")
-                    .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("_m")))
-            base = (F.lit((1.0 - damping) / n)
-                    + (F.lit(damping) * F.col("_m")) / F.lit(float(n)))
-            # seeded runs teleport only to the seed set
-            base = base if seeds is None else \
-                F.when(is_seed, base).otherwise(F.lit(0.0))
-            pr = (nodes.join(inflow, "node", "left")
-                  .crossJoin(F.broadcast(dang))
-                  .select("node",
-                          (base
-                           + F.lit(damping) * F.coalesce("inflow", F.lit(0.0)))
-                          .alias("pr")))
-            # materialize every SECOND round — the iteration count is fixed
-            # (no per-round probe), so two rounds ride one checkpoint job
-            # (guide §9 pattern). In the unmaterialized round the next
-            # round's three references to ``pr`` (contrib, dang, the
-            # update) re-read the same subtree, but its inflow exchange and
-            # dangling broadcast are deduped by ReuseExchange, so the
-            # duplicated work is two node-sized post-shuffle joins — less
-            # than a job barrier + full materialization locally, and one
-            # fewer full pass over the rank table per pair of rounds at
-            # scale. The LAST round is always materialized: the scope
-            # releases the caches on exit, so the returned plan must not
-            # read them.
-            if i % 2 == 1 or i == n_iter - 1:
-                pr = pr.localCheckpoint()
-    return pr.select("node", F.col("pr").alias("pagerank"))
+            .distinct()
+            .select("node", null.alias("pr"), null.alias("c"),
+                    F.lit(False).alias("dang")),
+            F.count(F.lit(1)).alias("n"))
+        n = k["n"] if n is None else n
+        mass = F.coalesce(F.sum(F.when(F.col("dang"), F.col("pr"))),
+                          F.lit(0.0)).alias("m")
+        # round 0 emits the starting ranks and their cross contributions
+        for i in range(n_iter + 1):
+            nxt, k = _ckpt_observe(
+                edges.groupBy("blk")
+                .cogroup(state.withColumn("blk", block("node"))
+                         .groupBy("blk"))
+                .applyInPandas(functools.partial(
+                    step, iters=min(i, 1), n=n, m=k.get("m"),
+                    cross=i < n_iter), schema),
+                mass)
+            _release(state)
+            state = nxt
+    return state.select("node", F.col("pr").alias("pagerank"))
 
 
 def dedup_clusters(docs: DataFrame, pairs: DataFrame,
@@ -1395,6 +1500,60 @@ def dedup_canonical_by(docs: DataFrame, pairs: DataFrame, score_col: str,
                     .alias("is_canonical")))
 
 
+def _block_lpa(edges: pd.DataFrame, state: pd.DataFrame | None = None,
+               *, rounds: int, ghosts: bool) -> pd.DataFrame:
+    """Label-propagation step of :func:`label_propagation` for one node
+    block ``blk``. ``edges`` holds the symmetric edges (``a``, ``b``, and
+    ``ba``, the block of ``a``) into the block's nodes ``b``. ``state``
+    holds the current label of every node the step reads: the block's
+    own nodes and the other blocks' nodes ``a`` of its cross edges. A
+    node without a label row (every node before the first round) carries
+    its own id.
+
+    Runs ``rounds`` rounds in which every node adopts the most frequent
+    label among its neighbours, ties to the smallest label, as one
+    lexsort per round. More than one round needs every ``a`` in the
+    block, i.e. a graph of one block. Returns (``blk``, ``node``,
+    ``label``): a row per node of the block, and with ``ghosts``, the
+    block's nodes that other blocks read, each once per reading block
+    ``blk``."""
+    a = edges["a"].to_numpy(np.int64)
+    b = edges["b"].to_numpy(np.int64)
+    nodes = np.unique(b)
+    labels = nodes
+    if state is None or state.empty:
+        la = a
+    else:
+        st = state.sort_values("node")
+        keys = st["node"].to_numpy(np.int64)
+        la = st["label"].to_numpy(np.int64)[np.searchsorted(keys, a)]
+    for r in range(rounds):
+        if r:
+            la = labels[np.searchsorted(nodes, a)]
+        # runs of equal (b, label), then per b the longest run, ties to
+        # the smallest label
+        o = np.lexsort((la, b))
+        bs, ls = b[o], la[o]
+        run = np.flatnonzero(np.r_[True, (bs[1:] != bs[:-1])
+                                   | (ls[1:] != ls[:-1])])
+        count = np.diff(np.r_[run, len(bs)])
+        rb, rl = bs[run], ls[run]
+        o = np.lexsort((rl, -count, rb))
+        rb, rl = rb[o], rl[o]
+        labels = rl[np.r_[True, rb[1:] != rb[:-1]]]
+    blk = edges["blk"].iat[0]
+    out = pd.DataFrame({"blk": blk, "node": nodes, "label": labels})
+    if ghosts:
+        ba = edges["ba"].to_numpy(np.int64)
+        x = ba != blk
+        read = np.unique(np.stack([ba[x], b[x]]), axis=1)
+        out = pd.concat([out, pd.DataFrame({
+            "blk": read[0], "node": read[1],
+            "label": labels[np.searchsorted(nodes, read[1])]})],
+            ignore_index=True)
+    return out
+
+
 def label_propagation(edges: DataFrame, n_iter: int = 4,
                       src: str = "src", dst: str = "dst") -> DataFrame:
     """Community detection by synchronous label propagation, determinized
@@ -1405,60 +1564,49 @@ def label_propagation(edges: DataFrame, n_iter: int = 4,
     Every node starts with its own id as its label; each round every node
     simultaneously adopts the most frequent label among its neighbours,
     ties broken by the smallest label (classic LPA is randomized — the
-    (count DESC, label ASC) tie-break makes the result a pure function of
-    the edge set, so it is stable under partitioning and retries and
-    oracle-checkable). Fixed ``n_iter`` rounds rather than a convergence
-    test: LPA on near-clique communities stabilizes in a few rounds, and a
-    fixed unroll keeps the DuckDB oracle expressible.
+    (count DESC, label ASC) tie-break, ``mode(label, deterministic=True)``,
+    makes the result a pure function of the edge set, so it is stable
+    under partitioning and retries and oracle-checkable). Fixed ``n_iter``
+    rounds rather than a convergence test: LPA on near-clique communities
+    stabilizes in a few rounds, and a fixed unroll keeps the DuckDB oracle
+    expressible.
 
-    Per round: one equi-join of the label table to the symmetric edge list
-    on the source key + the (count DESC, label ASC) argmax per node,
-    written as one shuffle and two plain aggregates: the joined
-    (b, label) rows are hash-partitioned on ``b`` once — hash(b) clusters
-    (b, label), so the label-count aggregate, the argmax aggregate and
-    the NEXT round's join on the renamed key all reuse that single
-    exchange. ``min(struct(-count, label))`` is exactly
-    ``mode(label, deterministic=True)`` (most frequent, ties to the
-    lowest — count negation is exact on longs); the mode formulation it
-    replaces shuffled ObjectHashAggregate value→count map buffers (an
-    object aggregate with a 128-key sort-based fallback) where this
-    shuffles plain rows through codegen'd hash + sort aggregates.
-    Equivalence pinned by test_lpa_two_phase_argmax_equals_mode. All
-    shuffles are keyed on node id; nothing is collected to the driver.
-
-    The edge table is a plain ``localCheckpoint``, not ``_iter_cache``
-    (hash-partition on the round join key + sort + cache): with only
-    ``n_iter`` = 4 keyed rounds the extra partition+sort+cache-store pass
-    and the pinned partition count (which AQE can no longer coalesce at
-    small scale) cost more than the four saved edge-side exchanges (the
-    A/B is recorded in OPTIMIZATION_r15.md §1). The many-round operators
-    (pagerank, betweenness, Bellman-Ford SSSP — tens of keyed rounds over
-    the same static table) do amortize the build and ride
-    ``_iter_cache``.
+    The symmetric edges are keyed by the node block of ``b``
+    (:func:`_blocks`), so a block holds every edge into its nodes. A
+    graph of at most ``_BLOCK_EDGES`` edges is one block: one numpy step
+    (:func:`_block_lpa`, run by :func:`_whole`) runs all ``n_iter``
+    rounds. A larger graph runs one round a round in a grouped-map step
+    per block: each block's step emits its nodes' labels and, for the
+    blocks whose edges read them (cross-block neighbours), a copy of
+    those labels; a round releases the previous round's checkpoint.
+    Labels are integers, so every block layout gives the same result.
     Returns (node, community).
     """
-    e = symmetric_edges(edges, src, dst).localCheckpoint()
-    labels = (e.select(F.col("a").alias("id")).distinct()
-              .withColumn("label", F.col("id")))
-    for i in range(n_iter):
-        labels = (e.join(labels.withColumnRenamed("id", "a"), "a")
-                  .select("b", "label")
-                  .repartition("b")
-                  .groupBy("b", "label")
-                  .agg(F.count(F.lit(1)).alias("_n"))
-                  .groupBy(F.col("b").alias("id"))
-                  .agg(F.min(F.struct((-F.col("_n")).alias("nn"),
-                                      F.col("label").alias("lb")))
-                       .alias("_w"))
-                  .select("id", F.col("_w.lb").alias("label")))
-        # mid-run lineage truncation only for LONG runs: each checkpoint
-        # is a full job barrier (~0.35 s locally), so short fixed unrolls
-        # (the 4-round gate) run as one multi-stage job, while plan depth
-        # stays bounded when callers iterate dozens of rounds
-        if (i + 1) % _LPA_CHECKPOINT_EVERY == 0 and i + 1 < n_iter:
-            labels = labels.localCheckpoint()
-    return labels.select(F.col("id").alias("node"),
-                         F.col("label").alias("community"))
+    e, m = _ckpt_observe(symmetric_edges(edges, src, dst),
+                         *_block_metrics("a", "b"))
+    block = _blocks(e, m, "b")
+    step = _by_value(_block_lpa)
+    schema = "blk long, node long, label long"
+    e = e.select("a", "b", block("a").alias("ba"), block("b").alias("blk"))
+    if _one_block(m):
+        labels = _whole(e, functools.partial(step, state=None,
+                                             rounds=n_iter, ghosts=False),
+                        schema)
+    else:
+        # keyed on the block of b: every round cogroups the static edge
+        # list with the labels by block without re-shuffling it
+        with _cached(e.repartition("blk").sortWithinPartitions("blk")) as e:
+            labels = e.sparkSession.createDataFrame([], schema)
+            for i in range(max(n_iter, 1)):
+                nxt = (e.groupBy("blk").cogroup(labels.groupBy("blk"))
+                       .applyInPandas(functools.partial(
+                           step, rounds=min(n_iter, 1),
+                           ghosts=i < n_iter - 1), schema)
+                       .localCheckpoint())
+                if i:
+                    _release(labels)
+                labels = nxt
+    return labels.select("node", F.col("label").alias("community"))
 
 
 def _louvain_round(wedges: DataFrame, labels: DataFrame, deg: DataFrame,

@@ -1851,10 +1851,10 @@ def q_osm_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph_algo import label_propagation, modularity_of
 
     d, cn, merged = _shared_network(spark, sf_dir)
-    # r15: checkpoint the edge list ONCE — label_propagation and
-    # modularity_of each build their own symmetric view of it, and
-    # without this the whole derive→car_network→merged_network pipeline
-    # executed twice (once per operator's internal checkpoint)
+    # checkpoint the edge list once: label_propagation and modularity_of
+    # each build their own symmetric view of it, so without this the
+    # whole derive→car_network→merged_network pipeline would run twice
+    # (once per operator's internal checkpoint)
     edges = (merged.select(F.col("start_node").alias("src"),
                            F.col("end_node").alias("dst"))
              .localCheckpoint())

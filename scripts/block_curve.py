@@ -1,10 +1,12 @@
 """Per-block cost curve behind ``graph_algo._BLOCK_EDGES``.
 
 ``local``: time and peak Python heap (tracemalloc) of one block's
-Dijkstra (``_block_dijkstra``, from one dirty source) and union-find
-(``_block_union_find``), in plain pandas, on seeded random blocks of E
-edges with ten out-edges a node (the shape of the synthetic OSM car
-graph). One row per E.
+Dijkstra (``_block_dijkstra``, from one dirty source), union-find
+(``_block_union_find``), pagerank (``_block_pagerank``, the
+``pagerank`` default of 10 iterations) and label propagation
+(``_block_lpa``, the ``label_propagation`` default of 4 rounds), in
+plain pandas, on seeded random blocks of E edges with ten out-edges a
+node (the shape of the synthetic OSM car graph). One row per E.
 
 ``spark <sf_dir>``: the two operators on the directed car graph of
 ``sf_dir`` with ``_BLOCK_EDGES`` set to each value given (default a
@@ -42,7 +44,14 @@ def _block(n_edges: int, seed: int = 1):
     state = pd.DataFrame({"s": [0], "node": [0], "dist": [0.0],
                           "dirty": [True]})
     pairs = pd.DataFrame({"a": u, "b": v, "ba": 0, "bb": 0, "blk": 0})
-    return state, edges, pairs[pairs["a"] != pairs["b"]]
+    pairs = pairs[pairs["a"] != pairs["b"]]
+    # the distinct directed edges pagerank reads, and their symmetric
+    # closure label propagation reads
+    links = edges[["u", "v", "intra"]].drop_duplicates(["u", "v"])
+    sym = pd.concat([pairs[["a", "b"]],
+                     pairs[["b", "a"]].set_axis(["a", "b"], axis=1)])
+    sym = sym.drop_duplicates().assign(ba=0, blk=0)
+    return state, edges, pairs, links, sym
 
 
 def _measure(fn, *args):
@@ -57,13 +66,22 @@ def _measure(fn, *args):
 
 def run_local(sizes: list[int]) -> None:
     print(f"{'edges':>9} {'dijkstra_s':>10} {'dijkstra_MiB':>12} "
-          f"{'unionfind_s':>11} {'unionfind_MiB':>13} {'rows_out':>9}")
+          f"{'unionfind_s':>11} {'unionfind_MiB':>13} {'rows_out':>9} "
+          f"{'pagerank_s':>10} {'pagerank_MiB':>12} {'lpa_s':>7} "
+          f"{'lpa_MiB':>7}")
     for n in sizes:
-        state, edges, pairs = _block(n)
+        state, edges, pairs, links, sym = _block(n)
         out, dt_d, mb_d = _measure(ga._block_dijkstra, state, edges)
         _, dt_u, mb_u = _measure(ga._block_union_find, pairs)
+        _, dt_p, mb_p = _measure(
+            lambda e: ga._block_pagerank(e, None, iters=10, n=None, m=None,
+                                         damping=0.85, seeds=None,
+                                         cross=False), links)
+        _, dt_l, mb_l = _measure(
+            lambda e: ga._block_lpa(e, None, rounds=4, ghosts=False), sym)
         print(f"{n:>9} {dt_d:>10.3f} {mb_d:>12.1f} {dt_u:>11.3f} "
-              f"{mb_u:>13.1f} {len(out):>9}", flush=True)
+              f"{mb_u:>13.1f} {len(out):>9} {dt_p:>10.3f} {mb_p:>12.1f} "
+              f"{dt_l:>7.3f} {mb_l:>7.1f}", flush=True)
 
 
 def run_spark(sf_dir: str, values: list[float]) -> None:

@@ -1,12 +1,14 @@
-"""The block-local steps of weighted SSSP and connected components
-(operators.graph_algo): the two grouped-map functions replayed on
-hand-checkable pandas frames without Spark, and the Spark operators
-against pure-Python Dijkstra and union-find over one block, several
-blocks and one node per block."""
+"""The block-local steps of weighted SSSP, connected components,
+pagerank and label propagation (operators.graph_algo): the grouped-map
+functions replayed on hand-checkable pandas frames without Spark, and
+the Spark operators against pure-Python Dijkstra, union-find, power
+iteration and label propagation over one block, several blocks and one
+node per block."""
 
 import heapq
 import math
 import random
+from collections import Counter
 
 import pandas as pd
 import pytest
@@ -158,6 +160,174 @@ def test_block_local_operators_match_python(random_graph, monkeypatch,
     assert comps == _union_find(edges)
 
 
+def _pagerank(edges, n_iter, seeds=None, d=0.85):
+    """Synchronous power iteration over the distinct edges, in the
+    operators' operation order: ((1-d)/n + (d*m)/n) + d*inflow, inflow
+    summed in edge order, teleport only to the seeds (n = len(seeds))."""
+    out = {}
+    for u, v in sorted(set(edges)):
+        out.setdefault(u, []).append(v)
+    nodes = sorted({x for e in edges for x in e})
+    n = len(nodes) if seeds is None else len(seeds)
+    seed = set(nodes if seeds is None else seeds)
+    pr = {x: 1.0 / n if x in seed else 0.0 for x in nodes}
+    for _ in range(n_iter):
+        m = 0.0
+        for x in nodes:
+            if x not in out:
+                m += pr[x]
+        inflow = dict.fromkeys(nodes, 0.0)
+        for u, vs in out.items():
+            for v in vs:
+                inflow[v] += pr[u] / len(vs)
+        pr = {x: ((1.0 - d) / n + (d * m) / n if x in seed else 0.0)
+              + d * inflow[x] for x in nodes}
+    return pr
+
+
+def _lpa(edges, n_iter):
+    """Synchronous label propagation: most frequent neighbour label, ties
+    to the smallest."""
+    nbrs = {}
+    for u, v in edges:
+        if u != v:
+            nbrs.setdefault(u, set()).add(v)
+            nbrs.setdefault(v, set()).add(u)
+    label = {x: x for x in nbrs}
+    for _ in range(n_iter):
+        label = {x: min(Counter(label[y] for y in ys).items(),
+                        key=lambda kv: (-kv[1], kv[0]))[0]
+                 for x, ys in nbrs.items()}
+    return label
+
+
+def _rank_frame(ranks, dangling):
+    return pd.DataFrame({"node": list(ranks), "pr": list(ranks.values()),
+                         "c": NAN, "dang": [x in dangling for x in ranks]})
+
+
+@pytest.mark.parametrize("seeds", [None, [1, 1, 9]], ids=["uniform", "ppr"])
+def test_block_pagerank_runs_every_iteration_in_one_block(seeds):
+    """With no state the block is the whole graph: its nodes are the
+    edges' endpoints, it counts them (or takes n = len(seeds), a
+    duplicated and an absent seed included) and its own dangling mass,
+    and runs all iterations, equal to the Python loop. 4 is dangling, 5
+    has no in-edge, 2 -> 2 is a self-loop."""
+    pairs = [(1, 2), (1, 3), (2, 2), (2, 3), (3, 1), (3, 4), (5, 1)]
+    edges = pd.DataFrame(pairs, columns=["u", "v"]).assign(intra=True)
+    got = ga._block_pagerank(edges, None, iters=3,
+                             n=None if seeds is None else len(seeds),
+                             m=None, damping=0.85, seeds=seeds, cross=False)
+    assert_frame_equal(got, _rank_frame(_pagerank(pairs, 3, seeds), {4}),
+                       check_exact=True)
+
+
+def test_block_pagerank_adds_cross_contributions_and_emits_its_own():
+    """One iteration of block {1, 2} from given ranks, the global dangling
+    mass m and node count n: contribution rows (c set, summed per node)
+    join the intra inflow, and the cross edges' shares of the NEW ranks
+    leave summed per target node outside the block."""
+    edges = pd.DataFrame([(1, 2, True), (1, 7, False), (2, 7, False),
+                          (2, 8, False)], columns=["u", "v", "intra"])
+    state = pd.DataFrame({"node": [2, 1, 2, 1], "pr": [0.2, 0.3, NAN, NAN],
+                          "c": [NAN, NAN, 0.04, 0.05]})
+    got = ga._block_pagerank(edges, state, iters=1, n=5, m=0.1,
+                             damping=0.85, seeds=None, cross=True)
+    base = (1.0 - 0.85) / 5 + (0.85 * 0.1) / 5
+    pr1 = base + 0.85 * (0.0 + 0.05)
+    pr2 = base + 0.85 * (0.3 / 2 + 0.04)
+    want = pd.concat([
+        _rank_frame({1: pr1, 2: pr2}, ()),
+        pd.DataFrame({"node": [7, 8], "pr": NAN,
+                      "c": [pr1 / 2 + pr2 / 2, pr2 / 2], "dang": False})],
+        ignore_index=True)
+    assert_frame_equal(got, want, check_exact=True)
+
+
+def test_block_lpa_runs_every_round_in_one_block():
+    """Two triangles joined by a path: every node starts with its own id,
+    and each round takes the most frequent neighbour label, ties to the
+    smallest, equal to the Python loop round for round."""
+    und = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (6, 7), (5, 7)]
+    sym = sorted(und + [(b, a) for a, b in und])
+    edges = pd.DataFrame(sym, columns=["a", "b"]).assign(ba=0, blk=0)
+    for rounds in range(4):
+        want = _lpa(und, rounds)
+        got = ga._block_lpa(edges, None, rounds=rounds, ghosts=False)
+        assert_frame_equal(got, pd.DataFrame(
+            {"blk": 0, "node": sorted(want),
+             "label": [want[x] for x in sorted(want)]}), check_exact=True)
+
+
+def test_block_lpa_reads_cross_labels_and_emits_them():
+    """Block 0 holds nodes 1-3; 7 (block 1) and 8 (block 2) are read from
+    the state. Every node sees a tie and takes the smallest label. The
+    blocks holding an edge out of a node of block 0 get its new label:
+    block 1 those of 1 and 3, block 2 that of 2."""
+    edges = pd.DataFrame([(2, 1, 0), (3, 1, 0), (7, 1, 1), (1, 2, 0),
+                          (8, 2, 2), (1, 3, 0), (7, 3, 1)],
+                         columns=["a", "b", "ba"]).assign(blk=0)
+    state = pd.DataFrame({"blk": 0, "node": [3, 1, 2, 8, 7],
+                          "label": [30, 10, 20, 20, 5]})
+    got = ga._block_lpa(edges, state, rounds=1, ghosts=True)
+    assert_frame_equal(got, pd.DataFrame({
+        "blk": [0, 0, 0, 1, 1, 2], "node": [1, 2, 3, 1, 3, 2],
+        "label": [5, 10, 5, 5, 5, 10]}), check_exact=True)
+
+
+@pytest.fixture(scope="module")
+def small_graph(spark):
+    """Duplicated edges, self-loops, a dangling sink (99) and a node with
+    no in-edge (98)."""
+    rnd = random.Random(11)
+    pairs = [(rnd.randrange(30), rnd.randrange(30)) for _ in range(70)]
+    pairs += [(4, 99), (98, 4), (7, 7), (3, 5), (3, 5)]
+    return pairs, spark.createDataFrame(pairs, "src long, dst long")
+
+
+@pytest.mark.parametrize("block_edges", [ONE_BLOCK, 20, SINGLETON_BLOCKS],
+                         ids=["one-block", "several-blocks", "singleton"])
+def test_rank_and_label_operators_match_python(small_graph, monkeypatch,
+                                               block_edges):
+    """pagerank and personalized_pagerank equal the Python power
+    iteration up to float sum order (< 1e-15), and label_propagation
+    equals the Python loop exactly, whatever the block size."""
+    pairs, df = small_graph
+    monkeypatch.setattr(ga, "_BLOCK_EDGES", block_edges)
+    for seeds, got in ((None, ga.pagerank(df, n_iter=4)),
+                       ([3, 3, 17, 999],
+                        ga.personalized_pagerank(df, [3, 3, 17, 999],
+                                                 n_iter=3))):
+        want = _pagerank(pairs, 4 if seeds is None else 3, seeds)
+        got = {r["node"]: r["pagerank"] for r in got.collect()}
+        assert set(got) == set(want)
+        assert max(abs(got[x] - want[x]) for x in want) < 1e-15
+    got = {r["node"]: r["community"]
+           for r in ga.label_propagation(df, n_iter=3).collect()}
+    assert got == _lpa(pairs, 3)
+
+
+@pytest.mark.parametrize("block_edges", [ONE_BLOCK, 3, SINGLETON_BLOCKS],
+                         ids=["one-block", "several-blocks", "singleton"])
+def test_personalized_pagerank_duplicate_and_absent_seeds(spark, monkeypatch,
+                                                          block_edges):
+    """Seed 1 twice and 99, which is not in the graph: n counts all four,
+    so the ranks sum to 3/4 of what one copy of each present seed would
+    give. Pinned to the values of the Spark join-loop implementation the
+    block steps replaced."""
+    monkeypatch.setattr(ga, "_BLOCK_EDGES", block_edges)
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 2), (5, 1), (2, 6), (6, 6)],
+        "src long, dst long")
+    got = {r["node"]: r["pagerank"] for r in ga.personalized_pagerank(
+        edges, [1, 1, 4, 99], n_iter=6).collect()}
+    want = {1: 0.0725866884765625, 2: 0.08332523437500002,
+            3: 0.03541322460937501, 4: 0.0725866884765625, 5: 0.0,
+            6: 0.23608816406249997}
+    assert set(got) == set(want)
+    assert all(abs(got[x] - want[x]) <= 1e-15 for x in want), got
+
+
 def test_shortest_paths_weighted_rejects_malformed_edges(spark):
     """Dijkstra needs non-negative weights and node ids: a negative, NaN
     or NULL weight or a NULL endpoint fails at the boundary instead of
@@ -184,8 +354,8 @@ def test_blocks_cut_skewed_ids_into_equal_edge_counts(spark, monkeypatch):
            + [rnd.randrange(10**15) for _ in range(100)])
     df = spark.createDataFrame([(u, u + 1) for u in ids], "u long, v long")
     monkeypatch.setattr(ga, "_BLOCK_EDGES", 250)
-    _, m = ga._ckpt_observe(df, *ga._block_metrics("u", "v", "u"))
-    block = ga._blocks(m)
+    e, m = ga._ckpt_observe(df, *ga._block_metrics("u", "v"))
+    block = ga._blocks(e, m, "u")
     sizes = [r["n"] for r in df.groupBy(block("u").alias("b"))
              .agg(F.count(F.lit(1)).alias("n")).collect()]
     assert len(sizes) == 4 and max(sizes) <= 300, sizes
@@ -193,9 +363,34 @@ def test_blocks_cut_skewed_ids_into_equal_edge_counts(spark, monkeypatch):
     assert [r["b"] for r in outside.select(block("id").alias("b"))
             .collect()] == [0, 3]
     monkeypatch.setattr(ga, "_BLOCK_EDGES", SINGLETON_BLOCKS)
-    block = ga._blocks({**m, "lo": 0, "hi": 5})
+    block = ga._blocks(e, {**m, "lo": 0, "hi": 5}, "u")
     got = spark.range(6).select(block("id").alias("b")).collect()
     assert [r["b"] for r in got] == list(range(6))
+
+
+def test_blocks_read_quantiles_only_between_one_block_and_singletons(
+        spark, monkeypatch):
+    """The edge checkpoint observes no quantile, and _blocks runs the
+    quantile aggregate only when the graph needs several
+    blocks but fewer than its id range: a one-block table and a
+    one-id-per-block table run no job."""
+    df = spark.createDataFrame([(i, i + 1) for i in range(40)],
+                               "u long, v long")
+    e, m = ga._ckpt_observe(df, *ga._block_metrics("u", "v"))
+    assert set(m) == {"n", "lo", "hi"}
+    sc = spark.sparkContext
+    jobs = {}
+    for name, block_edges in (("one", ONE_BLOCK), ("several", 10),
+                              ("singleton", SINGLETON_BLOCKS)):
+        monkeypatch.setattr(ga, "_BLOCK_EDGES", block_edges)
+        sc.setJobGroup(f"blocks-{name}", "quantile probe")
+        try:
+            ga._blocks(e, m, "u")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(
+            f"blocks-{name}"))
+    assert jobs["one"] == jobs["singleton"] == 0 and jobs["several"], jobs
 
 
 def test_relax_frontier_hands_the_local_step_only_dirty_blocks(spark):

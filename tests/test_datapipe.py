@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from osm_pg_etl_spark.operators.dedup import (
     dedup_exact,
     exact_duplicates,
-    jaccard,
     minhash_near_duplicates,
     ngram_jaccard_pairs,
     simhash_near_duplicates,
@@ -15,7 +14,6 @@ from osm_pg_etl_spark.operators.dedup import (
 )
 from osm_pg_etl_spark.operators.similarity import (
     brute_force_topk,
-    cosine,
     embedding_near_duplicates,
     ivf_assign,
     ivf_centroids,
@@ -536,7 +534,6 @@ def test_length_batches_budget_and_determinism(spark):
 
 
 def test_gap_fill_scaffold_and_ffill(spark):
-    from osm_pg_etl_spark.plans.relational import q_gap_fill  # smoke import
     from pyspark.sql import Window, functions as F
 
     # direct mini-check of the construction: scaffold covers every hour in

@@ -279,6 +279,70 @@ def test_personalized_pagerank_reference(spark):
     assert got[5] == 0.0
 
 
+@pytest.mark.parametrize("block_edges", [ONE_BLOCK, 2, SINGLETON_BLOCKS],
+                         ids=["one-block", "several-blocks", "singleton"])
+def test_pagerank_equals_python_replay(spark, monkeypatch, block_edges):
+    """The block steps must not change the rank vector, however the
+    graph is cut into blocks: compare against a per-round NumPy-free
+    replay of the same operation sequence."""
+    from osm_pg_etl_spark.operators.graph_algo import pagerank
+
+    monkeypatch.setattr(ga, "_BLOCK_EDGES", block_edges)
+    rows = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 2), (5, 1)]
+    edges = spark.createDataFrame(rows, "src long, dst long")
+    got = {r["node"]: r["pagerank"]
+           for r in pagerank(edges, n_iter=7, damping=0.85).collect()}
+
+    nodes = sorted({n for e in rows for n in e})
+    out = {}
+    for u, v in rows:
+        out.setdefault(u, []).append(v)
+    n = len(nodes)
+    pr = {x: 1.0 / n for x in nodes}
+    for _ in range(7):
+        dang = sum(pr[x] for x in nodes if x not in out)
+        inflow = {x: 0.0 for x in nodes}
+        for u, vs in out.items():
+            for v in vs:
+                inflow[v] += pr[u] / len(vs)
+        pr = {x: (1.0 - 0.85) / n + (0.85 * dang) / float(n)
+              + 0.85 * inflow[x] for x in nodes}
+    assert set(got) == set(pr)
+    for x in nodes:
+        assert got[x] == pr[x] or abs(got[x] - pr[x]) < 1e-15
+
+
+@pytest.mark.parametrize("block_edges", [ONE_BLOCK, 16, SINGLETON_BLOCKS],
+                         ids=["one-block", "several-blocks", "singleton"])
+def test_lpa_argmax_equals_mode(spark, monkeypatch, block_edges):
+    """label_propagation's per-node argmax must pick exactly what
+    mode(label, deterministic=True) picks — most frequent label, ties to
+    the lowest — round for round. The graph is mostly degree-2 ring and
+    chain nodes, so nearly every node is a two-way tie every round,
+    exercising the tie-break densely; four rounds replayed in lockstep
+    against Spark's mode."""
+    from pyspark.sql import functions as F
+
+    from osm_pg_etl_spark.operators.graph_algo import label_propagation
+
+    monkeypatch.setattr(ga, "_BLOCK_EDGES", block_edges)
+    ring = [(i, (i + 1) % 24) for i in range(24)]
+    chains = [(0, 12), (5, 30), (30, 31), (31, 32), (32, 17), (9, 40),
+              (40, 41), (41, 9), (20, 50), (50, 51)]
+    edges = spark.createDataFrame(ring + chains, "src long, dst long")
+    e = symmetric_edges(edges).localCheckpoint()
+    want = (e.select(F.col("a").alias("id")).distinct()
+            .withColumn("label", F.col("id")))
+    for rounds in range(1, 5):
+        want = (e.join(want.withColumnRenamed("id", "a"), "a")
+                .groupBy(F.col("b").alias("id"))
+                .agg(F.mode("label", True).alias("label"))
+                .localCheckpoint())
+        got = label_propagation(edges, n_iter=rounds)
+        assert sorted(map(tuple, got.collect())) \
+            == sorted(map(tuple, want.collect()))
+
+
 def test_label_propagation_two_cliques(spark):
     from osm_pg_etl_spark.operators.graph_algo import label_propagation
 
@@ -337,7 +401,6 @@ def test_label_propagation_matches_reference_sync_lpa(spark):
 def test_modularity_two_cliques_reference_value(spark):
     """Plain-Python Newman modularity cross-check on the two-clique graph:
     LPA finds the cliques, Q must match the hand-computed score."""
-    from osm_pg_etl_spark.plans.osm_derived import q_osm_modularity  # noqa: F401
     from osm_pg_etl_spark.operators.graph_algo import (
         label_propagation, symmetric_edges)
     from pyspark.sql import functions as F

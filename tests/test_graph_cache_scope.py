@@ -15,6 +15,8 @@ from pyspark.sql.classic.dataframe import DataFrame
 from osm_pg_etl_spark.operators import graph_algo as ga
 
 SIDE = 5
+# _BLOCK_EDGES value that puts every graph here in one block
+ONE_BLOCK = 10**12
 
 
 def _node(r, c):
@@ -163,11 +165,16 @@ def test_betweenness_output_reads_no_released_cache(spark, edges,
     assert got and all(v >= 0.0 for v in got.values())
 
 
-def test_fixpoint_loops_persist_a_bounded_number_of_rdds(spark, tmp_path):
+def test_fixpoint_loops_persist_a_bounded_number_of_rdds(spark, tmp_path,
+                                                        monkeypatch):
     """Every round of a fixpoint loop leaves its localCheckpoint RDD
     persisted until the JVM collects its DataFrame. Components and
     weighted SSSP on a 40-node path must leave a small number of them
     that does not grow with the path: the per-hop loop left one per hop.
+    Pagerank, personalized pagerank and label propagation run all rounds
+    in one step at one block, and at four blocks release each round's
+    checkpoint once the next one is written, so they leave at most two,
+    whatever ``n_iter``.
     Counted by RDD id, since the ContextCleaner may free an earlier
     test's RDDs meanwhile."""
     def persisted_ids():
@@ -180,3 +187,17 @@ def test_fixpoint_loops_persist_a_bounded_number_of_rdds(spark, tmp_path):
     ga.connected_components(edges).write.parquet(str(tmp_path / "cc"))
     ga.shortest_paths_weighted(edges, 0).write.parquet(str(tmp_path / "sp"))
     assert len(persisted_ids() - before) <= 6
+    ranked = {
+        "pagerank": lambda k: ga.pagerank(edges, n_iter=k),
+        "personalized_pagerank":
+            lambda k: ga.personalized_pagerank(edges, [0, 7], n_iter=k),
+        "label_propagation": lambda k: ga.label_propagation(edges, n_iter=k),
+    }
+    # nine rounds: the Spark join loops these steps replaced left one
+    # checkpoint per two (pagerank) or four (label propagation) rounds
+    for block_edges, n_iter in ((ONE_BLOCK, 9), (10, 3)):
+        monkeypatch.setattr(ga, "_BLOCK_EDGES", block_edges)
+        for name, run in ranked.items():
+            before = persisted_ids()
+            run(n_iter).write.parquet(str(tmp_path / f"{name}{block_edges}"))
+            assert len(persisted_ids() - before) <= 2, (name, block_edges)

@@ -10,8 +10,6 @@ from __future__ import annotations
 
 import re
 
-import pytest
-
 SF = "/root/testdata/sf0.001"
 
 
@@ -273,15 +271,13 @@ def test_dedup_family_no_gram_keyed_windows(spark):
 
 def test_iterative_static_tables_join_exchange_free(spark):
     """Static per-round tables in the MANY-round iterative graph
-    operators (Bellman-Ford SSSP, pagerank, Brandes, turn-restricted
-    routing, louvain) ride the ``_iter_cache`` scope (checkpoint →
-    hash-partition on the round join key → sort → cache), so round joins
-    re-shuffle only the node-sized frontier, never the edge table. A
-    regression that drops the cache (or checkpoints AFTER partitioning,
-    which erases the partitioning metadata behind a LogicalRDD)
-    re-introduces one full edge-table shuffle per round and fails here.
-    (label_propagation deliberately does NOT use the helper: 4 rounds
-    don't amortize the build — see its docstring.)"""
+    operators (Bellman-Ford SSSP, Brandes, turn-restricted routing,
+    louvain) ride the ``_iter_cache`` scope (checkpoint → hash-partition
+    on the round join key → sort → cache), so round joins re-shuffle only
+    the node-sized frontier, never the edge table. A regression that
+    drops the cache (or checkpoints AFTER partitioning, which erases the
+    partitioning metadata behind a LogicalRDD) re-introduces one full
+    edge-table shuffle per round and fails here."""
     from pyspark.sql import functions as F
     from osm_pg_etl_spark.operators.graph_algo import _iter_cache
 

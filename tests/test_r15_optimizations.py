@@ -266,53 +266,6 @@ def test_louvain_round_self_candidate_least_ties(spark):
     assert got.count() == 7
 
 
-def test_lpa_two_phase_argmax_equals_mode(spark):
-    """r15 §14: label_propagation's per-round argmax as
-    min(struct(-count, label)) over one b-partitioning must pick exactly
-    what mode(label, deterministic=True) picked — most frequent label,
-    ties to the lowest. The car graph is mostly degree-2 chain nodes, so
-    nearly every node is a two-way tie every round, exercising the
-    tie-break densely; four rounds replayed in lockstep."""
-    from osm_pg_etl_spark.operators.graph_algo import symmetric_edges
-    from osm_pg_etl_spark.plans.osm_derived import (car_network,
-                                                    derive_osm,
-                                                    merged_network)
-
-    d = derive_osm(spark, SF)
-    cn = car_network(d["ways"]).cache()
-    merged = merged_network(cn, d["way_nodes"])
-    e = symmetric_edges(merged.select(
-        F.col("start_node").alias("src"),
-        F.col("end_node").alias("dst"))).localCheckpoint()
-    start = (e.select(F.col("a").alias("id")).distinct()
-             .withColumn("label", F.col("id")).localCheckpoint())
-
-    def two_phase(lbls):
-        return (e.join(lbls.withColumnRenamed("id", "a"), "a")
-                .select("b", "label")
-                .repartition("b")
-                .groupBy("b", "label")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .groupBy(F.col("b").alias("id"))
-                .agg(F.min(F.struct((-F.col("_n")).alias("nn"),
-                                    F.col("label").alias("lb")))
-                     .alias("_w"))
-                .select("id", F.col("_w.lb").alias("label")))
-
-    def mode_round(lbls):
-        return (e.join(lbls.withColumnRenamed("id", "a"), "a")
-                .groupBy(F.col("b").alias("id"))
-                .agg(F.mode("label", True).alias("label")))
-
-    got, want = start, start
-    for _ in range(4):
-        got = two_phase(got).localCheckpoint()
-        want = mode_round(want).localCheckpoint()
-        assert sorted(map(tuple, got.collect())) \
-            == sorted(map(tuple, want.collect()))
-    assert got.count() > 0
-
-
 def test_incremental_nodes_path_equals_arrays_path(spark, osm):
     """merged_network_incremental(nodes=...) must reproduce BOTH the
     arrays-path incremental result and the full recompute exactly, from

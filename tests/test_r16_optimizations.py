@@ -210,32 +210,3 @@ def test_sigma_table_single_checkpoint_rows(spark):
     assert got2 == {(1, 1, 0, 1), (1, 2, 1, 1), (1, 3, 1, 1),
                     (1, 4, 2, 2)}
 
-
-def test_power_iteration_biennial_checkpoint_exact(spark):
-    """The every-second-round checkpoint cadence must not change the
-    rank vector: compare against a per-round NumPy-free replay of the
-    same operation sequence."""
-    from osm_pg_etl_spark.operators.graph_algo import pagerank
-
-    rows = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 2), (5, 1)]
-    edges = spark.createDataFrame(rows, "src long, dst long")
-    got = {r["node"]: r["pagerank"]
-           for r in pagerank(edges, n_iter=7, damping=0.85).collect()}
-
-    nodes = sorted({n for e in rows for n in e})
-    out = {}
-    for u, v in rows:
-        out.setdefault(u, []).append(v)
-    n = len(nodes)
-    pr = {x: 1.0 / n for x in nodes}
-    for _ in range(7):
-        dang = sum(pr[x] for x in nodes if x not in out)
-        inflow = {x: 0.0 for x in nodes}
-        for u, vs in out.items():
-            for v in vs:
-                inflow[v] += pr[u] / len(vs)
-        pr = {x: (1.0 - 0.85) / n + (0.85 * dang) / float(n)
-              + 0.85 * inflow[x] for x in nodes}
-    assert set(got) == set(pr)
-    for x in nodes:
-        assert got[x] == pr[x] or abs(got[x] - pr[x]) < 1e-15
