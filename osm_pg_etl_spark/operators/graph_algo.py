@@ -59,20 +59,34 @@ _PROBE_SEQ = itertools.count()
 
 # cap on shortest_paths_radius's shortcut doubling (truncation is safe)
 _MAX_SHORTCUT_ROUNDS = 20
-# edges per node block of the block-local steps (weighted SSSP,
-# components, pagerank, label propagation): one block's step runs in one
-# Python task. A whole-block Dijkstra costs ~17 us and ~190 B of Python
-# heap an edge, so a block of this size is ~17 s and ~200 MB; pagerank's
-# ten numpy iterations cost ~0.5 us and ~36 B an edge, and label
-# propagation's four numpy rounds ~3.1 us and ~81 B a symmetric edge
-# (scripts/block_curve.py local, linear to 400k edges). Blocks are id
-# ranges, and where ids do not follow the graph's locality nearly every
-# edge crosses blocks, so more blocks bring back the per-hop rounds: on
-# 800k edges (four id-scrambled sf0.1 car graphs, 4 cores) one block ran
-# SSSP in 6.5 s and components in 5.8 s, 16 blocks in 29.3 s (15 rounds)
-# and 13.9 s, and the per-hop loop and full-graph star contraction in
-# 19.4 s and 13.9 s.
+# edges per node block of the loop steps (weighted SSSP, components):
+# one block's step runs in one Python task. A whole-block Dijkstra costs
+# ~17 us and ~190 B of Python heap an edge, so a block of this size is
+# ~17 s and ~200 MB (scripts/block_curve.py local, linear to 400k
+# edges). Blocks are id ranges, and where ids do not follow the graph's
+# locality nearly every edge crosses blocks, so more blocks bring back
+# the per-hop rounds: on 800k edges (four id-scrambled sf0.1 car graphs,
+# 4 cores) one block ran SSSP in 6.5 s and components in 5.8 s, 16
+# blocks in 29.3 s (15 rounds) and 13.9 s, and the per-hop loop and
+# full-graph star contraction in 19.4 s and 13.9 s.
 _BLOCK_EDGES = 1_000_000
+# edge rows per node block of the array steps (pagerank, label
+# propagation), sized from their own costs. Ten pagerank iterations cost
+# ~0.6 us and ~62 B of heap a distinct edge, four label-propagation
+# rounds ~0.6 us and ~104 B a symmetric edge (block_curve.py local, to
+# 1.6M edges). Past one block every iteration is a cogroup job that
+# ships all edges to Python again, so one block was the fastest layout
+# at every size measured (block_curve.py arrays, 4 cores). On ten sf0.1
+# car graphs (2.0M edges, 2.6M symmetric) pagerank took 3.7-6.6 s in one
+# block and 25-30 s in two, label propagation 5.7-7.0 s in one and
+# 11-14 s in three, against 36-40 s and 12 s for the Spark join loops
+# they replaced. On twenty (4.0M, 5.2M symmetric): pagerank 7-10 s in
+# one block, 30-37 s in four, 44-50 s in the join loop; label
+# propagation 11-13 s in one, 24 s in two, 18-19 s in six, 23 s in the
+# join loop. The cap bounds one task's memory: the Python worker peaked
+# at ~0.5 GB RSS for one pagerank block of 4.0M edges and ~0.95 GB for
+# one label-propagation block of 5.2M symmetric edges.
+_ARRAY_BLOCK_EDGES = 4_000_000
 # node-id quantiles the block ranges are cut at (_blocks)
 _BLOCK_PROBES = 1024
 
@@ -221,30 +235,31 @@ def _block_metrics(u: str, v: str) -> tuple:
             F.max(F.greatest(u, v)).alias("hi"))
 
 
-def _one_block(m: dict) -> bool:
+def _one_block(m: dict, per: float) -> bool:
     """Whether an edge table whose :func:`_block_metrics` are ``m`` fits in
-    one node block: at most ``_BLOCK_EDGES`` edges."""
-    return m["n"] <= _BLOCK_EDGES
+    one node block of ``per`` edges."""
+    return m["n"] <= per
 
 
-def _blocks(e: DataFrame, m: dict, *keys: str):
-    """Node blocks for the edge table ``e`` whose :func:`_block_metrics`
-    are ``m`` and whose edges a block holds by the node-id columns
-    ``keys``: ceil(n / _BLOCK_EDGES) node-id ranges cut at quantiles of
-    the key columns, so each block holds about ``_BLOCK_EDGES`` edges
-    however the ids are spread (while there are fewer blocks than
+def _blocks(e: DataFrame, m: dict, *keys: str, per: float):
+    """Node blocks of about ``per`` edges (``_BLOCK_EDGES`` or
+    ``_ARRAY_BLOCK_EDGES``) for the edge table ``e`` whose
+    :func:`_block_metrics` are ``m`` and whose edges a block holds by the
+    node-id columns ``keys``: ceil(n / per) node-id ranges cut at
+    quantiles of the key columns, so each block holds about ``per``
+    edges however the ids are spread (while there are fewer blocks than
     quantile probes; a single node's edges always share a block), and a
-    graph of at most ``_BLOCK_EDGES`` edges is one block. When there are
+    graph of at most ``per`` edges is one block. When there are
     at least as many blocks as ids in [lo, hi], every id is its own
     block. Only a graph between those two cases reads its quantiles,
     with one aggregate job over ``e``. The rule is derived from the input
     alone, and every id, also one outside [lo, hi] (a source with no
     edge), lands in some block. Returns ``block(col)``: the block-id
     column (long, like the ids) of the node-id column named ``col``."""
-    count = math.ceil(m["n"] / _BLOCK_EDGES)
+    count = math.ceil(m["n"] / per)
     if m["n"] and count >= m["hi"] - m["lo"] + 1:
         return F.col
-    if _one_block(m):
+    if _one_block(m, per):
         # one block, as a column and not a literal: repartitioning on a
         # constant key gives a single-partition exchange, which every
         # round's cogroup would then shuffle again
@@ -498,7 +513,7 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         .where(F.col("a") != F.col("b"))
         .distinct(),
         *_block_metrics("a", "b"))
-    block = _blocks(e, m, "a", "b")
+    block = _blocks(e, m, "a", "b", per=_BLOCK_EDGES)
     # every edge goes to the blocks of both its endpoints, so each block
     # sees all of its nodes, also those whose every edge crosses
     reps, x = _ckpt_observe(
@@ -658,7 +673,7 @@ def shortest_paths_weighted(edges: DataFrame, source,
             f"shortest_paths_weighted: {m['bad']} edges have a NULL "
             "endpoint or a negative, NaN or NULL weight; distances need "
             "node ids and non-negative weights")
-    block = _blocks(e, m, "u")
+    block = _blocks(e, m, "u", per=_BLOCK_EDGES)
     # keyed on the block of u: every round cogroups the static edge list
     # with the state by block without re-shuffling or re-sorting it
     with _cached(e.select("u", "v", "w", block("u").alias("blk"),
@@ -1315,10 +1330,16 @@ def _block_pagerank(edges: pd.DataFrame, state: pd.DataFrame | None = None,
     per node outside the block the summed contributions of the block's
     cross edges, ``pr`` NaN (NULL in Spark). Duplicate edges count once:
     a node's out-edges are all in its block."""
-    uv, first = np.unique(edges[["u", "v"]].to_numpy(np.int64), axis=0,
-                          return_index=True)
-    u, v = uv.T
-    intra = edges["intra"].to_numpy(bool)[first]
+    u = edges["u"].to_numpy(np.int64)
+    v = edges["v"].to_numpy(np.int64)
+    # sorted by (u, v), duplicates dropped (a row-wise np.unique sorts
+    # the pairs as structured values, about three times slower)
+    o = np.lexsort((v, u))
+    u, v = u[o], v[o]
+    first = np.ones(len(u), bool)
+    first[1:] = (u[1:] != u[:-1]) | (v[1:] != v[:-1])
+    u, v = u[first], v[first]
+    intra = edges["intra"].to_numpy(bool)[o][first]
     if state is None:
         nodes = np.unique(np.concatenate([u, v]))
         pr = np.full(len(nodes), np.nan)
@@ -1373,8 +1394,8 @@ def pagerank(edges: DataFrame, n_iter: int = 10, damping: float = 0.85,
 
     with the dangling mass redistributed uniformly, so total mass stays 1.
 
-    A graph of at most ``_BLOCK_EDGES`` edge rows (counted in the edge
-    table's checkpoint job) is one node block: one numpy step
+    A graph of at most ``_ARRAY_BLOCK_EDGES`` edge rows (counted in the
+    edge table's checkpoint job) is one node block: one numpy step
     (:func:`_block_pagerank`, run by :func:`_whole`) runs all ``n_iter``
     iterations and its output is the result. A larger graph is cut into
     id-range blocks (:func:`_blocks`) holding their nodes' out-edges, and
@@ -1385,6 +1406,7 @@ def pagerank(edges: DataFrame, n_iter: int = 10, damping: float = 0.85,
     mass are observed in the checkpoint jobs (:func:`_ckpt_observe`), and
     a round releases the previous round's checkpoint. Ranks differ
     between block layouts only in the order of floating-point sums.
+    An edge with a NULL endpoint raises ``ValueError``.
     Returns (node, pagerank) over all nodes appearing in ``edges``."""
     return _power_iteration(edges, None, n_iter, damping, src, dst)
 
@@ -1411,17 +1433,23 @@ def _power_iteration(edges: DataFrame, seeds: list[int] | None,
     e, m = _ckpt_observe(
         edges.select(F.col(src).cast("long").alias("u"),
                      F.col(dst).cast("long").alias("v")),
-        *_block_metrics("u", "v"))
+        *_block_metrics("u", "v"),
+        F.count(F.when(F.col("u").isNull() | F.col("v").isNull(), 1))
+        .alias("bad"))
+    if m["bad"]:
+        raise ValueError(
+            f"pagerank: {m['bad']} edges have a NULL endpoint; ranks need "
+            "node ids")
     n = None if seeds is None else len(seeds)
     step = functools.partial(_by_value(_block_pagerank), damping=damping,
                              seeds=seeds)
     schema = "node long, pr double, c double, dang boolean"
-    if _one_block(m):
+    if _one_block(m, _ARRAY_BLOCK_EDGES):
         return _whole(e.select("u", "v", F.lit(True).alias("intra")),
                       functools.partial(step, state=None, iters=n_iter,
                                         n=n, m=None, cross=False),
                       schema).select("node", F.col("pr").alias("pagerank"))
-    block = _blocks(e, m, "u")
+    block = _blocks(e, m, "u", per=_ARRAY_BLOCK_EDGES)
     # keyed on the block of u: every round cogroups the static edge list
     # with the state by block without re-shuffling or re-sorting it
     with _cached(e.select("u", "v", block("u").alias("blk"),
@@ -1519,28 +1547,34 @@ def _block_lpa(edges: pd.DataFrame, state: pd.DataFrame | None = None,
     ``blk``."""
     a = edges["a"].to_numpy(np.int64)
     b = edges["b"].to_numpy(np.int64)
-    nodes = np.unique(b)
-    labels = nodes
+    nodes, bi = np.unique(b, return_inverse=True)
     if state is None or state.empty:
         la = a
     else:
         st = state.sort_values("node")
         keys = st["node"].to_numpy(np.int64)
         la = st["label"].to_numpy(np.int64)[np.searchsorted(keys, a)]
+    # labels as indices into the sorted labels the edges start with: a
+    # node only ever adopts one of those, and the smallest index is the
+    # smallest label
+    space, li = np.unique(la, return_inverse=True)
+    if rounds > 1:
+        ai = np.searchsorted(nodes, a)
     for r in range(rounds):
         if r:
-            la = labels[np.searchsorted(nodes, a)]
-        # runs of equal (b, label), then per b the longest run, ties to
-        # the smallest label
-        o = np.lexsort((la, b))
-        bs, ls = b[o], la[o]
-        run = np.flatnonzero(np.r_[True, (bs[1:] != bs[:-1])
-                                   | (ls[1:] != ls[:-1])])
-        count = np.diff(np.r_[run, len(bs)])
-        rb, rl = bs[run], ls[run]
-        o = np.lexsort((rl, -count, rb))
-        rb, rl = rb[o], rl[o]
-        labels = rl[np.r_[True, rb[1:] != rb[:-1]]]
+            li = labels[ai]
+        # runs of equal (b, label) in one sort of a combined key; per b
+        # the longest run, the first of equal ones: the smallest label
+        key = np.sort(bi * len(space) + li)
+        run = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
+        count = np.diff(np.r_[run, len(key)])
+        rb, rl = np.divmod(key[run], len(space))
+        first = np.flatnonzero(np.r_[True, rb[1:] != rb[:-1]])
+        top = np.repeat(np.maximum.reduceat(count, first),
+                        np.diff(np.r_[first, len(rb)]))
+        best = np.flatnonzero(count == top)
+        labels = rl[best[np.r_[True, rb[best][1:] != rb[best][:-1]]]]
+    labels = space[labels] if rounds else nodes
     blk = edges["blk"].iat[0]
     out = pd.DataFrame({"blk": blk, "node": nodes, "label": labels})
     if ghosts:
@@ -1573,8 +1607,8 @@ def label_propagation(edges: DataFrame, n_iter: int = 4,
 
     The symmetric edges are keyed by the node block of ``b``
     (:func:`_blocks`), so a block holds every edge into its nodes. A
-    graph of at most ``_BLOCK_EDGES`` edges is one block: one numpy step
-    (:func:`_block_lpa`, run by :func:`_whole`) runs all ``n_iter``
+    graph of at most ``_ARRAY_BLOCK_EDGES`` edges is one block: one numpy
+    step (:func:`_block_lpa`, run by :func:`_whole`) runs all ``n_iter``
     rounds. A larger graph runs one round a round in a grouped-map step
     per block: each block's step emits its nodes' labels and, for the
     blocks whose edges read them (cross-block neighbours), a copy of
@@ -1584,11 +1618,11 @@ def label_propagation(edges: DataFrame, n_iter: int = 4,
     """
     e, m = _ckpt_observe(symmetric_edges(edges, src, dst),
                          *_block_metrics("a", "b"))
-    block = _blocks(e, m, "b")
+    block = _blocks(e, m, "b", per=_ARRAY_BLOCK_EDGES)
     step = _by_value(_block_lpa)
     schema = "blk long, node long, label long"
     e = e.select("a", "b", block("a").alias("ba"), block("b").alias("blk"))
-    if _one_block(m):
+    if _one_block(m, _ARRAY_BLOCK_EDGES):
         labels = _whole(e, functools.partial(step, state=None,
                                              rounds=n_iter, ghosts=False),
                         schema)

@@ -2169,8 +2169,9 @@ _PR_ITER, _PR_DAMPING = 5, 0.85
 def q_osm_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-iteration PageRank over the directed car graph
     (operators.graph_algo.pagerank) — the graph-quality ranking signal of
-    the reference's igraph step, run as n_iter join+sum rounds with the
-    dangling mass redistributed so total mass stays 1."""
+    the reference's igraph step, with the dangling mass redistributed so
+    total mass stays 1. At gate sizes the graph is one node block, so
+    one numpy step runs all n_iter iterations."""
     from ..operators.graph_algo import pagerank
 
     d, cn, merged = _shared_network(spark, sf_dir)

@@ -1,4 +1,6 @@
-"""Per-block cost curve behind ``graph_algo._BLOCK_EDGES``.
+"""Per-block cost curve behind ``graph_algo._BLOCK_EDGES`` (Dijkstra,
+union-find) and ``graph_algo._ARRAY_BLOCK_EDGES`` (pagerank, label
+propagation).
 
 ``local``: time and peak Python heap (tracemalloc) of one block's
 Dijkstra (``_block_dijkstra``, from one dirty source), union-find
@@ -14,9 +16,17 @@ sweep from a quarter of the graph per block to one block), in one
 session: wall, rounds and block count per value, and whether the
 distances and components equal the first run's.
 
+``arrays <sf_dir> <K>``: pagerank and label propagation on K disjoint
+copies of that graph (ids shifted by the copy index times max id + 1)
+with ``_ARRAY_BLOCK_EDGES`` set to each value given (default one block,
+then a quarter of the edges per block), two runs each in one session:
+wall and block count per run, and a digest of the ranks (rounded to 9
+places) and labels.
+
 Usage:
     python scripts/block_curve.py local [E ...]
     python scripts/block_curve.py spark <sf_dir> [B ...]
+    python scripts/block_curve.py arrays <sf_dir> <K> [B ...]
 """
 
 from __future__ import annotations
@@ -126,10 +136,62 @@ def run_spark(sf_dir: str, values: list[float]) -> None:
     spark.stop()
 
 
+def run_arrays(sf_dir: str, copies: int, values: list[float]) -> None:
+    from pyspark.sql import functions as F
+
+    from osm_pg_etl_spark.operators.graphs import directed_network
+    from osm_pg_etl_spark.plans.osm_derived import _shared_network
+    from osm_pg_etl_spark.session import get_spark
+
+    spark = get_spark("block-curve-arrays")
+    spark.sparkContext.setLogLevel("ERROR")
+    _, _, merged = _shared_network(spark, sf_dir)
+    one = (directed_network(merged, minimal=True)
+           .select(F.col("start_node").alias("src"),
+                   F.col("end_node").alias("dst")).localCheckpoint())
+    shift = one.agg(F.greatest(F.max("src"), F.max("dst"))).first()[0] + 1
+    edges = one
+    for i in range(1, copies):
+        edges = edges.unionByName(one.select(
+            (F.col("src") + i * shift).alias("src"),
+            (F.col("dst") + i * shift).alias("dst")))
+    edges = edges.localCheckpoint()
+    n_edges = edges.count()
+    n_sym = ga.symmetric_edges(edges).count()
+    print(f"{copies} copies: {n_edges} directed edges, {n_sym} symmetric",
+          flush=True)
+
+    def digest(df, col):
+        r = df.agg(F.count(F.lit(1)).alias("c"),
+                   F.sum(F.xxhash64("node", F.round(col, 9))
+                         .cast("decimal(38,0)")).alias("h")).first()
+        return f"{r['c']}/{r['h']}"
+
+    block_edges = ga._ARRAY_BLOCK_EDGES
+    try:
+        for value in values or [max(n_edges, n_sym), n_edges / 4]:
+            ga._ARRAY_BLOCK_EDGES = value
+            for run in range(2):
+                t0 = time.perf_counter()
+                pr = digest(ga.pagerank(edges), "pagerank")
+                t1 = time.perf_counter()
+                lpa = digest(ga.label_propagation(edges), "community")
+                t2 = time.perf_counter()
+                print(f"block_edges={value:>9.0f} run={run} pagerank "
+                      f"{t1 - t0:6.1f}s blocks={math.ceil(n_edges / value)} "
+                      f"{pr}  lpa {t2 - t1:6.1f}s "
+                      f"blocks={math.ceil(n_sym / value)} {lpa}", flush=True)
+    finally:
+        ga._ARRAY_BLOCK_EDGES = block_edges
+    spark.stop()
+
+
 if __name__ == "__main__":
     mode, rest = sys.argv[1], sys.argv[2:]
     if mode == "local":
         run_local([int(x) for x in rest]
                   or [12_500, 25_000, 50_000, 100_000, 200_000, 400_000])
+    elif mode == "arrays":
+        run_arrays(rest[0], int(rest[1]), [float(x) for x in rest[2:]])
     else:
         run_spark(rest[0], [float(x) for x in rest[1:]])

@@ -17,7 +17,8 @@ from pandas.testing import assert_frame_equal
 from osm_pg_etl_spark.operators import graph_algo as ga
 
 NAN = float("nan")
-# _BLOCK_EDGES values: every graph here in one block / one node per block
+# block sizes (_BLOCK_EDGES, _ARRAY_BLOCK_EDGES): every graph here in one
+# block / one node per block
 ONE_BLOCK, SINGLETON_BLOCKS = 10**12, 1e-12
 
 
@@ -293,7 +294,7 @@ def test_rank_and_label_operators_match_python(small_graph, monkeypatch,
     iteration up to float sum order (< 1e-15), and label_propagation
     equals the Python loop exactly, whatever the block size."""
     pairs, df = small_graph
-    monkeypatch.setattr(ga, "_BLOCK_EDGES", block_edges)
+    monkeypatch.setattr(ga, "_ARRAY_BLOCK_EDGES", block_edges)
     for seeds, got in ((None, ga.pagerank(df, n_iter=4)),
                        ([3, 3, 17, 999],
                         ga.personalized_pagerank(df, [3, 3, 17, 999],
@@ -315,7 +316,7 @@ def test_personalized_pagerank_duplicate_and_absent_seeds(spark, monkeypatch,
     so the ranks sum to 3/4 of what one copy of each present seed would
     give. Pinned to the values of the Spark join-loop implementation the
     block steps replaced."""
-    monkeypatch.setattr(ga, "_BLOCK_EDGES", block_edges)
+    monkeypatch.setattr(ga, "_ARRAY_BLOCK_EDGES", block_edges)
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 4), (4, 2), (5, 1), (2, 6), (6, 6)],
         "src long, dst long")
@@ -340,7 +341,19 @@ def test_shortest_paths_weighted_rejects_malformed_edges(spark):
             ga.shortest_paths_weighted(edges, 1)
 
 
-def test_blocks_cut_skewed_ids_into_equal_edge_counts(spark, monkeypatch):
+def test_pagerank_rejects_null_endpoints(spark):
+    """A NULL endpoint is no node id: the numpy step cannot rank it, so
+    pagerank and personalized pagerank fail at the boundary instead of
+    inventing a node."""
+    for bad in ((2, None), (None, 3)):
+        edges = spark.createDataFrame([(1, 2), bad], "src long, dst long")
+        with pytest.raises(ValueError, match="NULL endpoint"):
+            ga.pagerank(edges)
+        with pytest.raises(ValueError, match="NULL endpoint"):
+            ga.personalized_pagerank(edges, [1])
+
+
+def test_blocks_cut_skewed_ids_into_equal_edge_counts(spark):
     """Block ranges are cut at quantiles of the key ids, not at equal
     widths: with 90% of the edges on ids 0-99 and the rest spread up to
     10^15, each of the four blocks holds about a quarter of the edges
@@ -353,23 +366,22 @@ def test_blocks_cut_skewed_ids_into_equal_edge_counts(spark, monkeypatch):
     ids = ([rnd.randrange(100) for _ in range(900)]
            + [rnd.randrange(10**15) for _ in range(100)])
     df = spark.createDataFrame([(u, u + 1) for u in ids], "u long, v long")
-    monkeypatch.setattr(ga, "_BLOCK_EDGES", 250)
     e, m = ga._ckpt_observe(df, *ga._block_metrics("u", "v"))
-    block = ga._blocks(e, m, "u")
+    block = ga._blocks(e, m, "u", per=250)
     sizes = [r["n"] for r in df.groupBy(block("u").alias("b"))
              .agg(F.count(F.lit(1)).alias("n")).collect()]
     assert len(sizes) == 4 and max(sizes) <= 300, sizes
     outside = spark.createDataFrame([(-5,), (10**16,)], "id long")
     assert [r["b"] for r in outside.select(block("id").alias("b"))
             .collect()] == [0, 3]
-    monkeypatch.setattr(ga, "_BLOCK_EDGES", SINGLETON_BLOCKS)
-    block = ga._blocks(e, {**m, "lo": 0, "hi": 5}, "u")
+    block = ga._blocks(e, {**m, "lo": 0, "hi": 5}, "u",
+                       per=SINGLETON_BLOCKS)
     got = spark.range(6).select(block("id").alias("b")).collect()
     assert [r["b"] for r in got] == list(range(6))
 
 
 def test_blocks_read_quantiles_only_between_one_block_and_singletons(
-        spark, monkeypatch):
+        spark):
     """The edge checkpoint observes no quantile, and _blocks runs the
     quantile aggregate only when the graph needs several
     blocks but fewer than its id range: a one-block table and a
@@ -382,10 +394,9 @@ def test_blocks_read_quantiles_only_between_one_block_and_singletons(
     jobs = {}
     for name, block_edges in (("one", ONE_BLOCK), ("several", 10),
                               ("singleton", SINGLETON_BLOCKS)):
-        monkeypatch.setattr(ga, "_BLOCK_EDGES", block_edges)
         sc.setJobGroup(f"blocks-{name}", "quantile probe")
         try:
-            ga._blocks(e, m, "u")
+            ga._blocks(e, m, "u", per=block_edges)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs[name] = len(sc.statusTracker().getJobIdsForGroup(

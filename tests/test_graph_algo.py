@@ -10,8 +10,9 @@ from osm_pg_etl_spark.operators.graph_algo import (
     symmetric_edges,
 )
 
-# _BLOCK_EDGES values: the test graphs in one block / one node per block
-# (the per-hop loop and full-graph star contraction)
+# block sizes (_BLOCK_EDGES, _ARRAY_BLOCK_EDGES): the test graphs in one
+# block / one node per block (the per-hop loop and full-graph star
+# contraction)
 ONE_BLOCK, SINGLETON_BLOCKS = 10**12, 1e-12
 
 
@@ -287,7 +288,7 @@ def test_pagerank_equals_python_replay(spark, monkeypatch, block_edges):
     replay of the same operation sequence."""
     from osm_pg_etl_spark.operators.graph_algo import pagerank
 
-    monkeypatch.setattr(ga, "_BLOCK_EDGES", block_edges)
+    monkeypatch.setattr(ga, "_ARRAY_BLOCK_EDGES", block_edges)
     rows = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 2), (5, 1)]
     edges = spark.createDataFrame(rows, "src long, dst long")
     got = {r["node"]: r["pagerank"]
@@ -325,7 +326,7 @@ def test_lpa_argmax_equals_mode(spark, monkeypatch, block_edges):
 
     from osm_pg_etl_spark.operators.graph_algo import label_propagation
 
-    monkeypatch.setattr(ga, "_BLOCK_EDGES", block_edges)
+    monkeypatch.setattr(ga, "_ARRAY_BLOCK_EDGES", block_edges)
     ring = [(i, (i + 1) % 24) for i in range(24)]
     chains = [(0, 12), (5, 30), (30, 31), (31, 32), (32, 17), (9, 40),
               (40, 41), (41, 9), (20, 50), (50, 51)]

@@ -15,7 +15,8 @@ from pyspark.sql.classic.dataframe import DataFrame
 from osm_pg_etl_spark.operators import graph_algo as ga
 
 SIDE = 5
-# _BLOCK_EDGES value that puts every graph here in one block
+# block size (_BLOCK_EDGES, _ARRAY_BLOCK_EDGES) that puts every graph here
+# in one block
 ONE_BLOCK = 10**12
 
 
@@ -196,7 +197,7 @@ def test_fixpoint_loops_persist_a_bounded_number_of_rdds(spark, tmp_path,
     # nine rounds: the Spark join loops these steps replaced left one
     # checkpoint per two (pagerank) or four (label propagation) rounds
     for block_edges, n_iter in ((ONE_BLOCK, 9), (10, 3)):
-        monkeypatch.setattr(ga, "_BLOCK_EDGES", block_edges)
+        monkeypatch.setattr(ga, "_ARRAY_BLOCK_EDGES", block_edges)
         for name, run in ranked.items():
             before = persisted_ids()
             run(n_iter).write.parquet(str(tmp_path / f"{name}{block_edges}"))
