@@ -495,7 +495,10 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     truncates lineage so plan size stays constant (a real cluster job
     would use a checkpoint dir for fault tolerance instead). The
     contraction is skipped when the local step observed no cross-block
-    edge, so a graph that fits in one block solves in one round.
+    edge. A graph of at most ``_BLOCK_EDGES`` edges (counted in the edge
+    table's checkpoint job) is one block: one task (:func:`_whole`) runs
+    the union-find over all of it, with no exchange, and its output is
+    the result, solved in one round.
 
     ``return_rounds=True`` additionally returns the round count: the
     local round plus the contraction rounds, which ``max_iter`` caps.
@@ -513,6 +516,14 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         .where(F.col("a") != F.col("b"))
         .distinct(),
         *_block_metrics("a", "b"))
+    if _one_block(m, _BLOCK_EDGES):
+        zero = F.lit(0).cast("long")
+        out = _whole(e.select("a", "b", *(zero.alias(c)
+                                          for c in ("ba", "bb", "blk"))),
+                     _by_value(_block_union_find),
+                     "node long, rep long, xdeg long").select(
+            "node", F.col("rep").alias("component"))
+        return (out, 1) if return_rounds else out
     block = _blocks(e, m, "a", "b", per=_BLOCK_EDGES)
     # every edge goes to the blocks of both its endpoints, so each block
     # sees all of its nodes, also those whose every edge crosses
@@ -1199,9 +1210,9 @@ def betweenness_exact(edges: DataFrame, wave_size: int = 32,
     per-node dependency sums simply add — one union + node-keyed
     group-sum at the end, lineage truncated per wave.
 
-    The wave loop is driver-side, but streamed (r11, VERDICT task 8):
-    source ids arrive through ``toLocalIterator`` over the SORTED
-    distinct-node table one partition at a time, so driver memory is
+    The wave loop is driver-side, but streamed: source ids arrive
+    through ``toLocalIterator`` over the SORTED distinct-node table one
+    partition at a time, so driver memory is
     O(wave_size + one partition), never O(V) — the earlier
     ``collect()`` held the full vertex list. Exact all-source
     betweenness still inherently enumerates V sources (O(V·E) work — at
@@ -1669,7 +1680,7 @@ def _louvain_round(wedges: DataFrame, labels: DataFrame, deg: DataFrame,
     integer until one double multiply/divide in fixed order, so DuckDB
     computes bit-identical scores.
 
-    Cost: ONE edge-sized exchange per round (r15 §13). The joined
+    Cost: ONE edge-sized exchange per round. The joined
     candidate rows are hash-partitioned on ``a`` once, right after the
     edges⋈labels join: hash(a) clusters (a, cb), so the w(x→c)
     aggregate, the node-sized broadcast joins and the final per-node
@@ -1913,7 +1924,7 @@ def modularity_of(edges: DataFrame, labels: DataFrame,
     construction (e.g. labels came from an algorithm run on the same
     edge list)."""
     und = symmetric_edges(edges, src, dst).localCheckpoint()
-    # r15: materialize the partition once — ``labels`` is typically a
+    # Materialize the partition once — ``labels`` is typically a
     # lazy multi-round plan (LPA / Louvain), and this function references
     # it four times (coverage check, n_comm count, both join sides), so
     # without the checkpoint the whole community algorithm re-executed

@@ -89,7 +89,7 @@ def car_network(ways: DataFrame) -> DataFrame:
 # highway/service/access — projected ONCE as plain columns by
 # complete_network so with_mode_flags(tag=F.col) compiles each probe to
 # an attribute reference instead of re-evaluating the tag expression at
-# every probe site (the r8 plain-column-cascade lesson, measured 3×).
+# every probe site (the re-evaluating form measured 3× slower).
 MODE_CASCADE_TAGS = ("bicycle", "cycleway", "foot", "footway",
                      "motor_vehicle", "bus")
 
@@ -126,7 +126,7 @@ def impute_speed_limit(network: DataFrame,
     broadcast join, zero shuffle of the network table.
 
     ``medians_from``: compute the per-highway medians over THIS table
-    instead of ``network``. The r16 osm_directed_graph gate imputes the
+    instead of ``network``. The osm_directed_graph gate imputes the
     *merged* network from the pre-split car network's medians — identical
     to imputing before the split (every merged segment copies
     (highway, speed_limit) verbatim from its single parent way, and the

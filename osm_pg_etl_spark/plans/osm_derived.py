@@ -164,7 +164,7 @@ def _shared_network(spark: SparkSession, sf_dir: str):
     passes, so every pass re-materializes from the parquet inputs; the
     first OSM query of a pass pays the build, the rest share it), and a
     fresh process starts empty (pinned by
-    tests/test_r16_optimizations.py::test_shared_network_registry_empty_at_start).
+    tests/test_plan_contracts.py::test_shared_network_registry_empty_at_start).
 
     The cached table is the GEOMETRY-FREE meta projection (n_nodes in
     place of the nodes/geom arrays, no tags map): every consumer of this
@@ -541,7 +541,7 @@ def q_osm_directed_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gate now shares the one cached merged materialization with every
     # other OSM gate instead of building a private imputed variant of
     # the whole split pipeline (equivalence pinned by
-    # tests/test_r16_optimizations.py::test_impute_after_merge_equals_before).
+    # tests/test_network.py::test_impute_after_merge_equals_before).
     d, cn, merged = _shared_network(spark, sf_dir)
     out = directed_network(impute_speed_limit(merged, medians_from=cn),
                            minimal=True)

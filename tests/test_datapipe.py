@@ -1,6 +1,8 @@
 """Training-data-pipeline operators: dedup, similarity and text analysis
 over small hand-checkable corpora."""
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1392,3 +1394,33 @@ def test_dedup_against_reference(spark):
             assert r["ref_jaccard"] >= 0.5 and r["ref_id"] in (1, 2)
         else:
             assert r["ref_id"] is None and r["ref_jaccard"] is None
+
+
+def test_lit_double_array_bit_identical(spark):
+    """_lit_double_array (one SQL-parsed expression) must produce the
+    exact doubles of the per-element-literal path, including values
+    whose decimal form is non-trivial to round-trip."""
+    from osm_pg_etl_spark.operators.similarity import _lit_double_array
+
+    vals = [0.1, -0.0, 1e-320, 2.0 ** 1023, 123456789.123456789,
+            -1.7976931348623157e308, 5e-324, 0.30000000000000004]
+    row = (spark.range(1)
+           .select(_lit_double_array(vals).alias("a"),
+                   F.array(*[F.lit(float(x)) for x in vals]).alias("b"))
+           .collect()[0])
+    assert all(
+        (math.copysign(1.0, x) == math.copysign(1.0, y) and x == y)
+        for x, y in zip(row["a"], row["b"]))
+
+
+def test_lit_double_array_nonfinite_fallback(spark):
+    """Non-finite values cannot ride SQL text — the helper must fall
+    back to per-element literals and still deliver them."""
+    from osm_pg_etl_spark.operators.similarity import _lit_double_array
+
+    row = (spark.range(1)
+           .select(_lit_double_array([1.0, float("nan"), float("inf")])
+                   .alias("a")).collect()[0])
+    assert row["a"][0] == 1.0
+    assert math.isnan(row["a"][1])
+    assert math.isinf(row["a"][2])

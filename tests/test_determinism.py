@@ -15,7 +15,6 @@ from __future__ import annotations
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from osm_pg_etl_spark.functions.partitioning import (
     bucket_of, deterministic_buckets, range_boundaries)

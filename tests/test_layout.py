@@ -5,8 +5,6 @@ from __future__ import annotations
 import glob
 import os
 
-from pyspark.sql import functions as F
-
 
 def _py_z(a: int, b: int, bits: int) -> int:
     z = 0

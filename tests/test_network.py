@@ -2,7 +2,6 @@
 (FIXTURES.md cases 6-8)."""
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from osm_pg_etl_spark.operators.graphs import (
@@ -18,6 +17,8 @@ from osm_pg_etl_spark.operators.network import (
 )
 from osm_pg_etl_spark.operators.pois import pois_from_nodes
 from osm_pg_etl_spark.operators.topology import merged_network
+
+SF = "/root/testdata/sf0.001"
 
 
 def test_car_network_membership(osm):
@@ -155,3 +156,84 @@ def test_create_topology_snaps_endpoints(spark):
     got = {r["edge_id"]: (r["source"], r["target"]) for r in t.collect()}
     assert got[1][1] == got[2][0]          # snapped to same vertex id
     assert len({v for st in got.values() for v in st}) == 5
+
+
+def test_car_way_ids_equals_car_network_edge_ids(spark):
+    """derive_car_way_ids (plain-column tag cascade, no way assembly)
+    must produce exactly the distinct edge-id set of the full
+    car_network operator — the substitution osm_relation_members rides."""
+    from osm_pg_etl_spark.operators.network import car_network
+    from osm_pg_etl_spark.plans.osm_derived import (derive_car_way_ids,
+                                                    derive_osm)
+
+    fast = {r[0] for r in derive_car_way_ids(spark, SF).collect()}
+    full = {r[0] for r in (car_network(derive_osm(spark, SF)["ways"])
+                           .select("edge_id").distinct().collect())}
+    assert fast == full
+    assert fast, "empty car network at sf0.001 would make the test vacuous"
+
+
+def test_impute_after_merge_equals_before(spark):
+    """osm_directed_graph's rewrite: imputing the MERGED network from
+    the pre-split car network's medians must equal merging the imputed
+    network — every merged segment copies (highway, speed_limit, oneway)
+    verbatim from its single parent way, so the coalesce commutes with
+    the split."""
+    from osm_pg_etl_spark.operators.graphs import directed_network
+    from osm_pg_etl_spark.operators.network import (car_network,
+                                                    impute_speed_limit)
+    from osm_pg_etl_spark.operators.topology import merged_network
+    from osm_pg_etl_spark.plans.osm_derived import derive_osm
+
+    d = derive_osm(spark, SF)
+    cn = car_network(d["ways"]).cache()
+
+    old = directed_network(
+        merged_network(impute_speed_limit(cn), d["way_nodes"]),
+        minimal=True)
+    new = directed_network(
+        impute_speed_limit(
+            merged_network(cn, d["way_nodes"]),
+            medians_from=cn),
+        minimal=True)
+
+    def canon(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    a, b = canon(old), canon(new)
+    assert a, "empty directed graph at sf0.001 would make the test vacuous"
+    assert a == b
+
+
+def test_directed_network_narrow_equals_full_projection(spark):
+    """directed_network on the geometry-free meta projection must emit
+    exactly the full-width expansion minus the heavy passthrough columns
+    (direction logic reads only oneway/highway)."""
+    from osm_pg_etl_spark.operators.graphs import directed_network
+    from osm_pg_etl_spark.operators.network import car_network
+    from osm_pg_etl_spark.operators.topology import merged_network
+    from osm_pg_etl_spark.plans.osm_derived import derive_osm
+
+    d = derive_osm(spark, SF)
+    full = merged_network(car_network(d["ways"]), d["way_nodes"])
+    narrow = full.select("edge_id", "start_node", "end_node",
+                         "length", "speed_limit", "highway", "oneway")
+
+    want_cols = ["start_node", "end_node", "edge_id", "length",
+                 "speed_limit", "highway", "oneway"]
+    got = directed_network(narrow)
+    assert got.columns == want_cols
+
+    def canon(df):
+        # multiset compare: rows carry NULLs (speed_limit/oneway), which
+        # tuple sorting cannot order
+        from collections import Counter
+        return Counter(tuple(r) for r in df.collect())
+
+    a = canon(directed_network(full).select(*want_cols))
+    b = canon(got)
+    assert a and a == b
+    # and the minimal shape is unchanged for both input widths
+    m_full = canon(directed_network(full, minimal=True))
+    m_narrow = canon(directed_network(narrow, minimal=True))
+    assert m_full == m_narrow

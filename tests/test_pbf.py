@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import numpy as np
 import pytest
 
 from osm_pg_etl_spark.sources import pbf

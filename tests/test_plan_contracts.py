@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import re
 
+from pyspark.sql import functions as F
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -366,3 +368,81 @@ def test_merged_network_broadcasts_subset_merge_rows(spark, osm):
     full = analyzed(merged_network(cn, wn, nodes=nodes))
     assert "strategy=broadcast" in subset, subset
     assert "strategy=broadcast" not in full, full
+
+
+def test_shared_network_cross_query_cache_hit(spark):
+    """The load-bearing assumption of _shared_network: two gates built
+    in the same process produce sameResult merged plans, so the
+    CacheManager serves the second gate from the first's materialized
+    cache (the physical plan reads an InMemoryTableScan instead of
+    re-running the split pipeline)."""
+    from osm_pg_etl_spark.plans.osm_derived import _shared_network
+
+    spark.catalog.clearCache()
+    _, _, m1 = _shared_network(spark, SF)
+    _, _, m2 = _shared_network(spark, SF)
+    assert m1._jdf.queryExecution().analyzed().sameResult(
+        m2._jdf.queryExecution().analyzed())
+    # physical plan of the second build must hit the cache entry the
+    # first build registered
+    phys = m2._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" in phys
+    spark.catalog.clearCache()
+
+
+def test_shared_network_registry_empty_at_start(spark):
+    """No cross-run reuse: the shared materialization lives ONLY in
+    Spark's CacheManager — there is no Python-level registry in the
+    module, and clearCache() (what bench.py runs between timed passes)
+    leaves nothing behind, so every pass/process recomputes from the
+    parquet inputs."""
+    from pyspark.sql import DataFrame
+
+    from osm_pg_etl_spark.plans import osm_derived
+
+    # no module-level container of DataFrames (a results registry would
+    # have to live somewhere importable to survive across queries)
+    for name, val in vars(osm_derived).items():
+        if isinstance(val, dict):
+            assert not any(isinstance(v, DataFrame) for v in val.values()), \
+                f"module-level DataFrame registry found: {name}"
+        assert not isinstance(val, DataFrame), \
+            f"module-level DataFrame found: {name}"
+
+    _, _, merged = osm_derived._shared_network(spark, SF)
+    merged.count()  # materialize the cache
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert not cm.isEmpty()
+    spark.catalog.clearCache()
+    assert cm.isEmpty(), "clearCache must drop the shared materialization"
+
+
+def test_shared_network_geometry_free(spark):
+    """The shared cache is the META projection: no per-segment
+    nodes/geom arrays or tags map may be materialized into it (caching
+    them was measured +16% on osm_communities at sf1 — the build pays
+    for columns no consumer reads), and its values must equal the same
+    projection of the full merged table."""
+    from osm_pg_etl_spark.operators.network import car_network
+    from osm_pg_etl_spark.operators.topology import merged_network
+    from osm_pg_etl_spark.plans.osm_derived import (_shared_network,
+                                                    derive_osm)
+
+    _, _, merged = _shared_network(spark, SF)
+    assert set(merged.columns) == {"edge_id", "start_node", "end_node",
+                                   "n_nodes", "length", "speed_limit",
+                                   "highway", "oneway"}
+
+    d = derive_osm(spark, SF)
+    full = merged_network(car_network(d["ways"]), d["way_nodes"])
+    ref = full.select("edge_id", "start_node", "end_node",
+                      F.size("nodes").alias("n_nodes"),
+                      "length", "speed_limit", "highway", "oneway")
+
+    def canon(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    a, b = canon(merged), canon(ref)
+    assert a, "empty merged network at sf0.001 would make this vacuous"
+    assert a == b
+    spark.catalog.clearCache()

@@ -292,99 +292,3 @@ def test_lpa_reference_parity_spark_batch(spark):
         got = {r["node"]: r["community"]
                for r in label_propagation(edges, n_iter=n_iter).collect()}
         assert got == want, (edge_list, n_iter)
-
-
-# ---------------------------------------------------------------- codecs
-
-@st.composite
-def msvc_frames(draw):
-    """1-4 frames on the RGB555 lattice, each block <= 2 colors (the
-    format's exactly-representable subset), with random inter-frame
-    block reuse."""
-    bw = draw(st.integers(1, 3))
-    bh = draw(st.integers(1, 3))
-    n = draw(st.integers(1, 4))
-    frames = []
-    prev = None
-    for _ in range(n):
-        f = np.zeros((bh * 4, bw * 4), dtype=np.uint16)
-        for by in range(bh):
-            for bx in range(bw):
-                if prev is not None and draw(st.booleans()):
-                    f[by * 4:(by + 1) * 4, bx * 4:(bx + 1) * 4] = \
-                        prev[by * 4:(by + 1) * 4, bx * 4:(bx + 1) * 4]
-                    continue
-                qa = draw(st.integers(0, 31))
-                qb = draw(st.integers(0, 31))
-                ca = (qa << 10) | (qa << 5) | qa
-                cb = (qb << 10) | (qb << 5) | qb
-                patt = np.array(
-                    [draw(st.integers(0, 1)) for _ in range(16)]
-                ).reshape(4, 4)
-                f[by * 4:(by + 1) * 4, bx * 4:(bx + 1) * 4] = \
-                    np.where(patt == 1, ca, cb)
-        frames.append(f)
-        prev = f
-    return frames
-
-
-@given(msvc_frames())
-@settings(max_examples=60, deadline=None)
-def test_msvideo1_container_roundtrip_property(frames):
-    """Any representable frame sequence — arbitrary dims, 2-color
-    blocks, random temporal reuse — survives the CRAM AVI round trip
-    pixel-exactly."""
-    from osm_pg_etl_spark.functions.avicodec import (decode_avi,
-                                                     encode_avi_msvc)
-    from osm_pg_etl_spark.functions.msvideo1 import rgb555_to_rgb888
-
-    rgb = [rgb555_to_rgb888(f) for f in frames]
-    dec, _ = decode_avi(encode_avi_msvc(rgb))
-    assert len(dec) == len(rgb)
-    assert all(np.array_equal(a, b) for a, b in zip(rgb, dec))
-
-
-@given(st.lists(st.integers(-32768, 32767), min_size=2, max_size=400),
-       st.lists(st.integers(-32768, 32767), min_size=2, max_size=400))
-@settings(max_examples=50, deadline=None)
-def test_stereo_adpcm_channels_independent(left, right):
-    """Stereo ADPCM must decode each channel exactly as the mono codec
-    would decode it alone — the interleave adds layout, not coupling."""
-    from osm_pg_etl_spark.functions.audiocodec import (
-        adpcm_decode_stereo, adpcm_encode_stereo)
-
-    n = min(len(left), len(right))
-    pcm = np.stack([np.array(left[:n]), np.array(right[:n])],
-                   axis=1).astype(np.int32)
-    dec = adpcm_decode_stereo(adpcm_encode_stereo(pcm, 64), 64)
-    # each block header carries the channel's first sample verbatim,
-    # and each channel advances an independent IMA state machine —
-    # block-seed exactness is the layout-independent invariant
-    per_block = 64 - 8 + 1
-    for c in range(2):
-        for off in range(0, n, per_block):
-            assert dec[off, c] == pcm[off, c]
-
-
-@given(st.integers(0, 400), st.integers(1, 4))
-@settings(max_examples=120, deadline=None)
-def test_msvideo1_truncation_never_hangs_or_misparses(cut, nframes):
-    """Truncating a valid CRAM AVI at any byte must either decode the
-    prefix that survives intact or raise a clean ValueError /
-    NotImplementedError — never hang, never return malformed frames."""
-    from osm_pg_etl_spark.functions.avicodec import (decode_avi,
-                                                     encode_avi_msvc)
-
-    frames = []
-    for f in range(nframes):
-        img = np.zeros((8, 8, 3), dtype=np.uint8)
-        img[0:4, 0:4] = (f * 8) % 248
-        frames.append(img)
-    avi = encode_avi_msvc(frames)
-    payload = avi[:min(cut, len(avi))]
-    try:
-        dec, _ = decode_avi(payload)
-    except (ValueError, NotImplementedError):
-        return
-    for d in dec:
-        assert d.shape == (8, 8, 3) and d.dtype == np.uint8

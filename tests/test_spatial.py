@@ -1,14 +1,12 @@
 """Grid-blocked spatial join (SURVEY §2.3 J8): exact predicate cases and
 blocking soundness."""
 
-import pytest
+import numpy as np
 
 from osm_pg_etl_spark.operators.spatial import (
     _segments_intersect,
     intersecting_way_pairs,
 )
-
-import numpy as np
 
 
 def seg(*pts):

@@ -2,7 +2,6 @@
 tests (general-functions.sql:110-129), with exact expected values."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from osm_pg_etl_spark.operators.stats import median, weighted_median
 

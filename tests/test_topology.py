@@ -14,6 +14,8 @@ from osm_pg_etl_spark.operators.topology import (
     ways_split_nodes,
 )
 
+SF = "/root/testdata/sf0.001"
+
 
 @pytest.fixture(scope="module")
 def stages(osm):
@@ -243,3 +245,127 @@ def test_incremental_holds_no_cache(spark, osm, tmp_path, mode):
     inc.write.parquet(str(tmp_path / mode))
     assert entries() == before
     assert len(persisted_ids() - before_ids) == 2
+
+
+def test_mutated_way_nodes_equals_unnest_of_mutated_ways(spark):
+    """q_osm_merged_incremental's CDC batch applied at the way_nodes
+    level (the oracle's _WN_MUTATED_SQL shape) must produce exactly the
+    rows of unnest_way_nodes over the array-mutated ways — the
+    substitution that lets every consumer read the cached way_nodes
+    table instead of re-running the collect_list way assembly."""
+    from pyspark.sql import Window
+
+    from osm_pg_etl_spark.operators.topology import unnest_way_nodes
+    from osm_pg_etl_spark.plans.osm_derived import derive_osm
+
+    d = derive_osm(spark, SF)
+    ways, way_nodes = d["ways"], d["way_nodes"]
+
+    # the original formulation: mutate the assembled ways, re-unnest
+    mod_nd = (F.col("id") % 103 == 0) & (F.size("nodes") > 2)
+    new_ways = (ways.filter(F.col("id") % 101 != 0)
+                .withColumn("nodes", F.when(mod_nd, F.expr(
+                    "slice(nodes, 1, size(nodes) - 1)"))
+                    .otherwise(F.col("nodes"))))
+    via_assembly = unnest_way_nodes(new_ways)
+
+    # the shipped formulation: filter the way_nodes rows directly
+    _n = F.count(F.lit(1)).over(Window.partitionBy("way_id"))
+    direct = (way_nodes.withColumn("_n", _n)
+              .filter((F.col("way_id") % 101 != 0)
+                      & ~((F.col("way_id") % 103 == 0)
+                          & (F.col("_n") > 2)
+                          & (F.col("sequence_id") == F.col("_n") - 1)))
+              .drop("_n"))
+
+    a = sorted(map(tuple, via_assembly.collect()))
+    b = sorted(map(tuple, direct.collect()))
+    assert a == b
+    assert a, "empty way_nodes at sf0.001 would make the test vacuous"
+
+
+def test_network_restricted_sub_wn_identical(spark):
+    """merged_network_incremental feeds merged_network the network-
+    restricted new_wn instead of raw new_way_nodes for the affected
+    subset; network_way_nodes must make both inputs land identically."""
+    from osm_pg_etl_spark.operators.network import car_network
+    from osm_pg_etl_spark.operators.topology import (network_way_nodes,
+                                                     unnest_way_nodes)
+    from osm_pg_etl_spark.plans.osm_derived import derive_osm
+
+    d = derive_osm(spark, SF)
+    ways, way_nodes = d["ways"], d["way_nodes"]
+    cn = car_network(ways)
+    affected = (way_nodes.select("way_id").distinct()
+                .filter(F.col("way_id") % 7 == 0))
+    sub_net = cn.join(affected.select(F.col("way_id").alias("edge_id")),
+                      "edge_id", "left_semi")
+
+    raw_sub = way_nodes.join(affected, "way_id", "left_semi")
+    wn_sub = (network_way_nodes(way_nodes, cn)
+              .join(affected, "way_id", "left_semi"))
+    a = sorted(map(tuple,
+                   network_way_nodes(raw_sub, sub_net).collect()))
+    b = sorted(map(tuple,
+                   network_way_nodes(wn_sub, sub_net).collect()))
+    assert a == b
+    assert a
+
+
+def test_incremental_nodes_path_equals_arrays_path(spark, osm):
+    """merged_network_incremental(nodes=...) must reproduce BOTH the
+    arrays-path incremental result and the full recompute exactly, from
+    a META-ONLY new_network (edge_id, tags, attrs — no nodes/geom
+    columns at all), for a batch that exercises every assembly case:
+    W1 truncated (re-split, multi-segment), W2 deleted, W3 flipped to
+    unsplit (whole-way range), W5 flipped to split (dead-end tail),
+    W100 added (interior shared node -> 2 segments), W8 no-op-modified
+    (2-node way, no ways_length row -> whole-way range)."""
+    from osm_pg_etl_spark.operators.network import car_network
+    from osm_pg_etl_spark.operators.topology import (
+        merged_network, merged_network_incremental, unnest_way_nodes)
+
+    # the fixture's node_coord formula: batch-added ways must be
+    # CONSISTENT with the nodes table (the nodes-path contract — it
+    # reassembles geom from nodes, the arrays path slices it verbatim)
+    def node_coord(nid):
+        return (float(nid % 6) / 100.0, float(nid // 6) / 100.0)
+
+    cn_old = car_network(osm["ways"])
+    old_merged = merged_network(cn_old, osm["way_nodes"])
+
+    ways = osm["ways"]
+    trunc = F.when(F.col("id") == 1,
+                   F.expr("slice(nodes, 1, size(nodes) - 1)")) \
+        .otherwise(F.col("nodes"))
+    trunc_ls = F.when(F.col("id") == 1,
+                      F.expr("slice(linestring, 1, size(linestring) - 1)")) \
+        .otherwise(F.col("linestring"))
+    added = spark.createDataFrame(
+        [(100, {"highway": "residential"}, [7, 16, 6],
+          [node_coord(7), node_coord(16), node_coord(6)])], ways.schema)
+    new_ways = (ways.filter("id != 2")
+                .withColumn("nodes", trunc)
+                .withColumn("linestring", trunc_ls)
+                .unionByName(added))
+    new_way_nodes = unnest_way_nodes(new_ways)
+    changed = spark.createDataFrame([(1,), (2,), (8,), (100,)],
+                                    "way_id long")
+
+    cn_new = car_network(new_ways)
+    full = merged_network(cn_new, new_way_nodes)
+    inc_arrays = merged_network_incremental(
+        cn_old, osm["way_nodes"], old_merged,
+        cn_new, new_way_nodes, changed)
+    meta = cn_new.select("edge_id", "tags",
+                         "speed_limit", "highway", "oneway")
+    inc_nodes = merged_network_incremental(
+        cn_old, osm["way_nodes"], old_merged,
+        meta, new_way_nodes, changed, nodes=osm["nodes"])
+
+    f = sorted(map(str, full.collect()))
+    a = sorted(map(str, inc_arrays.select(*full.columns).collect()))
+    n = sorted(map(str, inc_nodes.select(*full.columns).collect()))
+    assert n == f
+    assert a == f
+    assert sorted(map(str, old_merged.collect())) != f
