@@ -1,13 +1,9 @@
-"""Deterministic sampling, splitting, and domain-mixing operators for
-training-data pipelines.
+"""Deterministic per-group sampling.
 
 All randomness is md5-derived (:mod:`..functions.hashing`) rather than
-``rand()``: assignments are a pure function of the row key and a seed, so
-they are stable across runs, retries, engines (DuckDB oracles re-derive
-them exactly), and cluster re-partitioning — the property a 100 TB corpus
-pipeline needs for reproducible train/val/test membership. Everything here
-is narrow Column expressions except the mixture-rate computation, which is
-one small aggregation broadcast back onto the corpus.
+``rand()``: picks are a pure function of the row key and a seed, so they
+are stable across runs, retries, engines (DuckDB oracles re-derive them
+exactly), and cluster re-partitioning.
 """
 
 from __future__ import annotations
@@ -28,176 +24,6 @@ def hash_uniform(c: Column | str, seed: int = 0) -> Column:
     4294967296.0`` in ANSI-ish SQL computes the identical value.
     """
     return md5_long(c, seed).cast("double") / F.lit(_HASH_RANGE)
-
-
-def quantile_buckets(df: DataFrame, score_col: str,
-                     qs: tuple[float, ...] = (0.3333333333333333,
-                                              0.6666666666666666),
-                     labels: tuple[str, ...] = ("head", "middle", "tail"),
-                     bucket_col: str = "bucket",
-                     method: str = "auto",
-                     accuracy: int = 10000) -> DataFrame:
-    """Bucket rows by global score quantiles — the CCNet head/middle/
-    tail split (Wenzek et al. 2019 cut their corpus at the LM-perplexity
-    terciles and keep the cleaner buckets). Boundaries come from ONE
-    ``percentile`` aggregate (a row of len(qs) doubles) broadcast back
-    via a cross join — no global sort, no NTILE single-partition window,
-    so the bucketing stays a narrow map at any corpus size. A row lands
-    in the first bucket whose cut ≥ its score (ties go to the cleaner
-    bucket); ``len(labels) == len(qs) + 1``.
-
-    ``method`` rides the same exact/approx crossover as
-    ``stats.quantiles_by_group`` (r14): ``"auto"`` computes the cuts
-    exactly below ``stats.AUTO_APPROX_BYTES`` of Catalyst-estimated
-    input and flips to ``F.percentile_approx`` (mergeable GK sketch,
-    memory O(``accuracy``)) above it, because exact ``F.percentile``
-    buffers a value→count map for the WHOLE corpus in one aggregate
-    group: on a mostly-distinct score column at 100 TB that map is the
-    data. Note Catalyst OVER-estimates derived (join/agg) plans, so
-    auto errs toward the bounded-memory approx path there; pin
-    ``"exact"`` when bit-reproducible cuts are the contract (the
-    ccnet_buckets gate does)."""
-    if len(labels) != len(qs) + 1:
-        raise ValueError("need exactly one more label than cut points")
-    from .stats import AUTO_APPROX_BYTES, _plan_size_bytes  # noqa: PLC0415
-
-    if method == "auto":
-        size = _plan_size_bytes(df)
-        method = ("approx" if size is not None
-                  and size > AUTO_APPROX_BYTES else "exact")
-    q_arr = F.array(*[F.lit(float(q)) for q in qs])
-    if method == "exact":
-        cut_agg = F.percentile(F.col(score_col), q_arr)
-    elif method == "approx":
-        cut_agg = F.percentile_approx(F.col(score_col), q_arr,
-                                      F.lit(accuracy)).cast("array<double>")
-    else:
-        raise ValueError("method must be 'auto', 'exact' or 'approx'")
-    cuts = df.agg(cut_agg.alias("_cuts"))
-    expr = F.lit(labels[-1])
-    for i in range(len(qs) - 1, -1, -1):
-        expr = F.when(F.col(score_col) <= F.element_at("_cuts", i + 1),
-                      F.lit(labels[i])).otherwise(expr)
-    return (df.crossJoin(F.broadcast(cuts))
-            .withColumn(bucket_col, expr).drop("_cuts"))
-
-
-def hash_split(df: DataFrame, id_col: str = "doc_id",
-               splits: tuple[tuple[str, float], ...] = (
-                   ("train", 0.9), ("val", 0.05), ("test", 0.05)),
-               seed: int = 42) -> DataFrame:
-    """Assign every row to a named split by hashed-key interval: row goes to
-    the first split whose cumulative weight exceeds ``hash_uniform(id)``.
-
-    Membership is a pure function of (id, seed): adding or removing other
-    rows never moves a document between splits — unlike ``randomSplit``,
-    which depends on partitioning and sampling order. Weights must sum to 1
-    (the last split absorbs any floating-point remainder).
-    """
-    total = sum(w for _, w in splits)
-    if abs(total - 1.0) > 1e-9:
-        raise ValueError(f"split weights must sum to 1, got {total}")
-    u = hash_uniform(id_col, seed)
-    expr = F.lit(splits[-1][0])
-    cum = 0.0
-    branches = []
-    for name, w in splits[:-1]:
-        cum += w
-        branches.append((name, cum))
-    for name, threshold in reversed(branches):
-        expr = F.when(u < F.lit(threshold), F.lit(name)).otherwise(expr)
-    return df.withColumn("split", expr)
-
-
-def stratified_sample(df: DataFrame, fractions: dict[str, float],
-                      strata_col: str = "source", id_col: str = "doc_id",
-                      seed: int = 7) -> DataFrame:
-    """Deterministic per-stratum sampling: keep a row iff
-    ``hash_uniform(id) < fraction(stratum)``. Strata missing from
-    ``fractions`` are dropped (rate 0). Same reproducibility contract as
-    :func:`hash_split`; rows never shuffle.
-    """
-    rate = F.lit(0.0)
-    for stratum, frac in sorted(fractions.items()):
-        rate = F.when(F.col(strata_col) == stratum, F.lit(frac)).otherwise(rate)
-    return df.filter(hash_uniform(id_col, seed) < rate)
-
-
-def domain_mixture_rates(df: DataFrame, weights: dict[str, float],
-                         domain_col: str = "source") -> DataFrame:
-    """Per-domain downsampling rates that realize a target mixture.
-
-    Given target weights (relative proportions), find the largest corpus
-    achievable *without upsampling*: total ``T = min_d(n_d / w_d)``, rate
-    ``min(1, w_d · T / n_d)``. Domains absent from ``weights`` get rate 0.
-    Returns ``(domain_col, n_docs, target_weight, sample_rate, n_sampled)``
-    with ``n_sampled = floor(rate · n_docs)``.
-
-    One count aggregation plus a broadcast one-row min — the corpus itself
-    is only scanned once, and the result is broadcast-joinable back for the
-    actual sampling pass (:func:`stratified_sample` with these rates).
-    """
-    total_w = sum(weights.values())
-    norm = {d: w / total_w for d, w in weights.items()}
-    wmap = F.lit(None).cast("double")
-    for domain, w in sorted(norm.items()):
-        wmap = F.when(F.col(domain_col) == domain, F.lit(w)).otherwise(wmap)
-    counts = (df.groupBy(domain_col)
-              .agg(F.count(F.lit(1)).alias("n_docs"))
-              .withColumn("target_weight", wmap))
-    cap = counts.filter(F.col("target_weight").isNotNull()).agg(
-        F.min(F.col("n_docs").cast("double") / F.col("target_weight"))
-        .alias("_t"))
-    rate = F.when(
-        F.col("target_weight").isNull(), F.lit(0.0)
-    ).otherwise(F.least(F.lit(1.0),
-                        F.col("target_weight") * F.col("_t") / F.col("n_docs")))
-    return (counts.crossJoin(F.broadcast(cap))
-            .withColumn("sample_rate", rate)
-            .withColumn("n_sampled",
-                        F.floor(F.col("sample_rate") * F.col("n_docs")))
-            .select(domain_col, "n_docs",
-                    F.coalesce("target_weight", F.lit(0.0))
-                    .alias("target_weight"),
-                    "sample_rate", "n_sampled"))
-
-
-def training_order(df: DataFrame, id_col: str = "doc_id",
-                   seed: int = 13, num_buckets: int | None = None,
-                   ) -> DataFrame:
-    """Deterministic global training-order shuffle: every row gets a dense
-    epoch position 0..n-1 ordered by ``(md5(seed|id), id)`` — the
-    reproducible corpus shuffle a training run needs (change ``seed`` for
-    a new epoch permutation; membership changes never reorder surviving
-    pairs' relative hash order).
-
-    Scale shape: a global ROW_NUMBER without the single-partition window —
-    deterministic range buckets on the hash key
-    (:mod:`..functions.partitioning`), a per-bucket window, and broadcast
-    cumulative bucket offsets; the driver holds only the bucket sizes.
-    Returns (id_col, epoch_pos)."""
-    from pyspark.sql import Window  # noqa: PLC0415
-
-    from ..functions.partitioning import bucket_of, range_boundaries
-
-    base = df.select(F.col(id_col), md5_long(id_col, seed).alias("_h"))
-    bounds = range_boundaries(base, "_h", num_buckets)
-    base = base.withColumn("_b", bucket_of("_h", bounds))
-    w = Window.partitionBy("_b").orderBy("_h", id_col)
-    rn = base.withColumn("_rn", F.row_number().over(w).cast("long"))
-    sizes = {r["_b"]: r["c"] for r in
-             rn.groupBy("_b").agg(F.count(F.lit(1)).alias("c")).collect()}
-    offsets, acc = {}, 0
-    for b in sorted(sizes):
-        offsets[b] = acc
-        acc += sizes[b]
-    spark = df.sparkSession
-    off = spark.createDataFrame(
-        [(b, o) for b, o in offsets.items()] or [(0, 0)],
-        "_b int, _off long")
-    return (rn.join(F.broadcast(off), "_b")
-            .select(id_col,
-                    (F.col("_off") + F.col("_rn") - 1).alias("epoch_pos")))
 
 
 def per_group_sample(df: DataFrame, k: int, group_col: str = "lang",
@@ -222,151 +48,3 @@ def per_group_sample(df: DataFrame, k: int, group_col: str = "lang",
             .drop("_rn"))
 
 
-def weighted_systematic_sample(df: DataFrame, k: int,
-                               weight_col: str,
-                               id_col: str = "doc_id",
-                               seed: int = 13,
-                               boundaries: list | None = None) -> DataFrame:
-    """Deterministic weighted sampling WITH replacement counts — exactly
-    ``k`` picks distributed in proportion to integer weights, as one
-    systematic (equal-stride) pass over the cumulative weight line
-    [Madow 1949; the resampling step of particle filters]: positions
-    ``q_i = off + i·W`` for ``i < k`` on the k-scaled line ``[0, k·W)``,
-    each row picked once per position inside its ``[k·prev, k·cum)``
-    interval. Returns ``(id_col, weight, n_picks)`` for rows with
-    ``n_picks > 0``; ``Σ n_picks = k`` exactly, and a row with weight
-    share ``w/W`` gets ``floor(k·w/W)`` or ``ceil(k·w/W)`` picks — the
-    multiplicity table a mixture-weighted training epoch consumes
-    (n_picks = how many times the example is repeated).
-
-    Engine-exact by construction: weights are integers, the offset is
-    ``md5_long('swrs', seed) mod W``, and every pick count is pure
-    integer arithmetic in decimal(38,0) — no transcendental key
-    (Efraimidis-Spirakis' ``u^(1/w)`` ranks diverge across engines in
-    the last ulp; this construction cannot). Deterministic: a pure
-    function of (ids, weights, seed) — retries, repartitioning and AQE
-    cannot change the picks.
-
-    Scale shape: the global cumulative weight line uses the same
-    deterministic id-range-bucket prefix sum as ``text.pack_positions``
-    (per-bucket running sums + broadcast cumulative offsets) — never a
-    single-partition window; the pick-count arithmetic is a narrow
-    projection. Rows with weight ≤ 0 or NULL are excluded (never
-    sampled).
-    """
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
-    from pyspark.sql import Window  # noqa: PLC0415
-
-    from ..functions.partitioning import (  # noqa: PLC0415
-        bucket_of, range_boundaries)
-
-    dec = "decimal(38,0)"
-    base = (df.select(F.col(id_col),
-                      F.col(weight_col).cast("long").alias("_w"))
-            .filter(F.col("_w") > 0))
-    if boundaries is None:
-        boundaries = range_boundaries(base, id_col)
-    bucketed = base.withColumn("_pid", bucket_of(id_col, boundaries))
-    w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    zero = F.lit(0).cast(dec)
-    offs = (bucketed.groupBy("_pid").agg(F.sum("_w").cast(dec).alias("_c"))
-            .select("_pid",
-                    F.coalesce(F.sum("_c").over(w_off), zero).alias("_off"),
-                    F.sum("_c").over(Window.partitionBy()).alias("_tot")))
-    w_local = Window.partitionBy("_pid").orderBy(id_col)
-    local_prev = F.coalesce(
-        F.sum(F.col("_w").cast(dec))
-        .over(w_local.rowsBetween(Window.unboundedPreceding, -1)), zero)
-    lined = (bucketed.join(F.broadcast(offs), "_pid")
-             .select(id_col, "_w", "_tot",
-                     (local_prev + F.col("_off")).alias("_prev")))
-
-    # offset on the k-scaled line: md5_long('swrs', seed) mod W — a pure
-    # function of (seed, total weight)
-    off_k = F.pmod(md5_long(F.lit("swrs"), seed).cast(dec), F.col("_tot"))
-    kk = F.lit(k).cast(dec)
-
-    def cnt(x):
-        # #{i >= 0 : off + i*W < x}  =  max(0, floor((x-off-1)/W) + 1),
-        # with the division made EXACT via pmod so decimal rounding can
-        # never cross an integer boundary
-        d = x - off_k - F.lit(1).cast(dec)
-        q = ((d - F.pmod(d, F.col("_tot"))) / F.col("_tot")).cast(dec)
-        return F.when(d < 0, F.lit(0).cast(dec)).otherwise(q + 1)
-
-    lo = F.least(kk, cnt(kk * F.col("_prev")))
-    hi = F.least(kk, cnt(kk * (F.col("_prev") + F.col("_w").cast(dec))))
-    return (lined.select(id_col, F.col("_w").alias("weight"),
-                         (hi - lo).cast("long").alias("n_picks"))
-            .filter(F.col("n_picks") > 0))
-
-
-def weighted_systematic_sample_by_group(df: DataFrame, k: int,
-                                        weight_col: str,
-                                        group_col: str = "source",
-                                        id_col: str = "doc_id",
-                                        seed: int = 13,
-                                        boundaries: list | None = None
-                                        ) -> DataFrame:
-    """Per-group :func:`weighted_systematic_sample`: exactly ``k`` picks
-    per group, distributed in proportion to weights WITHIN the group —
-    the "k examples per domain, weighted by quality/length" mixture
-    draw. Returns (group_col, id_col, weight, n_picks) with
-    ``Σ n_picks = k`` inside every group; each group gets its own
-    md5-derived offset (a pure function of seed, group and the group's
-    total weight).
-
-    Scale shape mirrors ``text.length_batches``: the per-group
-    cumulative weight line uses per-(group, id-range-chunk) offsets —
-    every window partition is one bounded chunk of one group, so a
-    giant group never funnels into one reducer the way a naive
-    ``PARTITION BY group`` prefix sum would. Same integer-exact pick
-    arithmetic as the ungrouped form.
-    """
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
-    from pyspark.sql import Window  # noqa: PLC0415
-
-    from ..functions.partitioning import (  # noqa: PLC0415
-        bucket_of, range_boundaries)
-
-    dec = "decimal(38,0)"
-    base = (df.select(F.col(group_col), F.col(id_col),
-                      F.col(weight_col).cast("long").alias("_w"))
-            .filter(F.col("_w") > 0))
-    if boundaries is None:
-        boundaries = range_boundaries(base, id_col)
-    bucketed = base.withColumn("_pid", bucket_of(id_col, boundaries))
-    w_off = (Window.partitionBy(group_col).orderBy("_pid")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    zero = F.lit(0).cast(dec)
-    offs = (bucketed.groupBy(group_col, "_pid")
-            .agg(F.sum("_w").cast(dec).alias("_c"))
-            .select(group_col, "_pid",
-                    F.coalesce(F.sum("_c").over(w_off), zero).alias("_off"),
-                    F.sum("_c").over(Window.partitionBy(group_col))
-                    .alias("_tot")))
-    w_local = Window.partitionBy(group_col, "_pid").orderBy(id_col)
-    local_prev = F.coalesce(
-        F.sum(F.col("_w").cast(dec))
-        .over(w_local.rowsBetween(Window.unboundedPreceding, -1)), zero)
-    lined = (bucketed.join(F.broadcast(offs), [group_col, "_pid"])
-             .select(group_col, id_col, "_w", "_tot",
-                     (local_prev + F.col("_off")).alias("_prev")))
-
-    off_k = F.pmod(
-        md5_long(F.concat(F.lit("swrs|"), F.col(group_col)), seed)
-        .cast(dec), F.col("_tot"))
-    kk = F.lit(k).cast(dec)
-
-    def cnt(x):
-        d = x - off_k - F.lit(1).cast(dec)
-        q = ((d - F.pmod(d, F.col("_tot"))) / F.col("_tot")).cast(dec)
-        return F.when(d < 0, F.lit(0).cast(dec)).otherwise(q + 1)
-
-    lo = F.least(kk, cnt(kk * F.col("_prev")))
-    hi = F.least(kk, cnt(kk * (F.col("_prev") + F.col("_w").cast(dec))))
-    return (lined.select(group_col, id_col, F.col("_w").alias("weight"),
-                         (hi - lo).cast("long").alias("n_picks"))
-            .filter(F.col("n_picks") > 0))

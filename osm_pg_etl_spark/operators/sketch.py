@@ -1,18 +1,13 @@
 """Sketch operators with engine-exact determinism.
 
-Three mergeable sketches over the md5 hash family, each a pure function of
+Two mergeable sketches over the md5 hash family, each a pure function of
 the value bytes (never of partitioning/row order/engine), so the DuckDB
 oracles re-derive *identical* structures and even the approximations are
 value-checked:
 
 - **HyperLogLog** — approximate distinct counts (below).
-- **Bloom filter** — set membership with no false negatives: build a
-  fixed-size bit table from a reference corpus, probe any candidate set
-  with a broadcast join. The 100 TB pattern: dedup a new crawl against an
-  existing corpus without joining the corpora (the bit table for 10⁹ keys
-  at 1% FP is ~1.2 GB — partition-sized, or shard by key range).
-- **Count-Min** — approximate frequencies with one-sided error
-  (estimate ≥ truth): heavy hitters / term counts in a fixed d×w table.
+- **Theta / KMV** — bottom-k distinct hashes, for set expressions
+  (union, intersection, difference) at scale.
 
 HyperLogLog (Flajolet et al. 2007) over the md5 hash family
 (:mod:`..functions.hashing`): because the register construction is a pure
@@ -123,11 +118,11 @@ def hll_intersect_estimate(a: DataFrame, b: DataFrame, value_col: str,
     math is integer-exact, estimates are fixed-order double ops, so the
     result is engine-identical and oracle-checkable.
 
-    Plan shape (r15): the two inputs are TAGGED and unioned so the
+    Plan shape: the two inputs are TAGGED and unioned so the
     register build is ONE keyed aggregation ``groupBy(side, reg)``
     (its exchange is reused by the union-sketch merge), and the three
     estimates come out of one grouped aggregate that pivots to a
-    single row — no per-estimate scalar crossJoin broadcasts. The r14
+    single row — no per-estimate scalar crossJoin broadcasts. The earlier
     plan ran two register aggs, three 1-row estimate aggs and two
     broadcast joins: identical values, ~3x the AQE job count, which at
     sub-second scale IS the runtime (the scheduler-floor effect
@@ -186,142 +181,6 @@ hest AS (
          {numer!r} / CAST(s + ({m} - hll_used) * {scale} AS DOUBLE) AS raw,
          {m} - hll_used AS v
   FROM hagg)
-"""
-
-
-# ---------------------------------------------------------------------------
-# Bloom filter (mergeable via bit_or; no false negatives)
-# ---------------------------------------------------------------------------
-
-def bloom_build(df: DataFrame, value_col: str, bits_log2: int = 20,
-                num_hashes: int = 4) -> DataFrame:
-    """Bloom bit table ``(word, bits)`` over 2^bits_log2 bits packed 32 per
-    word (32, not 64, so no shift ever touches the sign bit — keeps the
-    bit arithmetic portable across engines): for each value, hash seeds
-    ``1..k`` each set one bit. One narrow explode + one
-    map-side-combinable ``bit_or`` shuffle whose output is at most
-    2^(bits_log2-5) rows regardless of input size. Shards merge with
-    ``groupBy(word).agg(bit_or(bits))``."""
-    if not 5 <= bits_log2 <= 34:
-        raise ValueError(f"bits_log2 must be in [5, 34], got {bits_log2}")
-    m = 1 << bits_log2
-    pos = [(md5_long(value_col, seed=i) % m).alias(f"_p{i}")
-           for i in range(1, num_hashes + 1)]
-    exploded = (df.select(F.explode(F.array(*pos)).alias("_pos")))
-    return (exploded
-            .select(F.expr("_pos div 32").alias("word"),
-                    F.expr("shiftleft(1L, cast(_pos % 32 as int))")
-                    .alias("_bit"))
-            .groupBy("word").agg(F.bit_or("_bit").alias("bits")))
-
-
-def bloom_might_contain(df: DataFrame, value_col: str, bloom: DataFrame,
-                        bits_log2: int = 20, num_hashes: int = 4,
-                        result_col: str = "might_contain") -> DataFrame:
-    """Probe a Bloom bit table: appends ``result_col`` (true ⇔ all k bits
-    set — no false negatives, deterministic false-positive set). Scale
-    shape: ``num_hashes`` sequential broadcast joins of the
-    (≤2^(bits_log2-5))-row bit table against per-row word columns — the
-    candidate corpus is never shuffled and no synthetic row id is needed
-    (a ``monotonically_increasing_id`` join would be nondeterministic
-    across subtree re-evaluations)."""
-    m = 1 << bits_log2
-    out = df
-    flags = []
-    for i in range(1, num_hashes + 1):
-        out = out.withColumn(f"_p{i}", md5_long(value_col, seed=i) % m)
-        b = bloom.select(F.col("word").alias(f"_w{i}"),
-                         F.col("bits").alias(f"_b{i}"))
-        out = out.join(F.broadcast(b),
-                       F.expr(f"_p{i} div 32") == F.col(f"_w{i}"), "left")
-        mask = F.expr(f"shiftleft(1L, cast(_p{i} % 32 as int))")
-        flags.append(
-            F.coalesce(F.col(f"_b{i}"), F.lit(0)).bitwiseAND(mask) == mask)
-    ok = flags[0]
-    for f in flags[1:]:
-        ok = ok & f
-    drop = [c for i in range(1, num_hashes + 1)
-            for c in (f"_p{i}", f"_w{i}", f"_b{i}")]
-    return out.withColumn(result_col, ok).drop(*drop)
-
-
-def bloom_sql(build_expr: str, build_from: str, bits_log2: int = 20,
-              num_hashes: int = 4) -> str:
-    """DuckDB CTE re-deriving :func:`bloom_build` bit-for-bit (``bloom``
-    with columns word/bits). md5 positions, 32-per-word packing, BIT_OR."""
-    m = 1 << bits_log2
-    hashes = " UNION ALL ".join(
-        f"SELECT ('0x' || substr(md5('{i}|' || {build_expr}), 1, 8))::BIGINT "
-        f"% {m} AS pos FROM {build_from}"
-        for i in range(1, num_hashes + 1))
-    return f"""
-bloom AS (
-  SELECT pos // 32 AS word, BIT_OR(1::BIGINT << CAST(pos % 32 AS INT)) AS bits
-  FROM ({hashes})
-  GROUP BY pos // 32)
-"""
-
-
-# ---------------------------------------------------------------------------
-# Count-Min sketch (mergeable via +; estimate >= truth)
-# ---------------------------------------------------------------------------
-
-def cms_build(df: DataFrame, value_col: str, depth: int = 4,
-              width: int = 2048,
-              weight_col: str | None = None) -> DataFrame:
-    """Count-Min table ``(row, col, cnt)``: hash seed ``i`` maps each value
-    to column ``md5(i|v) % width`` of row ``i``; counts (or
-    ``weight_col`` sums) accumulate per cell. One explode + one
-    map-side-combinable shuffle to at most depth×width rows. Shards merge
-    with ``groupBy(row, col).agg(sum(cnt))``."""
-    w = F.col(weight_col).cast("long") if weight_col else F.lit(1).cast("long")
-    cells = F.array(*[
-        F.struct(F.lit(i).alias("row"),
-                 (md5_long(value_col, seed=i) % width).alias("col"))
-        for i in range(1, depth + 1)])
-    return (df.select(F.explode(cells).alias("_c"), w.alias("_w"))
-            .groupBy(F.col("_c.row").alias("row"),
-                     F.col("_c.col").alias("col"))
-            .agg(F.sum("_w").alias("cnt")))
-
-
-def cms_estimate(df: DataFrame, value_col: str, cms: DataFrame,
-                 depth: int = 4, width: int = 2048,
-                 result_col: str = "cms_estimate") -> DataFrame:
-    """Point-frequency estimates: min over the depth cells a value hashes
-    to (missing cell = 0). Appends ``result_col``; estimate ≥ the true
-    count, within n·e/width with probability 1−e^(−depth). ``depth``
-    sequential broadcast joins of the ≤depth×width-row table against
-    per-row cell columns — no shuffle of the probe set, no synthetic row
-    id (see :func:`bloom_might_contain`)."""
-    out = df
-    ests = []
-    for i in range(1, depth + 1):
-        out = out.withColumn(f"_c{i}", md5_long(value_col, seed=i) % width)
-        c = (cms.where(F.col("row") == i)
-             .select(F.col("col").alias(f"_k{i}"),
-                     F.col("cnt").alias(f"_n{i}")))
-        out = out.join(F.broadcast(c),
-                       F.col(f"_c{i}") == F.col(f"_k{i}"), "left")
-        ests.append(F.coalesce(F.col(f"_n{i}"), F.lit(0).cast("long")))
-    drop = [c for i in range(1, depth + 1)
-            for c in (f"_c{i}", f"_k{i}", f"_n{i}")]
-    return out.withColumn(result_col, F.least(*ests)).drop(*drop)
-
-
-def cms_sql(build_expr: str, build_from: str, depth: int = 4,
-            width: int = 2048, weight_expr: str = "1") -> str:
-    """DuckDB CTE re-deriving :func:`cms_build` (``cms`` with
-    row/col/cnt)."""
-    hashes = " UNION ALL ".join(
-        f"SELECT {i} AS row, "
-        f"('0x' || substr(md5('{i}|' || {build_expr}), 1, 8))::BIGINT "
-        f"% {width} AS col, CAST({weight_expr} AS BIGINT) AS w "
-        f"FROM {build_from}"
-        for i in range(1, depth + 1))
-    return f"""
-cms AS (
-  SELECT row, col, CAST(SUM(w) AS BIGINT) AS cnt FROM ({hashes}) GROUP BY row, col)
 """
 
 

@@ -1,11 +1,10 @@
 """Text-analysis operators for large-scale training-data pipelines.
 
-Extensions beyond the reference surface (BASELINE.json north star): language
-ID, quality scoring, token counting, document fingerprinting. Pure Column
-expressions (JVM-side, whole-stage codegen) throughout — a 100 TB documents
-table never leaves the executors and never crosses into Python — except
-``winnow_fingerprints``, an Arrow-batched pandas UDF (see its docstring for
-why the Column formulation loses).
+Extensions beyond the reference surface (BASELINE.json north star): token
+counting, quality features, tf·idf terms, PII scrubbing and sequence
+packing/batching. Pure Column expressions (JVM-side, whole-stage codegen)
+throughout — a 100 TB documents table never leaves the executors and never
+crosses into Python.
 """
 
 from __future__ import annotations
@@ -13,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Compact high-frequency stopword lists for n-gram/stopword language ID.
+# Compact high-frequency stopword lists for the stopword-ratio signal.
 STOPWORDS = {
     "en": ("the", "and", "of", "to", "in", "is", "that", "it", "for", "a"),
     "es": ("el", "la", "de", "que", "y", "en", "un", "es", "por", "los"),
@@ -22,8 +21,6 @@ STOPWORDS = {
 }
 
 _WORD_SPLIT = "\\s+"
-# BPE-ish tokenization: letter runs, digit runs, or single non-space symbols.
-BPE_ISH_PATTERN = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"
 
 
 def tokens(text: Column | str) -> Column:
@@ -37,31 +34,12 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
 
 
-def bpe_ish_token_count(text: Column | str) -> Column:
-    """Sub-word-ish token count: letter runs + digit runs + punctuation
-    symbols counted separately (a cheap, deterministic stand-in for a BPE
-    tokenizer's length signal)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.size(F.regexp_extract_all(c, F.lit(BPE_ISH_PATTERN), 0))
-
-
 def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
     """Fraction of whitespace tokens that are stopwords of ``lang``."""
     toks = F.transform(tokens(text), lambda t: F.lower(t))
     hits = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS[lang])))
     n = F.size(toks)
     return F.when(n > 0, hits.cast("double") / n).otherwise(F.lit(0.0))
-
-
-def detect_language(text: Column | str) -> Column:
-    """Heuristic language ID: the language whose stopword ratio is highest;
-    'und' when no stopwords hit at all. Deterministic tie-break by language
-    code order via greatest-of-structs."""
-    scored = [F.struct(stopword_ratio(text, lang).alias("score"),
-                       F.lit(lang).alias("lang"))
-              for lang in sorted(STOPWORDS, reverse=True)]
-    best = F.greatest(*scored)
-    return F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
 
 
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -87,140 +65,6 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-_GOPHER_REQUIRED = ("the", "be", "to", "of", "and", "that", "have",
-                    "with")
-
-_C4_BANNED = ("javascript", "lorem ipsum", "terms of use",
-              "privacy policy", "cookie policy", "uses cookies",
-              "use of cookies")
-_C4_TERMINAL = (".", "!", "?", '"', "'")
-
-
-def c4_line_filters(df: DataFrame, text_col: str = "text",
-                    min_line_words: int = 3,
-                    min_kept_sentences: int = 3) -> DataFrame:
-    """The C4 line-level cleaning pass (Raffel et al. 2020,
-    arXiv:1910.10683 §2.2 — the langline filters behind the C4
-    corpus): per document, keep only lines that end in terminal
-    punctuation (. ! ? or a closing quote), have at least
-    ``min_line_words`` words, and contain neither a curly brace nor a
-    banned phrase (javascript / lorem ipsum / the cookie-and-policy
-    boilerplate family, matched case-insensitively); documents keeping
-    fewer than ``min_kept_sentences`` lines are dropped entirely
-    (``keep = false``, empty clean_text).
-
-    Returns ``(<input cols>, clean_text, n_lines, n_kept_lines,
-    keep)``. Pure Column expressions over the line array — zero
-    shuffles, zero UDFs, oracle expression-exact."""
-    c = F.col(text_col)
-    lines = F.filter(
-        F.transform(F.split(c, "\n"), lambda ln: F.trim(ln)),
-        lambda ln: ln != "")
-
-    def line_ok(ln: Column) -> Column:
-        low = F.lower(ln)
-        terminal = None
-        for t in _C4_TERMINAL:
-            e = ln.endswith(t)
-            terminal = e if terminal is None else (terminal | e)
-        banned = F.lit(False)
-        for p in _C4_BANNED:
-            banned = banned | low.contains(p)
-        words = F.size(F.filter(F.split(ln, r"\s+"), lambda w: w != ""))
-        return (terminal & (words >= min_line_words)
-                & ~ln.contains("{") & ~ln.contains("}") & ~banned)
-
-    kept = F.filter(lines, line_ok)
-    n_kept = F.size(kept)
-    keep = n_kept >= min_kept_sentences
-    return df.select(
-        "*",
-        F.when(keep, F.array_join(kept, "\n")).otherwise(F.lit(""))
-        .alias("clean_text"),
-        F.size(lines).cast("int").alias("n_lines"),
-        n_kept.cast("int").alias("n_kept_lines"),
-        keep.alias("keep"))
-
-
-def gopher_quality_rules(df: DataFrame, text_col: str = "text",
-                         min_words: int = 50, max_words: int = 100_000,
-                         min_mean_word_len: float = 3.0,
-                         max_mean_word_len: float = 10.0,
-                         max_symbol_ratio: float = 0.1,
-                         max_bullet_frac: float = 0.9,
-                         max_ellipsis_frac: float = 0.3,
-                         min_alpha_frac: float = 0.8,
-                         min_required_stopwords: int = 2) -> DataFrame:
-    """The Gopher/MassiveText quality RULE SET (Rae et al. 2021 §A1.1,
-    reused by RefinedWeb and Dolma): the fixed-threshold document
-    filters that complement :func:`repetition_signals`' repetition
-    half. Returns every row with the measured signals and a ``keep``
-    flag that ANDs the rules:
-
-    - word count within [min_words, max_words];
-    - mean word length within [min/max_mean_word_len];
-    - symbol-to-word ratio (``#`` chars + non-overlapping ``...``) at
-      most max_symbol_ratio;
-    - at most max_bullet_frac of non-empty lines starting with a
-      bullet (•, -, *) and at most max_ellipsis_frac ending with an
-      ellipsis (... or …), after trimming;
-    - at least min_alpha_frac of words containing a letter;
-    - at least min_required_stopwords distinct members of the
-      paper's required-word set {the, be, to, of, and, that, have,
-      with} present as tokens.
-
-    All pure Column expressions — zero shuffles, zero UDFs; ratios are
-    round(x, 6) of integer-derived doubles so the DuckDB oracle is
-    expression-exact. Zero-token/zero-line docs report 0 ratios and
-    fail the word-count rule."""
-    c = F.col(text_col)
-    toks = F.transform(tokens(c), lambda t: F.lower(t))
-    n_tok = F.size(toks)
-    n_tok_d = F.greatest(n_tok, F.lit(1)).cast("double")
-    mean_wl = F.round(
-        F.aggregate(toks, F.lit(0), lambda a, t: a + F.length(t))
-        .cast("double") / n_tok_d, 6)
-    hash_cnt = F.length(c) - F.length(F.regexp_replace(c, "#", ""))
-    dots_cnt = ((F.length(c)
-                 - F.length(F.replace(c, F.lit("..."), F.lit(""))))
-                / F.lit(3)).cast("long")
-    symbol_ratio = F.round((hash_cnt + dots_cnt).cast("double")
-                           / n_tok_d, 6)
-    lines = F.filter(
-        F.transform(F.split(c, "\n"), lambda ln: F.trim(ln)),
-        lambda ln: ln != "")
-    n_lines = F.greatest(F.size(lines), F.lit(1)).cast("double")
-    bullet = F.round(F.size(F.filter(
-        lines, lambda ln: ln.startswith("•") | ln.startswith("-")
-        | ln.startswith("*"))).cast("double") / n_lines, 6)
-    ellipsis = F.round(F.size(F.filter(
-        lines, lambda ln: ln.endswith("...") | ln.endswith("…")))
-        .cast("double") / n_lines, 6)
-    alpha = F.round(F.size(F.filter(
-        toks, lambda t: t.rlike("[a-z]"))).cast("double") / n_tok_d, 6)
-    required = F.size(F.array_intersect(
-        F.array_distinct(toks),
-        F.array(*[F.lit(s) for s in _GOPHER_REQUIRED])))
-    keep = ((n_tok >= min_words) & (n_tok <= max_words)
-            & (mean_wl >= min_mean_word_len)
-            & (mean_wl <= max_mean_word_len)
-            & (symbol_ratio <= max_symbol_ratio)
-            & (bullet <= max_bullet_frac)
-            & (ellipsis <= max_ellipsis_frac)
-            & (alpha >= min_alpha_frac)
-            & (required >= min_required_stopwords))
-    return df.select(
-        "*",
-        n_tok.cast("bigint").alias("g_n_words"),
-        mean_wl.alias("g_mean_word_len"),
-        symbol_ratio.alias("g_symbol_ratio"),
-        bullet.alias("g_bullet_line_frac"),
-        ellipsis.alias("g_ellipsis_line_frac"),
-        alpha.alias("g_alpha_word_frac"),
-        required.cast("int").alias("g_required_stopwords"),
-        keep.alias("keep"))
-
-
 def tfidf_top_terms(df: DataFrame, text_col: str = "text",
                     id_col: str = "doc_id", k: int = 3) -> DataFrame:
     """Top-``k`` characteristic terms per document by tf·idf
@@ -229,7 +73,7 @@ def tfidf_top_terms(df: DataFrame, text_col: str = "text",
     join: the inverted-index shape that scales to any corpus.
 
     Returns (id_col, term, tf, df_docs, score)."""
-    # ONE data-sized exchange for the whole query (r13): repartition the
+    # ONE data-sized exchange for the whole query: repartition the
     # RAW DOCUMENTS by id up front. Everything downstream then needs no
     # further big-side exchange — HashPartitioning(id) satisfies the
     # ClusteredDistribution of groupBy(id, term) AND of the final
@@ -239,12 +83,12 @@ def tfidf_top_terms(df: DataFrame, text_col: str = "text",
     # Tokenization runs twice (once per consumer of the reused shuffle
     # output) — deliberately traded for dropping BOTH the (id, term)
     # partial-agg exchange and the window's re-shuffle of tf, plus the
-    # r12 persist's materialization cost. doc_id is a uniform key, so
+    # materialization cost of persisting tf. doc_id is a uniform key, so
     # the exchange has none of the term-key skew ("the" on one reducer)
     # that keeps the window-by-term plan off the table at corpus scale.
     #
-    # r13 interleaved A/B (sf1 replicas, 5 reps each, DuckDB alongside):
-    # this plan 1.15 s (1.56x DuckDB) vs r12 persist plan 2.18 s
+    # Interleaved A/B (sf1 replicas, 5 reps each, DuckDB alongside):
+    # this plan 1.15 s (1.56x DuckDB) vs the persist-tf plan 2.18 s
     # (2.95x), no-persist 1.69 s, repartition-after-explode 1.33 s —
     # shuffling whole docs (one row per doc) moves fewer bytes than
     # shuffling exploded tokens and keeps partial tokenize/explode work
@@ -260,7 +104,7 @@ def tfidf_top_terms(df: DataFrame, text_col: str = "text",
                     .alias("term")))
     tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     # df_docs is vocabulary-sized — broadcast it back so the big tf table
-    # is never shuffled by term (the r3 sort-merge join was 4-5x slower);
+    # is never shuffled by term (a sort-merge join was 4-5x slower);
     # hot terms stay harmless: the groupBy's map-side combine collapses
     # each partition to distinct terms before its shuffle
     dfreq = (tf.groupBy("term")
@@ -303,441 +147,12 @@ def redact_pii(text: Column | str) -> Column:
     return c
 
 
-_URL_STRICT_WORDS = ("porn", "xxx", "casino", "viagra")
-_URL_SOFT_WORDS = ("sex", "adult", "escort", "webcam", "torrent")
-
-
-def url_quality_filter(df: DataFrame, blocklist: DataFrame,
-                       url_col: str = "url",
-                       strict_words: tuple[str, ...] = _URL_STRICT_WORDS,
-                       soft_words: tuple[str, ...] = _URL_SOFT_WORDS,
-                       soft_threshold: int = 2) -> DataFrame:
-    """RefinedWeb-style URL filtering (Penedo et al. 2023,
-    arXiv:2306.01116 §3.1 — the first gate of their pipeline): drop a
-    page when its domain (or any parent domain) is on a blocklist,
-    when its host is a bare IP literal, when the URL contains a strict
-    banned word, or when it accumulates ``soft_threshold`` distinct
-    soft words. Returns every row plus ``(domain, blocked_domain,
-    is_ip, n_strict, n_soft, keep)``.
-
-    Scale shape: production blocklists run to millions of domains, so
-    the domain check is a JOIN, not a literal fold — the URL's domain
-    explodes into its parent-suffix chain (``a.b.co`` →
-    ``a.b.co, b.co, co``, bounded by label count) and LEFT-SEMI-joins
-    the blocklist (one broadcast or shuffle join on the domain string);
-    word rules are Column folds over the lowercased URL. ``blocklist``
-    must carry one ``domain`` column, lowercase. The input may not
-    already have any of the added output columns (raises, rather than
-    silently producing ambiguous duplicates)."""
-    clash = {"domain", "blocked_domain", "is_ip", "n_strict", "n_soft",
-             "keep"}.intersection(df.columns)
-    if clash:
-        raise ValueError(
-            f"input already has output column(s) {sorted(clash)}: rename "
-            "them first — url_quality_filter appends (domain, "
-            "blocked_domain, is_ip, n_strict, n_soft, keep)")
-    url = F.lower(F.col(url_col))
-    domain = F.regexp_extract(url, r"^[a-z][a-z0-9+.-]*://([^/:?#]+)", 1)
-    parts = F.split(domain, r"\.")
-    suffixes = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(parts), F.lit(1))),
-        lambda i: F.array_join(F.slice(parts, i, F.size(parts)), "."))
-    is_ip = domain.rlike(r"^\d{1,3}(\.\d{1,3}){3}$")
-    # seeded with lit(0) so empty word tuples mean "rule disabled", not
-    # an AttributeError on None
-    n_strict = F.lit(0)
-    reduce_sum = F.lit(0)
-    for w in strict_words:
-        n_strict = n_strict + url.contains(w).cast("int")
-    for w in soft_words:
-        reduce_sum = reduce_sum + url.contains(w).cast("int")
-
-    base = df.select("*", domain.alias("domain"),
-                     suffixes.alias("_sfx"),
-                     is_ip.alias("is_ip"),
-                     n_strict.cast("int").alias("n_strict"),
-                     reduce_sum.cast("int").alias("n_soft"))
-    hits = (base.select(F.col("domain").alias("_d"),
-                        F.explode("_sfx").alias("domain"))
-            .join(blocklist.select(F.lower(F.col("domain"))
-                                   .alias("domain")), "domain",
-                  "left_semi")
-            .select(F.col("_d").alias("domain")).distinct()
-            .withColumn("_blocked", F.lit(True)))
-    # hits is bounded by |distinct blocked domains| <= |blocklist| —
-    # usually broadcastable, but left to AQE (a 4 M-domain blocklist's
-    # hit set can exceed the broadcast threshold)
-    out = base.drop("_sfx").join(hits, "domain", "left")
-    keep = (F.col("_blocked").isNull() & ~F.col("is_ip")
-            & (F.col("n_strict") == 0)
-            & (F.col("n_soft") < soft_threshold))
-    return (out.select(
-        *[c for c in df.columns], "domain",
-        F.coalesce("_blocked", F.lit(False)).alias("blocked_domain"),
-        "is_ip", "n_strict", "n_soft", keep.alias("keep")))
-
-
-def char_entropy(df: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
-    """Shannon character entropy per document, in bits — the cheap
-    gibberish/binary-blob detector curation pipelines run alongside
-    the word-level quality rules (near-0 bits = one repeated char;
-    English prose sits ~4-4.5; random base64 ~6): ``H = −Σ p_c·log₂
-    p_c`` over the document's exact character histogram.
-
-    Engine-exact: each character class contributes
-    ``c · round(log₂(c/n), 9)`` with the division done once in double
-    (identical in IEEE engines) and the transcendental rounded to an
-    exact decimal before the (decimal) sum — the same portability
-    discipline as :func:`bigram_lm_scores`/:func:`dsir_importance`.
-
-    Scale shape: explode to (doc, char) counts — one map-side-
-    combinable shuffle whose key cardinality is |docs| × |alphabet| —
-    then one per-doc window/sum over that (tiny) histogram table.
-    Returns ``(id_col, n_chars, entropy)``; empty docs carry
-    (0, 0.0)."""
-    from pyspark.sql import Window  # noqa: PLC0415
-
-    # the empty-element filter matters only for text = '': Spark's
-    # split('', '') is [''] where the oracle's range-index walk is empty
-    hist = (df.select(F.col(id_col),
-                      F.explode(F.filter(F.split(F.col(text_col), ""),
-                                         lambda ch: ch != ""))
-            .alias("_ch"))
-            .groupBy(id_col, "_ch").agg(F.count(F.lit(1)).alias("_c")))
-    n = F.sum("_c").over(Window.partitionBy(id_col))
-    term = F.round(F.log2(F.col("_c").cast("double") / F.col("_n")), 9) \
-        .cast("decimal(12,9)")
-    scored = (hist.withColumn("_n", n)
-              .withColumn("_t", F.col("_c").cast("decimal(18,0)") * term)
-              .groupBy(id_col)
-              .agg(F.max("_n").alias("n_chars"), F.sum("_t").alias("_s")))
-    return (df.select(id_col).join(scored, id_col, "left")
-            .select(id_col,
-                    F.coalesce("n_chars", F.lit(0)).cast("bigint")
-                    .alias("n_chars"),
-                    F.coalesce(
-                        F.round((-F.col("_s")).cast("double")
-                                / F.col("n_chars"), 6),
-                        F.lit(0.0)).alias("entropy")))
-
-
-_CARD_PATTERN = r"\b(?:\d[ -]?){12,18}\d\b"
-
-
-def luhn_valid(candidate: Column | str) -> Column:
-    """Luhn checksum validation (ISO/IEC 7812 mod-10) of a card-number
-    candidate, as one Column expression: strip separators, walk digits
-    from the right doubling every second one (minus 9 past 9), valid
-    iff 13-19 digits summing to 0 mod 10. The filter every PII
-    pipeline runs so 16-digit order ids don't get scrubbed as cards."""
-    c = F.col(candidate) if isinstance(candidate, str) else candidate
-    digits = F.reverse(F.regexp_replace(c, "[^0-9]", ""))
-    n = F.length(digits)
-
-    def dig(i: Column) -> Column:
-        return F.element_at(F.split(digits, ""), i).cast("int")
-
-    total = F.aggregate(
-        F.sequence(F.lit(1), F.greatest(n, F.lit(1))), F.lit(0),
-        lambda acc, i: acc + F.when(i % 2 == 1, dig(i)).otherwise(
-            F.when(dig(i) * 2 < 10, dig(i) * 2)
-            .otherwise(dig(i) * 2 - 9)))
-    return (n >= 13) & (n <= 19) & (total % 10 == 0)
-
-
-def redact_cards(text: Column | str) -> Column:
-    """Replace Luhn-VALID card-number candidates (13-19 digits with
-    optional space/dash separators) with ``<CARD>``; invalid candidates
-    (plain long numbers, order ids) pass through untouched. Candidates
-    come from one ``regexp_extract_all`` and the replacement folds over
-    them in match order — pure Column, no UDF; run BEFORE the phone
-    regex in a combined scrub so partial card digits are never
-    mis-redacted as phones.
-
-    Each candidate is replaced ``\\b``-anchored (quoted via
-    ``\\Q…\\E``), mirroring the extraction contexts exactly — a plain
-    substring replace would partially rewrite a LONGER digit run that
-    merely contains a valid candidate (e.g. a 20+-digit order id the
-    card regex never matched). ``\\b`` is non-consuming and means the
-    same thing in Java regex and DuckDB's RE2, so the oracle replays
-    it verbatim (RE2 has no lookarounds, which rules out the
-    ``(?<!\\d)`` formulation)."""
-    c = F.col(text) if isinstance(text, str) else text
-    cands = F.regexp_extract_all(c, F.lit(_CARD_PATTERN), 0)
-    valid = F.filter(cands, luhn_valid)
-    return F.aggregate(
-        valid, c,
-        lambda acc, m: F.regexp_replace(
-            acc, F.concat(F.lit(r"\b\Q"), m, F.lit(r"\E\b")),
-            F.lit("<CARD>")))
-
-
 def pii_counts(text: Column | str) -> dict[str, Column]:
     """Match counts per PII kind (on the *unredacted* text), for audit
     metrics alongside the scrub."""
     c = F.col(text) if isinstance(text, str) else text
     return {kind: F.size(F.regexp_extract_all(c, F.lit(pattern), 0))
             for kind, pattern in PII_PATTERNS}
-
-
-# Unambiguous tracking params only. ``ref=`` is deliberately NOT here:
-# it is frequently semantic (VCS branch refs, referrer-dependent content)
-# and stripping it collapsed genuinely distinct documents into one dedup
-# group (r9 driver ADVICE). Pass a custom tuple to strip more.
-_TRACKING_PREFIXES = ("utm_", "fbclid=", "gclid=", "msclkid=")
-
-
-def canonicalize_url(url: Column | str,
-                     tracking_prefixes: tuple[str, ...] = _TRACKING_PREFIXES
-                     ) -> Column:
-    """Canonical form of a URL for source-level dedup — the
-    normalization every web-crawl pipeline runs before grouping by URL
-    (a page fetched as ``HTTP://Host:80/a/?utm_source=x`` and
-    ``http://host/a`` is one document, not two):
-
-    - scheme and host lowercased; default ports (``:80`` http,
-      ``:443`` https) stripped;
-    - fragment dropped;
-    - path: trailing slashes trimmed (bare root stays ``/``);
-    - query: tracking params removed (``tracking_prefixes``, default
-      ``utm_*``/``fbclid``/``gclid``/``msclkid``), the rest sorted so
-      parameter order never splits a group; an emptied query drops its
-      ``?``;
-    - non-hierarchical inputs (no ``scheme://`` — ``mailto:``,
-      scheme-less ``www.x.com/a``, empty strings) pass through VERBATIM
-      instead of collapsing into a shared mangled ``"://..."`` form
-      that would merge unrelated malformed URLs into one dedup group.
-
-    Pure JVM Column chain (regexp extracts + array ops, no UDF), with a
-    1:1 DuckDB translation in the ``url_canonical_dedup`` oracle — both
-    engines normalize byte-identically, so dedup groups hash-match."""
-    raw = F.col(url) if isinstance(url, str) else url
-    u = F.regexp_replace(raw, "#.*", "")                  # fragment
-    scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
-    host = F.lower(F.regexp_extract(u, r"^[^:]+://([^/?#]*)", 1))
-    host = (F.when((scheme == "http") & host.endswith(":80"),
-                   F.substring(host, F.lit(1), F.length(host) - 3))
-            .when((scheme == "https") & host.endswith(":443"),
-                  F.substring(host, F.lit(1), F.length(host) - 4))
-            .otherwise(host))
-    path = F.regexp_extract(u, r"^[^:]+://[^/?#]*([^?#]*)", 1)
-    path = F.regexp_replace(path, "/+$", "")
-    path = F.when(path == "", F.lit("/")).otherwise(path)
-    query = F.regexp_extract(u, r"\?([^#]*)", 1)
-    def _tracking(p: Column) -> Column:
-        cond = F.lit(False)
-        for pre in tracking_prefixes:
-            cond = cond | p.startswith(pre)
-        return cond
-
-    keep = F.array_sort(F.filter(F.split(query, "&"),
-                                 lambda p: (p != "") & ~_tracking(p)))
-    qtail = F.when(F.size(keep) > 0,
-                   F.concat(F.lit("?"), F.array_join(keep, "&"))) \
-        .otherwise(F.lit(""))
-    canonical = F.concat(scheme, F.lit("://"), host, path, qtail)
-    return F.when(scheme != "", canonical).otherwise(raw)
-
-
-def fingerprint(text: Column | str) -> Column:
-    """Normalization fingerprint: lowercase, collapse whitespace, sort the
-    distinct tokens, md5. Robust to reordering/duplication — the classic
-    key for clustering near-identical short documents."""
-    toks = F.transform(tokens(text), lambda t: F.lower(t))
-    normalized = F.array_join(F.array_sort(F.array_distinct(toks)), " ")
-    return F.md5(normalized)
-
-
-# Winnowing constants: polynomial rolling-hash base/modulus, chosen so every
-# intermediate fits comfortably in 32 bits (max code 122 × max power < 2^27,
-# k-term sum < 2^30) — identical integer arithmetic on any engine, which is
-# what makes the DuckDB oracle value-exact.
-WINNOW_BASE = 257
-WINNOW_MOD = 1_048_573  # largest prime < 2^20
-
-
-def _winnow_one(text: str | None, k: int, window: int) -> list[int]:
-    """Winnow a single document; pure-numpy, O(n) in document length."""
-    import re
-
-    import numpy as np
-
-    if not text:
-        return []
-    norm = re.sub("[^a-z0-9]", "", text.lower())
-    n = len(norm)
-    if n < k:
-        return []
-    codes = np.frombuffer(norm.encode("ascii"), dtype=np.uint8).astype(np.int64)
-    pows = np.array([pow(WINNOW_BASE, k - 1 - j, WINNOW_MOD)
-                     for j in range(k)], dtype=np.int64)
-    grams = np.lib.stride_tricks.sliding_window_view(codes, k)
-    hashes = (grams @ pows) % WINNOW_MOD  # max 122·2^20·7 < 2^30: no overflow
-    if len(hashes) < window:
-        return [int(hashes.min())]
-    minima = np.min(
-        np.lib.stride_tricks.sliding_window_view(hashes, window), axis=1)
-    return np.unique(minima).tolist()
-
-
-_winnow_udfs: dict[tuple[int, int], Column] = {}
-
-
-def winnow_fingerprints(text: Column | str, k: int = 7,
-                        window: int = 4) -> Column:
-    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03
-    — the MOSS algorithm): normalize to ``[a-z0-9]``, hash every character
-    k-gram with a polynomial rolling hash, then keep the minimum hash of
-    each ``window`` consecutive k-grams. The selected minima are a
-    position-robust fingerprint *set*: any shared substring of length
-    ``k + window - 1`` guarantees a shared fingerprint, so overlap of the
-    sets detects partial/local duplication that whole-document hashing
-    misses.
-
-    Implemented as an Arrow-batched pandas UDF (sliding-window matmul in
-    numpy, O(n) per document, no shuffle — per-document narrow compute that
-    parallelizes by partition). A pure-Column higher-order-function
-    formulation was measured and rejected: Catalyst re-evaluates expressions
-    captured by nested lambdas once per element, turning the k-gram slice
-    chain into O(n³) per row. The modulus keeps every intermediate in 32
-    bits, so the arithmetic — and therefore the DuckDB oracle — is
-    value-exact on any engine.
-
-    Returns the sorted distinct minima as a bigint array. Documents with
-    fewer than ``k`` usable characters yield an empty set; with fewer than
-    ``k + window - 1``, the single global minimum (the standard short-input
-    degeneration)."""
-    c = F.col(text) if isinstance(text, str) else text
-    if (k, window) not in _winnow_udfs:
-        def fn(s, _k=k, _w=window):
-            return s.map(lambda t: _winnow_one(t, _k, _w))
-        _winnow_udfs[(k, window)] = F.pandas_udf(fn, "array<bigint>")
-    return _winnow_udfs[(k, window)](c)
-
-
-def repetition_signals(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id",
-                       ngram_ns: tuple[int, ...] = (2, 3, 4)) -> DataFrame:
-    """Gopher-style repetition filters (Rae et al. 2021 §A1.1): per-document
-    duplicate-line and duplicate-word fractions plus, for each ``n`` in
-    ``ngram_ns``, the fraction of characters covered by the most frequent
-    word n-gram and by duplicated word n-grams. High values flag the
-    boilerplate / template / crawler-loop documents that repetition-heavy
-    corpora are full of.
-
-    Definitions (fixed so the DuckDB oracle is expression-exact):
-
-    - ``dup_line_frac``  = 1 − distinct_lines / lines (empty lines dropped)
-    - ``dup_line_char_frac`` = chars in lines beyond each line's first
-      occurrence / total line chars
-    - ``dup_word_frac``  = 1 − distinct_tokens / tokens (lowercased)
-    - ``top_{n}gram_char_frac`` = occurrences×chars of the most frequent
-      n-gram (ties → lexicographically greatest) / document chars
-    - ``dup_{n}gram_char_frac`` = Σ occurrences×chars over n-grams seen
-      more than once / document chars (overlaps counted, so >1 possible)
-
-    Scale shape: line/word fractions are pure Column expressions (narrow);
-    n-gram stats are one explode → one shuffle on ``(id, n, ngram)`` → one
-    conditional re-aggregation per document — the same two-level inverted
-    shape as :func:`tfidf_top_terms`. Every doc is kept (zero-token docs get
-    0.0 everywhere) via a broadcast-size left join back onto the base."""
-    from ..sources.io import spread  # noqa: PLC0415
-
-    c = F.col(text_col)
-    toks = F.transform(tokens(c), lambda t: F.lower(t))
-    lines = F.filter(F.split(c, "\n"), lambda x: F.trim(x) != "")
-    line_chars = F.aggregate(lines, F.lit(0),
-                             lambda a, x: a + F.length(x))
-    dist_line_chars = F.aggregate(F.array_distinct(lines), F.lit(0),
-                                  lambda a, x: a + F.length(x))
-    frac = (lambda num, den:
-            F.when(den > 0, num.cast("double") / den).otherwise(F.lit(0.0)))
-    base = spread(df.select(F.col(id_col), c)).select(
-        F.col(id_col),
-        F.length(c).alias("_n_chars"),
-        toks.alias("_toks"),
-        frac(F.size(lines) - F.size(F.array_distinct(lines)),
-             F.size(lines)).alias("dup_line_frac"),
-        frac(line_chars - dist_line_chars, line_chars)
-        .alias("dup_line_char_frac"),
-        frac(F.size(toks) - F.size(F.array_distinct(toks)),
-             F.size(toks)).alias("dup_word_frac"),
-    ).cache()
-
-    def grams(n: int) -> Column:
-        idx = F.sequence(F.lit(1), F.size("_toks") - (n - 1))
-        arr = F.transform(idx, lambda i: F.concat_ws(
-            " ", F.slice(F.col("_toks"), i, n)))
-        return F.when(F.size("_toks") >= n, arr).otherwise(
-            F.array().cast("array<string>"))
-
-    def tag(n: int):
-        # NB: a `lambda g, _n=n` default would be read by F.transform as the
-        # binary (element, index) form — _n would get the array index.
-        return lambda g: F.struct(F.lit(n).alias("n"), g.alias("ng"))
-
-    pairs = base.select(
-        id_col,
-        F.explode(F.concat(*[F.transform(grams(n), tag(n))
-                             for n in ngram_ns])).alias("g"))
-    counts = (pairs.groupBy(id_col, F.col("g.n").alias("n"),
-                            F.col("g.ng").alias("ng"))
-              .agg(F.count(F.lit(1)).alias("cnt")))
-    occ_chars = F.col("cnt") * F.length("ng")
-    per_n = (counts.groupBy(id_col, "n")
-             .agg(F.max(F.struct(F.col("cnt"), F.col("ng"))).alias("top"),
-                  F.sum(F.when(F.col("cnt") > 1, occ_chars)
-                        .otherwise(F.lit(0))).alias("dup_chars")))
-    wide = per_n.groupBy(id_col).agg(*[
-        agg for n in ngram_ns for agg in (
-            F.max(F.when(F.col("n") == n,
-                         F.col("top.cnt") * F.length("top.ng")))
-            .alias(f"_top{n}"),
-            F.max(F.when(F.col("n") == n, F.col("dup_chars")))
-            .alias(f"_dup{n}"))])
-    out = base.join(wide, id_col, "left")
-    return out.select(
-        id_col, "dup_line_frac", "dup_line_char_frac", "dup_word_frac",
-        *[col for n in ngram_ns for col in (
-            frac(F.coalesce(F.col(f"_top{n}"), F.lit(0)), F.col("_n_chars"))
-            .alias(f"top_{n}gram_char_frac"),
-            frac(F.coalesce(F.col(f"_dup{n}"), F.lit(0)), F.col("_n_chars"))
-            .alias(f"dup_{n}gram_char_frac"))])
-
-
-def chunk_documents(df: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id", chunk_tokens: int = 64,
-                    stride: int = 48) -> DataFrame:
-    """Split documents into fixed-size token windows with overlap — the
-    standard context-window preparation step before tokenize-and-pack.
-
-    Windows start at token offsets ``0, stride, 2·stride, …`` and span
-    ``chunk_tokens`` whitespace tokens (overlap = chunk_tokens − stride);
-    the final window is the first one reaching the document's end and may
-    be shorter. Zero-token documents yield no rows. Requires
-    ``stride <= chunk_tokens`` (contiguous coverage, no gaps).
-
-    Returns ``(id_col, chunk_id, n_tokens, chunk_text)`` — one row per
-    window, ``chunk_id`` 0-based. Pure Column expressions: sequence →
-    posexplode → array slice, no shuffle, no Python.
-    """
-    if stride <= 0 or stride > chunk_tokens:
-        raise ValueError(f"need 0 < stride <= chunk_tokens, got {stride}")
-    toks = tokens(text_col)
-    n = F.size(toks)
-    # index of the last window: ceil(max(n - chunk, 0) / stride)
-    m = F.floor((F.greatest(n - chunk_tokens, F.lit(0)) + (stride - 1))
-                / stride).cast("int")
-    starts = F.when(n > 0, F.sequence(F.lit(1), F.lit(1) + m * stride,
-                                      F.lit(stride))).otherwise(
-        F.array().cast("array<int>"))
-    exploded = (df.select(F.col(id_col), toks.alias("_toks"),
-                          F.posexplode(starts).alias("chunk_id", "_start")))
-    piece = F.slice("_toks", F.col("_start"), chunk_tokens)
-    return exploded.select(
-        id_col, "chunk_id", F.size(piece).alias("n_tokens"),
-        F.array_join(piece, " ").alias("chunk_text"))
 
 
 def pack_positions(df: DataFrame, capacity: int, text_col: str = "text",
@@ -877,297 +292,3 @@ def length_batches(df: DataFrame, budget: int, text_col: str = "text",
                     "docs_per_batch"))
 
 
-def hashed_linear_score(df: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id",
-                        seed: int = 0) -> DataFrame:
-    """Hash-trick LINEAR model scoring — the plumbing of a
-    fastText/CCNet-style quality filter (Joulin et al. 2016 hashing
-    trick; Wenzek et al. 2019 CCNet filtering), with the weight TABLE
-    replaced by a weight FUNCTION of the md5 hash family so the score
-    is a pure, engine-portable function of the text (a deployment
-    swaps ``w(t)`` for a broadcast-joined learned weight table; the
-    plan shape — one scan, per-token map, per-doc aggregate — is
-    identical).
-
-    w(t) = (md5_u32(seed|t) mod 2001) − 1000  ∈ [−1000, 1000];
-    logit = Σ w(lower(t)); score = logit / (1000 · n_tokens), rounded
-    half away from zero to 6 places.
-
-    The rounding is integer arithmetic on the exact quotient, so a SQL
-    oracle computing the same expression hash-matches bit for bit
-    (rounding the double quotient does not: DuckDB rounds its binary
-    value, so 4156 / 64000 = 0.0649375 became 0.064937 there and
-    0.064938 in Spark). Pure Column expressions: no UDF, no shuffle —
-    this is a map-only operator (the per-doc aggregate is
-    ``F.aggregate`` over the token array, inside the row).
-
-    Returns (id_col, n_tokens, logit, score); empty docs score 0.0."""
-    from ..functions.hashing import md5_long  # noqa: PLC0415
-
-    toks = tokens(F.lower(F.col(text_col)))
-    w = lambda t: (md5_long(t, seed=seed) % 2001 - 1000)  # noqa: E731
-    logit = F.aggregate(toks, F.lit(0).cast("long"),
-                        lambda acc, t: acc + w(t))
-    n = F.size(toks)
-    # round(logit * 10^6 / (1000 n)) = sign * floor((2000 |logit| + n) / 2n)
-    micros = F.signum(logit) * F.floor((F.abs(logit) * 2000 + n) / (2 * n))
-    return df.select(
-        F.col(id_col), n.alias("n_tokens"), logit.alias("logit"),
-        F.when(n > 0, micros / 1e6).otherwise(F.lit(0.0)).alias("score"))
-
-
-def bigram_pairs(text: Column | str) -> Column:
-    """Ordered (w1, w2) bigrams of the lowercased whitespace tokens, as
-    an array of structs; fewer than two tokens yields an empty array.
-    Pure Column expression."""
-    c = F.col(text) if isinstance(text, str) else text
-    w = tokens(F.lower(c))
-    return F.when(
-        F.size(w) >= 2,
-        F.transform(F.sequence(F.lit(1), F.size(w) - 1),
-                    lambda i: F.struct(
-                        F.element_at(w, i).alias("w1"),
-                        F.element_at(w, i + 1).alias("w2")))
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
-
-
-def bigram_lm_scores(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id",
-                     add_k: tuple[int, int] = (1, 2)) -> DataFrame:
-    """CCNet-style n-gram language-model quality scoring (Wenzek et al.
-    2019 use a KenLM 5-gram; this is the same filter with a bigram LM
-    trained ON THE CORPUS ITSELF in one pass): documents whose token
-    transitions are improbable under the corpus LM score a high average
-    negative log-likelihood and get filtered. Perplexity is
-    ``exp(avg_nll)`` — monotone in the returned score, so thresholds
-    transfer.
-
-    Model: add-k smoothing with k = a/b (default 1/2),
-    ``p(w2|w1) = (b·c(w1,w2) + a) / (b·n(w1) + a·V)`` — kept as ONE
-    double division of exact integers so both engines compute the
-    identical probability; per-bigram terms are ``round(-ln p, 9)``
-    summed as exact DECIMAL (order-independent), so the whole score is
-    engine-portable despite the transcendental.
-
-    Scale shape: ONE tokenize pass feeds both the LM (bigram groupBy —
-    map-side combinable; context totals derive from the bigram table,
-    not a second scan) and the scoring side, which equi-joins the
-    exploded bigrams to the LM on (w1, w2) — vocabulary²-bounded dim
-    table, inverted-index shape, never all-pairs; hot bigrams are AQE
-    skew-join territory. The vocabulary size rides along as a
-    broadcast one-row cross join (no separate driver action).
-
-    Returns (id_col, n_bigrams, avg_nll); docs with < 2 tokens come
-    back with ``n_bigrams = 0`` and ``avg_nll = 0.0``."""
-    a, b = add_k
-    bi = (df.select(F.col(id_col), F.explode(bigram_pairs(text_col))
-                    .alias("_b"))
-          .select(id_col, F.col("_b.w1").alias("w1"),
-                  F.col("_b.w2").alias("w2")))
-    bc = bi.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("_c"))
-    nw = bc.groupBy("w1").agg(F.sum("_c").alias("_n"))
-    vocab = (df.select(F.explode(tokens(F.lower(F.col(text_col))))
-                       .alias("_t"))
-             .agg(F.countDistinct("_t").alias("_v")))
-    lm = (bc.join(nw, "w1")
-          .crossJoin(F.broadcast(vocab))
-          .select("w1", "w2",
-                  ((b * F.col("_c") + a).cast("double")
-                   / (b * F.col("_n") + a * F.col("_v"))).alias("_p")))
-    terms = (bi.join(lm, ["w1", "w2"])
-             .select(id_col,
-                     F.round(-F.log(F.col("_p")), 9)
-                     .cast("decimal(28,9)").alias("_q")))
-    agg = (terms.groupBy(id_col)
-           .agg(F.sum("_q").alias("_s"), F.count(F.lit(1)).alias("_nb")))
-    return (df.select(id_col).join(agg, id_col, "left")
-            .select(id_col,
-                    F.coalesce("_nb", F.lit(0)).cast("int")
-                    .alias("n_bigrams"),
-                    F.coalesce(
-                        F.round(F.col("_s").cast("double") / F.col("_nb"),
-                                6), F.lit(0.0)).alias("avg_nll")))
-
-
-def dsir_importance(raw: DataFrame, target: DataFrame,
-                    text_col: str = "text", id_col: str = "doc_id",
-                    buckets: int = 4096,
-                    ns: tuple[int, ...] = (1, 2),
-                    seed: int = 0) -> DataFrame:
-    """DSIR importance weights (Xie et al. 2023, arXiv:2302.03169 —
-    Data Selection with Importance Resampling): score every RAW
-    document by how much likelier its hashed n-gram features are under
-    the TARGET distribution than under the raw distribution,
-
-        log w(x) = Σ_b f_b(x) · (ln p̂_target(b) − ln p̂_raw(b)),
-
-    where ``f_b(x)`` counts the document's (default uni+bi)gram hits in
-    hash bucket ``b`` and both bucket distributions are add-1 smoothed
-    (``p(b) = (c_b + 1) / (total + buckets)``). Selecting the top-w (or
-    Gumbel-resampling on w) documents is the paper's
-    domain-adaptation pass; this returns the scores, which compose
-    with :func:`..operators.sampling.quantile_buckets` or top-k.
-
-    Engine-exactness follows :func:`bigram_lm_scores`: each bucket
-    probability is ONE double division of exact integers, each log is
-    ``round(ln p, 9)`` cast to exact decimal, the per-bucket term is a
-    difference of exact decimals, and the per-doc sum is
-    count × decimal — order-independent and oracle-replayable.
-
-    Scale shape: one tokenize pass per corpus; features collapse to
-    (doc, bucket) counts (md5-uniform keys, map-side combinable); both
-    bucket tables and totals DERIVE from those aggregates (no second
-    scan); the ≤ ``buckets``-row ratio table full-outer-merges the two
-    and BROADCASTS back onto the per-doc counts — the only data-sized
-    shuffle is the doc-gram collapse.
-
-    Returns every raw row as ``(id_col, n_grams, log_ratio)``;
-    token-free docs carry (0, 0.0)."""
-    if buckets < 2:
-        raise ValueError(f"buckets must be >= 2, got {buckets}")
-    if not ns or any(n < 1 for n in ns):
-        raise ValueError(f"ns must be positive n-gram orders, got {ns}")
-    from ..functions.hashing import md5_long  # noqa: PLC0415
-
-    def doc_grams() -> Column:
-        w = F.transform(tokens(text_col), lambda t: F.lower(t))
-
-        def gram_fn(n: int):
-            # bind n via a closure factory — NOT `lambda i, n=n:`, whose
-            # two-parameter signature makes F.transform arity-sniff it
-            # as an (element, index) lambda and silently pass the array
-            # INDEX as n (garbage grams; caught by the r14 oracle)
-            return lambda i: F.array_join(F.slice(w, i, n), " ")
-
-        parts = []
-        for n in ns:
-            if n == 1:
-                parts.append(w)
-            else:
-                parts.append(F.when(
-                    F.size(w) >= n,
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(w) - (n - 1)),
-                        gram_fn(n))
-                ).otherwise(F.expr("CAST(array() AS array<string>)")))
-        return F.concat(*parts) if len(parts) > 1 else parts[0]
-
-    def bucket_of_grams(d: DataFrame) -> DataFrame:
-        return (d.select(F.col(id_col), F.explode(doc_grams()).alias("_g"))
-                .select(id_col,
-                        F.pmod(md5_long("_g", seed), F.lit(buckets))
-                        .alias("_b")))
-
-    f_raw = (bucket_of_grams(raw)
-             .groupBy(id_col, "_b").agg(F.count(F.lit(1)).alias("_c")))
-    c_raw = f_raw.groupBy("_b").agg(F.sum("_c").alias("_cr"))
-    c_tgt = (bucket_of_grams(target)
-             .groupBy("_b").agg(F.count(F.lit(1)).alias("_ct")))
-    t_raw = c_raw.agg(F.sum("_cr").alias("_tr"))
-    t_tgt = c_tgt.agg(F.sum("_ct").alias("_tt"))
-
-    dec = "decimal(28,9)"
-    ratio = (c_raw.join(c_tgt, "_b", "full_outer")
-             .select(F.col("_b"),
-                     F.coalesce("_cr", F.lit(0)).alias("_cr"),
-                     F.coalesce("_ct", F.lit(0)).alias("_ct"))
-             .crossJoin(F.broadcast(t_raw))
-             .crossJoin(F.broadcast(t_tgt))
-             .select(
-                 "_b",
-                 # the difference is re-cast to decimal(12,9) (|ln p| is
-                 # bounded by ln(total+buckets) << 1000) so the
-                 # count x term product below fits decimal(31,9)
-                 # EXACTLY — long x decimal(29,9) would overflow
-                 # precision 38 and make Spark silently REDUCE SCALE,
-                 # rounding each product where DuckDB stays exact
-                 # (caught by the r14 oracle at the 6th decimal)
-                 (F.round(F.log((F.col("_ct") + 1).cast("double")
-                                / (F.coalesce("_tt", F.lit(0))
-                                   + buckets)), 9).cast(dec)
-                  - F.round(F.log((F.col("_cr") + 1).cast("double")
-                                  / (F.coalesce("_tr", F.lit(0))
-                                     + buckets)), 9).cast(dec))
-                 .cast("decimal(12,9)").alias("_term")))
-    scored = (f_raw.join(F.broadcast(ratio), "_b")
-              .groupBy(id_col)
-              .agg(F.sum(F.col("_c").cast("decimal(18,0)")
-                         * F.col("_term")).alias("_s"),
-                   F.sum("_c").alias("_n")))
-    return (raw.select(id_col).join(scored, id_col, "left")
-            .select(id_col,
-                    F.coalesce("_n", F.lit(0)).cast("bigint")
-                    .alias("n_grams"),
-                    # round the EXACT decimal, then cast: rounding after
-                    # a double cast can flip a .5-boundary sum between
-                    # engines (caught by the r14 oracle)
-                    F.coalesce(F.round(F.col("_s"), 6).cast("double"),
-                               F.lit(0.0)).alias("log_ratio")))
-
-
-def word_ngrams(text: Column | str, n: int = 5) -> Column:
-    """Distinct lowercased word n-grams of a document (docs shorter than
-    ``n`` tokens contribute their whole text as one gram, mirroring the
-    shingle convention in :mod:`.dedup`). Pure Column expression."""
-    w = F.transform(tokens(text), lambda t: F.lower(t))
-    grams = F.when(
-        F.size(w) >= n,
-        F.transform(F.sequence(F.lit(1), F.size(w) - (n - 1)),
-                    lambda i: F.array_join(F.slice(w, i, n), " "))
-    ).otherwise(F.array(F.array_join(w, " ")))
-    return F.array_distinct(grams)
-
-
-def contamination(train: DataFrame, eval_docs: DataFrame,
-                  id_col: str = "doc_id", text_col: str = "text",
-                  n: int = 5) -> DataFrame:
-    """Benchmark-contamination check: for every training document, the
-    fraction of its distinct word ``n``-grams that appear anywhere in the
-    evaluation corpus — the decontamination pass every LLM data pipeline
-    runs before training (n-gram overlap against held-out benchmarks).
-
-    Scale shape: the eval corpus collapses to a distinct gram set, the
-    train side explodes to (doc, gram) and LEFT SEMI equi-joins on the
-    gram string — an inverted-index join bounded by gram frequency, never
-    all-pairs doc×doc. Returns (id_col, n_grams, n_matched,
-    contamination)."""
-    ev = (eval_docs.select(F.explode(word_ngrams(text_col, n)).alias("gram"))
-          .distinct())
-    tr = train.select(F.col(id_col),
-                      F.explode(word_ngrams(text_col, n)).alias("gram"))
-    totals = tr.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_grams"))
-    hits = (tr.join(ev, "gram", "left_semi")
-            .groupBy(id_col).agg(F.count(F.lit(1)).alias("n_matched")))
-    return (totals.join(hits, id_col, "left")
-            .select(id_col, "n_grams",
-                    F.coalesce("n_matched", F.lit(0)).alias("n_matched"))
-            .withColumn("contamination",
-                        F.round(F.col("n_matched").cast("double")
-                                / F.col("n_grams"), 6)))
-
-
-def unigram_logprob(df: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
-    """Corpus-self unigram language-model score: mean log p(token) per
-    document, with p estimated from the corpus itself — the classic cheap
-    fluency/quality signal (documents of rare-token soup score low, plain
-    prose scores high). Two aggregations plus a broadcast vocabulary join,
-    the same inverted-index shape as tf·idf. Returns (id_col, n_tokens,
-    logprob)."""
-    # lower() the whole document BEFORE split/explode: one bulk pass per
-    # doc instead of one call per token (equivalent — lowercasing never
-    # creates or removes whitespace, so split boundaries are unchanged;
-    # measured -12% on the sf0.1 corpus, 5 interleaved reps)
-    toks = df.select(F.col(id_col),
-                     F.explode(tokens(F.lower(F.col(text_col))))
-                      .alias("term"))
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    vocab = tf.groupBy("term").agg(F.sum("tf").alias("cnt"))
-    total = vocab.agg(F.sum("cnt").cast("double").alias("_n"))
-    return (tf.join(F.broadcast(vocab), "term")
-            .crossJoin(F.broadcast(total))
-            .groupBy(id_col)
-            .agg(F.sum("tf").cast("long").alias("n_tokens"),
-                 F.round(F.sum(F.col("tf")
-                               * F.log(F.col("cnt") / F.col("_n")))
-                         / F.sum("tf").cast("double"), 6).alias("logprob")))

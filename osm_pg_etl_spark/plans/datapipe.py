@@ -1,5 +1,5 @@
-"""Training-data-pipeline queries (dedup / similarity / text / sampling)
-with DuckDB oracles where SQL-expressible.
+"""Training-data-pipeline queries (dedup / similarity / text) with DuckDB
+oracles.
 
 Hashing is md5-based on both sides (see functions.hashing), so even the
 MinHash-LSH pipeline is oracle-checked end to end: DuckDB recomputes
@@ -9,10 +9,10 @@ list lambdas.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import dedup, sampling, similarity, text
+from ..operators import dedup, similarity, text
 from ..sources.io import spread
 from .common import t
 
@@ -23,10 +23,10 @@ def docs_t(spark, sf_dir):
     follow; at real scale spread() is the identity (see sources.io)."""
     return spread(t(spark, sf_dir, "documents"))
 
+
 # DuckDB md5-derived 32-bit int, matching functions.hashing.md5_long
-def _sql_md5int(expr: str, seed: int = 0) -> str:
-    inner = expr if seed == 0 else f"'{seed}|' || {expr}"
-    return f"('0x' || substr(md5({inner}), 1, 8))::BIGINT"
+def _sql_md5int(expr: str) -> str:
+    return f"('0x' || substr(md5({expr}), 1, 8))::BIGINT"
 
 
 _TOKS_SQL = r"""
@@ -48,42 +48,6 @@ sh AS (
 """
 
 
-# --- exact dedup --------------------------------------------------------------
-
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = docs_t(spark, sf_dir)
-    return dedup.exact_duplicates(docs)
-
-
-SQL_DEDUP_EXACT = """
-SELECT md5(text) AS content_hash, CAST(COUNT(*) AS BIGINT) AS count,
-       MIN(doc_id) AS keep_id
-FROM documents GROUP BY 1 HAVING COUNT(*) > 1
-"""
-
-
-# --- fingerprint clustering ------------------------------------------------------
-
-def q_fingerprint_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = docs_t(spark, sf_dir)
-    return (docs.select(text.fingerprint("text").alias("fp"), "doc_id")
-            .groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("count"), F.min("doc_id").alias("keep_id"))
-            .filter(F.col("count") > 1))
-
-
-SQL_FINGERPRINT_DUPES = r"""
-WITH f AS (
-  SELECT doc_id,
-         md5(array_to_string(list_sort(list_distinct(
-           list_transform(list_filter(string_split_regex(text, '\s+'),
-                                      t -> t <> ''), t -> lower(t)))), ' ')) AS fp
-  FROM documents)
-SELECT fp, CAST(COUNT(*) AS BIGINT) AS count, MIN(doc_id) AS keep_id
-FROM f GROUP BY fp HAVING COUNT(*) > 1
-"""
-
-
 # --- MinHash + LSH near-duplicate pairs (full oracle) ------------------------------
 
 _MH_HASHES, _MH_BANDS = 8, 4  # 2 rows per band
@@ -97,10 +61,10 @@ def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.round("jaccard_sim", 6).alias("jaccard_sim"))
 
 
-def _minhash_bucket_ctes() -> str:
-    """CTE chain ending in ``buckets(doc_id, sh, bucket)`` — the MinHash
-    banding shared by the pair/cluster oracles and the cross-corpus
-    dedup oracle."""
+def _sql_minhash() -> str:
+    """DuckDB replay of the whole MinHash-LSH pipeline: shingles, md5
+    shingle hashes, signatures, band buckets, candidate pairs and exact
+    Jaccard."""
     from ..operators.dedup import MINHASH_P, minhash_coefficients
 
     rpb = _MH_HASHES // _MH_BANDS
@@ -113,7 +77,8 @@ def _minhash_bucket_ctes() -> str:
             b=b, parts=" || ',' || ".join(
                 f"CAST(h{b * rpb + r} AS VARCHAR)" for r in range(rpb)))
         for b in range(_MH_BANDS))
-    return f"""{_TOKS_SQL.strip()},
+    return f"""
+WITH {_TOKS_SQL.strip()},
 {_SHINGLES_SQL.strip()},
 base AS (
   SELECT doc_id, sh, list_transform(sh, s -> {_sql_md5int('s')}) AS hs
@@ -123,28 +88,15 @@ sig AS (
          {sigs}
   FROM base),
 buckets AS (
-  SELECT doc_id, sh, unnest([{band_keys}]) AS bucket FROM sig)"""
-
-
-def _minhash_ctes() -> str:
-    """The shared CTE chain ending in ``mh_pairs`` (near-dup pair list) —
-    consumed by both the pair oracle and the clustering oracle."""
-    return f"""{_minhash_bucket_ctes()},
+  SELECT doc_id, sh, unnest([{band_keys}]) AS bucket FROM sig),
 cand AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b,
          CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
          / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS j
   FROM buckets a JOIN buckets b
-    ON a.bucket = b.bucket AND a.doc_id < b.doc_id),
-mh_pairs AS (
-  SELECT DISTINCT id_a, id_b, ROUND(j, 6) AS jaccard_sim
-  FROM cand WHERE j >= 0.5)"""
-
-
-def _sql_minhash() -> str:
-    return f"""
-WITH {_minhash_ctes()}
-SELECT id_a, id_b, jaccard_sim FROM mh_pairs
+    ON a.bucket = b.bucket AND a.doc_id < b.doc_id)
+SELECT DISTINCT id_a, id_b, ROUND(j, 6) AS jaccard_sim
+FROM cand WHERE j >= 0.5
 """
 
 
@@ -176,62 +128,6 @@ SELECT doc_id, CAST({_simhash_terms(_SIMHASH_BITS)} AS BIGINT) AS simhash FROM h
 """
 
 
-# --- SimHash near-dup pairs (banded hamming join, full oracle) -------------------------
-
-def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = t(spark, sf_dir, "documents")
-    return dedup.simhash_near_duplicates(docs, bits=32, bands=4, max_hamming=3)
-
-
-def _sql_simhash_neardup(bits: int = 32, bands: int = 4,
-                         max_hamming: int = 3) -> str:
-    chunk = bits // bands
-    mask = (1 << chunk) - 1
-    # floor() mirrors Spark's double-division + cast(long) truncation
-    # (sims are non-negative, so truncation == floor)
-    keys = ", ".join(
-        f"'{b}|' || CAST(CAST(floor(sim / {float(1 << (b * chunk))}) AS BIGINT) "
-        f"% {mask + 1} AS VARCHAR)"
-        for b in range(bands))
-    return f"""
-WITH {_TOKS_SQL.strip()},
-h AS (SELECT doc_id, list_transform(w, t -> {_sql_md5int('t')}) AS hs FROM toks),
-s AS (SELECT doc_id, CAST({_simhash_terms(bits)} AS BIGINT) AS sim FROM h),
-b AS (SELECT doc_id, sim, unnest([{keys}]) AS bucket FROM s)
-SELECT DISTINCT a.doc_id AS id_a, x.doc_id AS id_b,
-       CAST(bit_count(xor(a.sim, x.sim)) AS INT) AS hamming
-FROM b a JOIN b x ON a.bucket = x.bucket AND a.doc_id < x.doc_id
-WHERE bit_count(xor(a.sim, x.sim)) <= {max_hamming}
-"""
-
-
-# --- n-gram Jaccard exact pairs (full oracle) ---------------------------------------------
-
-def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = t(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.5)
-    return pairs.select("id_a", "id_b",
-                        F.round("jaccard_sim", 6).alias("jaccard_sim"))
-
-
-SQL_NGRAM_JACCARD = f"""
-WITH {_TOKS_SQL.strip()},
-{_SHINGLES_SQL.strip()},
-inv AS (SELECT doc_id, unnest(sh) AS shingle FROM sh),
-sizes AS (SELECT doc_id, len(sh) AS n FROM sh),
-common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(COUNT(*) AS BIGINT) AS c
-  FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2)
-SELECT id_a, id_b,
-       ROUND(CAST(c AS DOUBLE) / (na.n + nb.n - c), 6) AS jaccard_sim
-FROM common
-JOIN sizes na ON common.id_a = na.doc_id
-JOIN sizes nb ON common.id_b = nb.doc_id
-WHERE CAST(c AS DOUBLE) / (na.n + nb.n - c) >= 0.5
-"""
-
-
 # --- embedding similarity ----------------------------------------------------------------
 
 _COS_SQL = ("CASE WHEN sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(qv, qv)) > 0 "
@@ -256,31 +152,9 @@ LIMIT 20
 """
 
 
-def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir, "embeddings")
-    return similarity.embedding_near_duplicates(emb, threshold=0.9, exact=True)
-
-
 _COS_AB_SQL = ("CASE WHEN sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)) > 0 "
                "THEN list_dot_product(a.v, b.v) / (sqrt(list_dot_product(a.v, a.v)) "
                "* sqrt(list_dot_product(b.v, b.v))) ELSE 0.0 END")
-
-SQL_EMBEDDING_NEARDUP = f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
-SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b,
-       ROUND({_COS_AB_SQL}, 6) AS cosine_sim
-FROM e a JOIN e b ON a.vec_id < b.vec_id
-WHERE ROUND({_COS_AB_SQL}, 6) >= 0.9
-"""
-
-
-def q_similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate ANN. Deterministic given the fixed hyperplane family, so
-    the bucketing + probe + scoring is fully oracle-checkable."""
-    emb = t(spark, sf_dir, "embeddings")
-    qrow = emb.filter(F.col("vec_id") == 0).select("embedding").first()
-    query = [float(x) for x in qrow["embedding"]]
-    return similarity.lsh_topk(emb, query, k=20, num_planes=8, multi_probe=2)
 
 
 def _sig_sql(col: str, dim: int, num_planes: int, seed: int) -> str:
@@ -296,29 +170,6 @@ def _sig_sql(col: str, dim: int, num_planes: int, seed: int) -> str:
         for i, p in enumerate(planes))
 
 
-def _sql_lsh_topk(dim: int = 64, num_planes: int = 8, k: int = 20,
-                  multi_probe: int = 2, num_tables: int = 1) -> str:
-    qcols = ", ".join(
-        f"CAST({_sig_sql('qv', dim, num_planes, 42 + t)} AS BIGINT) AS qs{t}"
-        for t in range(num_tables))
-    conds = " OR ".join(
-        "CAST({s} AS BIGINT) IN ({probes})".format(
-            s=_sig_sql("v", dim, num_planes, 42 + t),
-            probes=", ".join([f"qs{t}"] + [f"xor(qs{t}, {1 << p})"
-                                           for p in range(multi_probe)]))
-        for t in range(num_tables))
-    return f"""
-WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-qb AS (SELECT {qcols}, qv FROM q),
-e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-cand AS (SELECT vec_id, v, qv FROM e, qb WHERE {conds})
-SELECT vec_id, ROUND({_COS_SQL}, 6) AS cosine_sim
-FROM cand
-ORDER BY cosine_sim DESC, vec_id
-LIMIT {k}
-"""
-
-
 _KNN_K, _KNN_PLANES = 3, 6
 
 
@@ -327,7 +178,7 @@ def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     k nearest bucket-mates by cosine — one equi-join on the 2^6-bucket
     signature key + a per-vector window; no all-pairs anywhere.
 
-    Stage-budget floor (measured sf0.1, warm, r6): ~1.7 s = signature
+    Stage-budget floor (measured sf0.1, warm): ~1.7 s = signature
     projection scan, the bucket exchange feeding the per-bucket Arrow
     kernel (two Arrow transfers of 5 k × 64 floats around one vectorized
     numpy top-k), and the result collection — vs DuckDB's 0.29 s
@@ -339,23 +190,16 @@ def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_knn_join(dim: int = 64, num_planes: int = _KNN_PLANES,
-                  k: int = _KNN_K, where: str = "",
-                  num_tables: int = 1) -> str:
-    sig_union = "\n  UNION ALL\n".join(
-        f"  SELECT vec_id, v, {t} AS tbl, "
-        f"CAST({_sig_sql('v', dim, num_planes, 42 + t)} AS BIGINT) AS s "
-        f"FROM e"
-        for t in range(num_tables))
+                  k: int = _KNN_K) -> str:
     return f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-           {where}),
+WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 sig AS (
-{sig_union}),
+  SELECT vec_id, v, CAST({_sig_sql('v', dim, num_planes, 42)} AS BIGINT) AS s
+  FROM e),
 cand AS (
   SELECT DISTINCT a.vec_id AS vec_id, b.vec_id AS neighbor_id,
          ROUND({_COS_AB_SQL}, 6) AS cosine_sim
-  FROM sig a JOIN sig b
-    ON a.tbl = b.tbl AND a.s = b.s AND a.vec_id != b.vec_id),
+  FROM sig a JOIN sig b ON a.s = b.s AND a.vec_id != b.vec_id),
 ranked AS (
   SELECT vec_id, neighbor_id, cosine_sim,
          CAST(ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -363,1064 +207,6 @@ ranked AS (
   FROM cand)
 SELECT vec_id, neighbor_id, cosine_sim, rank
 FROM ranked WHERE rank <= {k}
-"""
-
-
-def q_knn_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All-pairs exact KNN baseline on a deterministic 1/5 slice of the
-    corpus (explicit exact=True opt-in — the O(n²) path is never a
-    default; the slice keeps the oracle quadratic in 1/25 of the rows).
-    Recall of the LSH gate is measured against this in tests."""
-    emb = t(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 5 == 0)
-    return similarity.knn_join(emb, k=_KNN_K, exact=True)
-
-
-SQL_KNN_JOIN_EXACT = f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-           FROM embeddings WHERE vec_id % 5 = 0),
-cand AS (
-  SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id,
-         ROUND({_COS_AB_SQL}, 6) AS cosine_sim
-  FROM e a JOIN e b ON a.vec_id != b.vec_id),
-ranked AS (
-  SELECT vec_id, neighbor_id, cosine_sim,
-         CAST(ROW_NUMBER() OVER (PARTITION BY vec_id
-              ORDER BY cosine_sim DESC, neighbor_id) AS INT) AS rank
-  FROM cand)
-SELECT vec_id, neighbor_id, cosine_sim, rank
-FROM ranked WHERE rank <= {_KNN_K}
-"""
-
-
-def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retrieval QUALITY of every approximate-ANN path, measured against
-    its exact baseline and emitted as data (VERDICT r7 #3: the ANN gates
-    were determinism-checked but their recall was unmeasured):
-
-    - ``lsh_topk`` / ``ivf_topk``: recall@20 of the approximate top-20
-      vs the brute-force top-20 for the gated query vector;
-    - ``knn_join``: pairwise recall of the LSH-bucketed self-KNN vs the
-      exact all-pairs KNN on the deterministic 1/5 slice (the same slice
-      ``knn_join_exact`` gates) — |approx ∩ exact| / |exact| over
-      (vec_id, neighbor_id) pairs.
-
-    Each approximate method is measured in TWO configurations — the
-    shipped single-table gate default (documenting what the other gates
-    actually deliver on this near-random corpus) and the multi-table
-    tuned one (the Indyk–Motwani L-tables lever, ``num_tables``) — so
-    the recall-vs-candidate-work trade-off is itself regression-gated.
-
-    Everything is deterministic (fixed hyperplanes, lowest-id centroid
-    init, rounded-cosine/vec_id tiebreaks), so the oracle recomputes both
-    sides and the SAME recall — the quality number itself is hash-gated,
-    not just eyeballed. Scalar totals meet via 1-row crossJoins; recall
-    vs num_planes/num_tables trade-off is recorded in SCALING.md."""
-    emb = t(spark, sf_dir, "embeddings")
-    qrow = emb.filter(F.col("vec_id") == 0).select("embedding").first()
-    query = [float(x) for x in qrow["embedding"]]
-    exact = q_similarity_topk(spark, sf_dir).select("vec_id")
-    emb_slice = emb.filter(F.col("vec_id") % 5 == 0)
-    knn_ex = similarity.knn_join(emb_slice, k=_KNN_K, exact=True) \
-        .select("vec_id", "neighbor_id")
-
-    def knn(planes: int, tables: int) -> DataFrame:
-        return similarity.knn_join(emb_slice, k=_KNN_K, num_planes=planes,
-                                   num_tables=tables) \
-            .select("vec_id", "neighbor_id")
-
-    def lsh(planes: int, tables: int) -> DataFrame:
-        return similarity.lsh_topk(emb, query, k=20, num_planes=planes,
-                                   multi_probe=2, num_tables=tables) \
-            .select("vec_id")
-
-    cases = [
-        ("ivf_topk", "c=16 probe=4",
-         q_similarity_ivf_topk(spark, sf_dir).select("vec_id"),
-         exact, ["vec_id"]),
-        ("knn_join", f"b={_KNN_PLANES} L=1", knn(_KNN_PLANES, 1),
-         knn_ex, ["vec_id", "neighbor_id"]),
-        ("knn_join", "b=3 L=8", knn(3, 8),
-         knn_ex, ["vec_id", "neighbor_id"]),
-        ("lsh_topk", "b=8 L=1 probe=2", lsh(8, 1), exact, ["vec_id"]),
-        ("lsh_topk", "b=4 L=12 probe=2", lsh(4, 12), exact, ["vec_id"]),
-    ]
-    outs = []
-    for method, cfg, approx, ex, keys in cases:
-        hits = (approx.join(ex, keys, "left_semi")
-                .agg(F.count(F.lit(1)).alias("hits")))
-        total = ex.agg(F.count(F.lit(1)).alias("total"))
-        outs.append(hits.crossJoin(total).select(
-            F.lit(method).alias("method"),
-            F.lit(cfg).alias("cfg"),
-            F.col("hits").cast("long").alias("hits"),
-            F.col("total").cast("long").alias("total"),
-            F.round(F.col("hits") / F.col("total"), 6).alias("recall")))
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionByName(o)
-    return res
-
-
-def _sql_ann_recall() -> str:
-    knn_pair_hits = """
-         (SELECT COUNT(*) FROM {ap} a
-          WHERE EXISTS (SELECT 1 FROM kex x
-                        WHERE x.vec_id = a.vec_id
-                          AND x.neighbor_id = a.neighbor_id)),
-         (SELECT COUNT(*) FROM kex)"""
-    return f"""
-WITH exact AS (SELECT vec_id FROM ({SQL_SIMILARITY_TOPK}) t),
-lsh1 AS (SELECT vec_id FROM ({_sql_lsh_topk(num_planes=8, num_tables=1)}) t),
-lshL AS (SELECT vec_id FROM ({_sql_lsh_topk(num_planes=4, num_tables=12)}) t),
-ivf AS (SELECT vec_id FROM ({_sql_ivf_topk()}) t),
-kex AS (SELECT vec_id, neighbor_id FROM ({SQL_KNN_JOIN_EXACT}) t),
-kap1 AS (SELECT vec_id, neighbor_id
-         FROM ({_sql_knn_join(where="WHERE vec_id % 5 = 0")}) t),
-kapL AS (SELECT vec_id, neighbor_id
-         FROM ({_sql_knn_join(num_planes=3, num_tables=8,
-                              where="WHERE vec_id % 5 = 0")}) t),
-m AS (
-  SELECT 'ivf_topk' AS method, 'c=16 probe=4' AS cfg,
-         (SELECT COUNT(*) FROM ivf WHERE vec_id IN (SELECT vec_id FROM exact)) AS hits,
-         (SELECT COUNT(*) FROM exact) AS total
-  UNION ALL
-  SELECT 'knn_join', 'b={_KNN_PLANES} L=1',{knn_pair_hits.format(ap='kap1')}
-  UNION ALL
-  SELECT 'knn_join', 'b=3 L=8',{knn_pair_hits.format(ap='kapL')}
-  UNION ALL
-  SELECT 'lsh_topk', 'b=8 L=1 probe=2',
-         (SELECT COUNT(*) FROM lsh1 WHERE vec_id IN (SELECT vec_id FROM exact)),
-         (SELECT COUNT(*) FROM exact)
-  UNION ALL
-  SELECT 'lsh_topk', 'b=4 L=12 probe=2',
-         (SELECT COUNT(*) FROM lshL WHERE vec_id IN (SELECT vec_id FROM exact)),
-         (SELECT COUNT(*) FROM exact))
-SELECT method, cfg, CAST(hits AS BIGINT) AS hits,
-       CAST(total AS BIGINT) AS total,
-       ROUND(CAST(hits AS DOUBLE) / total, 6) AS recall
-FROM m
-"""
-
-
-def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup *clustering*: MinHash-LSH pairs are edges; connected
-    components pick one canonical doc (min id) per group — the step a real
-    training pipeline runs after pair generation to actually drop rows."""
-    from ..operators.graph_algo import dedup_clusters
-
-    docs = t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_near_duplicates(
-        docs, n=3, num_hashes=_MH_HASHES, bands=_MH_BANDS, threshold=0.5)
-    return dedup_clusters(docs, pairs)
-
-
-# transitive closure by recursive CTE: labels(node) = MIN over everything
-# reachable — the same fixpoint the Spark hash-min propagation converges to
-SQL_DEDUP_CLUSTERS_TEMPLATE = """
-WITH RECURSIVE {ctes},
-edges AS (
-  SELECT id_a AS a, id_b AS b FROM {pairs}
-  UNION
-  SELECT id_b, id_a FROM {pairs}),
-reach AS (
-  SELECT DISTINCT a AS node, a AS label FROM edges
-  UNION
-  SELECT e.a, r.label FROM reach r JOIN edges e ON e.b = r.node),
-comp AS (SELECT node, MIN(label) AS component FROM reach GROUP BY node)
-SELECT d.doc_id,
-       COALESCE(c.component, d.doc_id) AS cluster_id,
-       d.doc_id = COALESCE(c.component, d.doc_id) AS is_canonical
-FROM documents d LEFT JOIN comp c ON d.doc_id = c.node
-"""
-
-
-def _sql_dedup_clusters() -> str:
-    return SQL_DEDUP_CLUSTERS_TEMPLATE.format(ctes=_minhash_ctes(),
-                                              pairs="mh_pairs")
-
-
-def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-aware canonical pick over the same MinHash-LSH clusters:
-    keep the LONGEST copy (n_chars, ties to the smallest id) instead of
-    the smallest id — the keep-the-best-copy policy a curation pipeline
-    wants when near-duplicates differ in completeness
-    (operators.graph_algo.dedup_canonical_by)."""
-    from ..operators.graph_algo import dedup_canonical_by
-
-    docs = t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_near_duplicates(
-        docs, n=3, num_hashes=_MH_HASHES, bands=_MH_BANDS, threshold=0.5)
-    return dedup_canonical_by(docs, pairs, "n_chars")
-
-
-def _sql_dedup_keep_best() -> str:
-    return """
-WITH RECURSIVE {ctes},
-edges AS (
-  SELECT id_a AS a, id_b AS b FROM mh_pairs
-  UNION
-  SELECT id_b, id_a FROM mh_pairs),
-reach AS (
-  SELECT DISTINCT a AS node, a AS label FROM edges
-  UNION
-  SELECT e.a, r.label FROM reach r JOIN edges e ON e.b = r.node),
-comp AS (SELECT node, MIN(label) AS component FROM reach GROUP BY node),
-clustered AS (
-  SELECT d.doc_id, d.n_chars,
-         COALESCE(c.component, d.doc_id) AS cluster_id
-  FROM documents d LEFT JOIN comp c ON d.doc_id = c.node),
-best AS (
-  SELECT cluster_id, doc_id AS keep_id FROM (
-    SELECT cluster_id, doc_id,
-           ROW_NUMBER() OVER (PARTITION BY cluster_id
-                              ORDER BY n_chars DESC, doc_id) AS rn
-    FROM clustered) WHERE rn = 1)
-SELECT c.doc_id, c.cluster_id, c.n_chars,
-       c.doc_id = b.keep_id AS is_canonical
-FROM clustered c JOIN best b ON b.cluster_id = c.cluster_id
-""".format(ctes=_minhash_ctes())
-
-
-def q_similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-flat ANN with one Lloyd refinement pass: deterministic sampled
-    centroids, refined by an exact-decimal-mean k-means step
-    (``ivf_refine``), partition the vectors into cells; the query probes
-    its nprobe nearest cells only. Fully oracle-checkable because both the
-    init (lowest-id sample) and the refinement (associative decimal sums →
-    one correctly-rounded double division) are deterministic."""
-    emb = t(spark, sf_dir, "embeddings")
-    qrow = emb.filter(F.col("vec_id") == 0).select("embedding").first()
-    query = [float(x) for x in qrow["embedding"]]
-    return similarity.ivf_topk(emb, query, k=20, num_centroids=16, nprobe=4,
-                               refine_iters=1)
-
-
-def _sql_cos(a: str, b: str) -> str:
-    # cosine with the exact same expression grouping as operators.similarity:
-    # dot(a,b) / (sqrt(dot(a,a)) * sqrt(dot(b,b))) — identical IEEE results.
-    return (f"CASE WHEN sqrt(list_dot_product({a}, {a})) "
-            f"* sqrt(list_dot_product({b}, {b})) > 0 "
-            f"THEN list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a})) "
-            f"* sqrt(list_dot_product({b}, {b}))) ELSE 0.0 END")
-
-
-def _sql_ivf_cell_ctes(num_centroids: int = 16) -> str:
-    """CTE chain ending in ``asn1(vec_id, v, cid)`` — the IVF cell
-    assignment with one Lloyd refinement, shared by the ivf_topk and
-    semantic_dedup oracles. The Lloyd step mirrors ivf_refine
-    bit-for-bit: DECIMAL(38,18) sums are exact, and decimal→double +
-    the /n division are correctly rounded in both engines."""
-    cos = _sql_cos
-    return f"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-c0 AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT {num_centroids}),
-asn0 AS (
-  SELECT vec_id, v, cid,
-         ROW_NUMBER() OVER (PARTITION BY vec_id
-                            ORDER BY {cos('v', 'cv')} DESC, cid) AS rn
-  FROM e CROSS JOIN c0),
-ex AS (
-  SELECT cid, unnest(v) AS x, generate_subscripts(v, 1) AS pos
-  FROM asn0 WHERE rn = 1),
-sums AS (
-  SELECT cid, pos, SUM(CAST(x AS DECIMAL(38,18))) AS s, COUNT(*) AS n
-  FROM ex GROUP BY cid, pos),
-cm AS (
-  SELECT cid, list(CAST(s AS DOUBLE) / n ORDER BY pos) AS cv
-  FROM sums GROUP BY cid),
-c AS (
-  SELECT cid, cv FROM cm
-  UNION ALL
-  SELECT cid, cv FROM c0 WHERE cid NOT IN (SELECT cid FROM cm)),
-asn AS (
-  SELECT vec_id, v, cid,
-         ROW_NUMBER() OVER (PARTITION BY vec_id
-                            ORDER BY {cos('v', 'cv')} DESC, cid) AS rn
-  FROM e CROSS JOIN c),
-asn1 AS (SELECT vec_id, v, cid FROM asn WHERE rn = 1)"""
-
-
-def _sql_ivf_topk(num_centroids: int = 16, nprobe: int = 4, k: int = 20) -> str:
-    cos = _sql_cos
-    return f"""
-WITH {_sql_ivf_cell_ctes(num_centroids)},
-q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-probe AS (
-  SELECT cid FROM c CROSS JOIN q
-  ORDER BY {cos('qv', 'cv')} DESC, cid LIMIT {nprobe})
-SELECT vec_id, ROUND({cos('v', 'qv')}, 6) AS cosine_sim
-FROM asn1 JOIN probe USING (cid) CROSS JOIN q
-ORDER BY cosine_sim DESC, vec_id
-LIMIT {k}
-"""
-
-
-def q_dedup_against_reference(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-corpus MinHash dedup: the documents with doc_id % 7 != 0
-    play the NEW CRAWL, the % 7 == 0 slice the already-trained
-    REFERENCE corpus; any new doc whose shingle Jaccard against some
-    reference doc reaches 0.5 is flagged dropped, with the best match
-    attached. The asymmetric band-bucket join never generates new×new
-    pairs. A hash match pins the banding, the candidate join, the exact
-    Jaccard verification, and the keep/drop + best-match decision."""
-    docs = docs_t(spark, sf_dir)
-    new = docs.filter(F.col("doc_id") % 7 != 0)
-    ref = docs.filter(F.col("doc_id") % 7 == 0)
-    return dedup.dedup_against_reference(
-        new, ref, n=3, num_hashes=_MH_HASHES, bands=_MH_BANDS,
-        threshold=0.5)
-
-
-def _sql_dedup_against_reference() -> str:
-    return f"""
-WITH {_minhash_bucket_ctes()},
-nb AS (SELECT * FROM buckets WHERE doc_id % 7 <> 0),
-rb AS (SELECT * FROM buckets WHERE doc_id % 7 = 0),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id, b.doc_id AS rid
-  FROM nb a JOIN rb b ON a.bucket = b.bucket),
-ver AS (
-  SELECT c.id, c.rid,
-         CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-         / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))
-           AS j
-  FROM cand c
-  JOIN sig sa ON sa.doc_id = c.id
-  JOIN sig sb ON sb.doc_id = c.rid),
-best AS (
-  SELECT id, rid, j,
-         ROW_NUMBER() OVER (PARTITION BY id ORDER BY j DESC, rid) AS rn
-  FROM ver WHERE j >= 0.5)
-SELECT d.doc_id,
-       b.rid IS NULL AS kept,
-       b.rid AS ref_id,
-       ROUND(b.j, 6) AS ref_jaccard
-FROM (SELECT doc_id FROM documents WHERE doc_id % 7 <> 0) d
-LEFT JOIN (SELECT * FROM best WHERE rn = 1) b ON b.id = d.doc_id
-"""
-
-
-def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023): cluster-then-prune semantic dedup —
-    IVF cells from the deterministic sampled+Lloyd quantizer, then drop
-    any vector whose cell holds an EARLIER vector with cosine ≥ 0.3
-    (keep-earliest greedy; 0.3 sits at the ~p99 of the synthetic
-    corpus's within-cell cosines — max 0.51 — so the gate exercises
-    real drops, where a production run on normalized text embeddings
-    would use ~0.8-0.95). The oracle replays the full quantizer (the
-    shared asn1 CTE chain) and the within-cell pair pruning in SQL, so
-    a hash match pins assignment, the pairwise kernel, and the
-    keep/drop decision per vector."""
-    emb = t(spark, sf_dir, "embeddings")
-    return similarity.semantic_dedup(emb, threshold=0.3,
-                                     num_centroids=16, refine_iters=1)
-
-
-SQL_SEMANTIC_DEDUP = f"""
-WITH {_sql_ivf_cell_ctes(16)},
-drops AS (
-  SELECT DISTINCT b.vec_id
-  FROM asn1 a JOIN asn1 b
-    ON a.cid = b.cid AND a.vec_id < b.vec_id
-  WHERE ROUND({_sql_cos('a.v', 'b.v')}, 6) >= 0.3)
-SELECT s.vec_id, s.cid AS ivf_cell,
-       d.vec_id IS NULL AS kept
-FROM asn1 s LEFT JOIN drops d USING (vec_id)
-"""
-
-
-def q_dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4/RefinedWeb-style exact paragraph dedup, keep-first: documents
-    are recast as newline-joined pseudo-paragraphs (groups of 4
-    whitespace tokens — small enough that the synthetic corpus really
-    does repeat some), then any paragraph seen earlier anywhere in the
-    corpus (lowest (doc_id, position)) is cut from later documents and
-    the survivors are reassembled in order
-    (:func:`operators.dedup.dedup_paragraphs`). The oracle replays the
-    grouping, the global first-occurrence rank, and the ordered
-    reassembly — a hash match pins the keep/cut decision and the
-    rebuilt text byte-for-byte."""
-    from ..operators.dedup import dedup_paragraphs
-
-    docs = docs_t(spark, sf_dir)
-    toks = text.tokens(F.col("text"))
-    n = F.size(toks)
-    grouped = F.when(n > 0, F.transform(
-        F.sequence(F.lit(0), (F.ceil(n / 4) - 1).cast("int")),
-        lambda i: F.array_join(F.slice(toks, i * 4 + 1, 4), " "))) \
-        .otherwise(F.array().cast("array<string>"))
-    prepared = docs.select("doc_id",
-                           F.array_join(grouped, "\n").alias("text"))
-    return dedup_paragraphs(prepared)
-
-
-SQL_DEDUP_PARAGRAPHS = r"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS w
-  FROM documents),
-ex AS (
-  SELECT doc_id, unnest(w) AS x, generate_subscripts(w, 1) AS pos
-  FROM toks),
-paras AS (
-  SELECT doc_id, (pos - 1) // 4 AS grp,
-         string_agg(x, ' ' ORDER BY pos) AS para
-  FROM ex GROUP BY doc_id, (pos - 1) // 4),
-ranked AS (
-  SELECT doc_id, grp, para,
-         ROW_NUMBER() OVER (PARTITION BY para
-                            ORDER BY doc_id, grp) AS rn
-  FROM paras),
-kept AS (
-  SELECT doc_id, string_agg(para, chr(10) ORDER BY grp) AS clean_text,
-         COUNT(*) AS n_kept
-  FROM ranked WHERE rn = 1 GROUP BY doc_id),
-tot AS (SELECT doc_id, COUNT(*) AS n_paras FROM paras GROUP BY doc_id)
-SELECT d.doc_id,
-       COALESCE(k.clean_text, '') AS clean_text,
-       CAST(COALESCE(t.n_paras, 0) AS INT) AS n_paras,
-       CAST(COALESCE(k.n_kept, 0) AS INT) AS n_kept
-FROM documents d
-LEFT JOIN tot t USING (doc_id)
-LEFT JOIN kept k USING (doc_id)
-"""
-
-
-def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style LM quality filter: train a bigram LM on the corpus in
-    one pass (add-1/2 smoothing) and score every document's average
-    negative log-likelihood under it — perplexity is exp(avg_nll). The
-    probability is one double division of exact integers and each
-    per-bigram term is round(-ln p, 9) summed as exact decimal, so the
-    score is engine-portable despite ln (same discipline as the tfidf
-    ln score)."""
-    docs = docs_t(spark, sf_dir)
-    return text.bigram_lm_scores(docs)
-
-
-# CTE chain ending in scored(doc_id, n_bigrams, avg_nll) — the bigram-LM
-# scoring shared by the lm_perplexity and ccnet_buckets oracles.
-_SQL_LM_CTES = r"""toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'),
-                     t -> t <> '') AS w
-  FROM documents),
-ex AS (
-  SELECT doc_id, unnest(w) AS x, generate_subscripts(w, 1) AS pos
-  FROM toks),
-bi0 AS (
-  SELECT doc_id, x AS w1,
-         LEAD(x) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
-  FROM ex),
-bi AS (SELECT doc_id, w1, w2 FROM bi0 WHERE w2 IS NOT NULL),
-bc AS (SELECT w1, w2, COUNT(*) AS c FROM bi GROUP BY 1, 2),
-nw AS (SELECT w1, SUM(c) AS n FROM bc GROUP BY 1),
-v AS (SELECT COUNT(DISTINCT x) AS v FROM ex),
-lm AS (
-  SELECT w1, w2, CAST(2 * c + 1 AS DOUBLE) / (2 * n + v) AS p
-  FROM bc JOIN nw USING (w1) CROSS JOIN v),
-terms AS (
-  SELECT doc_id, CAST(ROUND(-ln(p), 9) AS DECIMAL(28,9)) AS q
-  FROM bi JOIN lm USING (w1, w2)),
-agg AS (SELECT doc_id, SUM(q) AS s, COUNT(*) AS nb
-        FROM terms GROUP BY doc_id),
-scored AS (
-  SELECT d.doc_id,
-         CAST(COALESCE(nb, 0) AS INT) AS n_bigrams,
-         COALESCE(ROUND(CAST(s AS DOUBLE) / nb, 6), 0.0) AS avg_nll
-  FROM documents d LEFT JOIN agg USING (doc_id))"""
-
-SQL_LM_PERPLEXITY = f"""
-WITH {_SQL_LM_CTES}
-SELECT doc_id, n_bigrams, avg_nll FROM scored
-"""
-
-
-def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full CCNet quality split, composed: bigram-LM avg-nll scores
-    (q_lm_perplexity's operator) cut at the exact global TERCILES into
-    head/middle/tail, with tail marked dropped — Wenzek et al. 2019's
-    perplexity bucketing as one plan. The tercile boundaries are a
-    single exact percentile aggregate broadcast back (no global sort);
-    a hash match pins the LM, the interpolated quantiles, and every
-    per-document bucket decision.
-
-    ``method="exact"`` is pinned (r14): the gate's contract is
-    bit-reproducible cuts, and the auto crossover keys on Catalyst's
-    size estimate, which over-estimates derived plans like this
-    join-heavy score frame (erring toward the bounded-memory approx
-    path — right for production, wrong for a hash gate)."""
-    from ..operators.sampling import quantile_buckets
-
-    docs = docs_t(spark, sf_dir)
-    scores = text.bigram_lm_scores(docs)
-    b = quantile_buckets(scores, "avg_nll", method="exact")
-    return b.select("doc_id", "avg_nll", "bucket",
-                    (F.col("bucket") != "tail").alias("kept"))
-
-
-SQL_CCNET_BUCKETS = f"""
-WITH {_SQL_LM_CTES},
-cuts AS (SELECT quantile_cont(avg_nll,
-  [0.3333333333333333, 0.6666666666666666]) AS c FROM scored)
-SELECT doc_id, avg_nll,
-       CASE WHEN avg_nll <= c[1] THEN 'head'
-            WHEN avg_nll <= c[2] THEN 'middle'
-            ELSE 'tail' END AS bucket,
-       avg_nll <= c[2] AS kept
-FROM scored CROSS JOIN cuts
-"""
-
-
-# --- text analysis --------------------------------------------------------------------------
-
-def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = docs_t(spark, sf_dir)
-    return docs.select("doc_id",
-                       text.token_count("text").alias("ws_tokens"),
-                       text.bpe_ish_token_count("text").alias("bpe_tokens"))
-
-
-SQL_TOKEN_COUNTS = r"""
-SELECT doc_id,
-       CAST(len(list_filter(string_split_regex(text, '\s+'), t -> t <> '')) AS INT)
-         AS ws_tokens,
-       CAST(len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]')) AS INT)
-         AS bpe_tokens
-FROM documents
-"""
-
-
-def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = docs_t(spark, sf_dir)
-    fp = text.winnow_fingerprints("text")
-    return docs.select("doc_id",
-                       F.size(fp).alias("n_fp"),
-                       F.array_join(fp, ",").alias("fp"))
-
-
-def _winnow_ctes(k: int = 7, window: int = 4) -> str:
-    """DuckDB CTE chain ending in ``fps(doc_id, fp)`` that re-derives the
-    winnowing selection: same polynomial k-gram hash (constants imported
-    from the operator — don't fork), same window-minimum selection,
-    value-exact."""
-    mod = text.WINNOW_MOD
-    terms = " + ".join(
-        f"codes[i + {j + 1}] * {pow(text.WINNOW_BASE, k - 1 - j, mod)}"
-        for j in range(k))
-    return f"""c AS (
-  SELECT doc_id,
-         regexp_replace(lower(text), '[^a-z0-9]', '', 'g') AS norm
-  FROM documents),
-cc AS (
-  SELECT doc_id,
-         list_transform(range(1, len(norm) + 1),
-                        i -> CAST(ascii(norm[i]) AS BIGINT)) AS codes
-  FROM c),
-h AS (
-  SELECT doc_id,
-         list_transform(range(0, greatest(len(codes) - {k - 1}, 0)),
-                        i -> ({terms}) % {mod}) AS hashes
-  FROM cc),
-fps AS (
-  SELECT doc_id,
-         CASE WHEN len(hashes) = 0 THEN CAST([] AS BIGINT[])
-              WHEN len(hashes) < {window} THEN [list_min(hashes)]
-              ELSE list_sort(list_distinct(list_transform(
-                     range(0, len(hashes) - {window - 1}),
-                     i -> list_min(hashes[i + 1 : i + {window}]))))
-         END AS fp
-  FROM h)"""
-
-
-def _sql_winnow(k: int = 7, window: int = 4) -> str:
-    return f"""
-WITH {_winnow_ctes(k, window)}
-SELECT doc_id,
-       CAST(len(fp) AS INT) AS n_fp,
-       array_to_string(fp, ',') AS fp
-FROM fps
-"""
-
-
-def q_winnow_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = t(spark, sf_dir, "documents")
-    pairs = dedup.winnow_near_duplicates(docs, threshold=0.3)
-    return pairs.select("id_a", "id_b",
-                        F.round("winnow_jaccard", 6).alias("winnow_jaccard"))
-
-
-def _sql_winnow_neardup(threshold: float = 0.3) -> str:
-    return f"""
-WITH {_winnow_ctes()},
-inv AS (SELECT doc_id, unnest(fp) AS f FROM fps),
-sizes AS (SELECT doc_id, len(fp) AS n FROM fps),
-common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(COUNT(*) AS BIGINT) AS c
-  FROM inv a JOIN inv b ON a.f = b.f AND a.doc_id < b.doc_id
-  GROUP BY 1, 2)
-SELECT id_a, id_b,
-       ROUND(CAST(c AS DOUBLE) / (na.n + nb.n - c), 6) AS winnow_jaccard
-FROM common
-JOIN sizes na ON common.id_a = na.doc_id
-JOIN sizes nb ON common.id_b = nb.doc_id
-WHERE CAST(c AS DOUBLE) / (na.n + nb.n - c) >= {threshold}
-"""
-
-
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = docs_t(spark, sf_dir)
-    return docs.select("doc_id",
-                       text.detect_language("text").alias("lang_detected"),
-                       F.round(text.stopword_ratio("text", "en"), 6).alias("sw_en"))
-
-
-def _sql_lang_id() -> str:
-    ratios = []
-    for lang, words in text.STOPWORDS.items():
-        lst = ", ".join(f"'{w}'" for w in words)
-        ratios.append(
-            f"CASE WHEN len(w) > 0 THEN CAST(len(list_filter(w, "
-            f"t -> list_contains([{lst}], t))) AS DOUBLE) / len(w) "
-            f"ELSE 0.0 END AS r_{lang}")
-    # Spark's greatest-of-structs tie-break = highest score, then highest
-    # lang string; emulated with greatest over scores + reverse-alpha CASE.
-    langs = sorted(text.STOPWORDS)
-    best_score = "greatest(" + ", ".join(f"r_{lang}" for lang in langs) + ")"
-    pick = " ".join(f"WHEN r_{lang} = bs THEN '{lang}'"
-                    for lang in sorted(langs, reverse=True))
-    return f"""
-WITH {_TOKS_SQL.strip()},
-r AS (SELECT doc_id, w, {', '.join(ratios)} FROM toks),
-best AS (SELECT doc_id, r_en, {best_score} AS bs,
-                CASE {pick} END AS bl FROM r)
-SELECT doc_id,
-       CASE WHEN bs > 0 THEN bl ELSE 'und' END AS lang_detected,
-       ROUND(r_en, 6) AS sw_en
-FROM best
-"""
-
-
-def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher/MassiveText fixed-threshold quality rules (Rae et al.
-    2021 §A1.1): per-doc word count, mean word length, symbol ratio,
-    bullet/ellipsis line fractions, alpha-word fraction, required
-    stop-word count, and the ANDed keep decision. Pure Column
-    expressions; hash pins every measured signal and threshold."""
-    docs = docs_t(spark, sf_dir)
-    g = text.gopher_quality_rules(docs)
-    return g.select("doc_id", "g_n_words", "g_mean_word_len",
-                    "g_symbol_ratio", "g_bullet_line_frac",
-                    "g_ellipsis_line_frac", "g_alpha_word_frac",
-                    "g_required_stopwords", "keep")
-
-
-def _sql_gopher() -> str:
-    req = ", ".join(f"'{w}'" for w in text._GOPHER_REQUIRED)
-    return rf"""
-WITH {_TOKS_SQL.strip()},
-m AS (
-  SELECT doc_id,
-         CAST(len(w) AS BIGINT) AS g_n_words,
-         ROUND(CAST(COALESCE(list_sum(list_transform(w, t -> len(t))), 0)
-                    AS DOUBLE) / greatest(len(w), 1), 6)
-           AS g_mean_word_len,
-         ROUND(CAST((len(text) - len(replace(text, '#', '')))
-                    + (len(text) - len(replace(text, '...', ''))) // 3
-                    AS DOUBLE) / greatest(len(w), 1), 6)
-           AS g_symbol_ratio,
-         list_filter(list_transform(string_split(text, chr(10)),
-                                    ln -> trim(ln)), ln -> ln <> '')
-           AS lines,
-         ROUND(CAST(len(list_filter(w, t -> regexp_matches(t, '[a-z]')))
-                    AS DOUBLE) / greatest(len(w), 1), 6)
-           AS g_alpha_word_frac,
-         CAST(len(list_intersect(list_distinct(w), [{req}])) AS INT)
-           AS g_required_stopwords
-  FROM toks JOIN documents USING (doc_id)),
-r AS (
-  SELECT doc_id, g_n_words, g_mean_word_len, g_symbol_ratio,
-         ROUND(CAST(len(list_filter(lines,
-                 ln -> starts_with(ln, '•') OR starts_with(ln, '-')
-                       OR starts_with(ln, '*'))) AS DOUBLE)
-               / greatest(len(lines), 1), 6) AS g_bullet_line_frac,
-         ROUND(CAST(len(list_filter(lines,
-                 ln -> ends_with(ln, '...') OR ends_with(ln, '…')))
-               AS DOUBLE) / greatest(len(lines), 1), 6)
-           AS g_ellipsis_line_frac,
-         g_alpha_word_frac, g_required_stopwords
-  FROM m)
-SELECT *,
-       (g_n_words >= 50 AND g_n_words <= 100000
-        AND g_mean_word_len >= 3.0 AND g_mean_word_len <= 10.0
-        AND g_symbol_ratio <= 0.1
-        AND g_bullet_line_frac <= 0.9 AND g_ellipsis_line_frac <= 0.3
-        AND g_alpha_word_frac >= 0.8 AND g_required_stopwords >= 2)
-       AS keep
-FROM r
-"""
-
-
-def q_c4_line_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4 line-level cleaning (Raffel et al. 2020 §2.2) on a
-    deterministically line-structured derivation of the corpus (the
-    synthetic documents carry no newlines or punctuation, so the gate
-    first renders each doc as sentences of ``doc_id % 5 + 3`` tokens
-    with punctuation cycling . ! ? (none) ... by line index, plus a
-    lorem-ipsum line on doc_id % 17 == 0 and a curly-brace line on
-    doc_id % 13 == 0 — every branch of the rule set fires). Hash pins
-    the terminal-punctuation, min-words, brace and banned-phrase rules
-    plus the 3-kept-sentences document drop."""
-    from ..operators.text import c4_line_filters  # noqa: PLC0415
-
-    docs = docs_t(spark, sf_dir)
-    w = F.split(F.col("text"), r"\s+")
-    w = F.filter(w, lambda t: t != "")
-    slen = (F.col("doc_id") % 5 + 3).cast("int")
-    n_sent = F.ceil(F.size(w) / slen).cast("int")
-    sent = F.transform(
-        F.sequence(F.lit(1), F.greatest(n_sent, F.lit(1))),
-        lambda i: F.concat(
-            F.array_join(F.slice(w, (i - 1) * slen + 1, slen), " "),
-            F.element_at(
-                F.array(F.lit("."), F.lit("!"), F.lit("?"), F.lit(""),
-                        F.lit("...")),
-                ((F.col("doc_id") + i) % 5 + 1).cast("int"))))
-    body = F.array_join(sent, "\n")
-    derived = F.when(
-        F.col("doc_id") % 17 == 0,
-        F.concat(F.lit("lorem ipsum dolor sit amet.\n"), body)
-    ).when(
-        F.col("doc_id") % 13 == 0,
-        F.concat(F.lit("function f() { return 1; }\n"), body)
-    ).otherwise(body)
-    staged = docs.select("doc_id", derived.alias("text"))
-    out = c4_line_filters(staged)
-    return out.select("doc_id", "n_lines", "n_kept_lines", "keep",
-                      F.md5(F.col("clean_text")).alias("clean_md5"))
-
-
-SQL_C4_LINE_FILTERS = rf"""
-WITH base AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS w,
-         CAST(doc_id % 5 + 3 AS INT) AS slen
-  FROM documents),
-rendered AS (
-  SELECT doc_id,
-         list_transform(
-           range(1, greatest(CAST(ceil(len(w) / CAST(slen AS DOUBLE))
-                                  AS INT), 1) + 1),
-           i -> array_to_string(w[(i-1)*slen+1:i*slen], ' ')
-                || ['.', '!', '?', '', '...'][CAST((doc_id + i) % 5
-                                                   AS INT) + 1]) AS sent
-  FROM base),
-derived AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 17 = 0
-              THEN 'lorem ipsum dolor sit amet.' || chr(10)
-                   || array_to_string(sent, chr(10))
-              WHEN doc_id % 13 = 0
-              THEN 'function f() {{ return 1; }}' || chr(10)
-                   || array_to_string(sent, chr(10))
-              ELSE array_to_string(sent, chr(10)) END AS text
-  FROM rendered),
-lined AS (
-  SELECT doc_id,
-         list_filter(list_transform(string_split(text, chr(10)),
-                                    ln -> trim(ln)), ln -> ln <> '')
-           AS lines
-  FROM derived),
-kept AS (
-  SELECT doc_id, lines,
-         list_filter(lines, ln ->
-           (ends_with(ln, '.') OR ends_with(ln, '!')
-            OR ends_with(ln, '?') OR ends_with(ln, '"')
-            OR ends_with(ln, ''''))
-           AND len(list_filter(string_split_regex(ln, '\s+'),
-                               x -> x <> '')) >= 3
-           AND NOT contains(ln, '{{') AND NOT contains(ln, '}}')
-           AND NOT contains(lower(ln), 'javascript')
-           AND NOT contains(lower(ln), 'lorem ipsum')
-           AND NOT contains(lower(ln), 'terms of use')
-           AND NOT contains(lower(ln), 'privacy policy')
-           AND NOT contains(lower(ln), 'cookie policy')
-           AND NOT contains(lower(ln), 'uses cookies')
-           AND NOT contains(lower(ln), 'use of cookies')) AS k
-  FROM lined)
-SELECT doc_id,
-       CAST(len(lines) AS INT) AS n_lines,
-       CAST(len(k) AS INT) AS n_kept_lines,
-       len(k) >= 3 AS keep,
-       md5(CASE WHEN len(k) >= 3
-                THEN COALESCE(array_to_string(k, chr(10)), '')
-                ELSE '' END) AS clean_md5
-FROM kept
-"""
-
-
-def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r14 curation-pass retention funnel, as one result: how many
-    documents survive (or are flagged by) each filter family — Gopher
-    rules, C4 line cleaning, exact dup groups, eval decontamination,
-    in-corpus ExactSubstr, DSIR target-affinity. Composes six verified
-    operators in one plan; each leg is a tiny aggregate over an
-    already-gated query, so the hash pins their interaction (same
-    inputs, same flags) rather than any new math."""
-    def n(df) -> DataFrame:
-        return df.agg(F.count(F.lit(1)).alias("n_docs"))
-
-    docs = docs_t(spark, sf_dir)
-    legs = [
-        ("total", n(docs)),
-        ("gopher_keep", n(q_gopher_rules(spark, sf_dir)
-                          .filter(F.col("keep")))),
-        ("c4_keep", n(q_c4_line_filters(spark, sf_dir)
-                      .filter(F.col("keep")))),
-        ("exact_dup_docs", n(docs.join(
-            docs.groupBy(F.md5(F.col("text")).alias("_h"))
-            .agg(F.count(F.lit(1)).alias("_c")).filter(F.col("_c") > 1),
-            F.md5(F.col("text")) == F.col("_h"), "left_semi"))),
-        ("decontam_flagged", n(q_exact_substring_decontam(spark, sf_dir)
-                               .select("doc_id").distinct())),
-        ("self_dedup_affected", n(q_exact_substring_self_dedup(
-            spark, sf_dir).filter(F.col("n_removed") > 0))),
-        ("dsir_positive", n(q_dsir_weights(spark, sf_dir)
-                            .filter(F.col("log_ratio") > 0))),
-    ]
-    out = None
-    for stage, leg in legs:
-        piece = leg.select(F.lit(stage).alias("stage"),
-                           F.col("n_docs").cast("bigint").alias("n_docs"))
-        out = piece if out is None else out.unionByName(piece)
-    return out
-
-
-def _sql_curation_funnel() -> str:
-    # each leg nests a full, independently-verified oracle statement
-    return f"""
-SELECT 'total' AS stage, CAST(COUNT(*) AS BIGINT) AS n_docs
-FROM documents
-UNION ALL
-SELECT 'gopher_keep', CAST(COUNT(*) AS BIGINT)
-FROM ({_sql_gopher()}) g WHERE g.keep
-UNION ALL
-SELECT 'c4_keep', CAST(COUNT(*) AS BIGINT)
-FROM ({SQL_C4_LINE_FILTERS}) c WHERE c.keep
-UNION ALL
-SELECT 'exact_dup_docs', CAST(COUNT(*) AS BIGINT)
-FROM documents WHERE md5(text) IN (
-  SELECT md5(text) FROM documents GROUP BY 1 HAVING COUNT(*) > 1)
-UNION ALL
-SELECT 'decontam_flagged', CAST(COUNT(DISTINCT doc_id) AS BIGINT)
-FROM ({SQL_EXACT_SUBSTRING_DECONTAM}) e
-UNION ALL
-SELECT 'self_dedup_affected', CAST(COUNT(*) AS BIGINT)
-FROM ({SQL_EXACT_SUBSTRING_SELF_DEDUP}) s WHERE s.n_removed > 0
-UNION ALL
-SELECT 'dsir_positive', CAST(COUNT(*) AS BIGINT)
-FROM ({SQL_DSIR_WEIGHTS}) w WHERE w.log_ratio > 0
-"""
-
-
-_URL_BLOCKLIST = ("badsite.com", "spam.example", "tracker.net")
-
-
-def q_url_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RefinedWeb URL gate (Penedo et al. 2023 §3.1): eight synthesized
-    URL styles per doc_id residue — clean page, blocklisted domain,
-    SUBDOMAIN of a blocklisted domain (the suffix-chain join), strict
-    word in path, one soft word (kept), two soft words (dropped), IP
-    host, digit-heavy clean domain — filtered against a 3-domain
-    blocklist. Hash pins domain parsing, the suffix-chain semi-join,
-    word folds and the keep decision."""
-    from ..operators.text import url_quality_filter  # noqa: PLC0415
-
-    docs = docs_t(spark, sf_dir)
-    v = F.col("doc_id") % 8
-    b = F.col("doc_id").cast("string")
-    url = (F.when(v == 0, F.concat(F.lit("https://site"),
-                                   (F.col("doc_id") % 5).cast("string"),
-                                   F.lit(".org/page/"), b))
-           .when(v == 1, F.concat(F.lit("https://badsite.com/p/"), b))
-           .when(v == 2, F.concat(F.lit("http://cdn.spam.example/x/"), b))
-           .when(v == 3, F.concat(F.lit("https://fun.example/casino/"), b))
-           .when(v == 4, F.concat(F.lit("https://news.example/adult-"),
-                                  b))
-           .when(v == 5, F.concat(F.lit("https://hub.example/sex/"
-                                        "webcam/"), b))
-           .when(v == 6, F.concat(F.lit("http://10.1.2.3/r/"), b))
-           .otherwise(F.concat(F.lit("https://shop42.example/item/"), b)))
-    staged = docs.select("doc_id", url.alias("url"))
-    bl = spark.createDataFrame([(d,) for d in _URL_BLOCKLIST],
-                               "domain string")
-    out = url_quality_filter(staged, bl)
-    return out.select("doc_id", "url", "domain", "blocked_domain",
-                      "is_ip", "n_strict", "n_soft", "keep")
-
-
-def _sql_url_quality() -> str:
-    bl = ", ".join(f"('{d}')" for d in _URL_BLOCKLIST)
-    return rf"""
-WITH staged AS (
-  SELECT doc_id,
-         CASE doc_id % 8
-           WHEN 0 THEN 'https://site' || (doc_id % 5) || '.org/page/'
-                       || doc_id
-           WHEN 1 THEN 'https://badsite.com/p/' || doc_id
-           WHEN 2 THEN 'http://cdn.spam.example/x/' || doc_id
-           WHEN 3 THEN 'https://fun.example/casino/' || doc_id
-           WHEN 4 THEN 'https://news.example/adult-' || doc_id
-           WHEN 5 THEN 'https://hub.example/sex/webcam/' || doc_id
-           WHEN 6 THEN 'http://10.1.2.3/r/' || doc_id
-           ELSE 'https://shop42.example/item/' || doc_id END AS url
-  FROM documents),
-bl(domain) AS (VALUES {bl}),
-parsed AS (
-  SELECT doc_id, url, lower(url) AS lurl,
-         regexp_extract(lower(url),
-                        '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS domain
-  FROM staged),
-sfx AS (
-  SELECT doc_id, unnest(list_transform(
-           range(1, len(string_split(domain, '.')) + 1),
-           i -> array_to_string(string_split(domain, '.')
-                                [i:len(string_split(domain, '.'))], '.')
-         )) AS s
-  FROM parsed),
-blocked AS (
-  SELECT DISTINCT doc_id FROM sfx JOIN bl ON sfx.s = bl.domain),
-scored AS (
-  SELECT p.doc_id, p.url, p.domain,
-         b.doc_id IS NOT NULL AS blocked_domain,
-         regexp_matches(p.domain,
-                        '^\d{{1,3}}(\.\d{{1,3}}){{3}}$') AS is_ip,
-         CAST(contains(p.lurl, 'porn')::INT + contains(p.lurl, 'xxx')::INT
-              + contains(p.lurl, 'casino')::INT
-              + contains(p.lurl, 'viagra')::INT AS INT) AS n_strict,
-         CAST(contains(p.lurl, 'sex')::INT + contains(p.lurl, 'adult')::INT
-              + contains(p.lurl, 'escort')::INT
-              + contains(p.lurl, 'webcam')::INT
-              + contains(p.lurl, 'torrent')::INT AS INT) AS n_soft
-  FROM parsed p LEFT JOIN blocked b USING (doc_id))
-SELECT doc_id, url, domain, blocked_domain, is_ip, n_strict, n_soft,
-       (NOT blocked_domain AND NOT is_ip AND n_strict = 0
-        AND n_soft < 2) AS keep
-FROM scored
-"""
-
-
-def q_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shannon character entropy per doc (bits): the gibberish/binary
-    detector signal. Hash pins the exact histogram, the per-class
-    round(log2,9)-decimal terms and the final normalization."""
-    from ..operators.text import char_entropy  # noqa: PLC0415
-
-    return char_entropy(docs_t(spark, sf_dir))
-
-
-SQL_CHAR_ENTROPY = r"""
-WITH chars AS (
-  SELECT doc_id, unnest(list_transform(range(1, len(text) + 1),
-                                       i -> text[i])) AS ch
-  FROM documents),
-hist AS (
-  SELECT doc_id, ch, CAST(COUNT(*) AS BIGINT) AS c
-  FROM chars GROUP BY 1, 2),
-terms AS (
-  SELECT doc_id, c,
-         SUM(c) OVER (PARTITION BY doc_id) AS n,
-         CAST(c AS DECIMAL(18,0))
-           * CAST(ROUND(log2(CAST(c AS DOUBLE)
-                             / (SUM(c) OVER (PARTITION BY doc_id))), 9)
-                  AS DECIMAL(12,9)) AS t
-  FROM hist),
-scored AS (
-  SELECT doc_id, CAST(MAX(n) AS BIGINT) AS n_chars, SUM(t) AS s
-  FROM terms GROUP BY doc_id)
-SELECT d.doc_id,
-       COALESCE(s.n_chars, 0) AS n_chars,
-       COALESCE(ROUND(CAST(-s.s AS DOUBLE) / s.n_chars, 6), 0.0)
-         AS entropy
-FROM documents d LEFT JOIN scored s USING (doc_id)
-"""
-
-
-def q_pii_luhn_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Luhn-gated card redaction: each doc gets a deterministic
-    '#### #### #### ####' candidate derived from md5(doc_id) (hex
-    chars mod 10 — ~10% pass the checksum organically), embedded in a
-    sentence with a decoy order id; the hash pins candidate
-    extraction, the mod-10 walk, and that ONLY valid candidates are
-    replaced while the decoy never is."""
-    from ..operators.text import luhn_valid, redact_cards  # noqa: PLC0415
-
-    docs = docs_t(spark, sf_dir)
-    digit = lambda i: (F.conv(  # noqa: E731
-        F.substring(F.md5(F.concat(F.lit("card|"),
-                                   F.col("doc_id").cast("string"))),
-                    i, 1), 16, 10).cast("int") % 10).cast("string")
-    group = lambda a: F.concat(*[digit(i) for i in a])  # noqa: E731
-    card = F.concat_ws(" ", group(range(1, 5)), group(range(5, 9)),
-                       group(range(9, 13)), group(range(13, 17)))
-    staged = docs.select(
-        "doc_id",
-        F.concat(F.lit("order 1234567890123456789 pay "), card,
-                 F.lit(" today")).alias("text"),
-        card.alias("card"))
-    return staged.select(
-        "doc_id", "card",
-        luhn_valid(F.col("card")).alias("valid"),
-        redact_cards(F.col("text")).alias("redacted"))
-
-
-SQL_PII_LUHN_CARDS = r"""
-WITH staged AS (
-  SELECT doc_id,
-         array_to_string(list_transform(
-           range(1, 17),
-           i -> CAST(('0x' || md5('card|' || doc_id)[i])::INT % 10
-                     AS VARCHAR)
-           ), '') AS flat
-  FROM documents),
-carded AS (
-  SELECT doc_id,
-         flat[1:4] || ' ' || flat[5:8] || ' ' || flat[9:12] || ' '
-           || flat[13:16] AS card
-  FROM staged),
-texted AS (
-  SELECT doc_id, card,
-         'order 1234567890123456789 pay ' || card || ' today' AS text
-  FROM carded),
-validated AS (
-  SELECT doc_id, card, text,
-         list_filter(
-           regexp_extract_all(text, '\b(?:\d[ -]?){12,18}\d\b'),
-           m -> len(replace(replace(m, ' ', ''), '-', ''))
-                  BETWEEN 13 AND 19
-                AND list_sum(list_transform(
-                      range(1, len(replace(replace(m, ' ', ''),
-                                           '-', '')) + 1),
-                      i -> CASE WHEN i % 2 = 1
-                           THEN (reverse(replace(replace(m, ' ', ''),
-                                                 '-', ''))[i])::INT
-                           ELSE CASE WHEN (reverse(replace(
-                                    replace(m, ' ', ''), '-', ''))[i]
-                                    )::INT * 2 < 10
-                                THEN (reverse(replace(replace(m, ' ',
-                                      ''), '-', ''))[i])::INT * 2
-                                ELSE (reverse(replace(replace(m, ' ',
-                                      ''), '-', ''))[i])::INT * 2 - 9
-                                END END)) % 10 = 0) AS ok
-  FROM texted)
-SELECT doc_id, card,
-       len(list_filter(ok, m -> m = card)) > 0 AS valid,
-       -- \b-anchored like the Spark side: a longer digit run that only
-       -- CONTAINS a valid candidate is never partially rewritten
-       list_reduce(list_prepend(text, ok),
-                   (acc, m) -> regexp_replace(
-                     acc, '\b\Q' || m || '\E\b', '<CARD>', 'g')
-       ) AS redacted
-FROM validated
 """
 
 
@@ -1452,193 +238,6 @@ FROM documents d JOIN toks ON d.doc_id = toks.doc_id
 """
 
 
-_SPLITS = (("train", 0.9), ("val", 0.05), ("test", 0.05))
-_SAMPLE_FRACTIONS = {"src0": 0.8, "src1": 0.5, "src2": 0.25, "src3": 0.1}
-_MIXTURE_WEIGHTS = {"src0": 0.5, "src1": 0.3, "src2": 0.2}
-
-
-def _sql_u(expr: str, seed: int) -> str:
-    """DuckDB double in [0,1) matching sampling.hash_uniform."""
-    return f"CAST({_sql_md5int(expr, seed)} AS DOUBLE) / 4294967296.0"
-
-
-def q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = t(spark, sf_dir, "documents")
-    return sampling.hash_split(docs, splits=_SPLITS).select("doc_id", "split")
-
-
-def _sql_hash_split(seed: int = 42) -> str:
-    # identical cumulative-threshold floats as hash_split (incl. 0.9+0.05
-    # rounding), emitted at full precision
-    cum, branches = 0.0, []
-    for name, w in _SPLITS[:-1]:
-        cum += w
-        branches.append(f"WHEN u < CAST({cum!r} AS DOUBLE) THEN '{name}'")
-    return f"""
-SELECT doc_id,
-       CASE {' '.join(branches)} ELSE '{_SPLITS[-1][0]}' END AS split
-FROM (SELECT doc_id, {_sql_u("CAST(doc_id AS VARCHAR)", seed)} AS u
-      FROM documents)
-"""
-
-
-def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = t(spark, sf_dir, "documents")
-    return (sampling.stratified_sample(docs, _SAMPLE_FRACTIONS)
-            .select("doc_id", "source"))
-
-
-def _sql_stratified_sample(seed: int = 7) -> str:
-    rate = " ".join(
-        f"WHEN source = '{s}' THEN CAST({f!r} AS DOUBLE)"
-        for s, f in sorted(_SAMPLE_FRACTIONS.items()))
-    return f"""
-SELECT doc_id, source
-FROM documents
-WHERE {_sql_u("CAST(doc_id AS VARCHAR)", seed)}
-      < CASE {rate} ELSE CAST(0.0 AS DOUBLE) END
-"""
-
-
-_WSAMPLE_K, _WSAMPLE_SEED = 200, 13
-
-
-def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic weighted systematic resampling
-    (sampling.weighted_systematic_sample): exactly 200 picks distributed
-    proportionally to length(text), returned as per-doc replacement
-    counts (Σ n_picks = 200) — the mixture-epoch multiplicity table.
-    Every pick count is integer arithmetic on the distributed cumulative
-    weight line (range-bucket prefix sum, no global window), so the
-    oracle reproduces it digit for digit."""
-    from ..operators.sampling import weighted_systematic_sample
-
-    docs = docs_t(spark, sf_dir).select(
-        "doc_id", F.length("text").alias("wt"))
-    return weighted_systematic_sample(docs, k=_WSAMPLE_K, weight_col="wt",
-                                      seed=_WSAMPLE_SEED)
-
-
-def _sql_weighted_sample(k: int = _WSAMPLE_K,
-                         seed: int = _WSAMPLE_SEED) -> str:
-    return f"""
-WITH w AS (
-  SELECT doc_id, CAST(length(text) AS BIGINT) AS wt
-  FROM documents WHERE length(text) > 0),
-o AS (
-  SELECT doc_id, wt,
-         CAST(COALESCE(SUM(wt) OVER (ORDER BY doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                       0) AS HUGEINT) AS prev,
-         CAST(SUM(wt) OVER () AS HUGEINT) AS tw
-  FROM w),
-c AS (
-  SELECT o.*,
-         CAST(('0x' || substr(md5('{seed}|swrs'), 1, 8))::BIGINT
-              AS HUGEINT) % tw AS offk
-  FROM o),
-n AS (
-  SELECT doc_id, wt,
-         CASE WHEN {k} * prev - offk - 1 < 0 THEN CAST(0 AS HUGEINT)
-              ELSE ({k} * prev - offk - 1) // tw + 1 END AS cnt_lo,
-         CASE WHEN {k} * (prev + wt) - offk - 1 < 0 THEN CAST(0 AS HUGEINT)
-              ELSE ({k} * (prev + wt) - offk - 1) // tw + 1 END AS cnt_hi
-  FROM c)
-SELECT doc_id, wt AS weight,
-       CAST(LEAST(CAST({k} AS HUGEINT), cnt_hi)
-            - LEAST(CAST({k} AS HUGEINT), cnt_lo) AS BIGINT) AS n_picks
-FROM n
-WHERE LEAST(CAST({k} AS HUGEINT), cnt_hi)
-      > LEAST(CAST({k} AS HUGEINT), cnt_lo)
-"""
-
-
-_WSAMPLE_GK = 40
-
-
-def q_weighted_sample_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain weighted systematic resampling
-    (sampling.weighted_systematic_sample_by_group): exactly 40 picks per
-    source, proportional to length(text) within the source — the
-    'k per domain, weighted' mixture draw, with per-(group, chunk)
-    offsets so a giant domain never funnels into one reducer."""
-    from ..operators.sampling import weighted_systematic_sample_by_group
-
-    docs = docs_t(spark, sf_dir).select(
-        "source", "doc_id", F.length("text").alias("wt"))
-    return weighted_systematic_sample_by_group(
-        docs, k=_WSAMPLE_GK, weight_col="wt", group_col="source",
-        seed=_WSAMPLE_SEED)
-
-
-def _sql_weighted_sample_by_source(k: int = _WSAMPLE_GK,
-                                   seed: int = _WSAMPLE_SEED) -> str:
-    return f"""
-WITH w AS (
-  SELECT source, doc_id, CAST(length(text) AS BIGINT) AS wt
-  FROM documents WHERE length(text) > 0),
-o AS (
-  SELECT source, doc_id, wt,
-         CAST(COALESCE(SUM(wt) OVER (PARTITION BY source ORDER BY doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                       0) AS HUGEINT) AS prev,
-         CAST(SUM(wt) OVER (PARTITION BY source) AS HUGEINT) AS tw
-  FROM w),
-c AS (
-  SELECT o.*,
-         CAST(('0x' || substr(md5('{seed}|swrs|' || source), 1, 8))::BIGINT
-              AS HUGEINT) % tw AS offk
-  FROM o),
-n AS (
-  SELECT source, doc_id, wt,
-         CASE WHEN {k} * prev - offk - 1 < 0 THEN CAST(0 AS HUGEINT)
-              ELSE ({k} * prev - offk - 1) // tw + 1 END AS cnt_lo,
-         CASE WHEN {k} * (prev + wt) - offk - 1 < 0 THEN CAST(0 AS HUGEINT)
-              ELSE ({k} * (prev + wt) - offk - 1) // tw + 1 END AS cnt_hi
-  FROM c)
-SELECT source, doc_id, wt AS weight,
-       CAST(LEAST(CAST({k} AS HUGEINT), cnt_hi)
-            - LEAST(CAST({k} AS HUGEINT), cnt_lo) AS BIGINT) AS n_picks
-FROM n
-WHERE LEAST(CAST({k} AS HUGEINT), cnt_hi)
-      > LEAST(CAST({k} AS HUGEINT), cnt_lo)
-"""
-
-
-def q_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = t(spark, sf_dir, "documents")
-    r = sampling.domain_mixture_rates(docs, _MIXTURE_WEIGHTS)
-    return r.select("source", "n_docs",
-                    F.round("target_weight", 6).alias("target_weight"),
-                    F.round("sample_rate", 6).alias("sample_rate"),
-                    "n_sampled")
-
-
-def _sql_domain_mixture() -> str:
-    total = sum(_MIXTURE_WEIGHTS.values())
-    wmap = " ".join(
-        f"WHEN source = '{d}' THEN CAST({w / total!r} AS DOUBLE)"
-        for d, w in sorted(_MIXTURE_WEIGHTS.items()))
-    return f"""
-WITH c AS (
-  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CASE {wmap} END AS tw
-  FROM documents GROUP BY source),
-cap AS (
-  SELECT MIN(CAST(n_docs AS DOUBLE) / tw) AS t FROM c WHERE tw IS NOT NULL),
-r AS (
-  SELECT source, n_docs, tw,
-         CASE WHEN tw IS NULL THEN CAST(0.0 AS DOUBLE)
-              ELSE least(CAST(1.0 AS DOUBLE), tw * t / n_docs) END AS rate
-  FROM c CROSS JOIN cap)
-SELECT source, n_docs,
-       ROUND(COALESCE(tw, CAST(0.0 AS DOUBLE)), 6) AS target_weight,
-       ROUND(rate, 6) AS sample_rate,
-       CAST(floor(rate * n_docs) AS BIGINT) AS n_sampled
-FROM r
-"""
-
-
 _PACK_CAPACITY = 32
 
 
@@ -1648,7 +247,7 @@ def q_pack_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     into capacity-token training sequences.
 
     Stage-budget floor: scheduler barriers, not data — boundary
-    sampling (ONE TakeOrdered job since r15's bottom-k
+    sampling (ONE TakeOrdered job: the bottom-k in
     range_boundaries), per-chunk offset shuffle, broadcast-join +
     bounded local windows — vs DuckDB's single in-process window
     (per-query job/stage counts and the fitted floor live in
@@ -1685,68 +284,6 @@ FROM c
 """
 
 
-_TREND_K = 3
-
-
-def q_trending_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trending terms per source: token counts grouped by (source, term),
-    top-k per source by count with an alphabetical tie-break — the
-    "what's hot in each slice" leaderboard. One explode + one aggregation
-    + one per-source rank window over the already-aggregated (small)
-    table; the fact-sized token stream is never window-sorted."""
-    docs = docs_t(spark, sf_dir)
-    toks = docs.select("source",
-                       F.explode(text.tokens("text")).alias("term")) \
-               .select("source", F.lower("term").alias("term"))
-    counts = toks.groupBy("source", "term").agg(
-        F.count(F.lit(1)).alias("n"))
-    w = Window.partitionBy("source").orderBy(F.desc("n"), "term")
-    return (counts.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= _TREND_K)
-            .select("source", "term", "n",
-                    F.col("rnk").cast("int").alias("rnk")))
-
-
-SQL_TRENDING_TERMS = rf"""
-WITH toks AS (
-  SELECT source, lower(t.term) AS term
-  FROM documents,
-       UNNEST(list_filter(string_split_regex(text, '\s+'),
-                          x -> x <> '')) AS t(term)),
-counts AS (
-  SELECT source, term, CAST(COUNT(*) AS BIGINT) AS n
-  FROM toks GROUP BY source, term)
-SELECT source, term, n, CAST(rnk AS INT) AS rnk FROM (
-  SELECT source, term, n,
-         ROW_NUMBER() OVER (PARTITION BY source
-                            ORDER BY n DESC, term) AS rnk
-  FROM counts)
-WHERE rnk <= {_TREND_K}
-"""
-
-
-def q_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocked edit-distance entity resolution (dedup.fuzzy_value_pairs):
-    near-matching distinct part names with row support — fuzzy matching on
-    the vocabulary domain, candidates confined to first-token blocks."""
-    from ..operators.dedup import fuzzy_value_pairs
-
-    return fuzzy_value_pairs(t(spark, sf_dir, "part"), "p_name", max_dist=3)
-
-
-SQL_FUZZY_PAIRS = """
-WITH v AS (
-  SELECT p_name AS name, CAST(COUNT(*) AS BIGINT) AS n,
-         string_split(p_name, ' ')[1] AS blk
-  FROM part GROUP BY p_name)
-SELECT a.name AS name_a, b.name AS name_b,
-       CAST(levenshtein(a.name, b.name) AS INT) AS dist,
-       a.n AS n_a, b.n AS n_b
-FROM v a JOIN v b ON a.blk = b.blk AND a.name < b.name
-WHERE levenshtein(a.name, b.name) <= 3
-"""
-
-
 _BATCH_BUDGET = 4096
 
 
@@ -1759,7 +296,7 @@ def q_length_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     window).
 
     Stage-budget floor: the same barrier shape as pack_positions
-    (one-job bottom-k boundary sampling since r15, per-(bucket, chunk)
+    (one-job bottom-k boundary sampling, per-(bucket, chunk)
     offset shuffle, broadcast-join + bounded local windows) vs
     DuckDB's in-process per-bucket window — counts and fitted floor in
     FLOOR_MODEL_r15.json, sf1 amortization in BENCHCMP_sf1.json.
@@ -1793,104 +330,6 @@ FROM r
 """
 
 
-_CHUNK, _CHUNK_STRIDE = 16, 12
-
-
-def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = docs_t(spark, sf_dir)
-    return text.chunk_documents(docs, chunk_tokens=_CHUNK,
-                                stride=_CHUNK_STRIDE)
-
-
-def _sql_chunk(chunk: int = _CHUNK, stride: int = _CHUNK_STRIDE) -> str:
-    return rf"""
-WITH w AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS w
-  FROM documents),
-starts AS (
-  SELECT doc_id, w,
-         unnest(range(0, 1 + CAST(floor(
-             (greatest(len(w) - {chunk}, 0) + {stride - 1}) / {stride})
-             AS INT))) AS i
-  FROM w WHERE len(w) > 0)
-SELECT doc_id, CAST(i AS INT) AS chunk_id,
-       CAST(len(w[1 + i * {stride} : i * {stride} + {chunk}]) AS INT)
-           AS n_tokens,
-       array_to_string(w[1 + i * {stride} : i * {stride} + {chunk}], ' ')
-           AS chunk_text
-FROM starts
-"""
-
-
-def q_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = docs_t(spark, sf_dir)
-    r = text.repetition_signals(docs)
-    return r.select("doc_id", *[F.round(c, 6).alias(c)
-                                for c in r.columns if c != "doc_id"])
-
-
-def _sql_repetition(ngram_ns: tuple[int, ...] = (2, 3, 4)) -> str:
-    values = ", ".join(f"({n})" for n in ngram_ns)
-    tops = "\n         ".join(
-        f"MAX(CASE WHEN t.n = {n} THEN t.topchars END) AS top{n},"
-        for n in ngram_ns)
-    dups = ",\n         ".join(
-        f"MAX(CASE WHEN t.n = {n} THEN d.dupchars END) AS dup{n}"
-        for n in ngram_ns)
-    outs = ",\n       ".join(
-        f"ROUND(CASE WHEN n_chars > 0 THEN CAST(COALESCE(top{n}, 0) AS DOUBLE)"
-        f" / n_chars ELSE 0.0 END, 6) AS top_{n}gram_char_frac,\n       "
-        f"ROUND(CASE WHEN n_chars > 0 THEN CAST(COALESCE(dup{n}, 0) AS DOUBLE)"
-        f" / n_chars ELSE 0.0 END, 6) AS dup_{n}gram_char_frac"
-        for n in ngram_ns)
-    return rf"""
-WITH {_TOKS_SQL.strip()},
-base AS (
-  SELECT d.doc_id, len(d.text) AS n_chars, w,
-         list_filter(string_split(d.text, chr(10)), x -> trim(x) <> '') AS lines
-  FROM documents d JOIN toks USING (doc_id)),
-stats AS (
-  SELECT doc_id, n_chars,
-         len(lines) AS nl, len(list_distinct(lines)) AS dl,
-         COALESCE(list_sum(list_transform(lines, x -> len(x))), 0) AS lc,
-         COALESCE(list_sum(list_transform(list_distinct(lines), x -> len(x))), 0) AS dlc,
-         len(w) AS nw, len(list_distinct(w)) AS dw
-  FROM base),
-ng AS (
-  SELECT doc_id, n, array_to_string(w[i : i + n - 1], ' ') AS ng
-  FROM (
-    SELECT b.doc_id, ns.n AS n, b.w,
-           unnest(range(1, greatest(len(b.w) - ns.n + 2, 1))) AS i
-    FROM base b, (VALUES {values}) ns(n))),
-cnt AS (
-  SELECT doc_id, n, ng, CAST(COUNT(*) AS BIGINT) AS c, len(ng) AS l
-  FROM ng GROUP BY 1, 2, 3),
-tops AS (
-  SELECT doc_id, n, c * l AS topchars FROM cnt
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY doc_id, n
-                             ORDER BY c DESC, ng DESC) = 1),
-dups AS (
-  SELECT doc_id, n, SUM(CASE WHEN c > 1 THEN c * l ELSE 0 END) AS dupchars
-  FROM cnt GROUP BY 1, 2),
-wide AS (
-  SELECT t.doc_id,
-         {tops}
-         {dups}
-  FROM tops t JOIN dups d USING (doc_id, n)
-  GROUP BY t.doc_id)
-SELECT s.doc_id,
-       ROUND(CASE WHEN nl > 0 THEN CAST(nl - dl AS DOUBLE) / nl
-             ELSE 0.0 END, 6) AS dup_line_frac,
-       ROUND(CASE WHEN lc > 0 THEN CAST(lc - dlc AS DOUBLE) / lc
-             ELSE 0.0 END, 6) AS dup_line_char_frac,
-       ROUND(CASE WHEN nw > 0 THEN CAST(nw - dw AS DOUBLE) / nw
-             ELSE 0.0 END, 6) AS dup_word_frac,
-       {outs}
-FROM stats s LEFT JOIN wide USING (doc_id)
-"""
-
-
 def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document characteristic terms by tf·idf — inverted-index shape
     (two aggs + a broadcastable term-frequency join)."""
@@ -1913,181 +352,6 @@ r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
       FROM s)
 SELECT doc_id, term, tf, df_docs, ROUND(score, 6) AS score
 FROM r WHERE rn <= 3
-"""
-
-
-_CONTAM_N = 4
-_EVAL_MOD = 101
-_ORDER_SEED = 13
-_E2E_MIN_TOK, _E2E_MAX_TOK = 10, 1000
-
-
-def q_datapipe_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full LLM training-data pipeline as one composed plan:
-    quality filter (token-count bounds) → exact dedup (keep the minimum
-    doc_id per content hash) → decontamination (drop train docs sharing
-    ≥50% of their word n-grams with the eval slice) → deterministic global
-    training order. Every stage is an operator gated elsewhere on its own;
-    this query checks their composition end to end — the artifact a real
-    data-curation run would ship."""
-    from ..operators.sampling import training_order
-
-    docs = docs_t(spark, sf_dir)
-    n_tok = text.token_count(F.col("text"))
-    q = docs.filter(n_tok.between(_E2E_MIN_TOK, _E2E_MAX_TOK))
-    keep = (q.groupBy(F.md5("text").alias("_h"))
-            .agg(F.min("doc_id").alias("doc_id")))
-    qd = q.join(keep.select("doc_id"), "doc_id", "left_semi")
-    train = qd.filter(F.col("doc_id") % _EVAL_MOD != 0)
-    ev = docs.filter(F.col("doc_id") % _EVAL_MOD == 0)
-    cont = text.contamination(train, ev, n=_CONTAM_N)
-    clean = train.join(
-        cont.filter(F.col("contamination") < 0.5).select("doc_id"),
-        "doc_id", "left_semi")
-    ordered = training_order(clean, seed=_ORDER_SEED)
-    return (clean.select(
-        "doc_id", text.token_count(F.col("text")).cast("long")
-        .alias("n_tokens")).join(ordered, "doc_id"))
-
-
-SQL_DATAPIPE_E2E = rf"""
-WITH {_TOKS_SQL.strip()},
-tc AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens FROM toks),
-q AS (SELECT d.doc_id, d.text FROM documents d JOIN tc USING (doc_id)
-      WHERE tc.n_tokens BETWEEN {_E2E_MIN_TOK} AND {_E2E_MAX_TOK}),
-keep AS (SELECT MIN(doc_id) AS doc_id FROM q GROUP BY md5(text)),
-qd AS (SELECT q.* FROM q JOIN keep USING (doc_id)),
-grams AS (
-  SELECT t.doc_id, unnest(list_distinct(
-    CASE WHEN len(w) >= {_CONTAM_N}
-         THEN list_transform(range(1, len(w) - {_CONTAM_N - 2}),
-                             i -> array_to_string(w[i:i+{_CONTAM_N - 1}], ' '))
-         ELSE [array_to_string(w, ' ')] END)) AS gram
-  FROM toks t),
-ev AS (SELECT DISTINCT gram FROM grams WHERE doc_id % {_EVAL_MOD} = 0),
-tr AS (SELECT g.doc_id, g.gram FROM grams g JOIN qd USING (doc_id)
-       WHERE g.doc_id % {_EVAL_MOD} != 0),
-tot AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams
-        FROM tr GROUP BY doc_id),
-hit AS (SELECT t.doc_id, CAST(COUNT(*) AS BIGINT) AS n_matched
-        FROM tr t JOIN ev USING (gram) GROUP BY t.doc_id),
-clean AS (
-  SELECT t.doc_id FROM tot t LEFT JOIN hit h ON h.doc_id = t.doc_id
-  WHERE ROUND(CAST(COALESCE(h.n_matched, 0) AS DOUBLE) / t.n_grams, 6) < 0.5)
-SELECT c.doc_id, tc.n_tokens,
-       CAST(ROW_NUMBER() OVER (
-         ORDER BY ('0x' || substr(md5('{_ORDER_SEED}|' || c.doc_id), 1, 8))::BIGINT,
-                  c.doc_id) - 1 AS BIGINT) AS epoch_pos
-FROM clean c JOIN tc ON tc.doc_id = c.doc_id
-"""
-
-
-
-
-def q_training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic global training-order shuffle (dense 0..n-1 epoch
-    positions by hash rank), computed with range buckets + broadcast
-    offsets instead of a single-partition window."""
-    from ..operators.sampling import training_order
-
-    return training_order(docs_t(spark, sf_dir), seed=_ORDER_SEED)
-
-
-SQL_TRAINING_ORDER = f"""
-SELECT doc_id,
-       CAST(ROW_NUMBER() OVER (
-         ORDER BY ('0x' || substr(md5('{_ORDER_SEED}|' || doc_id), 1, 8))::BIGINT,
-                  doc_id) - 1 AS BIGINT) AS epoch_pos
-FROM documents
-"""
-
-
-
-
-def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decontamination pass: word 4-gram overlap of every training doc
-    (doc_id % 101 != 0) against the deterministic eval slice
-    (doc_id % 101 == 0). Inverted-index semi-join on the gram string —
-    never doc x doc."""
-    docs = docs_t(spark, sf_dir)
-    train = docs.filter(F.col("doc_id") % _EVAL_MOD != 0)
-    ev = docs.filter(F.col("doc_id") % _EVAL_MOD == 0)
-    return text.contamination(train, ev, n=_CONTAM_N)
-
-
-SQL_CONTAMINATION = rf"""
-WITH {_TOKS_SQL.strip()},
-grams AS (
-  SELECT doc_id, unnest(list_distinct(
-    CASE WHEN len(w) >= {_CONTAM_N}
-         THEN list_transform(range(1, len(w) - {_CONTAM_N - 2}),
-                             i -> array_to_string(w[i:i+{_CONTAM_N - 1}], ' '))
-         ELSE [array_to_string(w, ' ')] END)) AS gram
-  FROM toks),
-ev AS (SELECT DISTINCT gram FROM grams WHERE doc_id % {_EVAL_MOD} = 0),
-tr AS (SELECT doc_id, gram FROM grams WHERE doc_id % {_EVAL_MOD} != 0),
-tot AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams
-        FROM tr GROUP BY doc_id),
-hit AS (SELECT t.doc_id, CAST(COUNT(*) AS BIGINT) AS n_matched
-        FROM tr t JOIN ev USING (gram) GROUP BY t.doc_id)
-SELECT t.doc_id, t.n_grams,
-       COALESCE(h.n_matched, 0) AS n_matched,
-       ROUND(CAST(COALESCE(h.n_matched, 0) AS DOUBLE) / t.n_grams, 6)
-           AS contamination
-FROM tot t LEFT JOIN hit h ON h.doc_id = t.doc_id
-"""
-
-
-def q_quality_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-trick linear quality scoring (operators/text.py:
-    hashed_linear_score): the fastText/CCNet filter plumbing as a
-    MAP-ONLY operator — per-token md5-derived weights, per-doc
-    ``F.aggregate`` inside the row, zero shuffles, no UDF. The logit and
-    the rounding are integer arithmetic, so the oracle hash-matches bit
-    for bit."""
-    from ..operators.text import hashed_linear_score  # noqa: PLC0415
-
-    return hashed_linear_score(docs_t(spark, sf_dir))
-
-
-SQL_QUALITY_MODEL_SCORE = """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\\s+'),
-                     t -> t <> '') AS w
-  FROM documents),
-s AS (
-  SELECT doc_id,
-         CAST(len(w) AS INT) AS n_tokens,
-         CAST(COALESCE(list_sum(list_transform(
-             w, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT % 2001
-                     - 1000)), 0) AS BIGINT) AS logit
-  FROM toks)
-SELECT doc_id, n_tokens, logit,
-       CASE WHEN n_tokens > 0
-            THEN CAST(sign(logit) * ((abs(logit) * 2000 + n_tokens)
-                                     // (2 * n_tokens)) AS DOUBLE) / 1e6
-            ELSE 0.0 END AS score
-FROM s
-"""
-
-
-def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-self unigram LM fluency score per document."""
-    return text.unigram_logprob(docs_t(spark, sf_dir))
-
-
-SQL_UNIGRAM_LOGPROB = f"""
-WITH {_TOKS_SQL.strip()},
-tok2 AS (SELECT doc_id, unnest(w) AS term FROM toks),
-tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-       FROM tok2 GROUP BY 1, 2),
-vocab AS (SELECT term, CAST(SUM(tf) AS BIGINT) AS cnt FROM tf GROUP BY term),
-tot AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS n FROM vocab)
-SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_tokens,
-       ROUND(SUM(tf * LN(cnt / tot.n)) / CAST(SUM(tf) AS DOUBLE), 6)
-           AS logprob
-FROM tf JOIN vocab USING (term) CROSS JOIN tot GROUP BY doc_id
 """
 
 
@@ -2140,216 +404,6 @@ FROM c
 """
 
 
-def q_url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Source-level URL dedup (r8): every web-crawl pipeline's first
-    grouping key. Six deterministic mess styles per page — case-mangled
-    scheme/host, explicit default port, trailing slash, ``utm_``
-    tracking params, and reordered query params — are synthesized from
-    doc_id (page = doc_id // 6, variant = doc_id % 6) and collapsed by
-    ``operators.text.canonicalize_url`` (pure JVM Column chain: regexp
-    parts + filtered/sorted query params). Styles 0-4 collapse to one
-    canonical URL per page; style 5 keeps its (sorted) real params.
-    The oracle replays both the synthesis and the normalization 1:1 in
-    DuckDB, so the dedup groups are hash-gated byte-for-byte."""
-    from ..operators.text import canonicalize_url
-
-    docs = docs_t(spark, sf_dir)
-    b = (F.col("doc_id") / 6).cast("long")
-    base = F.concat(F.lit("example"), (b % 7).cast("string"),
-                    F.lit(".com/p/"), b.cast("string"))
-    # case-mangles scheme+HOST only: URL paths are case-SENSITIVE, so a
-    # canonicalizer must not fold them (caught in r8 review — upper over
-    # the whole base would make variant 1 a genuinely different URL)
-    host_upper = F.concat(F.lit("HTTPS://EXAMPLE"), (b % 7).cast("string"),
-                          F.lit(".COM/p/"), b.cast("string"))
-    url = (F.when(F.col("doc_id") % 6 == 0,
-                  F.concat(F.lit("https://"), base))
-           .when(F.col("doc_id") % 6 == 1, host_upper)
-           .when(F.col("doc_id") % 6 == 2,
-                 F.concat(F.lit("https://example"), (b % 7).cast("string"),
-                          F.lit(".com:443/p/"), b.cast("string")))
-           .when(F.col("doc_id") % 6 == 3,
-                 F.concat(F.lit("https://"), base, F.lit("/")))
-           .when(F.col("doc_id") % 6 == 4,
-                 F.concat(F.lit("https://"), base,
-                          F.lit("?utm_source=x&utm_campaign=y")))
-           .otherwise(F.concat(F.lit("https://"), base,
-                               F.lit("?b=2&a=1"))))
-    return (docs.select("doc_id", canonicalize_url(url).alias("canonical"))
-            .groupBy(F.col("canonical").alias("canonical_url"))
-            .agg(F.count(F.lit(1)).alias("n_dupes"),
-                 F.min("doc_id").alias("first_doc")))
-
-
-_SQL_URL_TRACKING = ("x <> '' AND NOT (starts_with(x, 'utm_') OR "
-                     "starts_with(x, 'fbclid=') OR starts_with(x, 'gclid=') "
-                     "OR starts_with(x, 'msclkid='))")
-
-SQL_URL_CANONICAL_DEDUP = f"""
-WITH raw AS (
-  SELECT doc_id, doc_id // 6 AS b,
-         'example' || CAST((doc_id // 6) % 7 AS VARCHAR) || '.com/p/'
-           || CAST(doc_id // 6 AS VARCHAR) AS base
-  FROM documents),
-urls AS (
-  SELECT doc_id,
-         CASE doc_id % 6
-           WHEN 0 THEN 'https://' || base
-           WHEN 1 THEN 'HTTPS://EXAMPLE' || CAST(b % 7 AS VARCHAR)
-                       || '.COM/p/' || CAST(b AS VARCHAR)
-           WHEN 2 THEN 'https://example' || CAST(b % 7 AS VARCHAR)
-                       || '.com:443/p/' || CAST(b AS VARCHAR)
-           WHEN 3 THEN 'https://' || base || '/'
-           WHEN 4 THEN 'https://' || base || '?utm_source=x&utm_campaign=y'
-           ELSE 'https://' || base || '?b=2&a=1'
-         END AS url
-  FROM raw),
-parts AS (
-  SELECT doc_id,
-         lower(regexp_extract(u1, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-         lower(regexp_extract(u1, '^[^:]+://([^/?#]*)', 1)) AS host0,
-         regexp_replace(regexp_extract(u1, '^[^:]+://[^/?#]*([^?#]*)', 1),
-                        '/+$', '') AS path0,
-         regexp_extract(u1, '\\?([^#]*)', 1) AS query0
-  FROM (SELECT doc_id, regexp_replace(url, '#.*', '') AS u1 FROM urls)),
-norm AS (
-  SELECT doc_id,
-         scheme || '://' ||
-         CASE WHEN scheme = 'http' AND host0 LIKE '%:80'
-                THEN substr(host0, 1, length(host0) - 3)
-              WHEN scheme = 'https' AND host0 LIKE '%:443'
-                THEN substr(host0, 1, length(host0) - 4)
-              ELSE host0 END ||
-         CASE WHEN path0 = '' THEN '/' ELSE path0 END ||
-         CASE WHEN len(list_filter(string_split(query0, '&'),
-                                   x -> {_SQL_URL_TRACKING})) > 0
-              THEN '?' || array_to_string(
-                     list_sort(list_filter(string_split(query0, '&'),
-                                           x -> {_SQL_URL_TRACKING})), '&')
-              ELSE '' END AS canonical
-  FROM parts)
-SELECT canonical AS canonical_url, COUNT(*) AS n_dupes,
-       MIN(doc_id) AS first_doc
-FROM norm GROUP BY canonical
-"""
-
-
-def q_similarity_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """int8-quantized cosine top-k: per-vector symmetric quantization
-    (floor(x*s + 0.5), s = 127/max|x|), integer dot products. Fully
-    oracle-checkable: the quantized values are exact integers on both
-    engines and every intermediate product fits a double exactly."""
-    emb = t(spark, sf_dir, "embeddings")
-    qrow = emb.filter(F.col("vec_id") == 0).select("embedding").first()
-    query = [float(x) for x in qrow["embedding"]]
-    return similarity.quantized_topk(emb, query, k=20)
-
-
-def _sql_quantized_topk(k: int = 20) -> str:
-    quant = ("CASE WHEN list_max(list_transform(v, x -> abs(x))) > 0 "
-             "THEN list_transform(v, x -> floor(x * (127.0 / "
-             "list_max(list_transform(v, y -> abs(y)))) + 0.5)) "
-             "ELSE list_transform(v, x -> 0.0) END")
-    return f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-qe AS (SELECT vec_id, {quant} AS q FROM e),
-qq AS (SELECT q AS query_q FROM qe WHERE vec_id = 0),
-scored AS (
-  SELECT vec_id,
-         CASE WHEN sqrt(list_dot_product(q, q))
-                   * sqrt(list_dot_product(query_q, query_q)) > 0
-              THEN list_dot_product(q, query_q)
-                   / (sqrt(list_dot_product(q, q))
-                      * sqrt(list_dot_product(query_q, query_q)))
-              ELSE 0.0 END AS s
-  FROM qe CROSS JOIN qq)
-SELECT vec_id, ROUND(s, 6) AS qcosine_sim
-FROM scored
-ORDER BY qcosine_sim DESC, vec_id
-LIMIT {k}
-"""
-
-
-def q_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter corpus membership: build the bit table from a
-    reference slice (doc_id % 3 == 0), probe every document. Reference
-    docs MUST flag true (no false negatives); the false-positive set is a
-    deterministic function of the md5 bit table, so the oracle re-derives
-    it exactly."""
-    from ..operators import sketch  # noqa: PLC0415
-
-    docs = docs_t(spark, sf_dir)
-    ref = docs.filter(F.col("doc_id") % 3 == 0)
-    bloom = sketch.bloom_build(ref, "text", bits_log2=16, num_hashes=4)
-    return (sketch.bloom_might_contain(docs, "text", bloom,
-                                       bits_log2=16, num_hashes=4)
-            .select("doc_id", "might_contain"))
-
-
-def _sql_bloom_dedup(bits_log2: int = 16, num_hashes: int = 4) -> str:
-    from ..operators.sketch import bloom_sql  # noqa: PLC0415
-
-    m = 1 << bits_log2
-    probes = " UNION ALL ".join(
-        f"SELECT doc_id, ('0x' || substr(md5('{i}|' || text), 1, 8))::BIGINT "
-        f"% {m} AS pos FROM documents"
-        for i in range(1, num_hashes + 1))
-    ref = "(SELECT text FROM documents WHERE doc_id % 3 = 0)"
-    return f"""
-WITH {bloom_sql("text", ref, bits_log2, num_hashes).strip()}
-SELECT p.doc_id,
-       MIN((COALESCE(b.bits, 0) & (1::BIGINT << CAST(p.pos % 32 AS INT)))
-           = (1::BIGINT << CAST(p.pos % 32 AS INT))) AS might_contain
-FROM ({probes}) p LEFT JOIN bloom b ON p.pos // 32 = b.word
-GROUP BY p.doc_id
-"""
-
-
-def q_cms_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min term frequencies: build the d×w sketch over all
-    whitespace tokens, estimate the 30 most frequent terms, report exact
-    vs estimate (estimate ≥ exact by construction; the oracle recomputes
-    the identical cells, so the approximation itself is value-checked)."""
-    from ..operators import sketch  # noqa: PLC0415
-
-    docs = docs_t(spark, sf_dir)
-    tokens = (docs.select(F.explode(
-        F.split(F.lower(F.col("text")), r"\s+")).alias("term"))
-        .filter(F.col("term") != ""))
-    cms = sketch.cms_build(tokens, "term", depth=4, width=512)
-    top = (tokens.groupBy("term").agg(F.count(F.lit(1)).alias("n_exact"))
-           .orderBy(F.desc("n_exact"), "term").limit(30))
-    return (sketch.cms_estimate(top, "term", cms, depth=4, width=512)
-            .select("term", "n_exact", "cms_estimate"))
-
-
-def _sql_cms_terms(depth: int = 4, width: int = 512, k: int = 30) -> str:
-    from ..operators.sketch import cms_sql  # noqa: PLC0415
-
-    probes = " UNION ALL ".join(
-        f"SELECT term, {i} AS row, "
-        f"('0x' || substr(md5('{i}|' || term), 1, 8))::BIGINT % {width} AS col"
-        f" FROM top"
-        for i in range(1, depth + 1))
-    return f"""
-WITH toks AS (
-  SELECT t AS term
-  FROM (SELECT unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                  x -> x <> '')) AS t
-        FROM documents)),
-{cms_sql("term", "toks", depth, width).strip()},
-top AS (
-  SELECT term, COUNT(*) AS n_exact FROM toks GROUP BY term
-  ORDER BY n_exact DESC, term LIMIT {k})
-SELECT p.term, MIN(t.n_exact) AS n_exact,
-       MIN(COALESCE(c.cnt, 0)) AS cms_estimate
-FROM ({probes}) p
-JOIN top t ON p.term = t.term
-LEFT JOIN cms c ON p.row = c.row AND p.col = c.col
-GROUP BY p.term
-"""
-
-
 def q_dup_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact substring-duplication profile (Lee et al. "Deduplicating
     Training Data Makes Language Models Better" signal): per document, the
@@ -2357,7 +411,7 @@ def q_dup_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     another document. No self-join — windows collapse to a (gram, doc) grid
     keyed by md5, one window count marks cross-doc grams.
 
-    Perf note (measured sf0.1, warm, r6): ~1.3-1.9 s vs DuckDB 0.82 s —
+    Perf note (measured sf0.1, warm): ~1.3-1.9 s vs DuckDB 0.82 s —
     both engines do the same gram-grid work (explode ~1 M 8-grams, hash,
     count per gram, re-aggregate per doc); the 2.3× is two gram-keyed
     exchanges at the local job floor vs one in-process pipeline. The
@@ -2396,389 +450,28 @@ FROM g LEFT JOIN dup d USING (doc_id)
 """
 
 
-_ESD_MOD = 5        # eval slice: doc_id % 5 == 0 (the 101-slice shares no
-                    # long runs in the synthetic corpus; 5 yields real hits)
-_ESD_MIN = 50       # Lee et al. 2022's published 50-token threshold
-# m = ceil((L+1)/2) so the stride s = L - m + 1 satisfies s <= m:
-# consecutive stride windows overlap, which makes the chain-start
-# dedup in the cand CTE sound (see operators/dedup.py step 3)
-_ESD_M = (_ESD_MIN + 2) // 2
-_ESD_S = _ESD_MIN - _ESD_M + 1
-
-
-def q_exact_substring_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring decontamination report (Lee et al. 2022,
-    arXiv:2107.06499): every training doc (doc_id % 5 != 0) sharing a
-    >=50-token verbatim run with the eval slice (doc_id % 5 == 0), with
-    the maximal overlap's length and 1-based token offsets. Seeded by a
-    stride-25 fingerprint join over 26-token windows (overlapping
-    strides make the per-run chain-start dedup sound), extended by
-    anchored lcp — the oracle replays seeds, chain starts and
-    extensions exactly."""
-    docs = docs_t(spark, sf_dir)
-    train = docs.filter(F.col("doc_id") % _ESD_MOD != 0)
-    ev = docs.filter(F.col("doc_id") % _ESD_MOD == 0)
-    return dedup.exact_substring_overlaps(train, ev, min_tokens=_ESD_MIN)
-
-
-# lcp of two DuckDB lists via the same first-mismatch scan Spark runs;
-# {a}/{b} must be list-typed SQL expressions already projected to columns
-def _sql_lcp(a: str, b: str) -> str:
-    return (f"CASE WHEN list_position(list_transform("
-            f"range(1, least(len({a}), len({b})) + 1), "
-            f"k -> {a}[k] = {b}[k]), false) > 0 "
-            f"THEN list_position(list_transform("
-            f"range(1, least(len({a}), len({b})) + 1), "
-            f"k -> {a}[k] = {b}[k]), false) - 1 "
-            f"ELSE least(len({a}), len({b})) END")
-
-
-_SQL_ESD_SPANS = rf"""
-tr AS (SELECT doc_id, w FROM toks
-       WHERE doc_id % {_ESD_MOD} != 0 AND len(w) >= {_ESD_M}),
-ev AS (SELECT doc_id, w FROM toks
-       WHERE doc_id % {_ESD_MOD} = 0 AND len(w) >= {_ESD_M}),
-tg AS (
-  SELECT doc_id AS tid, i,
-         md5(array_to_string(w[i:i+{_ESD_M - 1}], ' ')) AS gh
-  FROM (SELECT doc_id, w,
-               unnest(range(1, len(w) - {_ESD_M - 2}, {_ESD_S})) AS i
-        FROM tr)),
-eg AS (
-  SELECT doc_id AS eid, j,
-         md5(array_to_string(w[j:j+{_ESD_M - 1}], ' ')) AS gh
-  FROM (SELECT doc_id, w,
-               unnest(range(1, len(w) - {_ESD_M - 2}, 1)) AS j
-        FROM ev)),
-pairs AS (
-  SELECT tid, eid, i - j AS diag, i
-  FROM tg JOIN eg USING (gh)),
-cand AS (
-  -- chain-start dedup: drop anchors whose stride predecessor on the
-  -- same diagonal also matched (s <= m makes the two windows overlap,
-  -- so the predecessor's extension covers this run); one anchor per
-  -- (pair, diagonal, run) — disjoint runs on one diagonal each survive
-  SELECT p.tid, p.eid, p.diag, p.i FROM pairs p
-  WHERE NOT EXISTS (
-    SELECT 1 FROM pairs q
-    WHERE q.tid = p.tid AND q.eid = p.eid AND q.diag = p.diag
-      AND q.i = p.i - {_ESD_S})),
-arrs AS (
-  SELECT c.tid, c.eid, c.i, c.i - c.diag AS j,
-         list_reverse(t.w[1:c.i-1]) AS la,
-         list_reverse(e.w[1:(c.i - c.diag)-1]) AS lb,
-         t.w[c.i:] AS ra, e.w[(c.i - c.diag):] AS rb
-  FROM cand c
-  JOIN tr t ON t.doc_id = c.tid
-  JOIN ev e ON e.doc_id = c.eid),
-ext AS (
-  SELECT tid, eid, i, j,
-         {_sql_lcp('la', 'lb')} AS l,
-         {_sql_lcp('ra', 'rb')} AS r
-  FROM arrs),
-spans AS (
-  SELECT tid, eid, l + r AS olen, i - l AS ts, j - l AS es
-  FROM ext WHERE l + r >= {_ESD_MIN})"""
-
-SQL_EXACT_SUBSTRING_DECONTAM = rf"""
-WITH {_TOKS_SQL.strip()},
-{_SQL_ESD_SPANS},
-best AS (
-  SELECT tid, eid, olen, ts, es,
-         ROW_NUMBER() OVER (PARTITION BY tid, eid
-                            ORDER BY olen DESC, ts, es) AS rn
-  FROM spans)
-SELECT tid AS doc_id, eid AS eval_id,
-       CAST(olen AS BIGINT) AS overlap_tokens,
-       CAST(ts AS BIGINT) AS t_start, CAST(es AS BIGINT) AS e_start
-FROM best WHERE rn = 1
-"""
-
-
-def q_exact_substring_self_dedup(spark: SparkSession, sf_dir: str
-                                 ) -> DataFrame:
-    """WITHIN-corpus ExactSubstr span removal (Lee et al. 2022): every
-    verbatim >=50-token run occurring more than once in the corpus is
-    cut from all but its first occurrence (smallest doc id, then
-    position); the gate returns every document's rebuilt text plus
-    removal accounting, so the hash pins the window marking, the
-    keep-first choice, the island merge AND the token-level rebuild."""
-    docs = docs_t(spark, sf_dir)
-    return dedup.remove_duplicate_spans(docs, min_tokens=_ESD_MIN)
-
-
-SQL_EXACT_SUBSTRING_SELF_DEDUP = rf"""
-WITH {_TOKS_SQL.strip()},
-g AS (
-  SELECT doc_id,
-         unnest(list_transform(
-           range(1, len(w) - {_ESD_MIN - 2}),
-           i -> {{'p': i,
-                  'gh': md5(array_to_string(w[i:i+{_ESD_MIN - 1}], ' '))}}
-         )) AS u
-  FROM toks WHERE len(w) >= {_ESD_MIN}),
-pos AS (
-  SELECT doc_id, u.p AS p, u.gh AS gh
-  FROM g),
-mk AS (
-  -- keep-first by exact lexicographic (doc_id, p) — mirrors the Spark
-  -- side's min(struct(doc_id, p)) aggregate; no packed key, no
-  -- document-length or id-range limits
-  SELECT doc_id, p FROM (
-    SELECT doc_id, p,
-           COUNT(*) OVER (PARTITION BY gh) AS n,
-           ROW_NUMBER() OVER (PARTITION BY gh ORDER BY doc_id, p) AS rn
-    FROM pos)
-  WHERE n > 1 AND rn > 1),
-isl AS (
-  SELECT doc_id, p,
-         CASE WHEN pe IS NULL OR p > pe THEN 1 ELSE 0 END AS nw
-  FROM (
-    SELECT doc_id, p,
-           MAX(p + {_ESD_MIN}) OVER (
-             PARTITION BY doc_id ORDER BY p
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pe
-    FROM mk)),
-isl2 AS (
-  SELECT doc_id, p,
-         SUM(nw) OVER (PARTITION BY doc_id ORDER BY p
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp
-  FROM isl),
-spans AS (
-  SELECT doc_id, MIN(p) AS s, MAX(p) + {_ESD_MIN - 1} AS e
-  FROM isl2 GROUP BY doc_id, grp),
-sarr AS (
-  SELECT doc_id, list([s, e]) AS sp,
-         CAST(COUNT(*) AS BIGINT) AS n_spans,
-         CAST(SUM(e - s + 1) AS BIGINT) AS n_removed
-  FROM spans GROUP BY doc_id)
-SELECT t.doc_id,
-       CASE WHEN a.sp IS NULL THEN array_to_string(t.w, ' ')
-       -- COALESCE: DuckDB's array_to_string of an emptied list yields
-       -- NULL where Spark's array_join yields '' (fully-removed docs)
-       ELSE COALESCE(array_to_string(
-         list_filter(
-           list_transform(range(1, len(t.w) + 1),
-             i -> CASE WHEN len(list_filter(a.sp,
-                    x -> i >= x[1] AND i <= x[2])) > 0
-                  THEN NULL ELSE t.w[i] END),
-           x -> x IS NOT NULL), ' '), '') END AS clean_text,
-       CAST(len(t.w) AS BIGINT) AS n_tokens,
-       COALESCE(a.n_removed, 0) AS n_removed,
-       COALESCE(a.n_spans, 0) AS n_spans
-FROM toks t LEFT JOIN sarr a USING (doc_id)
-"""
-
-
-_DSIR_BUCKETS = 1024
-
-
-def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance weights (Xie et al. 2023): hashed uni+bigram
-    log-likelihood ratio of every raw doc (doc_id % 5 != 0) against the
-    target slice (doc_id % 5 == 0), 1024 buckets, add-1 smoothing. The
-    hash pins the md5 bucketing, both smoothed distributions, the
-    rounded-ln exact-decimal terms and the per-doc feature sums."""
-    docs = docs_t(spark, sf_dir)
-    raw = docs.filter(F.col("doc_id") % _ESD_MOD != 0)
-    tgt = docs.filter(F.col("doc_id") % _ESD_MOD == 0)
-    return text.dsir_importance(raw, tgt, buckets=_DSIR_BUCKETS)
-
-
-SQL_DSIR_WEIGHTS = rf"""
-WITH {_TOKS_SQL.strip()},
-grams AS (
-  SELECT doc_id, unnest(list_concat(
-    w,
-    CASE WHEN len(w) >= 2
-         THEN list_transform(range(1, len(w)),
-                             i -> array_to_string(w[i:i+1], ' '))
-         ELSE [] END)) AS g
-  FROM toks),
-bkt AS (
-  SELECT doc_id,
-         ('0x' || substr(md5(g), 1, 8))::BIGINT % {_DSIR_BUCKETS} AS b
-  FROM grams),
-f_raw AS (
-  SELECT doc_id, b, CAST(COUNT(*) AS BIGINT) AS c
-  FROM bkt WHERE doc_id % {_ESD_MOD} != 0 GROUP BY 1, 2),
-c_raw AS (SELECT b, CAST(SUM(c) AS BIGINT) AS cr FROM f_raw GROUP BY b),
-c_tgt AS (
-  SELECT b, CAST(COUNT(*) AS BIGINT) AS ct
-  FROM bkt WHERE doc_id % {_ESD_MOD} = 0 GROUP BY b),
-tot AS (
-  SELECT (SELECT COALESCE(SUM(cr), 0) FROM c_raw) AS tr,
-         (SELECT COALESCE(SUM(ct), 0) FROM c_tgt) AS tt),
-keys AS (SELECT b FROM c_raw UNION SELECT b FROM c_tgt),
-ratio AS (
-  -- keys + two LEFT JOINs + scalar subqueries, NOT a FULL OUTER JOIN
-  -- chained with CROSS JOIN: DuckDB resolves that chain to a plan that
-  -- drops/garbles unmatched buckets (observed r14: 621 of 1024 rows,
-  -- wrong terms); this shape is unambiguous in both engines
-  SELECT k.b,
-         CAST(ROUND(ln(CAST(COALESCE(t.ct, 0) + 1 AS DOUBLE)
-                       / ((SELECT tt FROM tot) + {_DSIR_BUCKETS})), 9)
-              AS DECIMAL(28,9))
-         - CAST(ROUND(ln(CAST(COALESCE(r.cr, 0) + 1 AS DOUBLE)
-                         / ((SELECT tr FROM tot) + {_DSIR_BUCKETS})), 9)
-                AS DECIMAL(28,9)) AS term
-  FROM keys k
-  LEFT JOIN c_raw r ON r.b = k.b
-  LEFT JOIN c_tgt t ON t.b = k.b),
-scored AS (
-  SELECT f.doc_id, CAST(SUM(f.c) AS BIGINT) AS n_grams,
-         SUM(f.c * ratio.term) AS s
-  FROM f_raw f JOIN ratio USING (b) GROUP BY f.doc_id)
-SELECT t.doc_id,
-       COALESCE(s.n_grams, 0) AS n_grams,
-       COALESCE(CAST(ROUND(s.s, 6) AS DOUBLE), 0.0) AS log_ratio
-FROM toks t LEFT JOIN scored s USING (doc_id)
-WHERE t.doc_id % {_ESD_MOD} != 0
-"""
-
-
-def q_exact_substring_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The decontaminated training set itself: training docs that share NO
-    >=50-token verbatim run with the eval slice (the anti-join over
-    q_exact_substring_decontam's flags), with token counts — the pass a
-    pretraining pipeline actually ships."""
-    docs = docs_t(spark, sf_dir)
-    train = docs.filter(F.col("doc_id") % _ESD_MOD != 0)
-    ev = docs.filter(F.col("doc_id") % _ESD_MOD == 0)
-    kept = dedup.decontaminate_exact_substring(train, ev,
-                                               min_tokens=_ESD_MIN)
-    return kept.select("doc_id", text.token_count("text").cast("bigint")
-                       .alias("n_tokens"))
-
-
-SQL_EXACT_SUBSTRING_KEPT = rf"""
-WITH {_TOKS_SQL.strip()},
-{_SQL_ESD_SPANS}
-SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens
-FROM toks
-WHERE doc_id % {_ESD_MOD} != 0
-  AND doc_id NOT IN (SELECT tid FROM spans)
-"""
-
-
 QUERIES = {
-    "dedup_exact": q_dedup_exact,
     "dup_ngram_spans": q_dup_ngram_spans,
-    "exact_substring_decontam": q_exact_substring_decontam,
-    "exact_substring_kept": q_exact_substring_kept,
-    "exact_substring_self_dedup": q_exact_substring_self_dedup,
-    "dsir_weights": q_dsir_weights,
-    "fingerprint_dupes": q_fingerprint_dupes,
     "minhash_neardup": q_minhash_neardup,
-    "dedup_clusters": q_dedup_clusters,
-    "dedup_keep_best": q_dedup_keep_best,
     "simhash": q_simhash,
-    "simhash_neardup": q_simhash_neardup,
-    "ngram_jaccard": q_ngram_jaccard,
     "similarity_topk": q_similarity_topk,
-    "embedding_neardup": q_embedding_neardup,
-    "similarity_lsh_topk": q_similarity_lsh_topk,
-    "similarity_ivf_topk": q_similarity_ivf_topk,
-    "semantic_dedup": q_semantic_dedup,
-    "dedup_paragraphs": q_dedup_paragraphs,
-    "dedup_against_reference": q_dedup_against_reference,
-    "lm_perplexity": q_lm_perplexity,
-    "ccnet_buckets": q_ccnet_buckets,
     "knn_join": q_knn_join,
-    "knn_join_exact": q_knn_join_exact,
-    "ann_recall": q_ann_recall,
-    "token_counts": q_token_counts,
-    "winnow_fingerprints": q_winnow_fingerprints,
-    "winnow_neardup": q_winnow_neardup,
-    "lang_id": q_lang_id,
-    "c4_line_filters": q_c4_line_filters,
-    "pii_luhn_cards": q_pii_luhn_cards,
-    "char_entropy": q_char_entropy,
-    "curation_funnel": q_curation_funnel,
-    "url_quality_filter": q_url_quality_filter,
-    "gopher_rules": q_gopher_rules,
     "quality_features": q_quality_features,
-    "repetition_signals": q_repetition_signals,
-    "chunk_documents": q_chunk_documents,
     "pack_positions": q_pack_positions,
     "length_batches": q_length_batches,
-    "fuzzy_pairs": q_fuzzy_pairs,
-    "trending_terms": q_trending_terms,
-    "hash_split": q_hash_split,
-    "stratified_sample": q_stratified_sample,
-    "domain_mixture": q_domain_mixture,
-    "weighted_sample": q_weighted_sample,
-    "weighted_sample_by_source": q_weighted_sample_by_source,
     "pii_redact": q_pii_redact,
     "tfidf_top_terms": q_tfidf_top_terms,
-    "contamination": q_contamination,
-    "training_order": q_training_order,
-    "datapipe_e2e": q_datapipe_e2e,
-    "unigram_logprob": q_unigram_logprob,
-    "quality_model_score": q_quality_model_score,
-    "url_canonical_dedup": q_url_canonical_dedup,
-    "bloom_dedup": q_bloom_dedup,
-    "cms_terms": q_cms_terms,
-    "similarity_quantized_topk": q_similarity_quantized_topk,
 }
 
 ORACLES = {
-    "dedup_exact": SQL_DEDUP_EXACT,
     "dup_ngram_spans": SQL_DUP_NGRAM_SPANS,
-    "exact_substring_decontam": SQL_EXACT_SUBSTRING_DECONTAM,
-    "exact_substring_kept": SQL_EXACT_SUBSTRING_KEPT,
-    "exact_substring_self_dedup": SQL_EXACT_SUBSTRING_SELF_DEDUP,
-    "dsir_weights": SQL_DSIR_WEIGHTS,
-    "fingerprint_dupes": SQL_FINGERPRINT_DUPES,
     "minhash_neardup": _sql_minhash(),
-    "dedup_clusters": _sql_dedup_clusters(),
-    "dedup_keep_best": _sql_dedup_keep_best(),
     "simhash": _sql_simhash(),
-    "simhash_neardup": _sql_simhash_neardup(),
-    "similarity_lsh_topk": _sql_lsh_topk(),
-    "similarity_ivf_topk": _sql_ivf_topk(),
-    "semantic_dedup": SQL_SEMANTIC_DEDUP,
-    "dedup_paragraphs": SQL_DEDUP_PARAGRAPHS,
-    "dedup_against_reference": _sql_dedup_against_reference(),
-    "lm_perplexity": SQL_LM_PERPLEXITY,
-    "ccnet_buckets": SQL_CCNET_BUCKETS,
     "knn_join": _sql_knn_join(),
-    "knn_join_exact": SQL_KNN_JOIN_EXACT,
-    "ann_recall": _sql_ann_recall(),
-    "ngram_jaccard": SQL_NGRAM_JACCARD,
     "similarity_topk": SQL_SIMILARITY_TOPK,
-    "embedding_neardup": SQL_EMBEDDING_NEARDUP,
-    "token_counts": SQL_TOKEN_COUNTS,
-    "winnow_fingerprints": _sql_winnow(),
-    "winnow_neardup": _sql_winnow_neardup(),
-    "lang_id": _sql_lang_id(),
-    "c4_line_filters": SQL_C4_LINE_FILTERS,
-    "pii_luhn_cards": SQL_PII_LUHN_CARDS,
-    "char_entropy": SQL_CHAR_ENTROPY,
-    "curation_funnel": _sql_curation_funnel(),
-    "url_quality_filter": _sql_url_quality(),
-    "gopher_rules": _sql_gopher(),
     "quality_features": _sql_quality(),
-    "repetition_signals": _sql_repetition(),
-    "chunk_documents": _sql_chunk(),
     "pack_positions": _sql_pack(),
     "length_batches": _sql_length_batches(),
-    "fuzzy_pairs": SQL_FUZZY_PAIRS,
-    "trending_terms": SQL_TRENDING_TERMS,
-    "hash_split": _sql_hash_split(),
-    "stratified_sample": _sql_stratified_sample(),
-    "domain_mixture": _sql_domain_mixture(),
-    "weighted_sample": _sql_weighted_sample(),
-    "weighted_sample_by_source": _sql_weighted_sample_by_source(),
     "pii_redact": _sql_pii_redact(),
     "tfidf_top_terms": SQL_TFIDF_TOP_TERMS,
-    "contamination": SQL_CONTAMINATION,
-    "training_order": SQL_TRAINING_ORDER,
-    "datapipe_e2e": SQL_DATAPIPE_E2E,
-    "unigram_logprob": SQL_UNIGRAM_LOGPROB,
-    "quality_model_score": SQL_QUALITY_MODEL_SCORE,
-    "url_canonical_dedup": SQL_URL_CANONICAL_DEDUP,
-    "bloom_dedup": _sql_bloom_dedup(),
-    "cms_terms": _sql_cms_terms(),
-    "similarity_quantized_topk": _sql_quantized_topk(),
 }

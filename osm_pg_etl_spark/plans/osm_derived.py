@@ -149,12 +149,12 @@ def derive_osm_from(part: DataFrame, li: DataFrame) -> dict[str, DataFrame]:
 
 def _shared_network(spark: SparkSession, sf_dir: str):
     """derive → car_network → merged_network with the two pipeline
-    constants cached — the r15-verdict task-1 "shared merged-network
-    materialization" (guide §5: materialize multi-consumer intermediates
+    constants cached, so the merged network is materialized once for all
+    its consumers (guide §5: materialize multi-consumer intermediates
     once).
 
     Every OSM graph gate rebuilds this identical derive→cn→merged
-    pipeline; before r16 only ``cn`` was cached, so each gate re-ran the
+    pipeline; with only ``cn`` cached, each gate re-ran the
     shared/limits/assembly chain (~3.5-5.5 s per gate at sf0.01).
     Caching ``merged`` keys on the ANALYZED PLAN: Spark's CacheManager
     matches sameResult plans, so every gate in one process that builds
@@ -530,7 +530,7 @@ FROM merged
 
 
 def q_osm_directed_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r16: ride the SHARED plain merged network and impute AFTER the
+    # Ride the SHARED plain merged network and impute AFTER the
     # split, with the medians still computed over the pre-split car
     # network (impute_speed_limit(medians_from=cn)). Value-identical to
     # the old merged_network(impute(cn)) formulation: every merged
@@ -899,7 +899,7 @@ def q_osm_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     directed = directed_network(merged, minimal=True).localCheckpoint()
     source = int(directed.agg(F.min("start_node")).collect()[0][0])
 
-    # r15: the two BFS passes are independent level-synchronous loops
+    # The two BFS passes are independent level-synchronous loops
     # whose per-level jobs are tiny at the tail — run them from two
     # driver threads so one pass's stragglers back-fill the other's
     # idle cores (guide §2.6). directed is localCheckpoint'ed first so
@@ -1056,7 +1056,7 @@ def derive_restriction_relations(directed: DataFrame
         F.when((F.col("w1") + F.col("w2")) % 2 == 0, F.lit("no_left_turn"))
          .otherwise(F.lit("only_straight_on")).alias("kind")
         ).localCheckpoint()  # ContextCleaner drops blocks on GC (no
-    # session-lifetime CacheManager entry; ADVICE r10)
+    # session-lifetime CacheManager entry, unlike cache())
     rels = trip.select(
         "id", F.map_from_arrays(
             F.array(F.lit("type"), F.lit("restriction")),
@@ -1127,14 +1127,13 @@ def derive_via_way_restriction_relations(directed: DataFrame
 
 def q_osm_turn_restricted_via_way(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
-    """Via-WAY turn-restricted SSSP (r10, VERDICT task 9): the derived
-    via-way restriction relations are parsed by
-    ``relations.via_way_turn_restrictions`` into edge chains and enforced
-    by the stateful line-graph router
+    """Via-WAY turn-restricted SSSP: the derived via-way restriction
+    relations are parsed by ``relations.via_way_turn_restrictions`` into
+    edge chains and enforced by the stateful line-graph router
     (``graph_algo.turn_restricted_distances(via_way_restrictions=...)``)
     — restrictions bind only to paths traversing the ENTIRE via way,
-    pgrouting's edge-chain semantics. Value-oracled (r11, VERDICT task 1)
-    by the identical-state-replay pattern: in the derived world every via
+    pgrouting's edge-chain semantics. Value-oracled by the
+    identical-state-replay pattern: in the derived world every via
     way is ONE merged edge, so every chain has length 1 and the
     automaton's state is a pure function of the last two path nodes —
     ``_sql_osm_turn_restricted_via_way`` replays the derivation + parse
@@ -1166,7 +1165,7 @@ def q_osm_turn_restricted_via_way(spark: SparkSession,
 
 def q_osm_turn_restricted_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Turn-restricted SSSP driven by REAL ``type=restriction`` relation
-    parsing (VERDICT r7 top-next): a deterministic restriction-relation
+    parsing: a deterministic restriction-relation
     world in pgsnapshot shape is derived over the directed car graph
     (``derive_restriction_relations``), then
     ``operators.relations.turn_restrictions_from_relations`` performs the
@@ -1303,8 +1302,8 @@ _VIA_WAY_ORACLE_MAX_PAT = 64  # nodes per entry+chain pattern (chain <= 62)
 
 def _sql_osm_turn_restricted_via_way(
         rounds: int = _SSSP_ORACLE_ROUNDS) -> str:
-    """Replays the via-WAY world end-to-end (VERDICT r10 task 1, the
-    identical-state-replay pattern), in three acts:
+    """Replays the via-WAY world end-to-end (the identical-state-replay
+    pattern), in three acts:
 
     1. Derivation — dexp/vwcand/vwrels mirror
        ``derive_via_way_restriction_relations`` (mod-37 way triples, md5
@@ -1540,7 +1539,7 @@ def q_osm_betweenness_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = symmetric_edges(edges)
     # bounded collect: the fixture graph has <= _EXACT_BC_MOD (60) nodes
     # by construction; betweenness_exact itself streams its source list
-    # via toLocalIterator (r11) and never collects O(V)
+    # via toLocalIterator and never collects O(V)
     nodes = sorted(r["a"] for r in und.select("a").distinct().collect())
     ecc = (sigma_table(edges, nodes, max_depth=_EXACT_BC_DEPTH)
            .agg(F.max("dist")).collect()[0][0])
@@ -2288,8 +2287,8 @@ def derive_ways_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     as entries — the tag-explode consumers depend on it). Consumers
     that only PROBE literal keys shouldn't route through a map at all:
     project each tag as its own plain column instead, as
-    ``q_osm_mode_flags`` does (the r8 plain-column cascade superseded
-    the old ``probe_only`` CreateMap-elision variant of this helper —
+    ``q_osm_mode_flags`` does (the plain-column cascade replaced an
+    older ``probe_only`` CreateMap-elision variant of this helper —
     one evaluation per tag beats relying on SimplifyExtractValueOps,
     which stops firing the moment the map crosses a projection
     boundary)."""
@@ -2305,7 +2304,7 @@ def derive_ways_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
 def derive_car_way_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The car_network EDGE-ID SET as an (edge_id) DataFrame, for
     consumers that never touch geometry, length or tags beyond the
-    include/exclude rules (r15). Membership in the car network is a pure
+    include/exclude rules. Membership in the car network is a pure
     function of the way's tags plus way existence, so this derives it in
     plain-column cascade form — each probed tag projected ONCE as its
     own column from ``_way_tag_exprs`` and the ``CAR_HIGHWAY_INCLUDE`` /
@@ -2316,7 +2315,7 @@ def derive_car_way_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     way-assembly subplan (sequence window + nodes join + collect_list)
     that column pruning cannot cross, and probing the tags MAP re-inlines
     the full CreateMap at every of the ~7 filter sites once it crosses a
-    projection boundary (the r8 lesson). Measured sf0.1, 5-rep
+    projection boundary. Measured sf0.1, 5-rep
     clearCache noop median: edge-id subplan 1.25 s → 0.61 s. A rule key
     the synthetic tags never emit degrades to NULL (isin → NULL →
     excluded-by-coalesce), exactly the absent-map-key semantics."""
@@ -2346,7 +2345,7 @@ def q_osm_mode_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection (the cascade operator is identical; skipping the linestring
     assembly is pure column pruning the join would otherwise defeat).
 
-    Plain-column cascade (r8): every tag the cascade probes is projected
+    Plain-column cascade: every tag the cascade probes is projected
     ONCE as its own column, and ``with_mode_flags(tag=F.col)`` compiles
     the rules against attribute references — each ``isin`` becomes an
     ``INSET`` over an already-computed value instead of re-evaluating the
@@ -2453,10 +2452,10 @@ def q_osm_complete_network(spark: SparkSession, sf_dir: str) -> DataFrame:
     bicycle mode-flag cascade, with endpoints and geodesic length."""
     d = derive_osm(spark, sf_dir)
     comp = impute_speed_limit(complete_network(d["ways"]))
-    # plain-column cascade (r8, wired here in r10): complete_network
-    # projects every probed tag once; F.col probes compile to INSET over
-    # the already-computed value instead of re-evaluating the tag CASE
-    # chain per probe site (measured 3× on the cascade at sf0.1)
+    # plain-column cascade: complete_network projects every probed tag
+    # once; F.col probes compile to INSET over the already-computed value
+    # instead of re-evaluating the tag CASE chain per probe site
+    # (measured 3× on the cascade at sf0.1)
     flagged = with_mode_flags(comp, tag=F.col)
     return flagged.select("edge_id", "start_node", "end_node",
                           F.round("length", 4).alias("length_km"),
@@ -2715,7 +2714,7 @@ FROM pts GROUP BY id
 
 
 def q_osm_geometric_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F15: ST_Split at blades — full value-hash oracle since r5 (the SQL
+    """F15: ST_Split at blades — full value-hash oracle (the SQL
     emulates the projection/clamp/merge steps IEEE-identically; unit
     goldens in tests/test_geometric_split.py cover the geometry cases,
     and osm_geometric_blades oracle-checks the blade points)."""
@@ -3138,7 +3137,7 @@ def q_osm_cdc_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.tags import tag_cross_summary
     from ..streaming.actions import apply_actions
 
-    # r15: the whole gate (changeset synthesis, MERGE, crosstab) touches
+    # The whole gate (changeset synthesis, MERGE, crosstab) touches
     # only (id, tags) — and the oracle's CTE chain is likewise built on
     # the geometry-free wtags view — so feed it derive_ways_tags instead
     # of the assembled ways table, whose nodes/linestring collect_list
@@ -3218,13 +3217,14 @@ FROM (
 
 
 def q_osm_explore_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gate for the ``tags_summary`` catalog (VERDICT r2 'What's missing'
-    #2): five representative tables from ``tags_summary_catalog`` — plain
-    value summary, the NULL-group service summary, the both-keys oneway
-    crosstab, the denylisted key/value explode, and a node POI summary —
-    unioned into one (tbl, tag, value, count) result.
+    """Gate for the ``tags_summary`` catalog: five representative tables
+    from ``tags_summary_catalog`` — plain value summary, the NULL-group
+    service summary, the both-keys oneway crosstab, the denylisted
+    key/value explode, and a node POI summary — unioned into one
+    (tbl, tag, value, count) result.
 
-    Stage-budget floor (measured sf0.1, median-of-3, r6): ~2.5 s =
+    Stage-budget floor (measured sf0.1, median-of-3, before the lazy
+    checkpoint below): ~2.5 s =
     ways_tags localCheckpoint 1.1 s (orders scan + filtered-map build +
     way_ids semi-join, materialized once so five branches read it
     instead of recomputing the join 5×; the filtered map is load-bearing
@@ -3251,7 +3251,7 @@ def q_osm_explore_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint over cache: same 5-way reuse, but deserialized
     # blocks skip the columnar-serialize step a map column pays in the
     # InMemoryRelation (measured ~10% on this gate at sf0.1).
-    # r15: eager=False — the eager checkpoint ran the wtags subplan as
+    # eager=False: an eager checkpoint ran the wtags subplan as
     # its own job BEFORE the union job (a full barrier: nothing else
     # could overlap it). Lazily-checkpointed, the first branch stage to
     # touch a partition computes-and-persists it and concurrent stages
@@ -3314,11 +3314,12 @@ FROM kv GROUP BY tag, value
 
 
 def q_osm_relation_members(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gate for the relations surface (VERDICT r2 'What's missing' #1):
-    route relations with ordered member ways joined end-to-end against the
-    real ``car_network`` operator output.
+    """Gate for the relations surface: route relations with ordered member
+    ways joined end-to-end against the real ``car_network`` operator
+    output.
 
-    Stage-budget floor (measured sf0.1, warm, r6): ~2.2 s ≈ 6 job
+    Stage-budget floor (measured sf0.1, warm, before the edge-id input
+    below): ~2.2 s ≈ 6 job
     barriers — relation/member synthesis (two dim-table scans + tag
     assembly, ~0.8 s measured alone), the car_network derivation's tag
     parse over ways, the distinct edge-id build, the membership
@@ -3329,7 +3330,7 @@ def q_osm_relation_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTINCT-shrunk before the join, and the sf0.01→0.1 bench delta is
     flat — fixed per-stage overhead, not data work.
 
-    r15: the summary consumes the network ONLY as the edge-id set
+    The summary consumes the network ONLY as the edge-id set
     (``relation_route_summary`` projects ``edge_id`` and distincts it),
     so feed it ``derive_car_way_ids`` — the same include/exclude rules
     compiled over plain tag columns — instead of the full

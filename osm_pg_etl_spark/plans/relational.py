@@ -51,7 +51,7 @@ ORDER BY count DESC, l_returnflag, l_linestatus
 # --- P1/P2 + A1: tag-map value summary (events.props as the hstore) ---------
 
 def q_tag_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r15: probe the single key with ``get_json_object`` (a targeted
+    """Probe the single key with ``get_json_object`` (a targeted
     JSON-path walk, the same shape as the oracle's
     ``json_extract_string``) instead of ``from_json`` into a full
     map<string,string> — parsing every key/value of every row into a
@@ -184,7 +184,7 @@ WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
 # --- J7: range join (equi key + BETWEEN residual) ------------------------------
 
 def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r15: the band condition depends only on values derivable from the
+    """The band condition depends only on values derivable from the
     lineitem side (``bottom`` is a literal, ``top`` is a pure function of
     the join key), so it is applied as a scan-level filter on the fact
     table BEFORE the join instead of as a join residual — fewer rows
@@ -278,7 +278,7 @@ FROM events
 # --- W2/W3/W4/W5: running-sum window frames --------------------------------------
 
 def q_running_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r15: ONE running decimal sum instead of three overlapping decimal
+    """ONE running decimal sum instead of three overlapping decimal
     aggregators. ``prev_sum`` = the previous row's running sum =
     ``lag(run)`` (NULL at the partition head, exactly the empty-frame
     SUM; on a NULL-value row run(i)=run(i-1), exactly SUM(1..i-1));
@@ -720,7 +720,7 @@ def q_rollup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of Spark's Expand plan: one fact-table pass computes the leaf
     groups, and the coarser levels re-aggregate the tiny leaf table —
     Expand would push 3x the rows through the exact-decimal accumulator.
-    r13: the fact pass itself sums SCALED LONGS per input partition
+    The fact pass itself sums SCALED LONGS per input partition
     (fixed_point_presum) and pays decimal cost only on the tiny
     partials — exactness unchanged, the hot loop leaves BigDecimal."""
     from ..operators.rollup import fixed_point_presum, rollup_agg  # noqa: PLC0415
@@ -830,8 +830,8 @@ def q_cube_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     including the column-only marginals ROLLUP can't produce — with
     GROUPING markers. Re-aggregated like q_rollup_counts: a cube's Expand
     plan would push 4x the fact rows through the decimal accumulator; the
-    re-agg form derives all 2^k levels from one leaf aggregate. r13: the
-    fact pass sums scaled longs per input partition (fixed_point_presum),
+    re-agg form derives all 2^k levels from one leaf aggregate. The fact
+    pass sums scaled longs per input partition (fixed_point_presum),
     decimal only on the partials."""
     from ..operators.rollup import cube_agg, fixed_point_presum  # noqa: PLC0415
 
@@ -1179,10 +1179,11 @@ def q_quantile_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     p25/p50/p75/p90/p99 sweep a quality-threshold scan needs. One
     map-side-combinable aggregate; memory O(distinct values per group).
 
-    Stage-budget floor (measured sf0.1, warm, r6): 1.4-2.1 s = one scan +
-    the exact Percentile value→count map built and merged over 583 k
-    DISTINCT doubles (97% of the 600 k rows are unique prices — the map is
-    nearly the data) vs DuckDB's 85 ms single in-process quantile sort.
+    Stage-budget floor (measured sf0.1, warm, on the exact path):
+    1.4-2.1 s = one scan + the exact Percentile value→count map built and
+    merged over 583 k DISTINCT doubles (97% of the 600 k rows are unique
+    prices — the map is nearly the data) vs DuckDB's 85 ms single
+    in-process quantile sort.
     Two reworks were measured and rejected: a (group, value) histogram
     pre-aggregation (1.3-2.1 s — no gain at 97% distinct) and a
     row_number/rank-filter sort plan (1.0-1.5 s locally but it partitions
@@ -1192,7 +1193,7 @@ def q_quantile_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     you'd run on a cluster; for unbounded-cardinality columns swap
     F.percentile_approx (same call shape, mergeable KLL-style sketch).
 
-    r12 (VERDICT task 4): the gate now rides ``method="auto"`` — exact
+    The gate rides ``method="auto"`` — exact
     below the 64 MB input-size crossover (the sf0.01 oracle check and
     the sf0.1 headline bench stay on the hash-reproducible exact path),
     ``percentile_approx`` above it (sf1's 119 MB scan flips to the
@@ -1216,7 +1217,7 @@ FROM lineitem GROUP BY l_returnflag
 
 
 def q_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable bounded-memory quantile sketch (r10): the scale path
+    """Mergeable bounded-memory quantile sketch: the scale path
     beside q_quantile_profile's exact aggregate (whose value→count map is
     memory-unbounded under skew — the most data-bound gate, sf-ratio
     3.8). KMV-style deterministic bottom-k-by-hash sample per group, two
@@ -1842,8 +1843,8 @@ FROM hest e JOIN ex USING (event_type)
 
 
 def q_theta_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set-EXPRESSION cardinalities from theta/KMV sketches (r10,
-    ``sketch.theta_set_ops``): |clickers|, |purchasers|, their
+    """Set-EXPRESSION cardinalities from theta/KMV sketches
+    (``sketch.theta_set_ops``): |clickers|, |purchasers|, their
     intersection AND difference, all from two bottom-k-hash sketches —
     the set operation (A∖B) that HLL's inclusion–exclusion cannot
     express. Bottom-k of a fixed md5 family is a pure function of each
@@ -1884,7 +1885,7 @@ def q_hll_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = ev.filter(F.col("event_type") == "purchase")
     est = sketch.hll_intersect_estimate(a, b, "user_id", p=10)
     # exact |A∩B| as ONE user-keyed flag aggregation (map-side
-    # combinable) — replaces the r14 distinct+distinct+semi-join+agg
+    # combinable) — rather than a distinct+distinct+semi-join+agg
     # plan: same value, one exchange instead of three, and at
     # sub-second scale the exchange count IS the runtime (see
     # FLOOR_MODEL_r15.json)

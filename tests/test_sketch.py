@@ -47,77 +47,6 @@ def test_hll_p_validation(spark):
         hll_registers(df, "v", p=2)
 
 
-def test_bloom_no_false_negatives_and_merge(spark):
-    from pyspark.sql import functions as F
-
-    from osm_pg_etl_spark.operators.sketch import (
-        bloom_build, bloom_might_contain)
-
-    ref = spark.createDataFrame([(f"doc {i}",) for i in range(200)],
-                                "text string")
-    bloom = bloom_build(ref, "text", bits_log2=12, num_hashes=4)
-    probe = spark.createDataFrame(
-        [(f"doc {i}",) for i in range(300)], "text string")
-    got = {r["text"]: r["might_contain"]
-           for r in bloom_might_contain(probe, "text", bloom,
-                                        bits_log2=12, num_hashes=4).collect()}
-    # every member flags true — the Bloom guarantee
-    assert all(got[f"doc {i}"] for i in range(200))
-    # at 4096 bits / 800 set hashes some non-members must stay false
-    assert not all(got[f"doc {i}"] for i in range(200, 300))
-
-    # shard merge: bit_or of two half-corpus tables == whole-corpus table
-    h1 = bloom_build(ref.limit(100), "text", bits_log2=12, num_hashes=4)
-    h2 = bloom_build(ref.subtract(ref.limit(100)), "text",
-                     bits_log2=12, num_hashes=4)
-    merged = (h1.unionByName(h2).groupBy("word")
-              .agg(F.bit_or("bits").alias("bits")))
-    whole = {(r["word"], r["bits"]) for r in bloom.collect()}
-    assert {(r["word"], r["bits"]) for r in merged.collect()} == whole
-
-
-def test_bloom_deterministic_across_partitionings(spark):
-    from osm_pg_etl_spark.operators.sketch import (
-        bloom_build, bloom_might_contain)
-
-    ref = spark.createDataFrame([(f"v{i}",) for i in range(50)], "text string")
-    probe = spark.createDataFrame([(f"v{i}",) for i in range(80)],
-                                  "text string")
-    bloom = bloom_build(ref, "text", bits_log2=10, num_hashes=3)
-    a = sorted((r["text"], r["might_contain"]) for r in bloom_might_contain(
-        probe, "text", bloom, bits_log2=10, num_hashes=3).collect())
-    b = sorted((r["text"], r["might_contain"]) for r in bloom_might_contain(
-        probe.repartition(7), "text", bloom,
-        bits_log2=10, num_hashes=3).collect())
-    assert a == b
-
-
-def test_cms_overestimates_and_merges(spark):
-    from pyspark.sql import functions as F
-
-    from osm_pg_etl_spark.operators.sketch import cms_build, cms_estimate
-
-    rows = [(f"t{i % 20}",) for i in range(400)] + [("hot",)] * 100
-    df = spark.createDataFrame(rows, "term string")
-    cms = cms_build(df, "term", depth=4, width=64)
-    exact = df.groupBy("term").agg(F.count(F.lit(1)).alias("n"))
-    est = {r["term"]: (r["n"], r["cms_estimate"])
-           for r in cms_estimate(exact, "term", cms,
-                                 depth=4, width=64).collect()}
-    for term, (n, e) in est.items():
-        assert e >= n, term          # one-sided error
-    assert est["hot"][1] >= 100
-
-    # shard merge: summed half-sketches == whole sketch
-    half1, half2 = df.randomSplit([0.5, 0.5], seed=1)
-    merged = (cms_build(half1, "term", depth=4, width=64)
-              .unionByName(cms_build(half2, "term", depth=4, width=64))
-              .groupBy("row", "col").agg(F.sum("cnt").alias("cnt")))
-    whole = {(r["row"], r["col"], r["cnt"]) for r in cms.collect()}
-    assert {(r["row"], r["col"], r["cnt"])
-            for r in merged.collect()} == whole
-
-
 def test_hll_intersect_estimate_merge_law_and_accuracy(spark):
     """The union sketch must equal the sketch of the concatenated input
     (the HLL merge law, register-exact), and the inclusion–exclusion
