@@ -7,8 +7,10 @@ the bottleneck, so the first analysis step — connected components — is
 implemented natively on DataFrames here; the igraph export
 (:mod:`.export`) stays available for the long tail of single-node analyses.
 
-Components label every node with the minimum node id of its component;
-on the merged road graph that label names each disconnected road island.
+Connected components doubles as the *dedup clustering* step of a training
+-data pipeline: near-duplicate pairs (MinHash/SimHash/embedding) are edges,
+and each document keeps the minimum doc_id of its component as the
+canonical representative.
 
 Algorithm: a min-root union-find inside each node block (:func:`_blocks`),
 then alternating large-star/small-star contraction [Kiveris et al.,
@@ -1488,6 +1490,53 @@ def _power_iteration(edges: DataFrame, seeds: list[int] | None,
             _release(state)
             state = nxt
     return state.select("node", F.col("pr").alias("pagerank"))
+
+
+def dedup_clusters(docs: DataFrame, pairs: DataFrame,
+                   id_col: str = "doc_id",
+                   pair_cols: tuple[str, str] = ("id_a", "id_b")) -> DataFrame:
+    """Cluster near-duplicate pairs into groups and pick one canonical
+    document per group (the minimum id, mirroring ``exact_duplicates``'
+    ``MIN(doc_id) AS keep_id``). Documents in no pair are their own
+    cluster. Returns (doc_id, cluster_id, is_canonical)."""
+    comp = connected_components(pairs, src=pair_cols[0], dst=pair_cols[1])
+    d = docs.select(F.col(id_col).cast("long").alias(id_col))
+    return (d.join(comp, d[id_col] == comp["node"], "left")
+            .select(
+                id_col,
+                F.coalesce("component", F.col(id_col)).alias("cluster_id"))
+            .withColumn("is_canonical",
+                        (F.col(id_col) == F.col("cluster_id")).cast("boolean")))
+
+
+def dedup_canonical_by(docs: DataFrame, pairs: DataFrame, score_col: str,
+                       id_col: str = "doc_id",
+                       pair_cols: tuple[str, str] = ("id_a", "id_b")
+                       ) -> DataFrame:
+    """Quality-aware canonical selection: like :func:`dedup_clusters`, but
+    the kept document per near-dup cluster is the HIGHEST-``score_col``
+    one (ties to the smallest id) instead of the smallest id — what a
+    curation pipeline actually wants when duplicates differ in quality
+    (keep the longest / best-scored copy, not the first-crawled). One
+    ``max_by(id, struct(score, -id))`` per cluster past the components —
+    a single extra cluster-keyed aggregate. Returns
+    (doc_id, cluster_id, score_col, is_canonical)."""
+    comp = connected_components(pairs, src=pair_cols[0], dst=pair_cols[1])
+    d = docs.select(F.col(id_col).cast("long").alias(id_col),
+                    F.col(score_col))
+    clustered = (d.join(comp, d[id_col] == comp["node"], "left")
+                 .select(id_col, score_col,
+                         F.coalesce("component", F.col(id_col))
+                         .alias("cluster_id")))
+    best = (clustered.groupBy("cluster_id")
+            .agg(F.max_by(F.col(id_col),
+                          F.struct(F.col(score_col),
+                                   (-F.col(id_col)).alias("_nid")))
+                 .alias("keep_id")))
+    return (clustered.join(best, "cluster_id")
+            .select(id_col, "cluster_id", score_col,
+                    (F.col(id_col) == F.col("keep_id")).cast("boolean")
+                    .alias("is_canonical")))
 
 
 def _block_lpa(edges: pd.DataFrame, state: pd.DataFrame | None = None,

@@ -1,11 +1,16 @@
 """Sketch operators with engine-exact determinism.
 
-Two mergeable sketches over the md5 hash family, each a pure function of
+Three mergeable sketches over the md5 hash family, each a pure function of
 the value bytes (never of partitioning/row order/engine), so the DuckDB
 oracles re-derive *identical* structures and even the approximations are
 value-checked:
 
 - **HyperLogLog** — approximate distinct counts (below).
+- **Bloom filter** — set membership with no false negatives: build a
+  fixed-size bit table from a reference corpus, probe any candidate set
+  with a broadcast join. The 100 TB pattern: dedup a new crawl against an
+  existing corpus without joining the corpora (the bit table for 10⁹ keys
+  at 1% FP is ~1.2 GB — partition-sized, or shard by key range).
 - **Theta / KMV** — bottom-k distinct hashes, for set expressions
   (union, intersection, difference) at scale.
 
@@ -181,6 +186,79 @@ hest AS (
          {numer!r} / CAST(s + ({m} - hll_used) * {scale} AS DOUBLE) AS raw,
          {m} - hll_used AS v
   FROM hagg)
+"""
+
+
+# ---------------------------------------------------------------------------
+# Bloom filter (mergeable via bit_or; no false negatives)
+# ---------------------------------------------------------------------------
+
+def bloom_build(df: DataFrame, value_col: str, bits_log2: int = 20,
+                num_hashes: int = 4) -> DataFrame:
+    """Bloom bit table ``(word, bits)`` over 2^bits_log2 bits packed 32 per
+    word (32, not 64, so no shift ever touches the sign bit — keeps the
+    bit arithmetic portable across engines): for each value, hash seeds
+    ``1..k`` each set one bit. One narrow explode + one
+    map-side-combinable ``bit_or`` shuffle whose output is at most
+    2^(bits_log2-5) rows regardless of input size. Shards merge with
+    ``groupBy(word).agg(bit_or(bits))``."""
+    if not 5 <= bits_log2 <= 34:
+        raise ValueError(f"bits_log2 must be in [5, 34], got {bits_log2}")
+    m = 1 << bits_log2
+    pos = [(md5_long(value_col, seed=i) % m).alias(f"_p{i}")
+           for i in range(1, num_hashes + 1)]
+    exploded = (df.select(F.explode(F.array(*pos)).alias("_pos")))
+    return (exploded
+            .select(F.expr("_pos div 32").alias("word"),
+                    F.expr("shiftleft(1L, cast(_pos % 32 as int))")
+                    .alias("_bit"))
+            .groupBy("word").agg(F.bit_or("_bit").alias("bits")))
+
+
+def bloom_might_contain(df: DataFrame, value_col: str, bloom: DataFrame,
+                        bits_log2: int = 20, num_hashes: int = 4,
+                        result_col: str = "might_contain") -> DataFrame:
+    """Probe a Bloom bit table: appends ``result_col`` (true ⇔ all k bits
+    set — no false negatives, deterministic false-positive set). Scale
+    shape: ``num_hashes`` sequential broadcast joins of the
+    (≤2^(bits_log2-5))-row bit table against per-row word columns — the
+    candidate corpus is never shuffled and no synthetic row id is needed
+    (a ``monotonically_increasing_id`` join would be nondeterministic
+    across subtree re-evaluations)."""
+    m = 1 << bits_log2
+    out = df
+    flags = []
+    for i in range(1, num_hashes + 1):
+        out = out.withColumn(f"_p{i}", md5_long(value_col, seed=i) % m)
+        b = bloom.select(F.col("word").alias(f"_w{i}"),
+                         F.col("bits").alias(f"_b{i}"))
+        out = out.join(F.broadcast(b),
+                       F.expr(f"_p{i} div 32") == F.col(f"_w{i}"), "left")
+        mask = F.expr(f"shiftleft(1L, cast(_p{i} % 32 as int))")
+        flags.append(
+            F.coalesce(F.col(f"_b{i}"), F.lit(0)).bitwiseAND(mask) == mask)
+    ok = flags[0]
+    for f in flags[1:]:
+        ok = ok & f
+    drop = [c for i in range(1, num_hashes + 1)
+            for c in (f"_p{i}", f"_w{i}", f"_b{i}")]
+    return out.withColumn(result_col, ok).drop(*drop)
+
+
+def bloom_sql(build_expr: str, build_from: str, bits_log2: int = 20,
+              num_hashes: int = 4) -> str:
+    """DuckDB CTE re-deriving :func:`bloom_build` bit-for-bit (``bloom``
+    with columns word/bits). md5 positions, 32-per-word packing, BIT_OR."""
+    m = 1 << bits_log2
+    hashes = " UNION ALL ".join(
+        f"SELECT ('0x' || substr(md5('{i}|' || {build_expr}), 1, 8))::BIGINT "
+        f"% {m} AS pos FROM {build_from}"
+        for i in range(1, num_hashes + 1))
+    return f"""
+bloom AS (
+  SELECT pos // 32 AS word, BIT_OR(1::BIGINT << CAST(pos % 32 AS INT)) AS bits
+  FROM ({hashes})
+  GROUP BY pos // 32)
 """
 
 

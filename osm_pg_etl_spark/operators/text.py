@@ -1,10 +1,12 @@
 """Text-analysis operators for large-scale training-data pipelines.
 
-Extensions beyond the reference surface (BASELINE.json north star): token
-counting, quality features, tf·idf terms, PII scrubbing and sequence
-packing/batching. Pure Column expressions (JVM-side, whole-stage codegen)
-throughout — a 100 TB documents table never leaves the executors and never
-crosses into Python.
+Extensions beyond the reference surface (BASELINE.json north star): language
+ID, token counting, document fingerprinting, quality features, tf·idf
+terms, PII scrubbing and sequence packing/batching. Pure Column expressions
+(JVM-side, whole-stage codegen) throughout — a 100 TB documents table never
+leaves the executors and never crosses into Python — except
+``winnow_fingerprints``, an Arrow-batched pandas UDF (see its docstring for
+why the Column formulation loses).
 """
 
 from __future__ import annotations
@@ -12,7 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Compact high-frequency stopword lists for the stopword-ratio signal.
+# Compact high-frequency stopword lists for n-gram/stopword language ID and
+# the stopword-ratio signal.
 STOPWORDS = {
     "en": ("the", "and", "of", "to", "in", "is", "that", "it", "for", "a"),
     "es": ("el", "la", "de", "que", "y", "en", "un", "es", "por", "los"),
@@ -21,6 +24,8 @@ STOPWORDS = {
 }
 
 _WORD_SPLIT = "\\s+"
+# BPE-ish tokenization: letter runs, digit runs, or single non-space symbols.
+BPE_ISH_PATTERN = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"
 
 
 def tokens(text: Column | str) -> Column:
@@ -34,12 +39,31 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
 
 
+def bpe_ish_token_count(text: Column | str) -> Column:
+    """Sub-word-ish token count: letter runs + digit runs + punctuation
+    symbols counted separately (a cheap, deterministic stand-in for a BPE
+    tokenizer's length signal)."""
+    c = F.col(text) if isinstance(text, str) else text
+    return F.size(F.regexp_extract_all(c, F.lit(BPE_ISH_PATTERN), 0))
+
+
 def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
     """Fraction of whitespace tokens that are stopwords of ``lang``."""
     toks = F.transform(tokens(text), lambda t: F.lower(t))
     hits = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS[lang])))
     n = F.size(toks)
     return F.when(n > 0, hits.cast("double") / n).otherwise(F.lit(0.0))
+
+
+def detect_language(text: Column | str) -> Column:
+    """Heuristic language ID: the language whose stopword ratio is highest;
+    'und' when no stopwords hit at all. Deterministic tie-break by language
+    code order via greatest-of-structs."""
+    scored = [F.struct(stopword_ratio(text, lang).alias("score"),
+                       F.lit(lang).alias("lang"))
+              for lang in sorted(STOPWORDS, reverse=True)]
+    best = F.greatest(*scored)
+    return F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
 
 
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -153,6 +177,141 @@ def pii_counts(text: Column | str) -> dict[str, Column]:
     c = F.col(text) if isinstance(text, str) else text
     return {kind: F.size(F.regexp_extract_all(c, F.lit(pattern), 0))
             for kind, pattern in PII_PATTERNS}
+
+
+# Unambiguous tracking params only. ``ref=`` is deliberately NOT here:
+# it is frequently semantic (VCS branch refs, referrer-dependent content)
+# and stripping it collapsed genuinely distinct documents into one dedup
+# group. Pass a custom tuple to strip more.
+_TRACKING_PREFIXES = ("utm_", "fbclid=", "gclid=", "msclkid=")
+
+
+def canonicalize_url(url: Column | str,
+                     tracking_prefixes: tuple[str, ...] = _TRACKING_PREFIXES
+                     ) -> Column:
+    """Canonical form of a URL for source-level dedup — the
+    normalization every web-crawl pipeline runs before grouping by URL
+    (a page fetched as ``HTTP://Host:80/a/?utm_source=x`` and
+    ``http://host/a`` is one document, not two):
+
+    - scheme and host lowercased; default ports (``:80`` http,
+      ``:443`` https) stripped;
+    - fragment dropped;
+    - path: trailing slashes trimmed (bare root stays ``/``);
+    - query: tracking params removed (``tracking_prefixes``, default
+      ``utm_*``/``fbclid``/``gclid``/``msclkid``), the rest sorted so
+      parameter order never splits a group; an emptied query drops its
+      ``?``;
+    - non-hierarchical inputs (no ``scheme://`` — ``mailto:``,
+      scheme-less ``www.x.com/a``, empty strings) pass through VERBATIM
+      instead of collapsing into a shared mangled ``"://..."`` form
+      that would merge unrelated malformed URLs into one dedup group.
+
+    Pure JVM Column chain (regexp extracts + array ops, no UDF), with a
+    1:1 DuckDB translation in the ``url_canonical_dedup`` oracle — both
+    engines normalize byte-identically, so dedup groups hash-match."""
+    raw = F.col(url) if isinstance(url, str) else url
+    u = F.regexp_replace(raw, "#.*", "")                  # fragment
+    scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
+    host = F.lower(F.regexp_extract(u, r"^[^:]+://([^/?#]*)", 1))
+    host = (F.when((scheme == "http") & host.endswith(":80"),
+                   F.substring(host, F.lit(1), F.length(host) - 3))
+            .when((scheme == "https") & host.endswith(":443"),
+                  F.substring(host, F.lit(1), F.length(host) - 4))
+            .otherwise(host))
+    path = F.regexp_extract(u, r"^[^:]+://[^/?#]*([^?#]*)", 1)
+    path = F.regexp_replace(path, "/+$", "")
+    path = F.when(path == "", F.lit("/")).otherwise(path)
+    query = F.regexp_extract(u, r"\?([^#]*)", 1)
+    def _tracking(p: Column) -> Column:
+        cond = F.lit(False)
+        for pre in tracking_prefixes:
+            cond = cond | p.startswith(pre)
+        return cond
+
+    keep = F.array_sort(F.filter(F.split(query, "&"),
+                                 lambda p: (p != "") & ~_tracking(p)))
+    qtail = F.when(F.size(keep) > 0,
+                   F.concat(F.lit("?"), F.array_join(keep, "&"))) \
+        .otherwise(F.lit(""))
+    canonical = F.concat(scheme, F.lit("://"), host, path, qtail)
+    return F.when(scheme != "", canonical).otherwise(raw)
+
+
+def fingerprint(text: Column | str) -> Column:
+    """Normalization fingerprint: lowercase, collapse whitespace, sort the
+    distinct tokens, md5. Robust to reordering/duplication — the classic
+    key for clustering near-identical short documents."""
+    toks = F.transform(tokens(text), lambda t: F.lower(t))
+    normalized = F.array_join(F.array_sort(F.array_distinct(toks)), " ")
+    return F.md5(normalized)
+
+
+# Winnowing constants: polynomial rolling-hash base/modulus, chosen so every
+# intermediate fits comfortably in 32 bits (max code 122 × max power < 2^27,
+# k-term sum < 2^30) — identical integer arithmetic on any engine, which is
+# what makes the DuckDB oracle value-exact.
+WINNOW_BASE = 257
+WINNOW_MOD = 1_048_573  # largest prime < 2^20
+
+
+def _winnow_one(text: str | None, k: int, window: int) -> list[int]:
+    """Winnow a single document; pure-numpy, O(n) in document length."""
+    import re
+
+    import numpy as np
+
+    if not text:
+        return []
+    norm = re.sub("[^a-z0-9]", "", text.lower())
+    n = len(norm)
+    if n < k:
+        return []
+    codes = np.frombuffer(norm.encode("ascii"), dtype=np.uint8).astype(np.int64)
+    pows = np.array([pow(WINNOW_BASE, k - 1 - j, WINNOW_MOD)
+                     for j in range(k)], dtype=np.int64)
+    grams = np.lib.stride_tricks.sliding_window_view(codes, k)
+    hashes = (grams @ pows) % WINNOW_MOD  # max 122·2^20·7 < 2^30: no overflow
+    if len(hashes) < window:
+        return [int(hashes.min())]
+    minima = np.min(
+        np.lib.stride_tricks.sliding_window_view(hashes, window), axis=1)
+    return np.unique(minima).tolist()
+
+
+_winnow_udfs: dict[tuple[int, int], Column] = {}
+
+
+def winnow_fingerprints(text: Column | str, k: int = 7,
+                        window: int = 4) -> Column:
+    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03
+    — the MOSS algorithm): normalize to ``[a-z0-9]``, hash every character
+    k-gram with a polynomial rolling hash, then keep the minimum hash of
+    each ``window`` consecutive k-grams. The selected minima are a
+    position-robust fingerprint *set*: any shared substring of length
+    ``k + window - 1`` guarantees a shared fingerprint, so overlap of the
+    sets detects partial/local duplication that whole-document hashing
+    misses.
+
+    Implemented as an Arrow-batched pandas UDF (sliding-window matmul in
+    numpy, O(n) per document, no shuffle — per-document narrow compute that
+    parallelizes by partition). A pure-Column higher-order-function
+    formulation was measured and rejected: Catalyst re-evaluates expressions
+    captured by nested lambdas once per element, turning the k-gram slice
+    chain into O(n³) per row. The modulus keeps every intermediate in 32
+    bits, so the arithmetic — and therefore the DuckDB oracle — is
+    value-exact on any engine.
+
+    Returns the sorted distinct minima as a bigint array. Documents with
+    fewer than ``k`` usable characters yield an empty set; with fewer than
+    ``k + window - 1``, the single global minimum (the standard short-input
+    degeneration)."""
+    c = F.col(text) if isinstance(text, str) else text
+    if (k, window) not in _winnow_udfs:
+        def fn(s, _k=k, _w=window):
+            return s.map(lambda t: _winnow_one(t, _k, _w))
+        _winnow_udfs[(k, window)] = F.pandas_udf(fn, "array<bigint>")
+    return _winnow_udfs[(k, window)](c)
 
 
 def pack_positions(df: DataFrame, capacity: int, text_col: str = "text",

@@ -20,15 +20,20 @@ FALLBACK = {
     "array_ops": "array first/last/reverse/contains over int-array column (P8, F2-F5)",
     "capped_sessions": "custom stateful sessionization via applyInPandasWithState batch path (§2.9)",
     "case_classify": "UPDATE-cascade compiled to a nested CASE column (P9-P10)",
+    "dedup_exact": "exact duplicate groups by content hash, MIN(doc_id) canonical",
     "distinct_on": "DISTINCT ON (group) ORDER BY — max_by/top-1-per-group (A10, O3)",
+    "embedding_neardup": "embedding-cosine near-duplicate pairs, LSH-bucketed",
     "filter_predicates": "3VL predicate pushdown set: IS NULL / != / IN / LIKE (P4-P7, S6)",
+    "fingerprint_dupes": "normalization-fingerprint duplicate clusters (sorted distinct tokens, md5)",
     "first_int": "get_ints_from_text / first integer extraction (F1)",
     "group_count": "scan + group-count + decimal-exact sum over lineitem (A1, O1)",
     "haversine": "great-circle distance column math (F10-F12)",
     "impute_median": "UPDATE ... SET x = group median WHERE x IS NULL (S5, A3-A4, J6)",
+    "lang_id": "stopword-ratio language ID per document",
     "median_by_group": "exact percentile-0.5 per group (A3)",
     "minhash_neardup": "MinHash+LSH banded near-dup pairs with exact Jaccard verify",
     "multi_group_count": "two-key group count (A2)",
+    "ngram_jaccard": "word-shingle Jaccard similarity via inverted index",
     "osm_car_network": "car_network filter: highway present minus deny-list (reference parity)",
     "osm_directed_graph": "flagship: filter → split/merge → impute → directed edge list",
     "osm_merge_limits": "ways_merge_limits: per-way limit arrays incl. dead-end closure, exploded (J7, J10, W1-W6)",
@@ -45,9 +50,11 @@ FALLBACK = {
     "semi_join": "LEFT SEMI join: orders having a big lineitem (J2)",
     "session_window": "built-in session_window gap aggregation (§2.9)",
     "simhash": "64-bit SimHash fingerprints via one-pass bit votes",
+    "simhash_neardup": "SimHash banded near-dup candidate pairs with Hamming verify",
     "similarity_topk": "brute-force cosine top-k over embeddings (ANN baseline)",
     "tag_explode": "hstore-style map explode to (key, value) frequencies (P3)",
     "tag_values": "single-key tag value summary over the props map (P1-P2)",
+    "token_counts": "whitespace + BPE-ish token counts per document",
     "tumbling_window": "tumbling event-time window aggregation (§2.9)",
     "union_distinct": "UNION with distinct semantics incl. 3VL NULL dedup (set-U1)",
     "union_slices": "INSERT ... SELECT append slices then aggregate (S4, set-U2)",
@@ -60,6 +67,8 @@ FALLBACK = {
     "key_skew": "key-frequency skew profile of a join column",
     "interval_join": "event-time interval join (click→purchase attribution, §2.9)",
     "dedup_events": "watermark-deduplication batch equivalent (distinct-on)",
+    "winnow_fingerprints": "MOSS winnowing fingerprints (rolling-hash windows, pandas_udf)",
+    "winnow_neardup": "passage-level near-dup pairs from winnowing fingerprint overlap",
     "tfidf_top_terms": "top-k tf·idf characteristic terms per document",
     "pii_redact": "email/phone/IPv4 redaction chain with audit counts",
     "sliding_window": "overlapping sliding event-time windows (§2.9)",

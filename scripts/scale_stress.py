@@ -379,6 +379,32 @@ def run_knn(k: int) -> None:
     spark.catalog.clearCache()
 
 
+def run_neardup(k: int) -> None:
+    """embedding_near_duplicates scale behavior on K vec_id-offset replicas
+    of the sf0.1 embeddings. Replicas are exact duplicates of each other,
+    so TRUE near-dup pairs grow K² — the deliberate worst case for both
+    the in-kernel candidate scoring and the output volume. The per-bucket kernel
+    routing means only qualifying (id, id, cosine) rows reach an exchange;
+    the vector column never does (plan contract pins this)."""
+    from osm_pg_etl_spark.operators.similarity import embedding_near_duplicates
+
+    spark = get_spark(app_name=f"neardup-stress-{k}x")
+    spark.sparkContext.setLogLevel("ERROR")
+    emb = replicate(read_testdata(spark, SF_DIR, "embeddings"),
+                    ["vec_id"], k).localCheckpoint()
+    n = emb.count()
+    t0 = time.perf_counter()
+    rows = embedding_near_duplicates(emb, threshold=0.9, num_planes=6).count()
+    dt = time.perf_counter() - t0
+    t0 = time.perf_counter()
+    rows8 = embedding_near_duplicates(emb, threshold=0.9, num_planes=8).count()
+    dt8 = time.perf_counter() - t0
+    print(f"k={k:>2}  vectors={n:>7}  planes=6: pairs={rows:>8} "
+          f"wall={dt:6.1f}s   planes=8: pairs={rows8:>8} "
+          f"wall={dt8:6.1f}s", flush=True)
+    spark.catalog.clearCache()
+
+
 def run_ivm(k: int, del_mod: int = 101, trunc_mod: int = 103) -> None:
     """Merged-network IVM payoff on K replicas of sf0.1: with the old
     state pre-materialized (the IVM premise), time absorbing the
@@ -614,6 +640,9 @@ if __name__ == "__main__":
     elif len(sys.argv) > 1 and sys.argv[1] == "knn":
         for a in sys.argv[2:] or ["1", "5"]:
             run_knn(int(a))
+    elif len(sys.argv) > 1 and sys.argv[1] == "neardup":
+        for a in sys.argv[2:] or ["1", "5"]:
+            run_neardup(int(a))
     elif len(sys.argv) > 1 and sys.argv[1] == "sssp_radius":
         for a in sys.argv[2:] or ["2000"]:
             run_sssp_radius(int(a))

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 from osm_pg_etl_spark.operators import graph_algo as ga
 from osm_pg_etl_spark.operators.graph_algo import (
     connected_components,
+    dedup_clusters,
     shortest_paths,
     symmetric_edges,
 )
@@ -86,6 +87,15 @@ def test_shortest_paths_bounded_hops(spark):
     full = {r["node"]: r["dist"]
             for r in shortest_paths(edges, 1, max_hops=4).collect()}
     assert full[5] == pytest.approx(4.0)   # 4-edge chain now beats it
+
+
+def test_dedup_clusters_canonical_pick(spark):
+    docs = spark.createDataFrame([(i,) for i in (1, 2, 3, 4, 5)], "doc_id long")
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    got = {r["doc_id"]: (r["cluster_id"], r["is_canonical"])
+           for r in dedup_clusters(docs, pairs).collect()}
+    assert got == {1: (1, True), 2: (1, False), 3: (1, False),
+                   4: (4, True), 5: (5, True)}
 
 
 def _brandes_exact(adj, sources, max_depth, n_all=None):
@@ -731,6 +741,22 @@ def test_refine_connected_keeps_connected_communities(spark):
     # louvain labels are already min-member ids here; refinement must be
     # the identity (communities are connected: 99 hangs off node 1)
     assert refined == base
+
+
+def test_dedup_canonical_by_keeps_best(spark):
+    """Quality-aware canonical: highest score wins, ties to smallest id;
+    unpaired docs are their own canonical cluster."""
+    from osm_pg_etl_spark.operators.graph_algo import dedup_canonical_by
+
+    docs = spark.createDataFrame(
+        [(1, 10), (2, 50), (3, 50), (4, 7), (5, 99)],
+        "doc_id long, n_chars long")
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    got = {r["doc_id"]: (r["cluster_id"], r["is_canonical"])
+           for r in dedup_canonical_by(docs, pairs, "n_chars").collect()}
+    # cluster {1,2,3}: scores 10,50,50 -> tie between 2 and 3 -> 2 wins
+    assert got == {1: (1, False), 2: (1, True), 3: (1, False),
+                   4: (4, True), 5: (5, True)}
 
 
 def test_louvain_weighted_prefers_heavy_edges(spark):

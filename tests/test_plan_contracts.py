@@ -90,11 +90,11 @@ def test_no_row_python_udfs_in_gated_plans(spark):
         r"|MapInPandas")
     qs = all_queries()
     plans = {name: plan_of(qs[name](spark, SF))
-             for name in ("osm_pagerank", "osm_spatial_pairs",
+             for name in ("winnow_fingerprints", "osm_spatial_pairs",
                           "knn_join", "quality_features")}
     for name, plan in plans.items():
         assert "BatchEvalPython" not in plan, name
-    for name in ("osm_pagerank", "osm_spatial_pairs", "knn_join"):
+    for name in ("winnow_fingerprints", "osm_spatial_pairs", "knn_join"):
         assert arrow_node.search(plans[name]), name
 
 
@@ -195,6 +195,28 @@ def test_complete_network_cascade_single_evaluation(spark):
             assert "% 12" not in ln and "% 17" not in ln, q.__name__
 
 
+def test_embedding_neardup_bucket_kernel_no_vector_exchange(spark):
+    """The default near-dup path must score candidates in the per-bucket
+    Arrow kernel — exactly one FlatMapGroupsInPandas, no join of the
+    array columns, and no array column riding a candidate-pair row
+    through an exchange (the knn_join lesson: ~1 KB/pair through the
+    shuffle vs skinny (id, id, cosine) rows)."""
+    from osm_pg_etl_spark.operators.similarity import embedding_near_duplicates
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    for tables in (1, 2):
+        plan = plan_of(embedding_near_duplicates(
+            emb, threshold=0.9, num_tables=tables))
+        assert plan.count("FlatMapGroupsInPandas") == 1, tables
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
+        # downstream of the kernel only skinny pair rows may move:
+        # no exchange in the plan carries the vector column
+        for m in re.finditer(r"Exchange [^\n]*", plan):
+            assert "_v#" not in m.group(0), m.group(0)
+
+
 def test_turn_restricted_transitions_equi_join_only(spark):
     """The line-graph expansion must be equi-joins on the shared-node /
     triple keys — banned turns via join, never a cartesian."""
@@ -230,19 +252,23 @@ def test_mode_flags_computes_each_tag_once(spark):
 
 
 def test_dedup_family_no_gram_keyed_windows(spark):
-    """The dedup family's per-gram statistics must be COMBINABLE
-    aggregates + join-back, never a Window.partitionBy(<content hash>) —
-    map-side partial aggregation collapses a viral gram before the
-    exchange and the join back is AQE-skew-splittable, while AQE can NOT
-    split a hot window partition. Windows partitioned by the document id
-    remain legitimate: bounded by one document's length."""
+    """The dedup family's per-gram/per-paragraph statistics must be
+    COMBINABLE aggregates + join-back, never a
+    Window.partitionBy(<content hash>) — map-side partial aggregation
+    collapses a viral paragraph/gram before the exchange and the join
+    back is AQE-skew-splittable, while AQE can NOT split a hot window
+    partition. Windows partitioned by the document id (island merge,
+    reassembly) remain legitimate: bounded by one document's length."""
     from osm_pg_etl_spark.plans.registry import all_queries
 
-    plan = plan_of(all_queries()["dup_ngram_spans"](spark, SF))
-    specs = re.findall(r"windowspecdefinition\((\w+)", plan)
-    for key in specs:
-        assert key.startswith("doc_id"), \
-            f"dup_ngram_spans: window partitioned by non-doc key {key}"
+    qs = all_queries()
+    for gate in ("dedup_paragraphs", "exact_substring_self_dedup",
+                 "dup_ngram_spans"):
+        plan = plan_of(qs[gate](spark, SF))
+        specs = re.findall(r"windowspecdefinition\((\w+)", plan)
+        for key in specs:
+            assert key.startswith("doc_id"), \
+                f"{gate}: window partitioned by non-doc key {key}"
 
 
 def test_iterative_static_tables_join_exchange_free(spark):

@@ -169,6 +169,31 @@ def test_morton_code_order_preserving_per_axis(a1, b1, a2, b2):
         assert z(a1, b1) != z(a2, b2)
 
 
+@given(st.lists(st.tuples(st.integers(1, 10**6), st.text("ab", min_size=0,
+                                                         max_size=3)),
+                min_size=1, max_size=30))
+@settings(max_examples=100, deadline=None)
+def test_bloom_membership_pure_python_no_false_negatives(items):
+    """Pure-python mirror of bloom_build/bloom_might_contain bit math: any
+    inserted value must probe true for any (bits_log2, num_hashes)."""
+    import hashlib
+
+    m, k = 1 << 10, 3
+    words: dict[int, int] = {}
+    vals = [f"{i}|{t}" for i, t in items]
+    for v in vals:
+        for s in range(1, k + 1):
+            pos = int(hashlib.md5(f"{s}|{v}".encode()).hexdigest()[:8],
+                      16) % m
+            words[pos // 32] = words.get(pos // 32, 0) | (1 << (pos % 32))
+    for v in vals:
+        for s in range(1, k + 1):
+            pos = int(hashlib.md5(f"{s}|{v}".encode()).hexdigest()[:8],
+                      16) % m
+            mask = 1 << (pos % 32)
+            assert words.get(pos // 32, 0) & mask == mask
+
+
 @given(st.integers(-10**6, 10**6), st.integers(-10**6, 10**6),
        st.integers(1, 64), st.integers(-10**7, 10**7))
 def test_stride_predicates_partition_every_value(lower, upper, n, v):

@@ -47,6 +47,51 @@ def test_hll_p_validation(spark):
         hll_registers(df, "v", p=2)
 
 
+def test_bloom_no_false_negatives_and_merge(spark):
+    from pyspark.sql import functions as F
+
+    from osm_pg_etl_spark.operators.sketch import (
+        bloom_build, bloom_might_contain)
+
+    ref = spark.createDataFrame([(f"doc {i}",) for i in range(200)],
+                                "text string")
+    bloom = bloom_build(ref, "text", bits_log2=12, num_hashes=4)
+    probe = spark.createDataFrame(
+        [(f"doc {i}",) for i in range(300)], "text string")
+    got = {r["text"]: r["might_contain"]
+           for r in bloom_might_contain(probe, "text", bloom,
+                                        bits_log2=12, num_hashes=4).collect()}
+    # every member flags true — the Bloom guarantee
+    assert all(got[f"doc {i}"] for i in range(200))
+    # at 4096 bits / 800 set hashes some non-members must stay false
+    assert not all(got[f"doc {i}"] for i in range(200, 300))
+
+    # shard merge: bit_or of two half-corpus tables == whole-corpus table
+    h1 = bloom_build(ref.limit(100), "text", bits_log2=12, num_hashes=4)
+    h2 = bloom_build(ref.subtract(ref.limit(100)), "text",
+                     bits_log2=12, num_hashes=4)
+    merged = (h1.unionByName(h2).groupBy("word")
+              .agg(F.bit_or("bits").alias("bits")))
+    whole = {(r["word"], r["bits"]) for r in bloom.collect()}
+    assert {(r["word"], r["bits"]) for r in merged.collect()} == whole
+
+
+def test_bloom_deterministic_across_partitionings(spark):
+    from osm_pg_etl_spark.operators.sketch import (
+        bloom_build, bloom_might_contain)
+
+    ref = spark.createDataFrame([(f"v{i}",) for i in range(50)], "text string")
+    probe = spark.createDataFrame([(f"v{i}",) for i in range(80)],
+                                  "text string")
+    bloom = bloom_build(ref, "text", bits_log2=10, num_hashes=3)
+    a = sorted((r["text"], r["might_contain"]) for r in bloom_might_contain(
+        probe, "text", bloom, bits_log2=10, num_hashes=3).collect())
+    b = sorted((r["text"], r["might_contain"]) for r in bloom_might_contain(
+        probe.repartition(7), "text", bloom,
+        bits_log2=10, num_hashes=3).collect())
+    assert a == b
+
+
 def test_hll_intersect_estimate_merge_law_and_accuracy(spark):
     """The union sketch must equal the sketch of the concatenated input
     (the HLL merge law, register-exact), and the inclusion–exclusion
